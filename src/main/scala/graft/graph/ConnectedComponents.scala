@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * grouping is absorbed by map-side partial aggregation of `min`.
   *
   * Durable mode: each round's edge frontier is a committed superstep
-  * (Supersteps.commit — parquet + per-partition lineage + atomic marker);
+  * (Supersteps.commit — one parquet write + rows/checksum + atomic marker);
   * `resume` restarts from the last committed frontier and produces the
   * same fixpoint as an uninterrupted run (the frontier IS the complete
   * iteration state; the round signature is recomputed from it).
@@ -177,7 +177,7 @@ object ConnectedComponents {
       // so dropping its blocks earlier would make the lazy frontier
       // irrecoverable.
       val afterLarge = largeStar(bidirL, PrRound).localCheckpoint(false)
-      var next = smallStarOriented(afterLarge, PrRound)
+      val next = smallStarOriented(afterLarge, PrRound)
         .localCheckpoint(false)
       val sig = signature(next)
       releaseCheckpoint(afterLarge)
@@ -187,13 +187,9 @@ object ConnectedComponents {
 
       checkpoint match {
         case Durable(runDir, every) if rounds % every == 0 || stable =>
-          val before = next
-          next = Supersteps.commit(spark, runDir, rounds, next,
+          Supersteps.commit(spark, runDir, rounds, next,
             Map("round" -> rounds.toDouble, "frontier_edges" -> sig._1.toDouble,
               "stable" -> (if (stable) 1.0 else 0.0)))
-            .repartition(PrRound, col("u"))
-            .localCheckpoint(true)
-          releaseCheckpoint(before)
         case _ => ()
       }
       releaseCheckpoint(e)

@@ -69,11 +69,17 @@ import org.apache.spark.storage.StorageLevel
   *  3. zipPartitions(state, bundles): dense-add bundles into a contribs
   *     array, apply teleport + dangling mass, emit the new state. The
   *     L1 delta rides an accumulator in the same job; the dangling mass
-  *     fed into the NEXT iteration's rank formula is computed by a
-  *     DETERMINISTIC fold over the materialized new state (same single
-  *     job triggers it) — a re-executed or speculated task can therefore
-  *     only inflate the convergence-test delta (costing at most an extra
-  *     iteration), never perturb the rank values themselves.
+  *     fed into the NEXT iteration's rank formula is summed per partition
+  *     over the materialized new state (same single job triggers it) and
+  *     the partials are added on the driver in partition order — so it is
+  *     the same double on every run and on resume (an RDD fold would add
+  *     them in task-completion order). A re-executed or speculated task
+  *     can therefore only inflate the convergence-test delta (costing at
+  *     most an extra iteration), never perturb the rank values themselves.
+  *
+  * Durable commits write the state once (Supersteps.commit) and the loop
+  * keeps its in-memory blocks: the Durable path runs the LocalOnly plan
+  * plus one write per committed superstep.
   *
   * RDD usage is forced here: a Dataset `groupByKey(_.partId).cogroup`
   * re-shuffles the static block side EVERY superstep because the lambda
@@ -155,12 +161,10 @@ object CsrPageRank {
       case Some(step) =>
         val snap = Supersteps.readState(spark, runDir, step)
         val metrics = Supersteps.readMetrics(spark, runDir, step)
-        if (metrics.contains("\"converged\":1.0")) {
-          val delta = "\"l1_delta\":([0-9.eE+-]+)".r
-            .findFirstMatchIn(metrics).map(_.group(1).toDouble).getOrElse(0.0)
+        if (metrics.converged)
           PageRankResult(snap.select(col("id"), col("rank")), step, converged = true,
-            Seq(delta), -1L, snap.count())
-        } else runImpl(edges, durableCfg, Some((snap, step)))
+            Seq(metrics.metrics("l1_delta")), -1L, metrics.rows)
+        else runImpl(edges, durableCfg, Some((snap, step)))
     }
   }
 
@@ -309,16 +313,10 @@ object CsrPageRank {
       val sc = spark.sparkContext
       val alpha = cfg.alpha
       // fresh start: uniform ranks make dangling mass a closed form;
-      // resume: recompute it from the snapshot's ranks (deterministic)
-      var dangling = initialState match {
-        case None => danglingCount.toDouble / n
-        case Some(_) => state.map { vb =>
-          var s = 0.0
-          var k = 0
-          while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
-          s
-        }.fold(0.0)(_ + _)
-      }
+      // resume: recompute it from the snapshot's ranks (same sum order as
+      // the uninterrupted run)
+      var dangling =
+        if (initialState.isEmpty) danglingCount.toDouble / n else danglingMass(state)
       var iter = initialState.map(_._2).getOrElse(0)
       var converged = false
       var deltas = Vector.empty[Double]
@@ -408,18 +406,13 @@ object CsrPageRank {
               vb.copy(ranks = newRanks) // ids/outdeg shared by reference
             }
           }
-        // ONE job per iteration: the dangling fold both materializes the
+        // ONE job per iteration: the dangling sum both materializes the
         // new state (persist + localCheckpoint) and computes the next
-        // iteration's dangling mass DETERMINISTICALLY from it — unlike an
-        // accumulator, a re-run task cannot double-count into the ranks.
+        // iteration's dangling mass from it — unlike an accumulator, a
+        // re-run task cannot double-count into the ranks.
         newState.persist(StorageLevel.MEMORY_AND_DISK)
         newState.localCheckpoint()
-        dangling = newState.map { vb =>
-          var s = 0.0
-          var k = 0
-          while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
-          s
-        }.fold(0.0)(_ + _)
+        dangling = danglingMass(newState)
 
         // accumulator delta gates CONVERGENCE only: a duplicated task
         // update can only inflate it (delta terms are >= 0), i.e. cost at
@@ -433,43 +426,11 @@ object CsrPageRank {
 
         cfg.checkpoint match {
           case Durable(runDir, every) if iter % every == 0 || converged =>
-            val committed = Supersteps.commit(spark, runDir, iter,
+            Supersteps.commit(spark, runDir, iter,
               state.flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.ranks(k), b.outdeg(k))))
                 .toDF("id", "rank", "outdeg"),
               Map("l1_delta" -> delta, "n_vertices" -> n.toDouble, "n_edges" -> m.toDouble,
                 "dangling_mass" -> dangling, "converged" -> (if (converged) 1.0 else 0.0)))
-            // same Catalyst shuffle+sort technique as the prepare: token
-            // placement puts pid p in partition p, the Tungsten sort
-            // streams into primitive arrays (no boxed-tuple RDD sort)
-            val reread = committed
-              .select(col("id"), col("rank"), col("outdeg"))
-              .repartition(P, tokOf(col("id")))
-              .sortWithinPartitions(col("id"))
-              .as[(Long, Double, Int)].rdd
-              .mapPartitionsWithIndex({ (i, it) =>
-                var cap = 1024
-                var ids = new Array[Long](cap)
-                var rks = new Array[Double](cap)
-                var od = new Array[Int](cap)
-                var k = 0
-                while (it.hasNext) {
-                  val (id, r, d) = it.next()
-                  if (k == cap) {
-                    cap *= 2
-                    ids = java.util.Arrays.copyOf(ids, cap)
-                    rks = java.util.Arrays.copyOf(rks, cap)
-                    od = java.util.Arrays.copyOf(od, cap)
-                  }
-                  ids(k) = id; rks(k) = r; od(k) = d; k += 1
-                }
-                if (k == 0) Iterator.empty
-                else Iterator.single(VBlock(i,
-                  java.util.Arrays.copyOf(ids, k), java.util.Arrays.copyOf(od, k),
-                  java.util.Arrays.copyOf(rks, k)))
-              }, preservesPartitioning = true)
-            materialize(reread)
-            state.unpersist(false)
-            state = reread
           case _ => ()
         }
       }
@@ -482,6 +443,20 @@ object CsrPageRank {
         prepareSeconds = prepSecs, loopSeconds = (System.nanoTime() - loopT0) / 1e9)
     }
   }
+
+  /** Rank mass on out-degree-0 vertices in ONE job: per-partition sums
+    * come back from runJob in partition order and are added in that
+    * order, so the double is reproducible run to run.
+    */
+  private def danglingMass(state: RDD[VBlock]): Double =
+    state.sparkContext.runJob(state, (vs: Iterator[VBlock]) => {
+      var s = 0.0
+      vs.foreach { vb =>
+        var k = 0
+        while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
+      }
+      s
+    }).sum
 
   /** Persist + truncate lineage + materialize in one action. */
   private def materialize[T](rdd: RDD[T]): RDD[T] = {

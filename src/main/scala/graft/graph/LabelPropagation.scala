@@ -41,7 +41,7 @@ object LabelPropagation {
     Supersteps.lastCommitted(spark, runDir) match {
       case None => run(edges, maxIter, Durable(runDir))
       case Some(step) =>
-        if (Supersteps.readMetrics(spark, runDir, step).contains("\"converged\":1.0"))
+        if (Supersteps.readMetrics(spark, runDir, step).converged)
           LpaResult(Supersteps.readState(spark, runDir, step), step, converged = true)
         else
           iterate(edges, Some(Supersteps.readState(spark, runDir, step)), step, maxIter,
@@ -151,17 +151,11 @@ object LabelPropagation {
 
       checkpoint match {
         case Durable(runDir, every) if iter % every == 0 || converged =>
-          val before = labels
           // Durable snapshots stay (id, label) — the resume/consumer
-          // contract is unchanged; the wide loop state is rebuilt after
-          // the commit round-trip.
-          labels = Supersteps.commit(spark, runDir, iter, labels.select(col("id"), col("label")),
+          // contract is unchanged; the loop keeps its wide state.
+          Supersteps.commit(spark, runDir, iter, labels.select(col("id"), col("label")),
             Map("iter" -> iter.toDouble, "changed" -> changed.toDouble,
               "converged" -> (if (converged) 1.0 else 0.0)))
-            .select(col("id"), col("label"), col("label").as("old"))
-            .repartition(Pr, col("id"))
-            .localCheckpoint(true)
-          releaseCheckpoint(before)
         case _ => ()
       }
     }

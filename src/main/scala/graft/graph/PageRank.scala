@@ -12,8 +12,9 @@ sealed trait CheckpointPolicy
   */
 final case class LocalOnly(every: Int = 1) extends CheckpointPolicy
 /** Durable resumable checkpoints: every `every` iterations a committed
-  * superstep (parquet + metrics + per-partition lineage + atomic marker)
-  * lands in `runDir` — the production mode.
+  * superstep (parquet + metrics + snapshot rows and checksum + atomic
+  * marker) lands in `runDir` — the production mode. A commit is one
+  * write; the loop keeps its in-memory state.
   */
 final case class Durable(runDir: String, every: Int = 1) extends CheckpointPolicy
 
@@ -162,11 +163,10 @@ object PageRank {
         val state = Supersteps.readState(spark, runDir, step)
         // Already-converged runs return the committed state as-is.
         val metrics = Supersteps.readMetrics(spark, runDir, step)
-        if (metrics.contains("\"converged\":1.0")) {
-          val delta = "\"l1_delta\":([0-9.eE+-]+)".r
-            .findFirstMatchIn(metrics).map(_.group(1).toDouble).getOrElse(0.0)
-          PageRankResult(state, step, converged = true, Seq(delta), -1L, state.count())
-        } else runLoop(edges, durableCfg, step, Some(state))
+        if (metrics.converged)
+          PageRankResult(state, step, converged = true, Seq(metrics.metrics("l1_delta")), -1L,
+            metrics.rows)
+        else runLoop(edges, durableCfg, step, Some(state))
     }
   }
 
@@ -301,28 +301,18 @@ object PageRank {
 
       cfg.checkpoint match {
         case Durable(runDir, every) if iter % every == 0 || converged =>
-          val beforeCommit = ranks
           // Durable snapshots stay (id, rank) — the resume/consumer
-          // contract is unchanged; the wide loop state is rebuilt from
-          // the cached vdeg after the commit round-trip.
-          ranks = Supersteps
-            .commit(
-              spark, runDir, iter, ranks.select(col("id"), col("rank")),
-              Map(
-                "l1_delta" -> delta,
-                "n_vertices" -> g.n.toDouble,
-                "n_edges" -> g.m.toDouble,
-                "dangling_mass" -> danglingVal,
-                "converged" -> (if (converged) 1.0 else 0.0)
-              )
+          // contract is unchanged; the loop keeps its wide state.
+          Supersteps.commit(
+            spark, runDir, iter, ranks.select(col("id"), col("rank")),
+            Map(
+              "l1_delta" -> delta,
+              "n_vertices" -> g.n.toDouble,
+              "n_edges" -> g.m.toDouble,
+              "dangling_mass" -> danglingVal,
+              "converged" -> (if (converged) 1.0 else 0.0)
             )
-            .join(g.vdeg, Seq("id"))
-            .select(col("id"), col("outdeg"), col("rank"), col("rank").as("old"))
-            .repartition(g.parts, col("id"))
-            .localCheckpoint(true)
-          checkpointRdd(beforeCommit).foreach(_.unpersist(false))
-          // danglingVal is unchanged: the commit round-trips the exact
-          // double rank values, so the pre-commit sum still holds.
+          )
         case _ => ()
       }
     }

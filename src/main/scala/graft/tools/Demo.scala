@@ -34,7 +34,7 @@ object Demo {
     println("top-5 by rank:")
     r.ranks.orderBy(desc("rank")).limit(5).show()
     println(s"committed steps in $runDir: " + Supersteps.lastCommitted(spark, runDir))
-    println("last metrics: " + Supersteps.readMetrics(spark, runDir, Supersteps.lastCommitted(spark, runDir).get).take(300))
+    println("last metrics: " + Supersteps.readMetrics(spark, runDir, Supersteps.lastCommitted(spark, runDir).get))
 
     println("== 4. resume from checkpoint reproduces the converged state ==")
     val resumed = PageRank.resume(edges, runDir, PageRankConfig(tol = 1e-6, checkpoint = Durable(runDir, 5)))

@@ -2,6 +2,10 @@ package graft.graph
 
 import graft.SparkSpec
 import graft.ingest.Edge
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import java.nio.file.Files
 
 class CsrPageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -34,11 +38,11 @@ class CsrPageRankSpec extends SparkSpec {
     val edges = Oracles.randomGraph(200, 900, seed = 7)
     val ds = edges.toDF("src", "dst").as[Edge]
     val runDir = java.nio.file.Files.createTempDirectory("graft-csr-durable").toString
-    // every=3 forces TWO mid-run reread swaps before the final commit
+    // every=3: two mid-run commits before the final one
     val durable = CsrPageRank.run(ds,
       PageRankConfig(tol = 0.0, maxIter = 9, checkpoint = Durable(runDir, every = 3)))
     val local = CsrPageRank.run(ds, fixed(9))
-    assert(toMap(durable) == toMap(local), "reread state perturbed the ranks")
+    assert(toMap(durable) == toMap(local), "committing perturbed the ranks")
     assert(Supersteps.lastCommitted(spark, runDir).contains(9))
     val committed = Supersteps.readState(spark, runDir, 9)
       .select("id", "rank").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -89,5 +93,67 @@ class CsrPageRankSpec extends SparkSpec {
     val want = Oracles.pageRank(edges, tol = 0.0, maxIter = 12)
     got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12, s"$k: $v vs ${want(k)}") }
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
+  }
+
+  private def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  test("P = 4: two uninterrupted runs and a resume give identical rank maps") {
+    val ds = Oracles.randomGraph(300, 1200, seed = 41).toDF("src", "dst").as[Edge]
+    val key = "graft.loop.target.rows"
+    val saved = sys.props.get(key)
+    sys.props(key) = "100" // ~1200 edges -> P = min(session's 4, 12) = 4
+    try {
+      val a = toMap(CsrPageRank.run(ds, fixed(10)))
+      val b = toMap(CsrPageRank.run(ds, fixed(10)))
+      val partDir = tmpDir("graft-csr-p4")
+      CsrPageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 5, checkpoint = Durable(partDir, 5)))
+      val parts = new java.io.File(f"$partDir/step=00005/state").listFiles()
+        .count(_.getName.startsWith("part-"))
+      assert(parts == 4, "the snapshot should be written from 4 vertex partitions")
+      val resumed = toMap(CsrPageRank.resume(ds, partDir,
+        PageRankConfig(tol = 0.0, maxIter = 10, checkpoint = Durable(partDir, 5))))
+      assert(a == b, "two uninterrupted runs differ")
+      assert(resumed == a, "the resumed run differs from the uninterrupted one")
+    } finally saved match {
+      case Some(v) => sys.props(key) = v
+      case None    => sys.props.remove(key)
+    }
+  }
+
+  test("CSR resume fails on a snapshot that does not match its commit") {
+    val ds = Oracles.randomGraph(150, 700, seed = 19).toDF("src", "dst").as[Edge]
+    val partDir = tmpDir("graft-csr-corrupt")
+    CsrPageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 4, checkpoint = Durable(partDir, 4)))
+    // same row count, one rank changed, behind the intact _COMMIT marker
+    val stateDir = s"$partDir/step=00004/state"
+    val snap = spark.read.parquet(stateDir)
+    val rows = snap.collect().toSeq
+    val bumped = rows.head.toSeq.updated(snap.schema.fieldIndex("rank"), 0.5)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(org.apache.spark.sql.Row.fromSeq(bumped) +: rows.tail), snap.schema)
+      .write.mode("overwrite").parquet(stateDir)
+    assert(Supersteps.lastCommitted(spark, partDir).contains(4))
+    val err = intercept[IllegalStateException](CsrPageRank.resume(ds, partDir, fixed(8)))
+    assert(err.getMessage.contains(s"superstep 4 in $partDir"))
+  }
+
+  test("a durable commit adds at most one job per committed superstep") {
+    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    val sc = spark.sparkContext
+    def jobs(cfg: PageRankConfig): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      }
+      ListenerBusDrain(sc)
+      sc.addSparkListener(counter)
+      try { CsrPageRank.run(ds, cfg); ListenerBusDrain(sc); n.get }
+      finally sc.removeSparkListener(counter)
+    }
+    val iters = 6
+    val local = jobs(fixed(iters))
+    val durable = jobs(PageRankConfig(tol = 0.0, maxIter = iters,
+      checkpoint = Durable(tmpDir("graft-csr-jobs"), every = 1)))
+    assert(durable - local <= iters, s"durable $durable jobs vs LocalOnly $local for $iters commits")
   }
 }
