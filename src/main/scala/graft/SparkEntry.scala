@@ -384,36 +384,27 @@ object SparkEntry {
     }),
     // --- all_features: SQL-expressible 11-feature block over a derived citation universe ----------------------------------------------
     "q_link_features" -> ((s, d) => {
-      linkUniverse(s, d) match { case (edges, papers, authors, emb) =>
-        LinkFeatures.allFeatures(edges, papers, authors, emb, s.emptyDataFrame.select())
-          .select(
-            col("citingpaperID"), col("citedpaperID"), col("authorID"),
-            col("year_diff"), col("citing_paper_citationcount"), col("cited_paper_citationcount"),
-            col("self_cite"), round(col("similarity"), 6).as("similarity"),
-            col("raw_cocitation"), round(col("cosine_cocitation"), 6).as("cosine_cocitation"),
-            round(col("jaccard_cocitation"), 6).as("jaccard_cocitation"),
-            col("raw_bibcoupling"), round(col("cosine_bibcoupling"), 6).as("cosine_bibcoupling"),
-            round(col("jaccard_bibcoupling"), 6).as("jaccard_bibcoupling"))
-      }
+      linkUniverse(s, d).features
+        .select(
+          col("citingpaperID"), col("citedpaperID"), col("authorID"),
+          col("year_diff"), col("citing_paper_citationcount"), col("cited_paper_citationcount"),
+          col("self_cite"), round(col("similarity"), 6).as("similarity"),
+          col("raw_cocitation"), round(col("cosine_cocitation"), 6).as("cosine_cocitation"),
+          round(col("jaccard_cocitation"), 6).as("jaccard_cocitation"),
+          col("raw_bibcoupling"), round(col("cosine_bibcoupling"), 6).as("cosine_bibcoupling"),
+          round(col("jaccard_bibcoupling"), 6).as("jaccard_bibcoupling"))
     }),
     // --- M2: edge_proba — logistic scorer with -2 imputation over the same universe ---------------------------------------------------
     "q_link_prob" -> ((s, d) => {
-      linkUniverse(s, d) match { case (edges, papers, authors, emb) =>
-        LinkProb.edgeProba(
-          LinkFeatures.allFeatures(edges, papers, authors, emb, s.emptyDataFrame.select()))
-          .select(col("citingpaperID"), col("citedpaperID"), col("authorID"),
-            round(col("proba"), 6).as("proba"))
-      }
+      LinkProb.edgeProba(linkUniverse(s, d).features)
+        .select(col("citingpaperID"), col("citedpaperID"), col("authorID"),
+          round(col("proba"), 6).as("proba"))
     }),
     // --- M2 nonlinear backend: extra-trees scorer over the same universe ---------------------------------------------------------------
     "q_link_prob_tree" -> ((s, d) => {
-      linkUniverse(s, d) match { case (edges, papers, authors, emb) =>
-        LinkProb.scoreTree(
-          LinkFeatures.allFeatures(edges, papers, authors, emb, s.emptyDataFrame.select()),
-          graft.analytics.TreeModel64.Model)
-          .select(col("citingpaperID"), col("citedpaperID"), col("authorID"),
-            round(col("proba"), 6).as("proba"))
-      }
+      LinkProb.scoreTree(linkUniverse(s, d).features, graft.analytics.TreeModel64.Model)
+        .select(col("citingpaperID"), col("citedpaperID"), col("authorID"),
+          round(col("proba"), 6).as("proba"))
     }),
     // --- T3-T5 driver check: full per-edge correlation bundle (Pearson + sliding-window + time-lag variants) over derived citation
     //     series with real (non-null) values — the event derivation is tuned so every semantic regime appears at sf0.01: dense papers
@@ -618,24 +609,22 @@ object SparkEntry {
     // well-formed and content-complete while the exact string formatting
     // stays engine-specific. ------------------------------------------------------------------------------------------------------------
     "q_export_graph" -> ((s, d) => {
-      linkUniverse(s, d) match { case (edges, _, _, _) =>
-        val links = edges.select(
-          col("authorID"), col("citingpaperID").as("childrenID"),
-          col("citedpaperID").as("parentID"),
-          (col("citingpaperID") % 100 / 100.0).as("extendsProb"))
-        val papers = t(s, d, "orders").select(
-          col("o_custkey").as("authorID"), col("o_orderkey").as("paperID"),
-          (col("o_orderkey") % 2).cast("double").as("isKeyPaper"))
-        val g = GraphExport.perAuthorJson(links, papers, minProb = 0.3)
-        val edgesSchema = org.apache.spark.sql.types.DataType.fromDDL(
-          "array<struct<source:bigint,target:bigint,prob:double>>")
-        val parsedEdges = from_json(get_json_object(col("graph_json"), "$.edges"), edgesSchema)
-        g.select(
-          col("authorID"),
-          size(json_object_keys(get_json_object(col("graph_json"), "$.nodes"))).cast("long").as("n_nodes"),
-          size(parsedEdges).cast("long").as("n_edges"),
-          round(aggregate(parsedEdges, lit(0.0), (acc, x) => acc + x.getField("prob")), 6).as("sum_prob"))
-      }
+      val links = linkUniverse(s, d).edges.select(
+        col("authorID"), col("citingpaperID").as("childrenID"),
+        col("citedpaperID").as("parentID"),
+        (col("citingpaperID") % 100 / 100.0).as("extendsProb"))
+      val papers = t(s, d, "orders").select(
+        col("o_custkey").as("authorID"), col("o_orderkey").as("paperID"),
+        (col("o_orderkey") % 2).cast("double").as("isKeyPaper"))
+      val g = GraphExport.perAuthorJson(links, papers, minProb = 0.3)
+      val edgesSchema = org.apache.spark.sql.types.DataType.fromDDL(
+        "array<struct<source:bigint,target:bigint,prob:double>>")
+      val parsedEdges = from_json(get_json_object(col("graph_json"), "$.edges"), edgesSchema)
+      g.select(
+        col("authorID"),
+        size(json_object_keys(get_json_object(col("graph_json"), "$.nodes"))).cast("long").as("n_nodes"),
+        size(parsedEdges).cast("long").as("n_edges"),
+        round(aggregate(parsedEdges, lit(0.0), (acc, x) => acc + x.getField("prob")), 6).as("sum_prob"))
     }),
     // --- isKeyPaper end-to-end: W3/W4 coupled prefix sums + windowed-max
     // supervisor rate, with the 1.0 first-author and 1/authorOrder
@@ -898,52 +887,66 @@ object SparkEntry {
     * each order has its customer as single author; embeddings are a
     * deterministic 2-d function of the keys.
     */
-  // One materialized universe per (session, dir) — VERDICT r6 #4: four
-  // declared queries (q_export_graph, q_link_features, q_link_prob,
-  // q_link_prob_tree) consume the identical derivation, and re-running
-  // the lineitem self-join + distinct for each tripled its exposure to
-  // the sweep. The memo is IN-SESSION ONLY (eager localCheckpoint blocks
-  // on the session's SparkContext, WeakHashMap-keyed so stopped sessions
-  // release them): every JVM invocation still computes the universe from
-  // the parquet inputs, inside the first timed query that needs it —
-  // nothing persists across runs.
-  private val universeCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, (DataFrame, DataFrame)]]()
+  private final class LinkUniverse(
+      val edges: DataFrame, papers: DataFrame, authors: DataFrame, emb: DataFrame) {
+    /** The 17-feature `all_features` table over this universe (the
+      * reference's `all_features.csv`), built once and materialized. */
+    lazy val features: DataFrame =
+      LinkFeatures.allFeatures(edges, papers, authors, emb, edges.sparkSession.emptyDataFrame.select())
+        .localCheckpoint(true)
+  }
 
-  private def linkUniverse(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val orders = t(s, d, "orders")
-    val (edges, papers) = universeCache.synchronized {
-      var perSession = universeCache.get(s)
-      if (perSession == null) {
-        perSession = scala.collection.mutable.Map.empty
-        universeCache.put(s, perSession)
-      }
-      perSession.getOrElseUpdate(new java.io.File(d).getCanonicalPath, {
-        val li = t(s, d, "lineitem").filter(col("l_partkey") <= 30)
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val custOf = orders.select(col("o_orderkey"), col("o_custkey"))
-        val e = li.select(col("l_partkey").as("pk"), col("l_orderkey").as("x"))
-          .join(li.select(col("l_partkey").as("pk"), col("l_orderkey").as("y")), "pk")
-          .filter(col("x") > col("y"))
-          .select(col("x").as("citingpaperID"), col("y").as("citedpaperID"))
-          .distinct()
-          .join(custOf.withColumnRenamed("o_orderkey", "citingpaperID"), "citingpaperID")
-          .withColumnRenamed("o_custkey", "authorID")
-        val counts = t(s, d, "lineitem").groupBy(col("l_orderkey")).agg(count(lit(1)).as("citationCount"))
-        val p = orders
-          .join(counts, col("o_orderkey") === col("l_orderkey"), "left")
-          .select(col("o_orderkey").as("paperID"), year(col("o_orderdate")).cast("long").as("year"),
-            coalesce(col("citationCount"), lit(0L)).as("citationCount"))
-        (e.localCheckpoint(true), p.localCheckpoint(true))
-      })
+  // One LinkUniverse per (session, canonical dir). Four declared queries
+  // read it: q_export_graph reads `edges`; q_link_features,
+  // q_link_prob and q_link_prob_tree read `features`. Whichever of them
+  // runs first on a session pays for the universe (the lineitem
+  // self-join + distinct, with `edges` and `papers` materialized
+  // eagerly); whichever of the three feature leaves runs first also
+  // pays for `features` (about two dozen shuffle stages), and the other
+  // two only round or score that table. Results do not depend on the
+  // order the leaves run in.
+  //
+  // The memo is IN-SESSION ONLY: the tables are eager localCheckpoint
+  // blocks on the session's SparkContext, held in a WeakHashMap keyed by
+  // the session, so a dropped session releases them. No cache()/persist():
+  // the CacheManager is shared by every session of a SparkContext, so a
+  // cached plan would leak into sibling sessions. Every new session, and
+  // every JVM, computes the universe and its features from the parquet
+  // inputs again, inside the first timed query that needs them.
+  private val universeCache =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, LinkUniverse]]()
+
+  private def linkUniverse(s: SparkSession, d: String): LinkUniverse = universeCache.synchronized {
+    var perSession = universeCache.get(s)
+    if (perSession == null) {
+      perSession = scala.collection.mutable.Map.empty
+      universeCache.put(s, perSession)
     }
-    // authors/emb are plain projections of orders — cheaper to re-plan
-    // than to hold materialized
-    val authors = orders.select(col("o_orderkey").as("paperID"), col("o_custkey").as("authorID"))
-    val emb = orders.select(col("o_orderkey").as("paperID"),
-      array((col("o_custkey") % 7).cast("double") + lit(1.0),
-        (col("o_orderkey") % 5).cast("double")).as("embedding"))
-    (edges, papers, authors, emb)
+    perSession.getOrElseUpdate(new java.io.File(d).getCanonicalPath, {
+      val orders = t(s, d, "orders")
+      val li = t(s, d, "lineitem").filter(col("l_partkey") <= 30)
+        .select(col("l_orderkey"), col("l_partkey")).distinct()
+      val custOf = orders.select(col("o_orderkey"), col("o_custkey"))
+      val e = li.select(col("l_partkey").as("pk"), col("l_orderkey").as("x"))
+        .join(li.select(col("l_partkey").as("pk"), col("l_orderkey").as("y")), "pk")
+        .filter(col("x") > col("y"))
+        .select(col("x").as("citingpaperID"), col("y").as("citedpaperID"))
+        .distinct()
+        .join(custOf.withColumnRenamed("o_orderkey", "citingpaperID"), "citingpaperID")
+        .withColumnRenamed("o_custkey", "authorID")
+      val counts = t(s, d, "lineitem").groupBy(col("l_orderkey")).agg(count(lit(1)).as("citationCount"))
+      val p = orders
+        .join(counts, col("o_orderkey") === col("l_orderkey"), "left")
+        .select(col("o_orderkey").as("paperID"), year(col("o_orderdate")).cast("long").as("year"),
+          coalesce(col("citationCount"), lit(0L)).as("citationCount"))
+      // authors/emb are plain projections of orders: cheap to re-plan,
+      // not worth holding materialized
+      val authors = orders.select(col("o_orderkey").as("paperID"), col("o_custkey").as("authorID"))
+      val emb = orders.select(col("o_orderkey").as("paperID"),
+        array((col("o_custkey") % 7).cast("double") + lit(1.0),
+          (col("o_orderkey") % 5).cast("double")).as("embedding"))
+      new LinkUniverse(e.localCheckpoint(true), p.localCheckpoint(true), authors, emb)
+    })
   }
 
   // ---------------------------------------------------------------------

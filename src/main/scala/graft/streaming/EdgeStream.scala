@@ -175,7 +175,8 @@ object EdgeStream {
             state.update(open)
             // fire when the earliest kept session becomes final; the API
             // requires the timeout strictly past the current watermark
-            state.setTimeoutTimestamp(math.max(open.map(_._2).min + gapMs, wm + 1))
+            // (`open` is start-sorted, sessions > gapMs apart: head ends first)
+            state.setTimeoutTimestamp(math.max(open.head._2 + gapMs, wm + 1))
           }
           fin.iterator.map { case (s0, e0, n0) => SourceSession(src, t(s0), t(e0), n0) }
       }

@@ -179,25 +179,32 @@ object Similarity {
     require(nprobe <= nlist)
     // ---- quantizer fit: bounded per-partition head sample ---------------
     // No corpus.count(): an exact count is itself a full pass at the
-    // scale this function targets. Instead take the HEAD of every
-    // partition (cap/numPartitions rows each): one short read per
-    // partition (a parquet reader stops after its first row groups),
-    // spread across the whole dataset, deterministic for a fixed
-    // partitioning. The ONLY non-Catalyst step.
+    // scale this function targets. Instead keep the HEAD of every
+    // partition (cap/numPartitions rows each): spread across the whole
+    // dataset, deterministic for a fixed partitioning. getNumPartitions
+    // only plans the scan; it runs no job.
     val toUnitVec = udf { a: Seq[Float] =>
       val d = a.map(_.toDouble).toArray
       val n = math.sqrt(d.map(x => x * x).sum)
       Vectors.dense(if (n == 0) d else d.map(_ / n))
     }
     val embOnly = corpus.select(col("embedding"))
-    val perPart = math.max(1L, fitSampleCap / math.max(1, embOnly.rdd.getNumPartitions)).toInt
-    val fitRows = corpus.sparkSession
-      .createDataFrame(embOnly.rdd.mapPartitions(_.take(perPart)), embOnly.schema)
+    val perPart = math.max(1L, fitSampleCap / math.max(1, embOnly.rdd.getNumPartitions))
+    val fitRows = partitionHeads(embOnly, perPart)
       .withColumn("features", toUnitVec(col("embedding")))
     val model = new org.apache.spark.ml.clustering.KMeans()
       .setK(nlist).setSeed(seed).setMaxIter(20).fit(fitRows)
     ivfSearch(corpus, queries, k, model.clusterCenters.map(_.toArray), nprobe, normalize = true)
   }
+
+  /** The first `n` rows of every partition of `df`, in partition order:
+    * the Catalyst form of `df.rdd.mapPartitions(_.take(n))`, without the
+    * row deserialize/serialize round trip. The low 33 bits of
+    * `monotonically_increasing_id()` are the row's index inside its
+    * partition.
+    */
+  private[graft] def partitionHeads(df: DataFrame, n: Long): DataFrame =
+    df.filter(monotonically_increasing_id().bitwiseAND(0x1FFFFFFFFL) < n)
 
   /** The pure-Catalyst IVF search under GIVEN coarse centroids: assign
     * every corpus vector to its nearest cell (codegen'd broadcast-literal

@@ -128,6 +128,24 @@ class TextOpsSpec extends SparkSpec {
     assert(recall >= 0.9, s"IVF recall $recall below the 0.9 bar at nprobe=4")
   }
 
+  test("IVF fit sample: partitionHeads keeps each partition's first rows, as rdd.mapPartitions(_.take(n)) did") {
+    // the RDD form is kept here only as the reference
+    def perPartition(df: org.apache.spark.sql.DataFrame) = df.rdd.glom().collect().map(_.toSeq).toSeq
+    def reference(df: org.apache.spark.sql.DataFrame, n: Int) =
+      df.rdd.mapPartitions(_.take(n)).glom().collect().map(_.toSeq).toSeq
+    val ranged = spark.range(0, 103, 1, 5).select(col("id"), (col("id") * 7 % 11).as("v"))
+    for (n <- Seq(1, 4, 20, 30)) {
+      val got = perPartition(Similarity.partitionHeads(ranged, n))
+      assert(got == reference(ranged, n), s"n=$n")
+      assert(got.map(_.size) == Seq(20, 21, 20, 21, 21).map(math.min(_, n)), s"n=$n")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("heads").resolve("t").toString
+    ranged.write.parquet(dir)
+    val scanned = spark.read.parquet(dir)
+    assert(scanned.rdd.getNumPartitions > 1)
+    assert(perPartition(Similarity.partitionHeads(scanned, 3)) == reference(scanned, 3))
+  }
+
   test("IVF top-k: clustered data, query's own cluster is always found with nprobe=1") {
     // 4 well-separated unit-axis clusters in 8-d, 10 members each
     val rows = for (c <- 0 until 4; j <- 0 until 10) yield {
