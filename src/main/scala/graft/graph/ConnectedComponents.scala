@@ -20,7 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * grouping is absorbed by map-side partial aggregation of `min`.
   *
   * Durable mode: each round's edge frontier is a committed superstep
-  * (Supersteps.commit — one parquet write + rows/checksum + atomic marker);
+  * (Supersteps.commit — one job whose tasks write their partitions and
+  * return rows/checksum, then the atomic marker);
   * `resume` restarts from the last committed frontier and produces the
   * same fixpoint as an uninterrupted run (the frontier IS the complete
   * iteration state; the round signature is recomputed from it).

@@ -2,11 +2,15 @@ package graft.graph
 
 import graft.core.IterationConf
 import graft.ingest.Edge
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 /** PageRank over grid-partitioned, index-resolved CSR blocks — the
   * engine's scale path (north rule: adjacency as CSR blocks in typed
@@ -77,9 +81,12 @@ import org.apache.spark.storage.StorageLevel
   *     can therefore only inflate the convergence-test delta (costing at
   *     most an extra iteration), never perturb the rank values themselves.
   *
-  * Durable commits write the state once (Supersteps.commit) and the loop
-  * keeps its in-memory blocks: the Durable path runs the LocalOnly plan
-  * plus one write per committed superstep.
+  * Durable commits are fused into that one job: when a superstep is due
+  * for a commit, each task writes its partition's (id, rank, outdeg)
+  * snapshot (Supersteps.writePart) right after materializing it, and the
+  * driver seals the step. The loop keeps its in-memory blocks, so the
+  * Durable path runs exactly the LocalOnly jobs; only a run converging
+  * off the commit schedule adds one write job for its last step.
   *
   * RDD usage is forced here: a Dataset `groupByKey(_.partId).cogroup`
   * re-shuffles the static block side EVERY superstep because the lambda
@@ -316,7 +323,7 @@ object CsrPageRank {
       // resume: recompute it from the snapshot's ranks (same sum order as
       // the uninterrupted run)
       var dangling =
-        if (initialState.isEmpty) danglingCount.toDouble / n else danglingMass(state)
+        if (initialState.isEmpty) danglingCount.toDouble / n else stepJob(state, None)._1
       var iter = initialState.map(_._2).getOrElse(0)
       var converged = false
       var deltas = Vector.empty[Double]
@@ -406,13 +413,19 @@ object CsrPageRank {
               vb.copy(ranks = newRanks) // ids/outdeg shared by reference
             }
           }
-        // ONE job per iteration: the dangling sum both materializes the
-        // new state (persist + localCheckpoint) and computes the next
-        // iteration's dangling mass from it — unlike an accumulator, a
-        // re-run task cannot double-count into the ranks.
+        // ONE job per iteration: it materializes the new state (persist +
+        // localCheckpoint), computes the next iteration's dangling mass
+        // from it — unlike an accumulator, a re-run task cannot
+        // double-count into the ranks — and, when this superstep is due
+        // for a commit, writes the snapshot from the same tasks.
         newState.persist(StorageLevel.MEMORY_AND_DISK)
         newState.localCheckpoint()
-        dangling = danglingMass(newState)
+        val due = cfg.checkpoint match {
+          case Durable(runDir, every) if (iter + 1) % every == 0 => Some(runDir)
+          case _ => None
+        }
+        val (mass, written) = stepJob(newState, due.map(Supersteps.prepare(spark, _, iter + 1)))
+        dangling = mass
 
         // accumulator delta gates CONVERGENCE only: a duplicated task
         // update can only inflate it (delta terms are >= 0), i.e. cost at
@@ -426,9 +439,12 @@ object CsrPageRank {
 
         cfg.checkpoint match {
           case Durable(runDir, every) if iter % every == 0 || converged =>
-            Supersteps.commit(spark, runDir, iter,
-              state.flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.ranks(k), b.outdeg(k))))
-                .toDF("id", "rank", "outdeg"),
+            // a run converging off the commit schedule still commits its
+            // last step: one write job over the kept state
+            val parts =
+              if (due.isDefined) written
+              else stepJob(state, Some(Supersteps.prepare(spark, runDir, iter)))._2
+            Supersteps.seal(spark, runDir, iter, parts, snapshotSchema,
               Map("l1_delta" -> delta, "n_vertices" -> n.toDouble, "n_edges" -> m.toDouble,
                 "dangling_mass" -> dangling, "converged" -> (if (converged) 1.0 else 0.0)))
           case _ => ()
@@ -444,19 +460,41 @@ object CsrPageRank {
     }
   }
 
-  /** Rank mass on out-degree-0 vertices in ONE job: per-partition sums
-    * come back from runJob in partition order and are added in that
-    * order, so the double is reproducible run to run.
+  /** The committed snapshot: one (id, rank, outdeg) row per vertex. */
+  private val snapshotSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("rank", DoubleType, nullable = false),
+    StructField("outdeg", IntegerType, nullable = false)))
+
+  /** ONE job over `state`: the rank mass on out-degree-0 vertices — the
+    * per-partition sums come back from runJob in partition order and are
+    * added in that order, so the double is reproducible run to run — and,
+    * given a step's state dir, each partition's snapshot written by the
+    * task holding it. Returns the mass and each partition's snapshot
+    * (rows, checksum).
     */
-  private def danglingMass(state: RDD[VBlock]): Double =
-    state.sparkContext.runJob(state, (vs: Iterator[VBlock]) => {
+  private def stepJob(state: RDD[VBlock], snapshotDir: Option[String]): (Double, Seq[(Long, Long)]) = {
+    val sc = state.sparkContext
+    val conf = snapshotDir.map(_ => new SerializableConfiguration(sc.hadoopConfiguration))
+    val parts = sc.runJob(state, (ctx: TaskContext, vs: Iterator[VBlock]) => {
+      val bs = vs.toArray // at most one block per partition
       var s = 0.0
-      vs.foreach { vb =>
+      bs.foreach { vb =>
         var k = 0
         while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
       }
-      s
-    }).sum
+      val written = snapshotDir.fold((0L, 0L)) { dir =>
+        val row = new SpecificInternalRow(snapshotSchema)
+        Supersteps.writePart(dir, snapshotSchema, conf.get, ctx,
+          bs.iterator.flatMap(b => b.ids.indices.iterator.map { k =>
+            row.setLong(0, b.ids(k)); row.setDouble(1, b.ranks(k)); row.setInt(2, b.outdeg(k))
+            row: InternalRow
+          }))
+      }
+      (s, written)
+    })
+    (parts.map(_._1).sum, parts.toSeq.map(_._2))
+  }
 
   /** Persist + truncate lineage + materialize in one action. */
   private def materialize[T](rdd: RDD[T]): RDD[T] = {

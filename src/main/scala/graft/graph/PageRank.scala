@@ -14,7 +14,8 @@ final case class LocalOnly(every: Int = 1) extends CheckpointPolicy
 /** Durable resumable checkpoints: every `every` iterations a committed
   * superstep (parquet + metrics + snapshot rows and checksum + atomic
   * marker) lands in `runDir` — the production mode. A commit is one
-  * write; the loop keeps its in-memory state.
+  * write by the tasks holding the state; the loop keeps its in-memory
+  * state.
   */
 final case class Durable(runDir: String, every: Int = 1) extends CheckpointPolicy
 

@@ -156,4 +156,42 @@ class CsrPageRankSpec extends SparkSpec {
       checkpoint = Durable(tmpDir("graft-csr-jobs"), every = 1)))
     assert(durable - local <= iters, s"durable $durable jobs vs LocalOnly $local for $iters commits")
   }
+
+  /** Jobs started while `body` runs (listener bus drained on both ends). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(counter)
+    try { body; ListenerBusDrain(sc); n.get }
+    finally sc.removeSparkListener(counter)
+  }
+
+  test("fused commits: Durable(every = 1) runs exactly the LocalOnly jobs") {
+    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    val iters = 6
+    val dir = tmpDir("graft-csr-fused")
+    val local = jobsOf(CsrPageRank.run(ds, fixed(iters)))
+    val durable = jobsOf(CsrPageRank.run(ds,
+      PageRankConfig(tol = 0.0, maxIter = iters, checkpoint = Durable(dir, every = 1))))
+    assert(durable == local, s"durable $durable jobs vs LocalOnly $local for $iters commits")
+    assert(Supersteps.lastCommitted(spark, dir).contains(iters))
+  }
+
+  test("fused commits: converging off the commit schedule adds at most one job") {
+    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    val cfg = PageRankConfig(tol = 1e-6)
+    var iters = 0
+    val local = jobsOf { iters = CsrPageRank.run(ds, cfg).iterations }
+    assert(iters % 4 != 0, s"the run converges on step $iters, which is on the every-4 schedule")
+    val dir = tmpDir("graft-csr-offschedule")
+    val durable = jobsOf(CsrPageRank.run(ds, cfg.copy(checkpoint = Durable(dir, every = 4))))
+    assert(durable <= local + 1, s"durable $durable jobs vs LocalOnly $local")
+    assert(Supersteps.lastCommitted(spark, dir).contains(iters))
+    assert(Supersteps.readMetrics(spark, dir, iters).converged)
+    Supersteps.readState(spark, dir, iters) // the lineage check passes
+  }
 }

@@ -2,9 +2,15 @@ package graft.graph
 
 import graft.SparkSpec
 import graft.ingest.Edge
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 
 class SuperstepsSpec extends SparkSpec {
   import spark.implicits._
@@ -140,5 +146,106 @@ class SuperstepsSpec extends SparkSpec {
     local.foreach { case (k, v) =>
       assert(math.abs(v - durable(k)) < 1e-12, s"vertex $k: $v vs ${durable(k)}")
     }
+  }
+
+  private def frame(schema: StructType, rows: Seq[Row], slices: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  test("lineage parity: writePart's rows and checksum == Spark's over the read-back snapshot") {
+    val special = Seq(-0.0, 0.0, Double.NaN, -Double.NaN, 1e-300, Double.PositiveInfinity)
+    val csr = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("rank", DoubleType, nullable = false),
+      StructField("outdeg", IntegerType, nullable = false)))
+    val joinPr = StructType(Seq(StructField("id", LongType), StructField("rank", DoubleType)))
+    // one more slice than rows in each shape: at least one empty partition
+    val shapes = Seq(
+      "csr (id, rank, outdeg)" -> frame(csr,
+        special.zipWithIndex.map { case (r, i) => Row(i.toLong, r, i % 3) }, special.size + 1),
+      "join PageRank (id, rank)" -> frame(joinPr,
+        special.zipWithIndex.map { case (r, i) => Row(i.toLong * 7, r) } :+ Row(99L, null), 8),
+      "LPA (id, label)" -> frame(longs("id", "label"),
+        (1L to 20L).map(i => Row(i, i % 4)), 21),
+      "CC frontier (u, v)" -> frame(longs("u", "v"),
+        (2L to 30L).map(i => Row(i, i / 2)), 30))
+    shapes.zipWithIndex.foreach { case ((shape, df), i) =>
+      val dir = tmpDir()
+      Supersteps.commit(spark, dir, i + 1, df, Map.empty)
+      val back = spark.read.parquet(stateDir(dir, i + 1)) // inferred, not the recorded schema
+      assert(back.schema.map(_.dataType) == df.schema.map(_.dataType), shape)
+      val want = back.agg(count(lit(1)), bit_xor(xxhash64(back.columns.toIndexedSeq.map(col): _*)))
+        .first()
+      val got = Supersteps.readMetrics(spark, dir, i + 1)
+      assert(got.rows == want.getLong(0), shape)
+      assert(got.checksum == want.getLong(1), shape)
+      assert(got.schema.contains(df.schema), shape)
+      assert(Supersteps.readState(spark, dir, i + 1).count() == df.count(), shape)
+    }
+  }
+
+  test("writePart rejects a column type it cannot write, naming the column") {
+    val df = frame(StructType(Seq(StructField("id", LongType), StructField("name", StringType))),
+      Seq(Row(1L, "a")), 1)
+    val err = intercept[IllegalArgumentException](Supersteps.commit(spark, tmpDir(), 1, df, Map.empty))
+    assert(err.getMessage.contains("name"))
+  }
+
+  /** Write `df`'s single partition into `step`'s state dir as one task
+    * attempt (each call is a new job, so a new attempt id); no seal.
+    */
+  private def writeAttempt(stateDir: String, df: DataFrame): (Long, Long) = {
+    val schema = df.schema
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.runJob(df.queryExecution.toRdd,
+      (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+        Supersteps.writePart(stateDir, schema, conf, ctx, rows)).head
+  }
+
+  test("attempt safety: duplicate attempts leave one part file, temps stay invisible") {
+    val dir = tmpDir()
+    val df = frame(longs("id", "label"), (1L to 50L).map(i => Row(i, i % 5)), 1)
+    val state = Supersteps.prepare(spark, dir, 1)
+    val first = writeAttempt(state, df)
+    val second = writeAttempt(state, df)
+    assert(first == second)
+    val visible = new File(state).list().filterNot(_.startsWith(".")).toSeq
+    assert(visible == Seq("part-00000.parquet"))
+    assert(!new File(state).list().exists(n => n.startsWith(".part-") && !n.endsWith(".crc")),
+      "a temp file outlived its rename")
+    Supersteps.seal(spark, dir, 1, Seq(first), df.schema, Map.empty)
+    assert(Supersteps.readState(spark, dir, 1).count() == 50)
+
+    // a crashed attempt's leftover temp file is not part of the snapshot
+    Files.write(Paths.get(state, ".part-00000-987.parquet"), "torn write".getBytes("UTF-8"))
+    assert(Supersteps.readState(spark, dir, 1).count() == 50)
+
+    // parts written but never sealed stay invisible
+    writeAttempt(Supersteps.prepare(spark, dir, 2), df)
+    assert(new File(stateDir(dir, 2), "part-00000.parquet").exists())
+    assert(Supersteps.lastCommitted(spark, dir).contains(1))
+  }
+
+  test("resume from a run dir written before schemas were recorded") {
+    val ds = Oracles.randomGraph(120, 400, seed = 37).toDF("src", "dst").as[Edge]
+    val full = LabelPropagation.run(ds, maxIter = 10).labels
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val partDir = tmpDir()
+    LabelPropagation.run(ds, maxIter = 4, checkpoint = Durable(partDir))
+    assert(Supersteps.readMetrics(spark, partDir, 4).schema.isDefined)
+    // drop the "schema" field from every step's _METRICS.json
+    (1 to 4).foreach { k =>
+      val path = Paths.get(f"$partDir/step=$k%05d/_METRICS.json")
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.remove("schema")
+      Files.write(path, node.toString.getBytes("UTF-8"))
+      Files.deleteIfExists(path.resolveSibling("._METRICS.json.crc")) // now stale
+    }
+    assert(Supersteps.readMetrics(spark, partDir, 4).schema.isEmpty)
+    val resumed = LabelPropagation.resume(ds, partDir, maxIter = 10).labels
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(resumed == full)
   }
 }
