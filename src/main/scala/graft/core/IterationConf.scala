@@ -13,14 +13,11 @@ import org.apache.spark.sql.{DataFrame, GraftSessionBridge, SparkSession}
   *  - `spark.sql.shuffle.partitions` must be sized to the LOOP data
   *    (sizedPartitions), not the session default.
   *
-  * Two mechanisms:
-  *  - `withLoopSession` (preferred, race-free): runs the loop body on a
-  *    CLONED session — isolated conf over the same SparkContext, shared
-  *    CacheManager — so concurrent queries on the caller's session can
-  *    never observe loop confs and the loop can never clobber a
-  *    concurrent loop's partition sizing. Nothing to restore.
-  *  - `withIterationConf` (legacy set/restore on the caller's session):
-  *    kept for dev tools that intentionally reshape their own session.
+  * `withLoopSession` runs the loop body on a CLONED session — isolated
+  * conf over the same SparkContext, shared CacheManager — so concurrent
+  * queries on the caller's session can never observe loop confs and the
+  * loop can never clobber a concurrent loop's partition sizing. Nothing
+  * to restore.
   */
 object IterationConf {
 
@@ -49,20 +46,6 @@ object IterationConf {
   /** Re-bind a DataFrame's plan to another session (same SparkContext). */
   def rebind(df: DataFrame, to: SparkSession): DataFrame =
     GraftSessionBridge.ofRows(to, df.queryExecution.logical)
-
-  def withIterationConf[A](spark: SparkSession)(f: => A): A = {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val abjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abjt)
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-    }
-  }
 
   /** Partition count sized to the LOOP data, not the session default.
     * With AQE coalescing off inside a superstep loop (see above), a tiny

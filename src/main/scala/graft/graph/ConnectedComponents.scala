@@ -181,7 +181,7 @@ object ConnectedComponents {
       val next = smallStarOriented(afterLarge, PrRound)
         .localCheckpoint(false)
       val sig = signature(next)
-      releaseCheckpoint(afterLarge)
+      Supersteps.releaseCheckpoint(afterLarge)
       rounds += 1
       stable = sig == prevSig
       prevSig = sig
@@ -193,7 +193,7 @@ object ConnectedComponents {
               "stable" -> (if (stable) 1.0 else 0.0)))
         case _ => ()
       }
-      releaseCheckpoint(e)
+      Supersteps.releaseCheckpoint(e)
       e = next
     }
 
@@ -208,15 +208,6 @@ object ConnectedComponents {
     CcResult(graft.core.IterationConf.rebind(components, callerSpark), rounds)
     }
   }
-
-  // Direct top-level LogicalRDD only — a deep collectFirst could reach a
-  // CALLER-supplied checkpointed RDD through the round-0 frontier's plan
-  // and unpersist it (see PageRank.checkpointRdd, r07 fix).
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   private def signature(e: DataFrame): (Long, Long) = {
     // bit_xor: order-insensitive, overflow-free (edge set is distinct).

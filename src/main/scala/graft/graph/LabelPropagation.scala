@@ -58,14 +58,6 @@ object LabelPropagation {
     * never mutated (thread-safe under concurrent queries). The result is
     * re-bound to the caller's session.
     */
-  // Direct top-level LogicalRDD only (see PageRank.checkpointRdd, r07):
-  // never unpersist an RDD reached deep inside a non-checkpoint plan.
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
   private def iterate(edges: Dataset[Edge], labels0: Option[DataFrame], iter0: Int,
                       maxIter: Int, checkpoint: CheckpointPolicy): LpaResult = {
     val callerSpark = edges.sparkSession
@@ -144,7 +136,7 @@ object LabelPropagation {
         .localCheckpoint(false)
 
       val changed = newLabels.filter(col("label") =!= col("old")).count()
-      releaseCheckpoint(labels)
+      Supersteps.releaseCheckpoint(labels)
       labels = newLabels
       iter += 1
       converged = changed == 0

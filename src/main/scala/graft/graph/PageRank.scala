@@ -185,22 +185,6 @@ object PageRank {
     * Spark's CacheManager to invalidate+rebuild dependent cache entries
     * on every unpersist — measured exponential recompute.)
     */
-  /** The RDD behind a locally-checkpoint'ed Dataset (to free its blocks
-    * as soon as the next iteration no longer needs them — relying on
-    * GC-driven ContextCleaner instead causes storage churn spikes).
-    * ONLY a direct top-level LogicalRDD matches: a deep collectFirst
-    * would, on the first iteration (state still a projection over the
-    * inputs), reach down the plan and unpersist a CALLER-supplied
-    * checkpointed edge RDD — irrecoverable for a local checkpoint
-    * (r07 fix; previously latent because every declared query feeds
-    * parquet-backed edges).
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
-
   private def iterate(
       g: Prepared,
       ranks0: DataFrame, // (id, outdeg, rank), co-partitioned by id
@@ -222,7 +206,7 @@ object PageRank {
     // No eager checkpoint of the initial state: it is a projection of the
     // cached vdeg (or the resumed snapshot), already co-partitioned —
     // iteration 1 reads it directly and produces the first checkpointed
-    // state itself (checkpointRdd() is a no-op on a non-LogicalRDD).
+    // state itself (Supersteps.releaseCheckpoint is a no-op on it).
     var ranks = ranks0
       .select(col("id"), col("outdeg"), col("rank"), col("rank").as("old"))
 
@@ -295,7 +279,7 @@ object PageRank {
       danglingVal = row.getDouble(1)
       if (needStats) deltas :+= delta
 
-      checkpointRdd(ranks).foreach(_.unpersist(false))
+      Supersteps.releaseCheckpoint(ranks)
       ranks = newRanks
       iter += 1
       converged = needStats && delta < cfg.tol

@@ -73,6 +73,21 @@ object Supersteps {
 
   private def stepDir(runDir: String, step: Int) = new Path(runDir, f"step=$step%05d")
 
+  /** Frees the blocks of a locally-checkpointed loop state as soon as the
+    * next iteration no longer needs them (the GC-driven ContextCleaner
+    * instead causes storage churn spikes). ONLY a direct top-level
+    * LogicalRDD matches: a deep collectFirst would, on a loop's first
+    * iteration (state still a projection over its inputs), reach down the
+    * plan and unpersist a CALLER-supplied checkpointed edge RDD, which is
+    * irrecoverable for a local checkpoint (r07 fix). Any other plan is
+    * left alone.
+    */
+  private[graph] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
+
   /** (rows, checksum) aggregates over every column of `df`. bit_xor is
     * order-insensitive and overflow-free, so the checksum is stable under
     * partitioning and shuffle order but catches any row-level drift.

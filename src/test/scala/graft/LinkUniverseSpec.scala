@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 
 /** The in-session link universe memo behind q_export_graph and the three
@@ -17,18 +13,9 @@ class LinkUniverseSpec extends SparkSpec {
   /** Runs leaf `q` on session `s` (plan build and collect) and returns
     * its rows sorted, with the number of Spark jobs it started. */
   private def run(s: SparkSession, q: String): (Seq[Row], Int) = {
-    val sc = s.sparkContext
-    val n = new AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(counter)
-    try {
-      val rows = SparkEntry.queries(q)(s, dir).collect().toSeq.sortBy(_.toString)
-      ListenerBusDrain(sc)
-      (rows, n.get)
-    } finally sc.removeSparkListener(counter)
+    var rows = Seq.empty[Row]
+    val jobs = jobsOf { rows = SparkEntry.queries(q)(s, dir).collect().toSeq.sortBy(_.toString) }
+    (rows, jobs)
   }
 
   private def runAll(s: SparkSession, order: Seq[String]): Map[String, Seq[Row]] =

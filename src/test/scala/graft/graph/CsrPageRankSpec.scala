@@ -2,8 +2,6 @@ package graft.graph
 
 import graft.SparkSpec
 import graft.ingest.Edge
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.nio.file.Files
 
@@ -139,35 +137,12 @@ class CsrPageRankSpec extends SparkSpec {
 
   test("a durable commit adds at most one job per committed superstep") {
     val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
-    val sc = spark.sparkContext
-    def jobs(cfg: PageRankConfig): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val counter = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-      }
-      ListenerBusDrain(sc)
-      sc.addSparkListener(counter)
-      try { CsrPageRank.run(ds, cfg); ListenerBusDrain(sc); n.get }
-      finally sc.removeSparkListener(counter)
-    }
+    def jobs(cfg: PageRankConfig): Int = jobsOf(CsrPageRank.run(ds, cfg))
     val iters = 6
     val local = jobs(fixed(iters))
     val durable = jobs(PageRankConfig(tol = 0.0, maxIter = iters,
       checkpoint = Durable(tmpDir("graft-csr-jobs"), every = 1)))
     assert(durable - local <= iters, s"durable $durable jobs vs LocalOnly $local for $iters commits")
-  }
-
-  /** Jobs started while `body` runs (listener bus drained on both ends). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(counter)
-    try { body; ListenerBusDrain(sc); n.get }
-    finally sc.removeSparkListener(counter)
   }
 
   test("fused commits: Durable(every = 1) runs exactly the LocalOnly jobs") {

@@ -34,6 +34,24 @@ class SuperstepsSpec extends SparkSpec {
     assert(metrics.checksum == state.agg(bit_xor(xxhash64(col("id")))).first().getLong(0))
   }
 
+  test("caller-checkpointed edges survive every loop") {
+    // A local checkpoint cannot be recomputed: had a loop's state release
+    // reached the caller's edge RDD through its first state's plan, the
+    // count after that loop would fail on the missing checkpoint blocks.
+    val edges = Oracles.randomGraph(120, 500, seed = 23).toDF("src", "dst").as[Edge]
+      .localCheckpoint(true)
+    val n = edges.count()
+    val loops = Seq[(String, () => Any)](
+      "PageRank" -> (() => PageRank.run(edges, PageRankConfig(tol = 0.0, maxIter = 3))),
+      "CsrPageRank" -> (() => CsrPageRank.run(edges, PageRankConfig(tol = 0.0, maxIter = 3))),
+      "ConnectedComponents" -> (() => ConnectedComponents.run(edges)),
+      "LabelPropagation" -> (() => LabelPropagation.run(edges, maxIter = 3)))
+    for ((name, loop) <- loops) {
+      loop()
+      assert(edges.count() == n, s"edge count after $name")
+    }
+  }
+
   test("uncommitted step (no _COMMIT marker) is invisible") {
     val dir = tmpDir()
     val df = (1L to 10L).toDF("id")
