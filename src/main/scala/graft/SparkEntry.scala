@@ -865,9 +865,10 @@ object SparkEntry {
   /** Shared key-papers universe: orders are papers, lineitems are author
     * credits (l_linenumber = authorOrder), suppliers <= 25 the "top
     * authors"; papers with paperID % 7 == 0 lose their first-author row
-    * to exercise the 1/authorOrder fallback.
+    * to exercise the 1/authorOrder fallback. Built once per session and
+    * materialized (`memo` below).
     */
-  private def keyPapersResult(s: SparkSession, d: String): DataFrame = {
+  private def keyPapersResult(s: SparkSession, d: String): DataFrame = memo(s, "key_papers", d) {
     val papers = t(s, d, "orders").select(
       col("o_orderkey").as("paperID"), col("o_orderpriority").as("title"),
       year(col("o_orderdate")).cast("int").as("year"))
@@ -877,7 +878,7 @@ object SparkEntry {
         col("l_linenumber").as("authorOrder"))
     val top = t(s, d, "supplier").filter(col("s_suppkey") <= 25)
       .select(col("s_suppkey").as("authorID"))
-    KeyPapers.isKeyPaper(papers, pa, top)
+    KeyPapers.isKeyPaper(papers, pa, top).localCheckpoint(true)
   }
 
   /** Shared derived citation universe for the link-feature queries:
@@ -896,57 +897,69 @@ object SparkEntry {
         .localCheckpoint(true)
   }
 
-  // One LinkUniverse per (session, canonical dir). Four declared queries
-  // read it: q_export_graph reads `edges`; q_link_features,
-  // q_link_prob and q_link_prob_tree read `features`. Whichever of them
-  // runs first on a session pays for the universe (the lineitem
-  // self-join + distinct, with `edges` and `papers` materialized
-  // eagerly); whichever of the three feature leaves runs first also
-  // pays for `features` (about two dozen shuffle stages), and the other
-  // two only round or score that table. Results do not depend on the
-  // order the leaves run in.
+  // Shared sub-results, one per (session, name, canonical dir):
+  //  - "key_papers": the isKeyPaper product, read by q_key_papers (a
+  //    projection) and q_key_papers_dist (an aggregate), as the
+  //    reference's distribution step reads the table compute_key_papers
+  //    wrote;
+  //  - "link_universe": the LinkUniverse read by q_export_graph
+  //    (`edges`) and by q_link_features, q_link_prob and q_link_prob_tree
+  //    (`features`).
+  // Whichever leaf of a group runs first on a session pays for the build
+  // (for key papers about two dozen jobs; for the universe the lineitem
+  // self-join + distinct with `edges` and `papers` materialized eagerly,
+  // and the first feature leaf also pays for `features`, about two dozen
+  // shuffle stages); the others only select from, aggregate, round or
+  // score the materialized tables. Results do not depend on the order
+  // the leaves run in.
   //
-  // The memo is IN-SESSION ONLY: the tables are eager localCheckpoint
-  // blocks on the session's SparkContext, held in a WeakHashMap keyed by
-  // the session, so a dropped session releases them. No cache()/persist():
-  // the CacheManager is shared by every session of a SparkContext, so a
-  // cached plan would leak into sibling sessions. Every new session, and
-  // every JVM, computes the universe and its features from the parquet
-  // inputs again, inside the first timed query that needs them.
-  private val universeCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, LinkUniverse]]()
+  // The memo is IN-SESSION: its tables are eager localCheckpoint blocks
+  // on the session's SparkContext. No cache()/persist(): the
+  // CacheManager is shared by every session of a SparkContext, so a
+  // cached plan would leak into sibling sessions. Every new session
+  // computes them from the parquet inputs again, inside the first timed
+  // query that needs them. An entry is never released while the
+  // SparkContext lives: every value holds DataFrames that reference
+  // their session strongly, so the WeakHashMap's key never becomes
+  // weakly reachable and the entry (with its checkpoint blocks) stays
+  // until the JVM exits, even after the caller drops the session.
+  private val sessionMemo =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[(String, String), AnyRef]]()
 
-  private def linkUniverse(s: SparkSession, d: String): LinkUniverse = universeCache.synchronized {
-    var perSession = universeCache.get(s)
-    if (perSession == null) {
-      perSession = scala.collection.mutable.Map.empty
-      universeCache.put(s, perSession)
+  private def memo[A <: AnyRef](s: SparkSession, name: String, d: String)(build: => A): A =
+    sessionMemo.synchronized {
+      var perSession = sessionMemo.get(s)
+      if (perSession == null) {
+        perSession = scala.collection.mutable.Map.empty
+        sessionMemo.put(s, perSession)
+      }
+      perSession.getOrElseUpdate((name, new java.io.File(d).getCanonicalPath), build).asInstanceOf[A]
     }
-    perSession.getOrElseUpdate(new java.io.File(d).getCanonicalPath, {
-      val orders = t(s, d, "orders")
-      val li = t(s, d, "lineitem").filter(col("l_partkey") <= 30)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      val custOf = orders.select(col("o_orderkey"), col("o_custkey"))
-      val e = li.select(col("l_partkey").as("pk"), col("l_orderkey").as("x"))
-        .join(li.select(col("l_partkey").as("pk"), col("l_orderkey").as("y")), "pk")
-        .filter(col("x") > col("y"))
-        .select(col("x").as("citingpaperID"), col("y").as("citedpaperID"))
-        .distinct()
-        .join(custOf.withColumnRenamed("o_orderkey", "citingpaperID"), "citingpaperID")
-        .withColumnRenamed("o_custkey", "authorID")
-      val counts = t(s, d, "lineitem").groupBy(col("l_orderkey")).agg(count(lit(1)).as("citationCount"))
-      val p = orders
-        .join(counts, col("o_orderkey") === col("l_orderkey"), "left")
-        .select(col("o_orderkey").as("paperID"), year(col("o_orderdate")).cast("long").as("year"),
-          coalesce(col("citationCount"), lit(0L)).as("citationCount"))
-      // authors/emb are plain projections of orders: cheap to re-plan,
-      // not worth holding materialized
-      val authors = orders.select(col("o_orderkey").as("paperID"), col("o_custkey").as("authorID"))
-      val emb = orders.select(col("o_orderkey").as("paperID"),
-        array((col("o_custkey") % 7).cast("double") + lit(1.0),
-          (col("o_orderkey") % 5).cast("double")).as("embedding"))
-      new LinkUniverse(e.localCheckpoint(true), p.localCheckpoint(true), authors, emb)
-    })
+
+  private def linkUniverse(s: SparkSession, d: String): LinkUniverse = memo(s, "link_universe", d) {
+    val orders = t(s, d, "orders")
+    val li = t(s, d, "lineitem").filter(col("l_partkey") <= 30)
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    val custOf = orders.select(col("o_orderkey"), col("o_custkey"))
+    val e = li.select(col("l_partkey").as("pk"), col("l_orderkey").as("x"))
+      .join(li.select(col("l_partkey").as("pk"), col("l_orderkey").as("y")), "pk")
+      .filter(col("x") > col("y"))
+      .select(col("x").as("citingpaperID"), col("y").as("citedpaperID"))
+      .distinct()
+      .join(custOf.withColumnRenamed("o_orderkey", "citingpaperID"), "citingpaperID")
+      .withColumnRenamed("o_custkey", "authorID")
+    val counts = t(s, d, "lineitem").groupBy(col("l_orderkey")).agg(count(lit(1)).as("citationCount"))
+    val p = orders
+      .join(counts, col("o_orderkey") === col("l_orderkey"), "left")
+      .select(col("o_orderkey").as("paperID"), year(col("o_orderdate")).cast("long").as("year"),
+        coalesce(col("citationCount"), lit(0L)).as("citationCount"))
+    // authors/emb are plain projections of orders: cheap to re-plan,
+    // not worth holding materialized
+    val authors = orders.select(col("o_orderkey").as("paperID"), col("o_custkey").as("authorID"))
+    val emb = orders.select(col("o_orderkey").as("paperID"),
+      array((col("o_custkey") % 7).cast("double") + lit(1.0),
+        (col("o_orderkey") % 5).cast("double")).as("embedding"))
+    new LinkUniverse(e.localCheckpoint(true), p.localCheckpoint(true), authors, emb)
   }
 
   // ---------------------------------------------------------------------

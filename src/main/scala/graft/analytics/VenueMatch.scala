@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,17 +42,19 @@ object VenueMatch {
     */
   def resolve(requests: DataFrame, dim: DataFrame,
               reqCol: String = "original", idCol: String = "id", nameCol: String = "name"): DataFrame = {
-    // variant table: (original, variant, stage)
-    val exact = requests.select(col(reqCol).as("original"), col(reqCol).as("variant"), lit(0).as("stage"))
-    val contains = requests.select(col(reqCol).as("original"), col(reqCol).as("variant"), lit(1).as("stage"))
-    val rewritten = Rewrites.zipWithIndex.foldLeft(exact.limit(0)) { case (acc, ((from, to), i)) =>
-      acc.union(requests
-        .filter(col(reqCol).contains(from))
-        .select(col(reqCol).as("original"),
-          regexp_replace(col(reqCol), java.util.regex.Pattern.quote(from), to).as("variant"),
-          lit(i + 2).as("stage")))
+    // variant table (original, variant, stage), every stage from one
+    // projection of the distinct requests; a rewrite whose `from` does not
+    // occur yields a null variant, dropped here
+    val reqs = requests.select(col(reqCol).as("original")).distinct()
+    val o = col("original")
+    def stage(variant: Column, i: Int): Column = struct(variant.as("variant"), lit(i).as("stage"))
+    val stages = Seq(stage(o, 0), stage(o, 1)) ++ Rewrites.zipWithIndex.map { case ((from, to), i) =>
+      stage(when(o.contains(from), regexp_replace(o, java.util.regex.Pattern.quote(from), to)), i + 2)
     }
-    val variants = exact.union(contains).union(rewritten)
+    val variants = reqs
+      .select(o, explode(array(stages: _*)).as("v"))
+      .select(o, col("v.variant").as("variant"), col("v.stage").as("stage"))
+      .filter(col("variant").isNotNull)
 
     val d = dim.select(col(idCol).as("__id"), col(nameCol).as("__name"))
     val matched = d
@@ -68,8 +70,6 @@ object VenueMatch {
       .select(col("original"), col("__id").as(idCol), col("__name").as(nameCol))
       .distinct()
 
-    requests.select(col(reqCol).as("original"))
-      .distinct()
-      .join(winners, Seq("original"), "left")
+    reqs.join(winners, Seq("original"), "left")
   }
 }

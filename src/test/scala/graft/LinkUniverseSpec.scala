@@ -10,13 +10,7 @@ class LinkUniverseSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private val leaves = Seq("q_link_features", "q_link_prob", "q_link_prob_tree")
 
-  /** Runs leaf `q` on session `s` (plan build and collect) and returns
-    * its rows sorted, with the number of Spark jobs it started. */
-  private def run(s: SparkSession, q: String): (Seq[Row], Int) = {
-    var rows = Seq.empty[Row]
-    val jobs = jobsOf { rows = SparkEntry.queries(q)(s, dir).collect().toSeq.sortBy(_.toString) }
-    (rows, jobs)
-  }
+  private def run(s: SparkSession, q: String): (Seq[Row], Int) = runQuery(s, dir, q)
 
   private def runAll(s: SparkSession, order: Seq[String]): Map[String, Seq[Row]] =
     order.map(q => q -> run(s, q)._1).toMap

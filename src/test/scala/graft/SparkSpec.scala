@@ -3,7 +3,7 @@ package graft
 import graft.core.Sessions
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -26,5 +26,14 @@ trait SparkSpec extends AnyFunSuite {
     sc.addSparkListener(counter)
     try { body; ListenerBusDrain(sc); n.get }
     finally sc.removeSparkListener(counter)
+  }
+
+  /** Runs declared query `q` over `dir` on session `s` (plan build and
+    * collect) and returns its rows sorted, with the number of Spark jobs
+    * it started. */
+  def runQuery(s: SparkSession, dir: String, q: String): (Seq[Row], Int) = {
+    var rows = Seq.empty[Row]
+    val jobs = jobsOf { rows = SparkEntry.queries(q)(s, dir).collect().toSeq.sortBy(_.toString) }
+    (rows, jobs)
   }
 }
