@@ -130,10 +130,9 @@ object LogisticTrainer {
 
   /** Macro-F1 (threshold 0.5, mean of per-class F1) + ROC-AUC for scored
     * rows. AUC is the rank statistic computed DISTRIBUTED: group by
-    * score, cumulative negative count below each group as a per-partition
-    * prefix sum over the range-partitioned group table plus per-partition
-    * offsets, ties get the 1/2 credit — no per-row collect, no
-    * single-task sort.
+    * score, cumulative negative count below each group (one window over
+    * the score-sorted group table), ties get the 1/2 credit —
+    * no per-row collect.
     */
   def scoreMetrics(scored: DataFrame, probCol: String, labelCol: String): (Double, Double) = {
     val cls = scored.select(
@@ -149,33 +148,19 @@ object LogisticTrainer {
     }
     val macroF1 = (f1(1) + f1(0)) / 2.0
 
-    // U = sum over score groups of np * (negatives scored below + nn / 2),
-    // counted as 2U so it stays an exact Long. Range partitioning puts
-    // equal scores in one partition and the partitions in score order, so
-    // one job yields each partition's own 2U (negatives counted from its
-    // start), np and nn; the driver adds 2 * np * (negatives of all
-    // earlier partitions) per partition.
+    import org.apache.spark.sql.expressions.Window
     val grp = scored.groupBy(col(probCol).as("s")).agg(
       sum(col(labelCol).cast("long")).as("np"),
       sum(lit(1L) - col(labelCol).cast("long")).as("nn"))
-    import scored.sparkSession.implicits._
-    val parts = grp.repartitionByRange(col("s")).sortWithinPartitions(col("s"))
-      .select(spark_partition_id(), coalesce(col("np"), lit(0L)), coalesce(col("nn"), lit(0L)))
-      .as[(Int, Long, Long)]
-      .mapPartitions { rows =>
-        var (pid, partU, partPos, partNeg) = (-1, 0L, 0L, 0L)
-        rows.foreach { case (p, np, nn) =>
-          pid = p; partU += np * (2 * partNeg + nn); partPos += np; partNeg += nn
-        }
-        if (pid < 0) Iterator.empty else Iterator((pid, partU, partPos, partNeg))
-      }
-      .collect().sortBy(_._1)
-    var (twoU, negBelow) = (0L, 0L)
-    parts.foreach { case (_, u2, np, nn) => twoU += u2 + 2 * np * negBelow; negBelow += nn }
-    val pos = parts.map(_._3).sum
+    val w = Window.orderBy(col("s")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = grp.select(col("np"), col("nn"),
+      (sum(col("nn")).over(w) - col("nn")).as("negBelow"))
+    val agg = ranked.agg(
+      sum(col("np") * (col("negBelow") + col("nn") / lit(2.0))).as("u"),
+      sum(col("np")).as("pos"), sum(col("nn")).as("neg")).first()
     val auc =
-      if (pos == 0L || negBelow == 0L) 0.5
-      else twoU / 2.0 / (pos.toDouble * negBelow.toDouble)
+      if (agg.getLong(1) == 0L || agg.getLong(2) == 0L) 0.5
+      else agg.getDouble(0) / (agg.getLong(1).toDouble * agg.getLong(2).toDouble)
     (macroF1, auc)
   }
 

@@ -54,31 +54,6 @@ class LogisticTrainerSpec extends SparkSpec {
     assert(math.abs(aucC - 0.5) < 1e-12) // ties get half credit
   }
 
-  test("scoreMetrics: AUC over range partitions equals the single-window rank sum, with ties") {
-    // without coalescing, the range-partitioned score groups span several tasks
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val p = (pmod(hash(col("id")), lit(499)) / 498.0).as("p") // 499 distinct scores: ties
-    val scored = s.range(0, 20000, 1, 8).select(col("id"), p)
-      .withColumn("y", (pmod(hash(col("id"), lit(7)), lit(100)) < col("p") * 80 + 10).cast("int"))
-    val groups = scored.groupBy(col("p")).count().repartitionByRange(col("p"))
-    assert(groups.select(spark_partition_id()).distinct().count() > 1, "score groups in one partition")
-
-    // the form scoreMetrics replaced, one running sum of negatives over all
-    // score-sorted groups (its single window), run on the driver
-    val grp = scored.groupBy(col("p")).agg(
-      sum(col("y").cast("long")).as("np"), sum(lit(1L) - col("y").cast("long")).as("nn"))
-      .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val negBelow = grp.scanLeft(0L)(_ + _._3)
-    val u = grp.zip(negBelow).map { case ((_, np, nn), below) => np * (below + nn / 2.0) }.sum
-    val want = u / (grp.map(_._2).sum.toDouble * negBelow.last.toDouble)
-
-    val (_, auc) = LogisticTrainer.scoreMetrics(scored, "p", "y")
-    assert(want > 0.6 && want < 1.0, s"reference AUC $want")
-    assert(math.abs(auc - want) <= 1e-12, s"AUC $auc vs single-window $want")
-  }
-
   test("imputation path: nulls train identically to explicit -2") {
     val explicit = labeled.select(
       Seq(col("id"), col("label")) ++
