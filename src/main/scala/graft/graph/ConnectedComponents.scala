@@ -42,8 +42,7 @@ object ConnectedComponents {
   private def largeStar(bidir: DataFrame, parts: Int): DataFrame = {
     val m = bidir.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
     // shuffle_hash with the per-vertex min as build side: skips the
-    // sort-merge's per-round sort of the full frontier (PageRank's
-    // contribution-join reasoning)
+    // sort-merge's per-round sort of the full frontier
     bidir
       .join(m.hint("shuffle_hash"), "u")
       .filter(col("v") > col("u"))
@@ -93,7 +92,8 @@ object ConnectedComponents {
 
   /** Resume from the last committed round in runDir (fresh run if none).
     * Result is identical to an uninterrupted run: the committed frontier
-    * is the complete iteration state.
+    * is the complete iteration state. A converged (fixpoint) frontier
+    * runs no further round: only the components mapping is built.
     */
   def resume(edges: Dataset[Edge], runDir: String, maxRounds: Int = 50): CcResult = {
     val spark = edges.sparkSession
@@ -101,7 +101,8 @@ object ConnectedComponents {
       case None => run(edges, maxRounds, Durable(runDir))
       case Some(step) =>
         val e = Supersteps.readState(spark, runDir, step)
-        iterate(edges, e, step, maxRounds, Durable(runDir))
+        val last = if (Supersteps.readMetrics(spark, runDir, step).converged) step else maxRounds
+        iterate(edges, e, step, last, Durable(runDir))
     }
   }
 
@@ -144,7 +145,8 @@ object ConnectedComponents {
 
     // Eager localCheckpoint per round: truncates lineage and avoids the
     // CacheManager invalidate-rebuild trap of persist/unpersist chains
-    // (see PageRank.iterate).
+    // (each unpersist invalidates and rebuilds the dependent cache
+    // entries — measured exponential recompute).
     var e = graft.core.IterationConf.rebind(e0c, spark)
       .repartition(Pr, col("u"))
       .localCheckpoint(true)
@@ -173,7 +175,7 @@ object ConnectedComponents {
       // probe, run in the same zero-exchange stage, so the second read
       // hits the block computed by the first), then the new frontier, and
       // the fixpoint signature — a single job per round (r07;
-      // PageRank.iterate has the same single-action design). afterLarge
+      // LabelPropagation has the same single-action design). afterLarge
       // may only be released AFTER that job — its lineage is truncated,
       // so dropping its blocks earlier would make the lazy frontier
       // irrecoverable.
@@ -190,7 +192,7 @@ object ConnectedComponents {
         case Durable(runDir, every) if rounds % every == 0 || stable =>
           Supersteps.commit(spark, runDir, rounds, next,
             Map("round" -> rounds.toDouble, "frontier_edges" -> sig._1.toDouble,
-              "stable" -> (if (stable) 1.0 else 0.0)))
+              "converged" -> (if (stable) 1.0 else 0.0)))
         case _ => ()
       }
       Supersteps.releaseCheckpoint(e)

@@ -94,12 +94,11 @@ import org.apache.spark.util.SerializableConfiguration
   * round 1), while a partitioner-pinned zipPartitions provably moves
   * zero block bytes.
   *
-  * Semantics identical to graft.graph.PageRank (tested to 1e-9); use this
-  * variant when the edge set is large relative to vertices or hub-skewed.
+  * This is the engine's only PageRank: `PageRank.run`/`resume` forward
+  * here. CsrPageRankSpec and PageRankSpec check it against the
+  * plain-Scala power-iteration oracle (`Oracles.pageRank`).
   */
 object CsrPageRank {
-
-
 
   /** One partition's vertex state: parallel arrays sorted by id. */
   final case class VBlock(pid: Int, ids: Array[Long], outdeg: Array[Int], ranks: Array[Double])
@@ -154,7 +153,9 @@ object CsrPageRank {
     * run if none). The committed (id, rank, outdeg) snapshot is the
     * complete iteration state: the grid is rebuilt from the edges, the
     * vertex blocks from the snapshot, and the continuation is
-    * bit-identical to an uninterrupted run (see CsrPageRankSpec).
+    * bit-identical to an uninterrupted run (see CsrPageRankSpec). A
+    * snapshot without `outdeg` — the (id, rank) format of the retired
+    * DataFrame-join engine — is rejected before any job runs.
     */
   def resume(edges: Dataset[Edge], runDir: String,
              cfg: PageRankConfig = PageRankConfig()): PageRankResult = {
@@ -166,8 +167,16 @@ object CsrPageRank {
     Supersteps.lastCommitted(spark, runDir) match {
       case None => runImpl(edges, durableCfg, None)
       case Some(step) =>
-        val snap = Supersteps.readState(spark, runDir, step)
         val metrics = Supersteps.readMetrics(spark, runDir, step)
+        def requireOutdeg(schema: StructType): Unit =
+          if (!schema.fieldNames.contains("outdeg"))
+            throw new IllegalStateException(
+              s"superstep $step in $runDir has no outdeg column (snapshot columns: " +
+                s"${schema.fieldNames.mkString(", ")}); it was not written by CsrPageRank " +
+                "and cannot be resumed — start a fresh run")
+        metrics.schema.foreach(requireOutdeg)
+        val snap = Supersteps.readState(spark, runDir, step)
+        requireOutdeg(snap.schema) // also covers run dirs that recorded no schema
         if (metrics.converged)
           PageRankResult(snap.select(col("id"), col("rank")), step, converged = true,
             Seq(metrics.metrics("l1_delta")), -1L, metrics.rows)
@@ -244,7 +253,9 @@ object CsrPageRank {
       val n = counts._1
       val danglingCount = counts._2
       if (n == 0) {
-        return PageRankResult(callerSpark.emptyDataFrame, 0, converged = true, Nil, 0L, 0L)
+        state.unpersist(false)
+        val none = IterationConf.rebind(Seq.empty[(Long, Double)].toDF("id", "rank"), callerSpark)
+        return PageRankResult(none, 0, converged = true, Nil, 0L, 0L)
       }
       // per-partition vertex counts — tiny (P ints), captured by closures
       val partSizes = {

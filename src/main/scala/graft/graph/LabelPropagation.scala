@@ -106,7 +106,7 @@ object LabelPropagation {
       // (small) label-state side: the join is co-partitioned, so the
       // hint yields a zero-exchange hash join and — unlike the default
       // sort-merge — skips re-sorting the cached 2x|E| bidir side every
-      // iteration (the same reasoning as PageRank's contribution join).
+      // iteration.
       val votes = bidir
         .join(lbl.hint("shuffle_hash"), bidir("v") === lbl("id"))
         .groupBy(col("u"), col("label"))
@@ -124,8 +124,8 @@ object LabelPropagation {
       // LAZY localCheckpoint per iteration: the changed-count action
       // below materializes the new state (all partitions cached, lineage
       // truncated after the job) AND returns the count — one job per
-      // iteration instead of checkpoint-then-count (r07; see
-      // PageRank.iterate for the same single-action design). The left
+      // iteration instead of checkpoint-then-count (r07; CsrPageRank's
+      // step job has the same single-action design). The left
       // join keeps the state's hash(id) partitioning, so no repartition
       // is needed to preserve the co-partitioned joins of the next
       // iteration.

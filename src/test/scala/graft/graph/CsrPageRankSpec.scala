@@ -11,9 +11,9 @@ class CsrPageRankSpec extends SparkSpec {
   private def toMap(r: PageRankResult): Map[Long, Double] =
     r.ranks.collect().map(row => row.getLong(0) -> row.getDouble(1)).toMap
 
-  // Fixed-superstep configs: both engines run the SAME number of
-  // supersteps, so trajectories must agree to float noise — a stronger
-  // (and bounded-runtime) check than comparing at convergence.
+  // Fixed-superstep configs: the engine and the oracle run the SAME
+  // number of supersteps, so trajectories must agree to float noise — a
+  // stronger (and bounded-runtime) check than comparing at convergence.
   private def fixed(k: Int) = PageRankConfig(tol = 0.0, maxIter = k)
 
   test("CSR blocks: lossless round trip of the edge set") {
@@ -75,22 +75,17 @@ class CsrPageRankSpec extends SparkSpec {
     assert(blocks.length > 2)
   }
 
-  test("CSR PageRank trajectory == join PageRank (8 fixed supersteps, hubs)") {
-    val edges = Oracles.randomGraph(500, 3000, seed = 37)
-    val ds = edges.toDF("src", "dst").as[Edge]
-    val a = toMap(PageRank.run(ds, fixed(8)))
-    val b = toMap(CsrPageRank.run(ds, fixed(8)))
-    assert(a.keySet == b.keySet)
-    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12, s"vertex $k: $v vs ${b(k)}") }
-  }
-
   test("CSR PageRank matches the power-iteration oracle incl. dangling (12 supersteps)") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)) // 4 dangling
-    val ds = edges.toDF("src", "dst").as[Edge]
-    val got = toMap(CsrPageRank.run(ds, fixed(12)))
-    val want = Oracles.pageRank(edges, tol = 0.0, maxIter = 12)
-    got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12, s"$k: $v vs ${want(k)}") }
-    assert(math.abs(got.values.sum - 1.0) < 1e-9)
+    val inputs = Seq(
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)) -> 12, // 4 dangling
+      Oracles.randomGraph(500, 3000, seed = 37) -> 8)    // hubs
+    for ((edges, k) <- inputs) {
+      val got = toMap(CsrPageRank.run(edges.toDF("src", "dst").as[Edge], fixed(k)))
+      val want = Oracles.pageRank(edges, tol = 0.0, maxIter = k)
+      assert(got.keySet == want.keySet)
+      got.foreach { case (v, r) => assert(math.abs(r - want(v)) < 1e-12, s"$v: $r vs ${want(v)}") }
+      assert(math.abs(got.values.sum - 1.0) < 1e-9)
+    }
   }
 
   private def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
@@ -133,6 +128,22 @@ class CsrPageRankSpec extends SparkSpec {
     assert(Supersteps.lastCommitted(spark, partDir).contains(4))
     val err = intercept[IllegalStateException](CsrPageRank.resume(ds, partDir, fixed(8)))
     assert(err.getMessage.contains(s"superstep 4 in $partDir"))
+  }
+
+  test("resume rejects an (id, rank) snapshot before any job runs, naming the missing column") {
+    val ds = Oracles.randomGraph(150, 700, seed = 19).toDF("src", "dst").as[Edge]
+    val dir = tmpDir("graft-csr-oldformat")
+    // the snapshot format of the retired DataFrame-join engine
+    Supersteps.commit(spark, dir, 5, Seq((1L, 0.5), (2L, 0.5)).toDF("id", "rank"), Map.empty)
+    var err: IllegalStateException = null
+    val jobs = jobsOf { err = intercept[IllegalStateException](CsrPageRank.resume(ds, dir, fixed(8))) }
+    assert(err.getMessage.contains(s"superstep 5 in $dir has no outdeg column"), err.getMessage)
+    assert(jobs == 0, s"$jobs jobs ran before the format check")
+    // a run dir that recorded no schema is checked against the snapshot read back
+    SuperstepsSpec.dropRecordedSchema(dir, 5)
+    assert(Supersteps.readMetrics(spark, dir, 5).schema.isEmpty)
+    val noSchema = intercept[IllegalStateException](CsrPageRank.resume(ds, dir, fixed(8)))
+    assert(noSchema.getMessage.contains(s"superstep 5 in $dir has no outdeg column"))
   }
 
   test("a durable commit adds at most one job per committed superstep") {

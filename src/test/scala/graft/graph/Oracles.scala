@@ -7,7 +7,8 @@ package graft.graph
 object Oracles {
 
   /** Power-iteration PageRank with teleport and uniform dangling-mass
-    * redistribution; semantics must match graft.graph.PageRank exactly.
+    * redistribution; the grid engine (CsrPageRank, which PageRank.run
+    * forwards to) must match it to 1e-12 over a fixed superstep count.
     */
   def pageRank(
       edges: Seq[(Long, Long)],

@@ -75,6 +75,13 @@ class PageRankSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
+  test("empty edge set: converged after 0 iterations with an empty (id, rank) frame") {
+    val r = PageRank.run(spark.emptyDataset[Edge])
+    assert(r.iterations == 0 && r.converged && r.vertexCount == 0)
+    assert(r.ranks.columns.toSeq == Seq("id", "rank"))
+    assert(r.ranks.select("id", "rank").count() == 0)
+  }
+
   test("end-to-end: synthetic corpus -> sha invariant -> edges -> PageRank") {
     val corpus = Corpus.synthetic(spark, n = 500, repos = 7, maxDegree = 8, seed = 42)
     val stamped = Corpus.stamped(corpus).cache()

@@ -42,7 +42,6 @@ class SuperstepsSpec extends SparkSpec {
       .localCheckpoint(true)
     val n = edges.count()
     val loops = Seq[(String, () => Any)](
-      "PageRank" -> (() => PageRank.run(edges, PageRankConfig(tol = 0.0, maxIter = 3))),
       "CsrPageRank" -> (() => CsrPageRank.run(edges, PageRankConfig(tol = 0.0, maxIter = 3))),
       "ConnectedComponents" -> (() => ConnectedComponents.run(edges)),
       "LabelPropagation" -> (() => LabelPropagation.run(edges, maxIter = 3)))
@@ -65,16 +64,25 @@ class SuperstepsSpec extends SparkSpec {
     val edges = Oracles.randomGraph(200, 260, seed = 31) // sparse: many components
     val ds = edges.toDF("src", "dst").as[Edge]
 
-    val full = ConnectedComponents.run(ds).components
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def components(r: ConnectedComponents.CcResult) =
+      r.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val full = ConnectedComponents.run(ds)
 
     val partDir = tmpDir()
     // interrupted: stop after 2 rounds (fixpoint usually needs more)
     ConnectedComponents.run(ds, maxRounds = 2, checkpoint = Durable(partDir))
     assert(Supersteps.lastCommitted(spark, partDir).contains(2))
-    val resumed = ConnectedComponents.resume(ds, partDir).components
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resumed == full)
+    val resumed = ConnectedComponents.resume(ds, partDir)
+    assert(components(resumed) == components(full))
+    assert(resumed.rounds == full.rounds)
+
+    // resuming the finished run builds the mapping and runs no round
+    val finished = Supersteps.lastCommitted(spark, partDir)
+    assert(finished.exists(Supersteps.readMetrics(spark, partDir, _).converged))
+    val again = ConnectedComponents.resume(ds, partDir)
+    assert(again.rounds == full.rounds)
+    assert(Supersteps.lastCommitted(spark, partDir) == finished)
+    assert(components(again) == components(full))
   }
 
   test("LPA resume from mid-run checkpoint == uninterrupted run") {
@@ -154,18 +162,6 @@ class SuperstepsSpec extends SparkSpec {
     assert(labels(durable) == labels(local))
   }
 
-  test("Durable == LocalOnly: join PageRank to 1e-12") {
-    val ds = Oracles.randomGraph(150, 600, seed = 23).toDF("src", "dst").as[Edge]
-    def ranks(r: PageRankResult) = r.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val local = ranks(PageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 8)))
-    val durable = ranks(PageRank.run(ds,
-      PageRankConfig(tol = 0.0, maxIter = 8, checkpoint = Durable(tmpDir(), every = 1))))
-    assert(durable.keySet == local.keySet)
-    local.foreach { case (k, v) =>
-      assert(math.abs(v - durable(k)) < 1e-12, s"vertex $k: $v vs ${durable(k)}")
-    }
-  }
-
   private def frame(schema: StructType, rows: Seq[Row], slices: Int): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
 
@@ -177,12 +173,12 @@ class SuperstepsSpec extends SparkSpec {
     val csr = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("rank", DoubleType, nullable = false),
       StructField("outdeg", IntegerType, nullable = false)))
-    val joinPr = StructType(Seq(StructField("id", LongType), StructField("rank", DoubleType)))
+    val nullable = StructType(Seq(StructField("id", LongType), StructField("rank", DoubleType)))
     // one more slice than rows in each shape: at least one empty partition
     val shapes = Seq(
       "csr (id, rank, outdeg)" -> frame(csr,
         special.zipWithIndex.map { case (r, i) => Row(i.toLong, r, i % 3) }, special.size + 1),
-      "join PageRank (id, rank)" -> frame(joinPr,
+      "nullable (id, rank) with a null" -> frame(nullable,
         special.zipWithIndex.map { case (r, i) => Row(i.toLong * 7, r) } :+ Row(99L, null), 8),
       "LPA (id, label)" -> frame(longs("id", "label"),
         (1L to 20L).map(i => Row(i, i % 4)), 21),
@@ -252,18 +248,24 @@ class SuperstepsSpec extends SparkSpec {
     val partDir = tmpDir()
     LabelPropagation.run(ds, maxIter = 4, checkpoint = Durable(partDir))
     assert(Supersteps.readMetrics(spark, partDir, 4).schema.isDefined)
-    // drop the "schema" field from every step's _METRICS.json
-    (1 to 4).foreach { k =>
-      val path = Paths.get(f"$partDir/step=$k%05d/_METRICS.json")
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      node.remove("schema")
-      Files.write(path, node.toString.getBytes("UTF-8"))
-      Files.deleteIfExists(path.resolveSibling("._METRICS.json.crc")) // now stale
-    }
+    (1 to 4).foreach(SuperstepsSpec.dropRecordedSchema(partDir, _))
     assert(Supersteps.readMetrics(spark, partDir, 4).schema.isEmpty)
     val resumed = LabelPropagation.resume(ds, partDir, maxIter = 10).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resumed == full)
+  }
+}
+
+object SuperstepsSpec {
+
+  /** Drop the "schema" field from `step`'s _METRICS.json, as a run dir
+    * written before schemas were recorded has it. */
+  def dropRecordedSchema(runDir: String, step: Int): Unit = {
+    val path = Paths.get(f"$runDir/step=$step%05d/_METRICS.json")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("schema")
+    Files.write(path, node.toString.getBytes("UTF-8"))
+    Files.deleteIfExists(path.resolveSibling("._METRICS.json.crc")) // now stale
   }
 }
