@@ -18,8 +18,6 @@ object Clustering {
 
   /** df(id, x, y) -> df(id, x, y, cluster). */
   def kmeansXY(df: DataFrame, k: Int, seed: Long = 42L, maxIter: Int = 50): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val assembler = udf((x: Double, y: Double) => Vectors.dense(x, y))
     val feats = df.withColumn("features", assembler(col("x").cast("double"), col("y").cast("double")))
     val model = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter).fit(feats)

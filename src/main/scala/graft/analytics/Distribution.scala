@@ -39,19 +39,4 @@ object Distribution {
     Stats(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
       r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7))
   }
-
-  /** Same stats as a 1-row DataFrame (for oracle-checked queries). */
-  def statsDf(df: DataFrame, colName: String): DataFrame = {
-    val c = col(colName)
-    df.agg(
-      count(lit(1)).as("n"),
-      avg(when(c === 0.0, 1.0).otherwise(0.0)).as("p_zero"),
-      avg(when(c > 0.0 && c < 1.0, 1.0).otherwise(0.0)).as("p_middle"),
-      avg(when(c === 1.0, 1.0).otherwise(0.0)).as("p_one"),
-      avg(when(c >= 0.5, 1.0).otherwise(0.0)).as("p_ge_half"),
-      avg(c).as("mean"),
-      var_pop(c).as("variance"),
-      expr(s"percentile($colName, 0.5)").as("median")
-    )
-  }
 }

@@ -243,7 +243,6 @@ object KeyPapers {
     * title, year, authorOrder, isKeyPaper).
     */
   def isKeyPaper(papers: DataFrame, paperAuthor: DataFrame, topAuthors: DataFrame): DataFrame = {
-    val spark = papers.sparkSession
     val pairsAll = paperAuthor
       .join(topAuthors.select(col("authorID")), Seq("authorID"), "left_semi")
       .join(papers.select(col("paperID"), col("title"), col("year")), "paperID")

@@ -77,7 +77,7 @@ object LogisticTrainer {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rows.count()
 
-    var w = new Array[Double](k)
+    val w = new Array[Double](k)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** M5 — topic word-probability merge + filter, the engine analog of
@@ -72,7 +72,6 @@ object TopicWords {
     */
   def mergeAndFilter(topics: DataFrame,
                      idCol: String = "topicID", wordsCol: String = "words"): DataFrame = {
-    val spark = topics.sparkSession
     val mergeUdf = udf { ws: Seq[org.apache.spark.sql.Row] =>
       filterTopic(mergeTopic(ws.map(r => (r.getString(0), r.getDouble(1)))))
     }

@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.ingest.Edge
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -63,10 +62,12 @@ object LabelPropagation {
     val callerSpark = edges.sparkSession
     val sessionParts = callerSpark.conf.get("spark.sql.shuffle.partitions").toInt
 
-    val bidir0 = edges.toDF()
-      .select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
-      .union(edges.toDF().select(col("dst").as("u"), col("src").as("v")))
+    // Self-loops are dropped before symmetrizing, as CC and the oracles
+    // do: a vertex never hears its own label, and one whose only edge is
+    // a self-loop gets no row.
+    val e = edges.toDF().filter(col("src") =!= col("dst"))
+    val bidir0 = e.select(col("src").as("u"), col("dst").as("v"))
+      .union(e.select(col("dst").as("u"), col("src").as("v")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = bidir0.count()

@@ -8,7 +8,7 @@ sealed trait CheckpointPolicy
 /** State kept as eager localCheckpoint blocks (lineage truncated every
   * iteration). Fast, NOT resumable — bench mode.
   */
-final case class LocalOnly(every: Int = 1) extends CheckpointPolicy
+final case class LocalOnly() extends CheckpointPolicy
 /** Durable resumable checkpoints: every `every` iterations a committed
   * superstep (parquet + metrics + snapshot rows and checksum + atomic
   * marker) lands in `runDir` — the production mode. A commit is one

@@ -48,21 +48,4 @@ object Skew {
       explode(array((0 until salts).map(lit): _*)))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Degree-aware edge repartitioning: spread the in-edges of hub
-    * destinations over `salts` sub-keys so no single reducer owns a
-    * 10^6-degree vertex's full in-neighborhood. Returns the edge frame
-    * with a `__dstSub` column suitable as an extra repartition/groupBy
-    * key for two-phase message aggregation.
-    */
-  def degreeSaltedEdges(edges: DataFrame, hubDegree: Long, salts: Int): DataFrame = {
-    val deg = edges.groupBy(col("dst")).agg(count(lit(1)).as("__deg"))
-    edges
-      .join(deg.filter(col("__deg") >= hubDegree).select(col("dst"), lit(true).as("__hub")),
-        Seq("dst"), "left")
-      .withColumn("__dstSub",
-        when(col("__hub").isNotNull, pmod(xxhash64(col("src")), lit(salts.toLong)).cast("int"))
-          .otherwise(lit(0)))
-      .drop("__hub")
-  }
 }

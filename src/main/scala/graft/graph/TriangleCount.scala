@@ -3,7 +3,6 @@ package graft.graph
 import graft.ingest.Edge
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Triangle counting over the undirected simple graph, DataFrame-only.
   *
@@ -109,7 +108,6 @@ object TriangleCount {
 
   /** Per-vertex triangle counts (vertices in no triangle get 0). */
   def perVertex(edges: Dataset[Edge]): DataFrame = {
-    val spark = edges.sparkSession
     val verts = edges.toDF().select(col("src").as("id"))
       .union(edges.toDF().select(col("dst").as("id"))).distinct()
     val t = triangles(edges)

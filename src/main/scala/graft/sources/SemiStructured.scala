@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,7 +80,6 @@ object SemiStructured {
     * and datatype/lang suffix.
     */
   def parseTriples(records: Dataset[String]): DataFrame = {
-    val spark = records.sparkSession
     val df = records.toDF("line")
     val s = regexp_extract(col("line"), """^<([^>]*)>""", 1)
     val p = regexp_extract(col("line"), """^<[^>]*>\s+<([^>]*)>""", 1)

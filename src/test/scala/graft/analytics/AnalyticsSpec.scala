@@ -1,7 +1,6 @@
 package graft.analytics
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class AnalyticsSpec extends SparkSpec {
   import spark.implicits._

@@ -2,7 +2,6 @@ package graft.analytics
 
 import graft.SparkSpec
 import graft.textops.Abstracts
-import org.apache.spark.sql.functions._
 
 /** X7 / X12 / venue-match / author-merge / M5 / export stages. */
 class PipelineStagesSpec extends SparkSpec {

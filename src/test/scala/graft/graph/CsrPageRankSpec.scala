@@ -16,22 +16,6 @@ class CsrPageRankSpec extends SparkSpec {
   // stronger (and bounded-runtime) check than comparing at convergence.
   private def fixed(k: Int) = PageRankConfig(tol = 0.0, maxIter = k)
 
-  test("CSR blocks: lossless round trip of the edge set") {
-    val edges = Oracles.randomGraph(100, 400, seed = 31)
-    val ds = edges.toDF("src", "dst").as[Edge]
-    val blocks = Adjacency.csrBlocks(ds, 4).collect()
-    val back = blocks.flatMap { b =>
-      b.srcIds.indices.flatMap(i =>
-        (b.offsets(i) until b.offsets(i + 1)).map(j => (b.srcIds(i), b.dsts(j))))
-    }.toSet
-    assert(back == edges.toSet)
-    blocks.foreach { b =>
-      assert(b.offsets.length == b.srcIds.length + 1)
-      assert(b.offsets.last == b.dsts.length)
-      assert(b.srcIds.forall(s => Adjacency.pid(s, 4) == b.partId))
-    }
-  }
-
   test("durable checkpoints: mid-run parquet round-trip leaves the trajectory bit-identical") {
     val edges = Oracles.randomGraph(200, 900, seed = 7)
     val ds = edges.toDF("src", "dst").as[Edge]
@@ -67,14 +51,6 @@ class CsrPageRankSpec extends SparkSpec {
     assert(toMap(again) == toMap(full))
   }
 
-  test("block size cap splits partitions by edge count") {
-    val edges = (0L until 50L).flatMap(i => (0L until 20L).map(j => (i, 1000 + j)))
-    val ds = edges.toDF("src", "dst").as[Edge]
-    val blocks = Adjacency.csrBlocks(ds, 2, maxEdgesPerBlock = 100).collect()
-    assert(blocks.forall(_.dsts.length <= 120)) // cap + one src overshoot
-    assert(blocks.length > 2)
-  }
-
   test("CSR PageRank matches the power-iteration oracle incl. dangling (12 supersteps)") {
     val inputs = Seq(
       Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)) -> 12, // 4 dangling
@@ -91,12 +67,17 @@ class CsrPageRankSpec extends SparkSpec {
   private def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   test("P = 4: two uninterrupted runs and a resume give identical rank maps") {
-    val ds = Oracles.randomGraph(300, 1200, seed = 41).toDF("src", "dst").as[Edge]
+    val edges = Oracles.randomGraph(300, 1200, seed = 41)
+    val ds = edges.toDF("src", "dst").as[Edge]
     val key = "graft.loop.target.rows"
     val saved = sys.props.get(key)
     sys.props(key) = "100" // ~1200 edges -> P = min(session's 4, 12) = 4
     try {
-      val a = toMap(CsrPageRank.run(ds, fixed(10)))
+      val first = CsrPageRank.run(ds, fixed(10))
+      // the 4-partition grid loses no edge and no vertex
+      assert(first.edgeCount == edges.distinct.size)
+      assert(first.vertexCount == edges.flatMap { case (s, d) => Seq(s, d) }.distinct.size)
+      val a = toMap(first)
       val b = toMap(CsrPageRank.run(ds, fixed(10)))
       val partDir = tmpDir("graft-csr-p4")
       CsrPageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 5, checkpoint = Durable(partDir, 5)))

@@ -55,6 +55,15 @@ class GraphAlgorithmsSpec extends SparkSpec {
 
   // --- Label propagation ----------------------------------------------
 
+  test("LPA: self-loops and duplicates are harmless") {
+    // one synchronous round: 1 hears only 2, 2 hears 1 and 3 (tie -> min);
+    // 4's only edge is a self-loop, so it gets no row
+    val edges = Seq((1L, 1L), (1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (4L, 4L))
+    val got = LabelPropagation.run(ds(edges), maxIter = 1).labels.collect()
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(got == Map(1L -> 2L, 2L -> 1L, 3L -> 2L), s"got $got")
+  }
+
   test("LPA: two 4-cliques + bridge -> two communities") {
     val c1 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
     val c2 = for { a <- 10L to 13L; b <- 10L to 13L if a < b } yield (a, b)

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S6 — index-build parity: the engine's write paths sort within

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** S5 — keyed upsert + atomic commit semantics (the reference's
   * REPLACE INTO contract: update_links.py:84-90), over the

@@ -68,7 +68,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("brute-force cosine top-k: exact against in-test computation") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val got = Similarity.bruteForceTopK(emb, queries, k = 5)
