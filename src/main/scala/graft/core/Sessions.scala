@@ -100,9 +100,10 @@ object Sessions {
       // RDD class. The "was locally checkpointed, its lineage has been
       // truncated" WARN lives in RDD.scala but logs under the RUNTIME
       // class's logger — for our loops that is the checkpointed
-      // MapPartitionsRDD / ZippedPartitionsRDD2 chain.
+      // MapPartitionsRDD / ZippedPartitionsRDD2 / ZippedPartitionsRDD3
+      // (connected components' round) chain.
       Seq("RDD", "MapPartitionsRDD", "ShuffledRDD",
-          "ZippedPartitionsRDD2", "ZippedPartitionsBaseRDD")
+          "ZippedPartitionsRDD2", "ZippedPartitionsRDD3", "ZippedPartitionsBaseRDD")
         .foreach(c => Configurator.setLevel(s"org.apache.spark.rdd.$c", Level.ERROR))
       Configurator.setLevel(
         "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", Level.ERROR)

@@ -1,219 +1,201 @@
 package graft.graph
 
+import graft.graph.CsrPageRank.{Grid, IdxBlock}
+import graft.graph.LabelLoop.LBlock
 import graft.ingest.Edge
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Connected components via alternating large-star / small-star hash-to-min
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14
-  * — public algorithm), expressed as DataFrame joins/aggregations.
+import java.util.Arrays
+import scala.collection.mutable
+
+/** Connected components by min-label hooking with one pointer jump per
+  * round, on the CSR grid that `CsrPageRank` loops on — Pregel's model
+  * (Malewicz et al., SIGMOD 2010) with Shiloach–Vishkin-style
+  * shortcutting (FastSV, Zhang, Azad and Hu, SC 2020).
   *
   * Reference precedent: the induced connected-subgraph computation in
   * vis/process.py:28-31 and the isolated-vs-connected node split in
   * create_field/graph.py:56-62 — generalized to full CC with component id
-  * = min vertex id (deterministic tie-break, parallelism-invariant).
+  * = min vertex id (deterministic, parallelism-invariant).
   *
-  * Scale: converges in O(log n) rounds on any graph (vs O(diameter) for
-  * plain min propagation — a 10^12-edge web-ish graph has long chains).
-  * Each round is two groupBy shuffles; hub-vertex skew in the neighborhood
-  * grouping is absorbed by map-side partial aggregation of `min`.
-  *
-  * Durable mode: each round's edge frontier is a committed superstep
-  * (Supersteps.commit — one job whose tasks write their partitions and
-  * return rows/checksum, then the atomic marker);
-  * `resume` restarts from the last committed frontier and produces the
-  * same fixpoint as an uninterrupted run (the frontier IS the complete
-  * iteration state; the round signature is recomputed from it).
+  * The loop is `LabelLoop`'s, shared with `LabelPropagation`: the
+  * undirected, deduplicated grid, one `long` label per vertex starting at
+  * its own id, and one job per round with the commit fused into it.
+  * Self-loops are dropped from the grid only: a vertex whose only edge is
+  * a self-loop is its own component. A round:
+  *  1. hook: each source partition sends, per destination partition, one
+  *     bundle of (dense index, min neighbour label) — min-combined at the
+  *     source, so a hub receives at most P bundles — and every vertex
+  *     takes m(v) = min(label(v), received);
+  *  2. shortcut: label(v) = m(m(v)). A vertex whose m(v) is not its own
+  *     id asks vertex m(v)'s partition (m(v) mod P) for m(m(v)); each
+  *     partition asks each other partition once per id (a component root
+  *     receives at most P requests), and the answer goes back to the
+  *     asking partition.
+  * Labels only fall and never leave the component, and a round that
+  * changes none leaves every edge's ends with one label, the component's
+  * minimum id. The pointer jump halves the label chains, so a chain of n
+  * vertices takes O(log n) rounds where plain min propagation takes n.
+  * The snapshot is (id, component); its `_METRICS` keys are `round`,
+  * `changed` and `converged`.
   */
 object ConnectedComponents {
 
   final case class CcResult(components: DataFrame, rounds: Int) // (id, component)
 
-  /** large-star: connect every strictly-greater neighbor of u to m(u),
-    * the min of u's neighborhood including itself (partial-aggregated
-    * min: hub skew absorbed map-side). The result is deduped AFTER a
-    * repartition by the new key u — hash(u) clusters (u, v), so the
-    * dedup adds no exchange of its own and the output is partitioned
-    * exactly as `smallStarOriented` consumes it.
-    *
-    * Output invariant: every emitted row has v < u (m ≤ old-u < old-v).
+  /** Hook messages for one destination partition: (dense index, min
+    * label) pairs in index order.
     */
-  private def largeStar(bidir: DataFrame, parts: Int): DataFrame = {
-    val m = bidir.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
-    // shuffle_hash with the per-vertex min as build side: skips the
-    // sort-merge's per-round sort of the full frontier
-    bidir
-      .join(m.hint("shuffle_hash"), "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .repartition(parts, col("u"))
-      .dropDuplicates()
-  }
-
-  /** small-star over an ALREADY-ORIENTED frontier — every row v < u,
-    * which is exactly largeStar's output form: for each u, connect its
-    * ≤-neighbors and u itself to the min among them.
-    *
-    * Equivalence with the textbook smallStar(afterLarge ∪ swap): the
-    * swap rows all have v > u, so the ≤-filter keeps precisely the
-    * un-swapped rows — the symmetrized union only doubled the work
-    * (measured r07: each union branch re-ran the whole large-star
-    * subtree because exchange reuse does not fire across the
-    * filter-divergent copies). Taking the oriented frontier directly,
-    * with `le` checkpointed hash(u), the min aggregation and the
-    * re-attach join need NO exchange at all; the single exchange left
-    * is the re-keying dedup, which again doubles as next-round
-    * partitioning.
-    */
-  private def smallStarOriented(le: DataFrame, parts: Int): DataFrame = {
-    val m = le.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val reattached = le
-      .join(m.hint("shuffle_hash"), "u")
-      .select(col("v").as("u"), col("m").as("v"))
-    val selfEdge = m.select(col("u"), col("m").as("v"))
-    reattached.union(selfEdge).filter(col("u") =!= col("v"))
-      .repartition(parts, col("u"))
-      .dropDuplicates()
-  }
+  private final case class Mins(idx: Array[Int], labels: Array[Long])
 
   /** Run to fixpoint. Returns (id, component) for every vertex that
     * appears in the edge set; `component` is the min vertex id of the
-    * component. Isolated vertices (if supplied) map to themselves.
+    * component.
     */
   def run(edges: Dataset[Edge], maxRounds: Int = 50,
-          checkpoint: CheckpointPolicy = LocalOnly()): CcResult = {
-    val e0 = edges.toDF()
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    iterate(edges, e0, 0, maxRounds, checkpoint)
-  }
+          checkpoint: CheckpointPolicy = LocalOnly()): CcResult =
+    result(loop.run(edges, None, 0, maxRounds, checkpoint)(round))
 
   /** Resume from the last committed round in runDir (fresh run if none).
-    * Result is identical to an uninterrupted run: the committed frontier
-    * is the complete iteration state. A converged (fixpoint) frontier
-    * runs no further round: only the components mapping is built.
+    * Result is identical to an uninterrupted run: the committed labels
+    * are the complete iteration state. A converged step runs no further
+    * round. A run dir whose snapshot has no `component` column (the
+    * (u, v) edge frontier of the retired large-star/small-star loop) is
+    * rejected with an IllegalStateException.
     */
-  def resume(edges: Dataset[Edge], runDir: String, maxRounds: Int = 50): CcResult = {
-    val spark = edges.sparkSession
-    Supersteps.lastCommitted(spark, runDir) match {
-      case None => run(edges, maxRounds, Durable(runDir))
-      case Some(step) =>
-        val e = Supersteps.readState(spark, runDir, step)
-        val last = if (Supersteps.readMetrics(spark, runDir, step).converged) step else maxRounds
-        iterate(edges, e, step, last, Durable(runDir))
-    }
-  }
+  def resume(edges: Dataset[Edge], runDir: String, maxRounds: Int = 50): CcResult =
+    result(loop.resume(edges, runDir, maxRounds)(round))
 
-  /** The whole loop runs on an isolated cloned session
-    * (IterationConf.withLoopSession) with per-round shuffles sized to the
-    * loop data — ~20 rounds x 2 shuffles over a tiny frontier must not
-    * pay `P` empty-task overheads each, and the caller's session conf is
-    * never mutated (thread-safe under concurrent queries). The result is
-    * re-bound to the caller's session.
-    */
-  private def iterate(edges: Dataset[Edge], e0: DataFrame, round0: Int,
-                      maxRounds: Int, checkpoint: CheckpointPolicy): CcResult = {
-    val callerSpark = edges.sparkSession
-    val sessionParts = callerSpark.conf.get("spark.sql.shuffle.partitions").toInt
+  private val loop = new LabelLoop("component", "round", selfLoopVertices = true)
 
-    val allVerts = edges.toDF()
-      .select(col("src").as("id"))
-      .union(edges.toDF().select(col("dst").as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nVerts = allVerts.count()
-    // Materialize e0 HERE, on the caller's session: its normalize +
-    // distinct is the one full-edge-table shuffle of the algorithm and
-    // must run at the session's partition count, not the loop's (Pr can
-    // be 1 for a small component graph while the raw edge table is huge).
-    val e0c = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val m0 = e0c.count()
-    // loop shuffles sized to the LOOP data: the round-1 frontier is m0
-    // edges, so size to the larger of vertex and initial-edge count.
-    // CC's early rounds push the FULL bidirectional frontier through
-    // every star exchange, so the per-partition row target is lower than
-    // the library default (65k vs 250k): at sf0.1 the 250k target left
-    // round 1 (2.4M rows) on 5 of 32 cores — measured 2.8 s for that one
-    // round — while the late tiny-frontier rounds still collapse to one
-    // partition either way (the empty-task concern the cap exists for).
-    val ccTargetRows = 65536L
-    val Pr = graft.core.IterationConf.sizedPartitions(
-      sessionParts, math.max(nVerts, m0), ccTargetRows)
-    graft.core.IterationConf.withLoopSession(callerSpark, Pr) { spark =>
+  private def result(r: (DataFrame, Int, Boolean)): CcResult = CcResult(r._1, r._2)
 
-    // Eager localCheckpoint per round: truncates lineage and avoids the
-    // CacheManager invalidate-rebuild trap of persist/unpersist chains
-    // (each unpersist invalidates and rebuilds the dependent cache
-    // entries — measured exponential recompute).
-    var e = graft.core.IterationConf.rebind(e0c, spark)
-      .repartition(Pr, col("u"))
-      .localCheckpoint(true)
-    e0c.unpersist(false)
-    var rounds = round0
-    var stable = false
-    var prevSig: (Long, Long) = signature(e)
+  /** One hook + shortcut round (steps 1-2 above): four stages, one job. */
+  private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {
+    val p = grid.partSizes.length
+    val part = new HashPartitioner(p) // Int keys in [0,P): partition index == pid
+    def pidOf(id: Long): Int = java.lang.Math.floorMod(id, p.toLong).toInt
 
-    while (!stable && rounds < maxRounds) {
-      // CC's frontier SHRINKS as stars collapse: re-size this round's
-      // shuffles (the groupBy/joins inside large/small-star read the
-      // session conf) to the previous round's measured frontier. The
-      // loop session is private to this call, so the per-round conf.set
-      // races with nothing.
-      val PrRound = graft.core.IterationConf.sizedPartitions(
-        sessionParts, math.max(prevSig._1, nVerts), ccTargetRows)
-      spark.conf.set("spark.sql.shuffle.partitions", PrRound.toString)
-      val bidirL = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      // Materialize the large-star frontier between the phases: the
-      // small-star phase reads it (and its own two consumers read blocks,
-      // not recomputations), and largeStar's output orientation (v < u)
-      // feeds smallStarOriented directly — no symmetrize-then-refilter.
-      // LAZY checkpoints throughout the round: the ONE signature action
-      // below computes large-star (cached at its checkpoint boundary —
-      // small-star's two consumers, the min aggregate and the re-attach
-      // probe, run in the same zero-exchange stage, so the second read
-      // hits the block computed by the first), then the new frontier, and
-      // the fixpoint signature — a single job per round (r07;
-      // LabelPropagation has the same single-action design). afterLarge
-      // may only be released AFTER that job — its lineage is truncated,
-      // so dropping its blocks earlier would make the lazy frontier
-      // irrecoverable.
-      val afterLarge = largeStar(bidirL, PrRound).localCheckpoint(false)
-      val next = smallStarOriented(afterLarge, PrRound)
-        .localCheckpoint(false)
-      val sig = signature(next)
-      Supersteps.releaseCheckpoint(afterLarge)
-      rounds += 1
-      stable = sig == prevSig
-      prevSig = sig
-
-      checkpoint match {
-        case Durable(runDir, every) if rounds % every == 0 || stable =>
-          Supersteps.commit(spark, runDir, rounds, next,
-            Map("round" -> rounds.toDouble, "frontier_edges" -> sig._1.toDouble,
-              "converged" -> (if (stable) 1.0 else 0.0)))
-        case _ => ()
+    // 1. hook: m(v) = min(label(v), the neighbours' labels)
+    val hooked = state
+      .zipPartitions(mins(grid.cells, state, grid.partSizes).partitionBy(part),
+        preservesPartitioning = true) { (ls, ms) =>
+        ls.map { lb =>
+          val m = lb.labels.clone()
+          ms.foreach { case (_, b) =>
+            var i = 0
+            while (i < b.idx.length) {
+              if (b.labels(i) < m(b.idx(i))) m(b.idx(i)) = b.labels(i)
+              i += 1
+            }
+          }
+          LBlock(lb.ids, m, 0)
+        }
       }
-      Supersteps.releaseCheckpoint(e)
-      e = next
-    }
+      .persist(StorageLevel.MEMORY_AND_DISK) // read by the three stages below
 
-    // At fixpoint the edge set is a star forest: every non-root points at
-    // its component min. Roots (and isolated vertices) map to themselves.
-    val mapping = e.select(col("u").as("id"), col("v").as("component"))
-    val components = graft.core.IterationConf.rebind(allVerts, spark)
-      .join(mapping, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint(true) // self-contained result; release inputs below
-    allVerts.unpersist(false)
-    CcResult(graft.core.IterationConf.rebind(components, callerSpark), rounds)
+    // 2. shortcut: every partition asks for m(u) of each distinct u = m(v)
+    // that is not v itself, one sorted request per partition asked ...
+    val requests = hooked.mapPartitionsWithIndex { (q, hs) =>
+      hs.flatMap { h =>
+        val want = new Array[Long](h.ids.length)
+        var n = 0
+        var k = 0
+        while (k < want.length) {
+          if (h.labels(k) != h.ids(k)) { want(n) = h.labels(k); n += 1 }
+          k += 1
+        }
+        Arrays.sort(want, 0, n)
+        val asks = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
+        k = 0
+        while (k < n) {
+          if (k == 0 || want(k - 1) != want(k)) asks(pidOf(want(k))) += want(k)
+          k += 1
+        }
+        asks.iterator.zipWithIndex.collect { case (a, t) if a.length > 0 => (t, (q, a.result())) }
+      }
+    }.partitionBy(part)
+    // ... the asked partition answers with its hooked labels ...
+    val answers = hooked.zipPartitions(requests, preservesPartitioning = false) { (hs, rs) =>
+      if (!hs.hasNext) Iterator.empty
+      else {
+        val h = hs.next()
+        val t = TaskContext.getPartitionId()
+        rs.map { case (_, (q, ids)) => (q, (t, ids, ids.map(u => h.labels(Arrays.binarySearch(h.ids, u))))) }
+      }
+    }.partitionBy(part)
+    // ... and every vertex takes m(m(v))
+    val next = state.zipPartitions(hooked, answers, preservesPartitioning = true) { (ls, hs, as) =>
+      ls.zip(hs).map { case (lb, h) =>
+        val from = new Array[(Array[Long], Array[Long])](p)
+        as.foreach { case (_, (t, ids, ms)) => from(t) = (ids, ms) }
+        val labels = new Array[Long](lb.ids.length)
+        var changed = 0
+        var k = 0
+        while (k < labels.length) {
+          val u = h.labels(k)
+          labels(k) =
+            if (u == lb.ids(k)) u
+            else { val (ids, ms) = from(pidOf(u)); ms(Arrays.binarySearch(ids, u)) }
+          if (labels(k) != lb.labels(k)) changed += 1
+          k += 1
+        }
+        LBlock(lb.ids, labels, changed)
+      }
     }
+    (next, Seq(hooked))
   }
 
-  private def signature(e: DataFrame): (Long, Long) = {
-    // bit_xor: order-insensitive, overflow-free (edge set is distinct).
-    val r = e.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).first()
-    (r.getLong(0), r.getLong(1))
+  /** Step 1's messages: every source partition's neighbour labels, one
+    * bundle per destination partition its cells reach, min-combined in a
+    * reused array sized to the largest partition (cells arrive sorted by
+    * dpid, so one bundle is in flight at a time).
+    */
+  private def mins(cells: RDD[IdxBlock], state: RDD[LBlock], sizes: Array[Int]): RDD[(Int, Mins)] = {
+    val maxSz = sizes.max
+    cells.zipPartitions(state, preservesPartitioning = false) { (bs, ls) =>
+      if (!ls.hasNext) Iterator.empty
+      else {
+        val own = ls.next().labels
+        val acc = Array.fill(maxSz)(Long.MaxValue) // MaxValue: no message (and none is smaller)
+        val in = bs.buffered
+        new Iterator[(Int, Mins)] {
+          def hasNext: Boolean = in.hasNext
+          def next(): (Int, Mins) = {
+            val dp = in.head.dpid
+            while (in.hasNext && in.head.dpid == dp) {
+              val b = in.next()
+              var i = 0
+              while (i < b.srcIdx.length) {
+                val l = own(b.srcIdx(i))
+                var j = b.offsets(i)
+                while (j < b.offsets(i + 1)) {
+                  val t = b.nbrIdx(j)
+                  if (l < acc(t)) acc(t) = l
+                  j += 1
+                }
+                i += 1
+              }
+            }
+            val nq = sizes(dp)
+            var nz = 0
+            var k = 0
+            while (k < nq) { if (acc(k) != Long.MaxValue) nz += 1; k += 1 }
+            val idx = new Array[Int](nz)
+            val labels = new Array[Long](nz)
+            var w = 0
+            k = 0
+            while (k < nq) {
+              if (acc(k) != Long.MaxValue) { idx(w) = k; labels(w) = acc(k); w += 1; acc(k) = Long.MaxValue }
+              k += 1
+            }
+            (dp, Mins(idx, labels))
+          }
+        }
+      }
+    }
   }
 }

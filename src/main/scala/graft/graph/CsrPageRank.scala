@@ -2,15 +2,14 @@ package graft.graph
 
 import graft.core.IterationConf
 import graft.ingest.Edge
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.SerializableConfiguration
 
 /** PageRank over grid-partitioned, index-resolved CSR blocks — the
   * engine's scale path (north rule: adjacency as CSR blocks in typed
@@ -30,10 +29,12 @@ import org.apache.spark.util.SerializableConfiguration
   *    and capped at maxEdgesPerBlock (streaming build off an external
   *    sort — bounded task memory at any scale).
   *
-  * PREPARE runs entirely on Catalyst shuffles + Tungsten external sorts
-  * (whole-stage codegen, spillable, no boxed-record Java serialization —
-  * the round-2 prepare moved every edge twice as boxed RDD tuples and was
-  * 6x the loop's wall time). The trick that lets a DataFrame exchange
+  * PREPARE (`prepareGrid`, which `LabelLoop` builds the label
+  * propagation and connected components grid with too) runs entirely on
+  * Catalyst shuffles + Tungsten external sorts (whole-stage codegen,
+  * spillable, no boxed-record Java serialization — the round-2 prepare
+  * moved every edge twice as boxed RDD tuples and was 6x the loop's wall
+  * time). The trick that lets a DataFrame exchange
   * feed partitioner-pinned zipPartitions: `repartition(P, token(pid))`
   * where `token` is a driver-computed int per pid with
   * murmur3(token(p)) % P == p — Catalyst's HashPartitioning then places
@@ -95,8 +96,10 @@ import org.apache.spark.util.SerializableConfiguration
   * zero block bytes.
   *
   * This is the engine's only PageRank: `PageRank.run`/`resume` forward
-  * here. CsrPageRankSpec and PageRankSpec check it against the
-  * plain-Scala power-iteration oracle (`Oracles.pageRank`).
+  * here. `LabelPropagation` and `ConnectedComponents` run their rounds
+  * on the same grid (`LabelLoop`). CsrPageRankSpec and PageRankSpec
+  * check it against the plain-Scala power-iteration oracle
+  * (`Oracles.pageRank`).
   */
 object CsrPageRank {
 
@@ -144,6 +147,140 @@ object CsrPageRank {
       arr(n) = v; n += 1
     }
     def result(): Array[Int] = java.util.Arrays.copyOf(arr, n)
+  }
+
+  /** `df` repartitioned so that the rows whose `id` falls in vertex
+    * partition pid = id mod P land in shuffle partition pid.
+    */
+  private[graph] def byPid(df: DataFrame, id: Column, p: Int): DataFrame =
+    df.repartition(p, element_at(lit(partitionTokens(p)), pmod(id, lit(p.toLong)).cast("int") + lit(1)))
+
+  /** One edge set on the grid: the persisted vertex blocks and cells, the
+    * vertex count, how many vertices have no out-edge and each partition's
+    * vertex count. The cells are built by the first job that reads them.
+    */
+  private[graph] final case class Grid(vertices: RDD[VBlock], cells: RDD[IdxBlock], n: Long,
+                                       danglingCount: Long, partSizes: Array[Int]) {
+    /** The edge count (cells' nbrIdx entries): one job. */
+    def edgeCount: Long = cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
+    def unpersist(): Unit = { cells.unpersist(false); vertices.unpersist(false) }
+  }
+
+  /** PREPARE (the three passes in the object doc) of the (src, dst) rows
+    * `edf`, on the loop session `spark` at grid dimension `p`. The vertex
+    * blocks come from `vertexTable`'s (id, outdeg, rank) rows, or from the
+    * out-degree aggregation of `edf` with rank 0. With `dedupe`, a
+    * repeated (src, dst) row becomes one edge. None, after one job, when
+    * there is no vertex. Every grid loop (PageRank, label propagation and
+    * connected components) starts here.
+    */
+  private[graph] def prepareGrid(spark: SparkSession, edf: DataFrame, p: Int,
+                                 vertexTable: Option[DataFrame] = None,
+                                 dedupe: Boolean = false): Option[Grid] = {
+    import spark.implicits._
+    // --- 1. vertex state: one combined aggregation + one Tungsten
+    // shuffle+sort, streamed into primitive per-partition arrays --------
+    val stateSource = vertexTable.getOrElse(
+      edf.select(col("src").as("id"), lit(1).as("c"))
+        .unionAll(edf.select(col("dst").as("id"), lit(0).as("c")))
+        .groupBy(col("id")).agg(sum(col("c")).cast("int").as("outdeg"))
+        .withColumn("rank", lit(0.0)))
+    val state: RDD[VBlock] = byPid(stateSource, col("id"), p)
+      .sortWithinPartitions(col("id"))
+      .as[(Long, Int, Double)].rdd
+      .mapPartitionsWithIndex({ (i, it) =>
+        var cap = 1024
+        var ids = new Array[Long](cap)
+        var od = new Array[Int](cap)
+        var rks = new Array[Double](cap)
+        var n = 0
+        while (it.hasNext) {
+          val (id, d, r) = it.next()
+          if (n == cap) {
+            cap *= 2
+            ids = java.util.Arrays.copyOf(ids, cap)
+            od = java.util.Arrays.copyOf(od, cap)
+            rks = java.util.Arrays.copyOf(rks, cap)
+          }
+          ids(n) = id; od(n) = d; rks(n) = r; n += 1
+        }
+        if (n == 0) Iterator.empty
+        else Iterator.single(VBlock(i,
+          java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(od, n),
+          java.util.Arrays.copyOf(rks, n)))
+      }, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // one job: per-partition vertex counts — tiny (P ints), captured by
+    // closures — and out-degree-0 counts
+    val partSizes = new Array[Int](p)
+    var danglingCount = 0L
+    state.map(b => (b.pid, b.ids.length, b.outdeg.count(_ == 0))).collect().foreach { case (q, s, d) =>
+      partSizes(q) = s
+      danglingCount += d
+    }
+    val n = partSizes.map(_.toLong).sum
+    if (n == 0) {
+      state.unpersist(false)
+      return None
+    }
+
+    // --- 2. dst-resolve: Catalyst shuffle (no sort) zipped with state ---
+    val resolved: RDD[(Long, Int, Int)] = byPid(edf.select(col("src"), col("dst")), col("dst"), p)
+      .as[(Long, Long)].rdd
+      .zipPartitions(state, preservesPartitioning = false) { (es, vs) =>
+        if (!vs.hasNext) Iterator.empty
+        else {
+          val vb = vs.next()
+          val dp = vb.pid
+          es.map { case (src, dst) =>
+            (src, dp, java.util.Arrays.binarySearch(vb.ids, dst))
+          }
+        }
+      }
+
+    // --- 3. grid build: Tungsten external sort by (dpid, src) within
+    // pid(src) partitions (and by dst index, to drop repeats, with
+    // `dedupe`), then one streaming pass emits the cells --------------
+    val sortKeys = Seq(col("_2"), col("_1")) ++ (if (dedupe) Seq(col("_3")) else Nil)
+    val sortedCells = byPid(spark.createDataset(resolved).toDF(), col("_1"), p)
+      .sortWithinPartitions(sortKeys: _*)
+      .as[(Long, Int, Int)].rdd
+    val cells: RDD[IdxBlock] = sortedCells
+      .zipPartitions(state, preservesPartitioning = false) { (rows, vs) =>
+        if (!vs.hasNext) Iterator.empty
+        else {
+          val vb = vs.next()
+          val sp = vb.pid
+          val maxEdgesPerBlock = 4 << 20
+          val in = rows.buffered
+          new Iterator[IdxBlock] {
+            def hasNext: Boolean = in.hasNext
+            def next(): IdxBlock = {
+              val dp = in.head._2
+              val sidx = new IntBuf(256)
+              val offs = new IntBuf(256)
+              val nis = new IntBuf(1024)
+              offs.add(0)
+              while (in.hasNext && in.head._2 == dp && nis.n < maxEdgesPerBlock) {
+                val s = in.head._1
+                // src's own dense index via binary search in this
+                // partition's sorted ids (once per group head)
+                sidx.add(java.util.Arrays.binarySearch(vb.ids, s))
+                var prev = -1 // dense indexes are >= 0
+                while (in.hasNext && in.head._2 == dp && in.head._1 == s) {
+                  val d = in.next()._3
+                  if (!dedupe || d != prev) nis.add(d)
+                  prev = d
+                }
+                offs.add(nis.n)
+              }
+              IdxBlock(sp, dp, sidx.result(), offs.result(), nis.result())
+            }
+          }
+        }
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Some(Grid(state, cells, n, danglingCount, partSizes))
   }
 
   def run(edges: Dataset[Edge], cfg: PageRankConfig = PageRankConfig()): PageRankResult =
@@ -202,123 +339,21 @@ object CsrPageRank {
     IterationConf.withLoopSession(callerSpark, P) { spark =>
       import spark.implicits._
       val part = new HashPartitioner(P) // Int keys in [0,P): partition index == pid
-      val toks = partitionTokens(P)
-      def tokOf(idCol: Column): Column =
-        element_at(lit(toks), pmod(idCol, lit(P.toLong)).cast("int") + lit(1))
-
-      val edf = IterationConf.rebind(edges.toDF(), spark) // (src, dst)
-
-      // --- 1. vertex state: one combined aggregation + one Tungsten
-      // shuffle+sort, streamed into primitive per-partition arrays. On
-      // resume the committed (id, rank, outdeg) snapshot replaces the
-      // aggregation — it IS the complete vertex state. -------------------
-      val stateSource: org.apache.spark.sql.DataFrame = initialState match {
-        case Some((snap, _)) =>
-          IterationConf.rebind(snap, spark)
-            .select(col("id"), col("outdeg").cast("int").as("outdeg"), col("rank"))
-        case None =>
-          edf.select(col("src").as("id"), lit(1).as("c"))
-            .unionAll(edf.select(col("dst").as("id"), lit(0).as("c")))
-            .groupBy(col("id")).agg(sum(col("c")).cast("int").as("outdeg"))
-            .withColumn("rank", lit(0.0)) // filled with 1/n once n is known
+      // On resume the committed (id, rank, outdeg) snapshot replaces the
+      // out-degree aggregation — it IS the complete vertex state.
+      val snapshot = initialState.map { case (snap, _) =>
+        IterationConf.rebind(snap, spark)
+          .select(col("id"), col("outdeg").cast("int").as("outdeg"), col("rank"))
       }
-      var state: RDD[VBlock] = stateSource
-        .repartition(P, tokOf(col("id")))
-        .sortWithinPartitions(col("id"))
-        .as[(Long, Int, Double)].rdd
-        .mapPartitionsWithIndex({ (i, it) =>
-          var cap = 1024
-          var ids = new Array[Long](cap)
-          var od = new Array[Int](cap)
-          var rks = new Array[Double](cap)
-          var n = 0
-          while (it.hasNext) {
-            val (id, d, r) = it.next()
-            if (n == cap) {
-              cap *= 2
-              ids = java.util.Arrays.copyOf(ids, cap)
-              od = java.util.Arrays.copyOf(od, cap)
-              rks = java.util.Arrays.copyOf(rks, cap)
-            }
-            ids(n) = id; od(n) = d; rks(n) = r; n += 1
-          }
-          if (n == 0) Iterator.empty
-          else Iterator.single(VBlock(i,
-            java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(od, n),
-            java.util.Arrays.copyOf(rks, n)))
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val counts = state.map(b => (b.ids.length.toLong, b.outdeg.count(_ == 0).toLong))
-        .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-      val n = counts._1
-      val danglingCount = counts._2
-      if (n == 0) {
-        state.unpersist(false)
-        val none = IterationConf.rebind(Seq.empty[(Long, Double)].toDF("id", "rank"), callerSpark)
-        return PageRankResult(none, 0, converged = true, Nil, 0L, 0L)
-      }
-      // per-partition vertex counts — tiny (P ints), captured by closures
-      val partSizes = {
-        val arr = new Array[Int](P)
-        state.map(b => (b.pid, b.ids.length)).collect().foreach { case (p, s) => arr(p) = s }
-        arr
-      }
-      val maxPartSize = partSizes.max
-
-      // --- 2. dst-resolve: Catalyst shuffle (no sort) zipped with state -
-      val resolved: RDD[(Long, Int, Int)] = edf.select(col("src"), col("dst"))
-        .repartition(P, tokOf(col("dst")))
-        .as[(Long, Long)].rdd
-        .zipPartitions(state, preservesPartitioning = false) { (es, vs) =>
-          if (!vs.hasNext) Iterator.empty
-          else {
-            val vb = vs.next()
-            val dp = vb.pid
-            es.map { case (src, dst) =>
-              (src, dp, java.util.Arrays.binarySearch(vb.ids, dst))
-            }
-          }
+      val grid = prepareGrid(spark, IterationConf.rebind(edges.toDF(), spark), P, snapshot)
+        .getOrElse {
+          val none = IterationConf.rebind(Seq.empty[(Long, Double)].toDF("id", "rank"), callerSpark)
+          return PageRankResult(none, 0, converged = true, Nil, 0L, 0L)
         }
-
-      // --- 3. grid build: Tungsten external sort by (dpid, src) within
-      // pid(src) partitions, then one streaming pass emits the cells ----
-      val sortedCells = spark.createDataset(resolved)
-        .repartition(P, tokOf(col("_1")))
-        .sortWithinPartitions(col("_2"), col("_1"))
-        .as[(Long, Int, Int)].rdd
-      val blocks: RDD[IdxBlock] = sortedCells
-        .zipPartitions(state, preservesPartitioning = false) { (cells, vs) =>
-          if (!vs.hasNext) Iterator.empty
-          else {
-            val vb = vs.next()
-            val sp = vb.pid
-            val maxEdgesPerBlock = 4 << 20
-            val in = cells.buffered
-            new Iterator[IdxBlock] {
-              def hasNext: Boolean = in.hasNext
-              def next(): IdxBlock = {
-                val dp = in.head._2
-                val sidx = new IntBuf(256)
-                val offs = new IntBuf(256)
-                val nis = new IntBuf(1024)
-                offs.add(0)
-                while (in.hasNext && in.head._2 == dp && nis.n < maxEdgesPerBlock) {
-                  val s = in.head._1
-                  // src's own dense index via binary search in this
-                  // partition's sorted ids (once per group head)
-                  sidx.add(java.util.Arrays.binarySearch(vb.ids, s))
-                  while (in.hasNext && in.head._2 == dp && in.head._1 == s) {
-                    nis.add(in.next()._3)
-                  }
-                  offs.add(nis.n)
-                }
-                IdxBlock(sp, dp, sidx.result(), offs.result(), nis.result())
-              }
-            }
-          }
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val m = blocks.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
+      var state = grid.vertices
+      val blocks = grid.cells
+      val n = grid.n
+      val m = grid.edgeCount
 
       if (initialState.isEmpty) {
         val r0 = 1.0 / n
@@ -334,16 +369,16 @@ object CsrPageRank {
       // resume: recompute it from the snapshot's ranks (same sum order as
       // the uninterrupted run)
       var dangling =
-        if (initialState.isEmpty) danglingCount.toDouble / n else stepJob(state, None)._1
+        if (initialState.isEmpty) grid.danglingCount.toDouble / n else stepJob(state, None)._1
       var iter = initialState.map(_._2).getOrElse(0)
       var converged = false
       var deltas = Vector.empty[Double]
+      val sizes = grid.partSizes
+      val maxSz = sizes.max
 
       while (iter < cfg.maxIter && !converged) {
         val d = dangling // stable capture
         val nn = n
-        val sizes = partSizes
-        val maxSz = maxPartSize
         val msgs: RDD[(Int, MsgBlock)] = blocks
           .zipPartitions(state, preservesPartitioning = false) { (bs, vs) =>
             if (!vs.hasNext) Iterator.empty
@@ -431,11 +466,8 @@ object CsrPageRank {
         // for a commit, writes the snapshot from the same tasks.
         newState.persist(StorageLevel.MEMORY_AND_DISK)
         newState.localCheckpoint()
-        val due = cfg.checkpoint match {
-          case Durable(runDir, every) if (iter + 1) % every == 0 => Some(runDir)
-          case _ => None
-        }
-        val (mass, written) = stepJob(newState, due.map(Supersteps.prepare(spark, _, iter + 1)))
+        val due = Supersteps.dueDir(spark, cfg.checkpoint, iter + 1)
+        val (mass, written) = stepJob(newState, due)
         dangling = mass
 
         // accumulator delta gates CONVERGENCE only: a duplicated task
@@ -448,18 +480,10 @@ object CsrPageRank {
         iter += 1
         converged = delta < cfg.tol
 
-        cfg.checkpoint match {
-          case Durable(runDir, every) if iter % every == 0 || converged =>
-            // a run converging off the commit schedule still commits its
-            // last step: one write job over the kept state
-            val parts =
-              if (due.isDefined) written
-              else stepJob(state, Some(Supersteps.prepare(spark, runDir, iter)))._2
-            Supersteps.seal(spark, runDir, iter, parts, snapshotSchema,
-              Map("l1_delta" -> delta, "n_vertices" -> n.toDouble, "n_edges" -> m.toDouble,
-                "dangling_mass" -> dangling, "converged" -> (if (converged) 1.0 else 0.0)))
-          case _ => ()
-        }
+        Supersteps.commitStep(spark, cfg.checkpoint, iter, converged, due.map(_ => written),
+          snapshotSchema, Map("l1_delta" -> delta, "n_vertices" -> n.toDouble,
+            "n_edges" -> m.toDouble, "dangling_mass" -> dangling,
+            "converged" -> (if (converged) 1.0 else 0.0)))(dir => stepJob(state, Some(dir))._2)
       }
       val result = state
         .flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.ranks(k))))
@@ -477,34 +501,29 @@ object CsrPageRank {
     StructField("rank", DoubleType, nullable = false),
     StructField("outdeg", IntegerType, nullable = false)))
 
-  /** ONE job over `state`: the rank mass on out-degree-0 vertices — the
-    * per-partition sums come back from runJob in partition order and are
-    * added in that order, so the double is reproducible run to run — and,
-    * given a step's state dir, each partition's snapshot written by the
-    * task holding it. Returns the mass and each partition's snapshot
-    * (rows, checksum).
+  /** ONE job over `state` (Supersteps.stepJob): the rank mass on
+    * out-degree-0 vertices — the per-partition sums are added on the
+    * driver in partition order, so the double is reproducible run to run
+    * — and, given a step's state dir, each partition's snapshot written
+    * by the task holding it. Returns the mass and each partition's
+    * snapshot (rows, checksum).
     */
-  private def stepJob(state: RDD[VBlock], snapshotDir: Option[String]): (Double, Seq[(Long, Long)]) = {
-    val sc = state.sparkContext
-    val conf = snapshotDir.map(_ => new SerializableConfiguration(sc.hadoopConfiguration))
-    val parts = sc.runJob(state, (ctx: TaskContext, vs: Iterator[VBlock]) => {
-      val bs = vs.toArray // at most one block per partition
+  private def stepJob(state: RDD[VBlock], stateDir: Option[String]): (Double, Seq[(Long, Long)]) = {
+    val (mass, written) = Supersteps.stepJob(state, stateDir, snapshotSchema)({ bs =>
       var s = 0.0
       bs.foreach { vb =>
         var k = 0
         while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
       }
-      val written = snapshotDir.fold((0L, 0L)) { dir =>
-        val row = new SpecificInternalRow(snapshotSchema)
-        Supersteps.writePart(dir, snapshotSchema, conf.get, ctx,
-          bs.iterator.flatMap(b => b.ids.indices.iterator.map { k =>
-            row.setLong(0, b.ids(k)); row.setDouble(1, b.ranks(k)); row.setInt(2, b.outdeg(k))
-            row: InternalRow
-          }))
+      s
+    }, { b =>
+      val row = new SpecificInternalRow(snapshotSchema)
+      b.ids.indices.iterator.map { k =>
+        row.setLong(0, b.ids(k)); row.setDouble(1, b.ranks(k)); row.setInt(2, b.outdeg(k))
+        row: InternalRow
       }
-      (s, written)
     })
-    (parts.map(_._1).sum, parts.toSeq.map(_._2))
+    (mass.sum, written)
   }
 
   /** Persist + truncate lineage + materialize in one action. */

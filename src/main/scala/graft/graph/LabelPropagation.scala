@@ -1,11 +1,16 @@
 package graft.graph
 
+import graft.graph.CsrPageRank.{Grid, IdxBlock}
+import graft.graph.LabelLoop.LBlock
 import graft.ingest.Edge
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Synchronous label propagation for community assignment, DataFrame-only.
+import java.util.Arrays
+
+/** Synchronous label propagation for community assignment, on the CSR
+  * grid that `CsrPageRank` loops on.
   *
   * Reference precedent: per-paper topic assignment with fallback
   * propagation (topic/bertopic_title_abstract.py:94-106) and KMeans root
@@ -17,146 +22,177 @@ import org.apache.spark.storage.StorageLevel
   * (count desc, label asc) and initialization (label = vertex id). The
   * iteration is synchronous (all vertices update from the previous
   * round's labels), so results are identical at any partition count.
+  * maxIter caps oscillation (sync LPA can 2-cycle on bipartite
+  * structures).
   *
-  * Scale: one shuffle for the message groupBy((id,label)) and one for the
-  * per-vertex argmax; hub skew absorbed by partial aggregation. maxIter
-  * caps oscillation (sync LPA can 2-cycle on bipartite structures).
+  * The loop is `LabelLoop`'s, shared with `ConnectedComponents`: the
+  * undirected, deduplicated grid (a vertex hears each neighbour once, and
+  * one whose only edge is a self-loop gets no row), one `long` label per
+  * vertex, and one job per round with the commit fused into it. A vote
+  * round:
+  *  1. each source partition walks its cells one destination partition
+  *     at a time: a counting sort buckets the (neighbour index, label)
+  *     votes by neighbour, each bucket's labels are sorted, and the run
+  *     lengths leave as one bundle of (idx, label, count) runs sorted by
+  *     (idx, label) — pre-combined, so a hub receives at most P bundles
+  *     (two-phase aggregation, SURVEY.md §7.5);
+  *  2. partitionBy(P) on the bundle's destination partition — the only
+  *     shuffle;
+  *  3. each vertex partition merges its bundles (pairwise merges of
+  *     sorted runs, adding the counts of equal (idx, label)) and every
+  *     vertex takes its most frequent label, ties to the smallest; a
+  *     vertex that hears no vote keeps its label.
+  * The snapshot is (id, label); its `_METRICS` keys are `iter`,
+  * `changed` and `converged`.
   */
 object LabelPropagation {
 
   final case class LpaResult(labels: DataFrame, iterations: Int, converged: Boolean)
 
+  /** Votes for one destination partition: (idx, label, count) runs
+    * sorted by (idx, label).
+    */
+  private final case class Votes(idx: Array[Int], labels: Array[Long], counts: Array[Int])
+
   def run(edges: Dataset[Edge], maxIter: Int = 20,
           checkpoint: CheckpointPolicy = LocalOnly()): LpaResult =
-    iterate(edges, None, 0, maxIter, checkpoint)
+    LpaResult.tupled(loop.run(edges, None, 0, maxIter, checkpoint)(round))
 
   /** Resume from the last committed label state in runDir (fresh run if
     * none). Identical final labels to an uninterrupted run: a committed
     * label snapshot is the complete iteration state of the synchronous
     * vote.
     */
-  def resume(edges: Dataset[Edge], runDir: String, maxIter: Int = 20): LpaResult = {
-    val spark = edges.sparkSession
-    Supersteps.lastCommitted(spark, runDir) match {
-      case None => run(edges, maxIter, Durable(runDir))
-      case Some(step) =>
-        if (Supersteps.readMetrics(spark, runDir, step).converged)
-          LpaResult(Supersteps.readState(spark, runDir, step), step, converged = true)
-        else
-          iterate(edges, Some(Supersteps.readState(spark, runDir, step)), step, maxIter,
-            Durable(runDir))
+  def resume(edges: Dataset[Edge], runDir: String, maxIter: Int = 20): LpaResult =
+    LpaResult.tupled(loop.resume(edges, runDir, maxIter)(round))
+
+  private val loop = new LabelLoop("label", "iter", selfLoopVertices = false)
+
+  /** One vote round (steps 1-3 above). */
+  private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {
+    val part = new HashPartitioner(grid.partSizes.length) // Int keys in [0,P): partition index == pid
+    val msgs = votes(grid.cells, state, grid.partSizes).partitionBy(part) // the only shuffle
+    val next = state.zipPartitions(msgs, preservesPartitioning = true) { (ls, ms) =>
+      ls.map { lb =>
+        var runs = ms.map(_._2).toVector
+        while (runs.size > 1)
+          runs = runs.grouped(2).map(g => if (g.size == 2) merge(g(0), g(1)) else g(0)).toVector
+        val labels = lb.labels.clone()
+        var changed = 0
+        runs.foreach { v =>
+          var e = 0
+          while (e < v.idx.length) {
+            val k = v.idx(e)
+            // labels ascend within a vertex's runs: the first
+            // highest count is the smallest of the tied labels
+            var best = v.labels(e)
+            var bestCount = v.counts(e)
+            e += 1
+            while (e < v.idx.length && v.idx(e) == k) {
+              if (v.counts(e) > bestCount) { best = v.labels(e); bestCount = v.counts(e) }
+              e += 1
+            }
+            if (best != labels(k)) { labels(k) = best; changed += 1 }
+          }
+        }
+        LBlock(lb.ids, labels, changed)
+      }
+    }
+    (next, Nil)
+  }
+
+  /** Step 1: every source partition's votes, one bundle per destination
+    * partition its cells reach. Cells arrive sorted by dpid, so one dpid's
+    * votes are in flight at a time; the bucket bounds are reused arrays
+    * sized to the largest partition.
+    */
+  private def votes(cells: RDD[IdxBlock], state: RDD[LBlock], sizes: Array[Int]): RDD[(Int, Votes)] = {
+    val maxSz = sizes.max
+    cells.zipPartitions(state, preservesPartitioning = false) { (bs, ls) =>
+      if (!ls.hasNext) Iterator.empty
+      else {
+        val own = ls.next().labels
+        val start = new Array[Int](maxSz + 1)
+        val fill = new Array[Int](maxSz)
+        val in = bs.buffered
+        new Iterator[(Int, Votes)] {
+          def hasNext: Boolean = in.hasNext
+          def next(): (Int, Votes) = {
+            val dp = in.head.dpid
+            val run = Vector.newBuilder[IdxBlock]
+            while (in.hasNext && in.head.dpid == dp) run += in.next()
+            val blocks = run.result()
+            val nq = sizes(dp)
+            Arrays.fill(start, 0, nq + 1, 0)
+            blocks.foreach(_.nbrIdx.foreach(j => start(j + 1) += 1))
+            var k = 0
+            while (k < nq) { start(k + 1) += start(k); k += 1 }
+            System.arraycopy(start, 0, fill, 0, nq)
+            val lab = new Array[Long](start(nq))
+            blocks.foreach { b =>
+              var i = 0
+              while (i < b.srcIdx.length) {
+                val l = own(b.srcIdx(i))
+                var j = b.offsets(i)
+                while (j < b.offsets(i + 1)) {
+                  val t = b.nbrIdx(j)
+                  lab(fill(t)) = l; fill(t) += 1
+                  j += 1
+                }
+                i += 1
+              }
+            }
+            val idx = new Array[Int](lab.length)
+            val labels = new Array[Long](lab.length)
+            val counts = new Array[Int](lab.length)
+            var w = 0
+            k = 0
+            while (k < nq) {
+              Arrays.sort(lab, start(k), start(k + 1))
+              var e = start(k)
+              while (e < start(k + 1)) {
+                if (e == start(k) || lab(e) != lab(e - 1)) {
+                  idx(w) = k; labels(w) = lab(e); w += 1
+                }
+                counts(w - 1) += 1
+                e += 1
+              }
+              k += 1
+            }
+            (dp, Votes(Arrays.copyOf(idx, w), Arrays.copyOf(labels, w), Arrays.copyOf(counts, w)))
+          }
+        }
+      }
     }
   }
 
-  /** The whole loop runs on an isolated cloned session
-    * (IterationConf.withLoopSession): loop shuffles AND the cached bidir
-    * adjacency are sized to the loop data (a 20k-vertex graph must not
-    * pay P near-empty tasks per stage per round — the cached join side's
-    * partition count sets the scan-stage task count every iteration; at
-    * scale Pr == P and nothing changes), and the caller's session conf is
-    * never mutated (thread-safe under concurrent queries). The result is
-    * re-bound to the caller's session.
+  /** Two sorted vote runs as one, the counts of an (idx, label) in both
+    * added.
     */
-  private def iterate(edges: Dataset[Edge], labels0: Option[DataFrame], iter0: Int,
-                      maxIter: Int, checkpoint: CheckpointPolicy): LpaResult = {
-    val callerSpark = edges.sparkSession
-    val sessionParts = callerSpark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    // Self-loops are dropped before symmetrizing, as CC and the oracles
-    // do: a vertex never hears its own label, and one whose only edge is
-    // a self-loop gets no row.
-    val e = edges.toDF().filter(col("src") =!= col("dst"))
-    val bidir0 = e.select(col("src").as("u"), col("dst").as("v"))
-      .union(e.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = bidir0.count()
-    // Partition sizing: the library default (250k rows/partition) is the
-    // measured optimum here — r07 tried 65k (Pr 10 -> 32 at sf0.1) and
-    // the extra task launches + 32x32 shuffle blocks cost more than the
-    // added cores returned (9.6 s vs 6.0 s warm), unlike CC whose rounds
-    // are dominated by one large repartition.
-    val Pr = graft.core.IterationConf.sizedPartitions(sessionParts, nEdges)
-    graft.core.IterationConf.withLoopSession(callerSpark, Pr) { spark =>
-    val bidir = graft.core.IterationConf.rebind(bidir0, spark)
-      .repartition(Pr, col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = bidir.select(col("u").as("id")).distinct()
-      .repartition(Pr, col("id")).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    bidir0.unpersist(false)
-
-    // Wide state (id, label, old): the previous label rides in the
-    // checkpoint so the per-iteration `changed` check is a pure scan
-    // instead of a state-to-state join (guide §2.4 — and the old
-    // trailing repartition was a full exchange of the state per
-    // iteration that the left join's preserved hash(id) partitioning
-    // makes redundant).
-    var labels = labels0
-      .map(graft.core.IterationConf.rebind(_, spark))
-      .getOrElse(verts.select(col("id"), col("id").as("label")))
-      .select(col("id"), col("label"), col("label").as("old"))
-      .repartition(Pr, col("id"))
-      .localCheckpoint(true)
-
-    var iter = iter0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val lbl = labels.select(col("id"), col("label"))
-      // neighbor labels: edge (u <- label(v)). shuffle_hash on the
-      // (small) label-state side: the join is co-partitioned, so the
-      // hint yields a zero-exchange hash join and — unlike the default
-      // sort-merge — skips re-sorting the cached 2x|E| bidir side every
-      // iteration.
-      val votes = bidir
-        .join(lbl.hint("shuffle_hash"), bidir("v") === lbl("id"))
-        .groupBy(col("u"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      // Per-vertex argmax as an aggregation (count desc, label asc): hub
-      // vertices get map-side partial combine instead of funneling all
-      // their (label, n) rows through one window-sort task. The ordering
-      // struct (n, -label) has no ties (labels are distinct per group),
-      // so max_by is deterministic.
-      val picked = votes
-        .groupBy(col("u"))
-        .agg(max_by(col("label"), struct(col("n"), negate(col("label")))).as("newLabel"))
-        .select(col("u").as("id"), col("newLabel"))
-
-      // LAZY localCheckpoint per iteration: the changed-count action
-      // below materializes the new state (all partitions cached, lineage
-      // truncated after the job) AND returns the count — one job per
-      // iteration instead of checkpoint-then-count (r07; CsrPageRank's
-      // step job has the same single-action design). The left
-      // join keeps the state's hash(id) partitioning, so no repartition
-      // is needed to preserve the co-partitioned joins of the next
-      // iteration.
-      val newLabels = lbl
-        .join(picked.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("newLabel"), col("label")).as("label"),
-          col("label").as("old"))
-        .localCheckpoint(false)
-
-      val changed = newLabels.filter(col("label") =!= col("old")).count()
-      Supersteps.releaseCheckpoint(labels)
-      labels = newLabels
-      iter += 1
-      converged = changed == 0
-
-      checkpoint match {
-        case Durable(runDir, every) if iter % every == 0 || converged =>
-          // Durable snapshots stay (id, label) — the resume/consumer
-          // contract is unchanged; the loop keeps its wide state.
-          Supersteps.commit(spark, runDir, iter, labels.select(col("id"), col("label")),
-            Map("iter" -> iter.toDouble, "changed" -> changed.toDouble,
-              "converged" -> (if (converged) 1.0 else 0.0)))
-        case _ => ()
+  private def merge(a: Votes, b: Votes): Votes = {
+    val cap = a.idx.length + b.idx.length
+    val idx = new Array[Int](cap)
+    val labels = new Array[Long](cap)
+    val counts = new Array[Int](cap)
+    var i = 0
+    var j = 0
+    var w = 0
+    while (i < a.idx.length || j < b.idx.length) {
+      val c =
+        if (i == a.idx.length) 1
+        else if (j == b.idx.length) -1
+        else {
+          val byIdx = Integer.compare(a.idx(i), b.idx(j))
+          if (byIdx != 0) byIdx else java.lang.Long.compare(a.labels(i), b.labels(j))
+        }
+      if (c <= 0) { idx(w) = a.idx(i); labels(w) = a.labels(i); counts(w) = a.counts(i); i += 1 }
+      else { idx(w) = b.idx(j); labels(w) = b.labels(j); counts(w) = b.counts(j) }
+      if (c >= 0) {
+        if (c == 0) counts(w) += b.counts(j)
+        j += 1
       }
+      w += 1
     }
-    // labels is a self-contained checkpointed LogicalRDD: release inputs.
-    bidir.unpersist(false)
-    verts.unpersist(false)
-    LpaResult(graft.core.IterationConf.rebind(labels.select(col("id"), col("label")), callerSpark),
-      iter, converged)
-    }
+    Votes(Arrays.copyOf(idx, w), Arrays.copyOf(labels, w), Arrays.copyOf(counts, w))
   }
 }

@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
@@ -19,6 +20,7 @@ import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** One committed superstep's `_METRICS.json`: the loop's own figures
   * (`metrics`) plus the snapshot's lineage — its row count and an
@@ -47,8 +49,10 @@ final case class StepMetrics(step: Int, rows: Long, checksum: Long, metrics: Map
   * workers checkpoint their own partitions: `writePart` writes a hidden
   * `.part-NNNNN-<attempt>.parquet`, renames it into place and returns the
   * partition's rows and checksum, so the lineage comes from the write
-  * itself. `commit` runs it as one job over a DataFrame; `CsrPageRank`
-  * runs it inside its own per-iteration job, so its commits add no job.
+  * itself. The grid loops (`CsrPageRank`, and `LabelPropagation` and
+  * `ConnectedComponents` through `LabelLoop`) run it inside their one
+  * per-iteration job (`stepJob`), so their commits add no job; `commit`
+  * runs it as one job over any DataFrame.
   * `seal` then writes `_METRICS.json` and `_COMMIT` on the driver. The
   * loop keeps its in-memory state — nothing is re-read. `readState`
   * checks the snapshot against the recorded lineage once per resume, so
@@ -72,21 +76,6 @@ object Supersteps {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def stepDir(runDir: String, step: Int) = new Path(runDir, f"step=$step%05d")
-
-  /** Frees the blocks of a locally-checkpointed loop state as soon as the
-    * next iteration no longer needs them (the GC-driven ContextCleaner
-    * instead causes storage churn spikes). ONLY a direct top-level
-    * LogicalRDD matches: a deep collectFirst would, on a loop's first
-    * iteration (state still a projection over its inputs), reach down the
-    * plan and unpersist a CALLER-supplied checkpointed edge RDD, which is
-    * irrecoverable for a local checkpoint (r07 fix). Any other plan is
-    * left alone.
-    */
-  private[graph] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** (rows, checksum) aggregates over every column of `df`. bit_xor is
     * order-insensitive and overflow-free, so the checksum is stable under
@@ -193,6 +182,47 @@ object Supersteps {
     val cOut = f.create(new Path(dir, "_COMMIT"), true)
     cOut.write("ok".getBytes(StandardCharsets.UTF_8))
     cOut.close()
+  }
+
+  /** The state dir that step `step`'s job writes its snapshot into, when
+    * `policy` has the step on its commit schedule (cleared here).
+    */
+  private[graph] def dueDir(spark: SparkSession, policy: CheckpointPolicy, step: Int): Option[String] =
+    policy match {
+      case Durable(runDir, every) if step % every == 0 => Some(prepare(spark, runDir, step))
+      case _ => None
+    }
+
+  /** ONE job over a grid loop's block state: each task reduces its blocks
+    * (at most one) with `partial` and, given `stateDir`, writes their
+    * `rows` as its partition of the snapshot. Returns the partials in
+    * partition order — a driver-side sum over them is the same number on
+    * every run, where an accumulator counts a re-run task twice — and each
+    * partition's (rows, checksum).
+    */
+  private[graph] def stepJob[B, R: ClassTag](state: RDD[B], stateDir: Option[String], schema: StructType)(
+      partial: Seq[B] => R, rows: B => Iterator[InternalRow]): (Array[R], Seq[(Long, Long)]) = {
+    val sc = state.sparkContext
+    val conf = stateDir.map(_ => new SerializableConfiguration(sc.hadoopConfiguration))
+    val parts = sc.runJob(state, (ctx: TaskContext, it: Iterator[B]) => {
+      val bs = it.toVector
+      (partial(bs), stateDir.fold((0L, 0L))(writePart(_, schema, conf.get, ctx, bs.iterator.flatMap(rows))))
+    })
+    (parts.map(_._1), parts.toSeq.map(_._2))
+  }
+
+  /** Commits step `step` of a grid loop when `policy` has it on the
+    * schedule or the run has converged: seals the snapshot the step's job
+    * wrote (`written`, present when `dueDir` gave a dir) or, for a run
+    * converging off the schedule, writes it now with `write` (one job).
+    */
+  private[graph] def commitStep(spark: SparkSession, policy: CheckpointPolicy, step: Int,
+                                converged: Boolean, written: Option[Seq[(Long, Long)]],
+                                schema: StructType, metrics: => Map[String, Double])(
+      write: String => Seq[(Long, Long)]): Unit = policy match {
+    case Durable(runDir, every) if step % every == 0 || converged =>
+      seal(spark, runDir, step, written.getOrElse(write(prepare(spark, runDir, step))), schema, metrics)
+    case _ => ()
   }
 
   /** Write one superstep atomically: one job in which every task writes

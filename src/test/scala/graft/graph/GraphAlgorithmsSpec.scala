@@ -91,6 +91,99 @@ class GraphAlgorithmsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
+  test("LPA matches the plain-Scala synchronous vote on every shape at P = 1, 3 and 8") {
+    val maxIter = 10
+    forEveryShapeAndP { (shape, edges) =>
+      val (want, wantIters, wantConverged) = Oracles.labelPropagation(edges, maxIter)
+      val r = LabelPropagation.run(ds(edges), maxIter = maxIter)
+      val got = r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      assert(got == want, shape)
+      assert((r.iterations, r.converged) == ((wantIters, wantConverged)), shape)
+    }
+  }
+
+  test("LPA: Durable(every = 1) runs exactly the LocalOnly jobs, one per vote round") {
+    // the star's hub and spokes swap labels every round, so no round is
+    // the last one
+    val star = (1001L to 1050L).map(i => (1000L, i))
+    val edges = ds(Oracles.randomGraph(200, 900, seed = 7) ++ star)
+    val iters = 6
+    var local: LabelPropagation.LpaResult = null
+    val localJobs = jobsOf { local = LabelPropagation.run(edges, maxIter = iters) }
+    assert(local.iterations == iters && !local.converged, "the run should use every round")
+    val dir = java.nio.file.Files.createTempDirectory("graft-lpa-jobs").toString
+    val durableJobs = jobsOf(LabelPropagation.run(edges, maxIter = iters, checkpoint = Durable(dir, 1)))
+    assert(durableJobs == localJobs, s"durable $durableJobs jobs vs LocalOnly $localJobs")
+    assert(Supersteps.lastCommitted(spark, dir).contains(iters))
+    assert(localJobs <= iters + prepareJobs, s"$localJobs jobs for $iters rounds")
+  }
+
+  test("CC matches the union-find oracle on every shape at P = 1, 3 and 8") {
+    forEveryShapeAndP { (shape, edges) =>
+      val r = ConnectedComponents.run(ds(edges))
+      val got = r.components.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      assert(got == Oracles.connectedComponents(edges), shape)
+      assert(r.rounds <= 12, s"$shape: ${r.rounds} rounds")
+    }
+  }
+
+  test("CC: Durable(every = 1) runs exactly the LocalOnly jobs, one per round") {
+    val edges = ds((0L until 200L).map(i => (i, i + 1)))
+    var local: ConnectedComponents.CcResult = null
+    val localJobs = jobsOf { local = ConnectedComponents.run(edges) }
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-jobs").toString
+    val durableJobs = jobsOf(ConnectedComponents.run(edges, checkpoint = Durable(dir, 1)))
+    assert(durableJobs == localJobs, s"durable $durableJobs jobs vs LocalOnly $localJobs")
+    assert(Supersteps.lastCommitted(spark, dir).contains(local.rounds))
+    assert(localJobs <= local.rounds + prepareJobs, s"$localJobs jobs for ${local.rounds} rounds")
+  }
+
+  /** The jobs a label loop runs besides its rounds: the input count that
+    * sizes P (two jobs under the caller's AQE), the vertex blocks with
+    * their per-partition counts, and the result's checkpoint (the first
+    * round builds the grid's cells).
+    */
+  private val prepareJobs = 4
+
+  /** `check(shape, edges)` for every graph shape at loop partition counts
+    * P = 1, 3 and 8, forced through `graft.loop.target.rows` = 1 and
+    * `spark.sql.shuffle.partitions` = P (8 is more than the session's 4);
+    * `shape` names the shape and P.
+    */
+  private def forEveryShapeAndP(check: (String, Seq[(Long, Long)]) => Unit): Unit = {
+    val c1 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
+    val c2 = for { a <- 10L to 13L; b <- 10L to 13L if a < b } yield (a, b)
+    // every vertex i but the roots (multiples of 7) hangs off a smaller one
+    val rnd = new scala.util.Random(11)
+    val forest = (1L until 300L).filter(_ % 7 != 0).map(i => (rnd.nextInt(i.toInt).toLong, i))
+    val shapes = Seq(
+      "empty" -> Seq.empty[(Long, Long)],
+      "self-loops only" -> Seq((1L, 1L), (2L, 2L), (2L, 2L)),
+      "200-vertex chain" -> (0L until 199L).map(i => (i, i + 1)),
+      "500-spoke star" -> (1L to 500L).map(i => (0L, i)),
+      "two 4-cliques + bridge" -> (c1 ++ c2 :+ ((3L, 10L))),
+      "sparse forest" -> forest,
+      "random, seed 5" -> Oracles.randomGraph(150, 500, seed = 5),
+      "random, seed 37" -> Oracles.randomGraph(120, 400, seed = 37))
+    val rowsKey = "graft.loop.target.rows"
+    val partsKey = "spark.sql.shuffle.partitions"
+    val savedRows = sys.props.get(rowsKey)
+    val savedParts = spark.conf.get(partsKey)
+    try {
+      sys.props(rowsKey) = "1" // P = min(shuffle partitions, edge rows)
+      for (p <- Seq(1, 3, 8); (shape, edges) <- shapes) {
+        spark.conf.set(partsKey, p.toString)
+        check(s"$shape at P = $p", edges)
+      }
+    } finally {
+      savedRows match {
+        case Some(v) => sys.props(rowsKey) = v
+        case None    => sys.props.remove(rowsKey)
+      }
+      spark.conf.set(partsKey, savedParts)
+    }
+  }
+
   // --- Triangle counting ----------------------------------------------
 
   test("triangles: two 4-cliques + bridge = 8") {

@@ -71,6 +71,32 @@ object Oracles {
     groups.flatMap { case (_, vs) => val m = vs.min; vs.map(_ -> m) }.toMap
   }
 
+  /** Synchronous label propagation over the undirected simple graph
+    * (self-loops dropped, each neighbour counted once): labels start as
+    * vertex ids, and every round each vertex takes its neighbours' most
+    * frequent label, ties to the smallest. Stops after a round that
+    * changes nothing or after `maxIter` rounds. Returns the labels of the
+    * vertices that have a neighbour, the rounds run and whether the last
+    * round changed nothing.
+    */
+  def labelPropagation(edges: Seq[(Long, Long)], maxIter: Int): (Map[Long, Long], Int, Boolean) = {
+    val adj = edges.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+      .groupBy(_._1).map { case (u, ns) => u -> ns.map(_._2) }
+    var label = adj.map { case (u, _) => u -> u }
+    var it = 0
+    var changed = true
+    while (it < maxIter && changed) {
+      val next = adj.map { case (u, ns) =>
+        u -> ns.groupBy(label).map { case (l, vs) => (l, vs.size) }.minBy { case (l, c) => (-c, l) }._1
+      }
+      changed = next != label
+      label = next
+      it += 1
+    }
+    (label, it, !changed)
+  }
+
   /** Exact triangle count over the undirected simple graph. */
   def triangles(edges: Seq[(Long, Long)]): Long = {
     val und = edges.flatMap { case (a, b) => if (a == b) Nil else Seq((a min b, a max b)) }.distinct

@@ -83,21 +83,53 @@ class SuperstepsSpec extends SparkSpec {
     assert(again.rounds == full.rounds)
     assert(Supersteps.lastCommitted(spark, partDir) == finished)
     assert(components(again) == components(full))
+
+    // every = 3, stopped after round 3 of 4: resumes from the step-3 commit
+    assert(full.rounds == 4)
+    val everyThree = tmpDir()
+    ConnectedComponents.run(ds, maxRounds = 3, checkpoint = Durable(everyThree, every = 3))
+    assert(Supersteps.lastCommitted(spark, everyThree).contains(3))
+    assert(!Supersteps.readMetrics(spark, everyThree, 3).converged)
+    val fromThree = ConnectedComponents.resume(ds, everyThree)
+    assert(components(fromThree) == components(full))
+    assert(fromThree.rounds == full.rounds)
+  }
+
+  test("CC resume rejects a (u, v) frontier snapshot before any job runs, naming the missing column") {
+    val ds = Oracles.randomGraph(200, 260, seed = 31).toDF("src", "dst").as[Edge]
+    val dir = tmpDir()
+    // the snapshot format of the retired large-star/small-star loop
+    Supersteps.commit(spark, dir, 2, Seq((2L, 1L), (3L, 1L)).toDF("u", "v"),
+      Map("round" -> 2.0, "frontier_edges" -> 2.0, "converged" -> 0.0))
+    var err: IllegalStateException = null
+    val jobs = jobsOf { err = intercept[IllegalStateException](ConnectedComponents.resume(ds, dir)) }
+    assert(err.getMessage.contains(s"superstep 2 in $dir has no component column"), err.getMessage)
+    assert(jobs == 0, s"$jobs jobs ran before the format check")
   }
 
   test("LPA resume from mid-run checkpoint == uninterrupted run") {
     val edges = Oracles.randomGraph(120, 400, seed = 37)
     val ds = edges.toDF("src", "dst").as[Edge]
 
-    val full = LabelPropagation.run(ds, maxIter = 10).labels
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(r: LabelPropagation.LpaResult) =
+      r.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val uninterrupted = LabelPropagation.run(ds, maxIter = 10)
+    val full = labels(uninterrupted)
 
     val partDir = tmpDir()
     LabelPropagation.run(ds, maxIter = 4, checkpoint = Durable(partDir))
     assert(Supersteps.lastCommitted(spark, partDir).contains(4))
-    val resumed = LabelPropagation.resume(ds, partDir, maxIter = 10).labels
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resumed == full)
+    val resumed = LabelPropagation.resume(ds, partDir, maxIter = 10)
+    assert(labels(resumed) == full)
+    assert(resumed.iterations == uninterrupted.iterations)
+
+    // every = 3, stopped after step 4: resumes from the step-3 commit
+    val everyThree = tmpDir()
+    LabelPropagation.run(ds, maxIter = 4, checkpoint = Durable(everyThree, every = 3))
+    assert(Supersteps.lastCommitted(spark, everyThree).contains(3))
+    val fromThree = LabelPropagation.resume(ds, everyThree, maxIter = 10)
+    assert(labels(fromThree) == full)
+    assert(fromThree.iterations == uninterrupted.iterations)
   }
 
   test("PageRank resume from mid-run checkpoint == uninterrupted run") {
@@ -182,7 +214,7 @@ class SuperstepsSpec extends SparkSpec {
         special.zipWithIndex.map { case (r, i) => Row(i.toLong * 7, r) } :+ Row(99L, null), 8),
       "LPA (id, label)" -> frame(longs("id", "label"),
         (1L to 20L).map(i => Row(i, i % 4)), 21),
-      "CC frontier (u, v)" -> frame(longs("u", "v"),
+      "two long columns (u, v)" -> frame(longs("u", "v"),
         (2L to 30L).map(i => Row(i, i / 2)), 30))
     shapes.zipWithIndex.foreach { case ((shape, df), i) =>
       val dir = tmpDir()
