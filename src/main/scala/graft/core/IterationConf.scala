@@ -52,15 +52,16 @@ object IterationConf {
     * frontier would otherwise pay `spark.sql.shuffle.partitions` empty
     * tasks per stage, per round — pure scheduler fixed cost that at
     * sf0.1 made connected components 34% of the whole query sweep. The
-    * loop's work per round is O(rows), so cap partitions at
-    * rows/targetRowsPerPartition (floor 1, ceiling the session default:
-    * a 10^12-row frontier keeps every partition).
+    * loop's work per round is O(rows), so cap partitions at rows / 250k
+    * (floor 1, ceiling the session default: a 10^12-row frontier keeps
+    * every partition). r07 measured 250k against 65k for the label
+    * loops (P 10 -> 32 at sf0.1): the extra task launches and P x P
+    * shuffle blocks cost more than the added cores returned. The system
+    * property `graft.loop.target.rows` overrides the 250k (specs force
+    * P > 1 with it).
     */
-  def sizedPartitions(sessionParts: Int, rows: Long, targetRowsPerPartition: Long = 250000L): Int = {
-    // tuning knob (dev/experiments + cluster overrides): a global target
-    // override; call-site defaults are the measured local optima
-    val target = sys.props.get("graft.loop.target.rows").map(_.toLong)
-      .getOrElse(targetRowsPerPartition)
+  def sizedPartitions(sessionParts: Int, rows: Long): Int = {
+    val target = sys.props.get("graft.loop.target.rows").map(_.toLong).getOrElse(250000L)
     math.max(1L, math.min(sessionParts.toLong, (rows + target - 1) / target)).toInt
   }
 }

@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.graph.CsrPageRank.{Grid, IdxBlock}
-import graft.graph.LabelLoop.LBlock
 import graft.ingest.Edge
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
@@ -21,11 +20,9 @@ import scala.collection.mutable
   * create_field/graph.py:56-62 — generalized to full CC with component id
   * = min vertex id (deterministic, parallelism-invariant).
   *
-  * The loop is `LabelLoop`'s, shared with `LabelPropagation`: the
-  * undirected, deduplicated grid, one `long` label per vertex starting at
-  * its own id, and one job per round with the commit fused into it.
-  * Self-loops are dropped from the grid only: a vertex whose only edge is
-  * a self-loop is its own component. A round:
+  * A `LabelProgram` (as `LabelPropagation` is) that `GridLoop` runs, one
+  * job per round. A vertex whose only edge is a self-loop is its own
+  * component. A round:
   *  1. hook: each source partition sends, per destination partition, one
   *     bundle of (dense index, min neighbour label) — min-combined at the
   *     source, so a hub receives at most P bundles — and every vertex
@@ -57,7 +54,7 @@ object ConnectedComponents {
     */
   def run(edges: Dataset[Edge], maxRounds: Int = 50,
           checkpoint: CheckpointPolicy = LocalOnly()): CcResult =
-    result(loop.run(edges, None, 0, maxRounds, checkpoint)(round))
+    result(GridLoop.run(edges, program, maxRounds, checkpoint))
 
   /** Resume from the last committed round in runDir (fresh run if none).
     * Result is identical to an uninterrupted run: the committed labels
@@ -67,11 +64,11 @@ object ConnectedComponents {
     * rejected with an IllegalStateException.
     */
   def resume(edges: Dataset[Edge], runDir: String, maxRounds: Int = 50): CcResult =
-    result(loop.resume(edges, runDir, maxRounds)(round))
+    result(GridLoop.resume(edges, program, runDir, maxRounds, Durable(runDir)))
 
-  private val loop = new LabelLoop("component", "round", selfLoopVertices = true)
+  private val program = new LabelProgram("component", "round", selfLoopVertices = true)(round)
 
-  private def result(r: (DataFrame, Int, Boolean)): CcResult = CcResult(r._1, r._2)
+  private def result(o: GridLoop.Outcome[Long]): CcResult = CcResult(o.values, o.step)
 
   /** One hook + shortcut round (steps 1-2 above): four stages, one job. */
   private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {

@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.IterationConf
 import graft.ingest.Edge
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -10,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** PageRank over grid-partitioned, index-resolved CSR blocks — the
   * engine's scale path (north rule: adjacency as CSR blocks in typed
@@ -29,12 +30,11 @@ import org.apache.spark.storage.StorageLevel
   *    and capped at maxEdgesPerBlock (streaming build off an external
   *    sort — bounded task memory at any scale).
   *
-  * PREPARE (`prepareGrid`, which `LabelLoop` builds the label
-  * propagation and connected components grid with too) runs entirely on
-  * Catalyst shuffles + Tungsten external sorts (whole-stage codegen,
-  * spillable, no boxed-record Java serialization — the round-2 prepare
-  * moved every edge twice as boxed RDD tuples and was 6x the loop's wall
-  * time). The trick that lets a DataFrame exchange
+  * PREPARE (`prepareGrid`, which `GridLoop` builds every program's grid
+  * with) runs entirely on Catalyst shuffles + Tungsten external sorts
+  * (whole-stage codegen, spillable, no boxed-record Java serialization —
+  * the round-2 prepare moved every edge twice as boxed RDD tuples and was
+  * 6x the loop's wall time). The trick that lets a DataFrame exchange
   * feed partitioner-pinned zipPartitions: `repartition(P, token(pid))`
   * where `token` is a driver-computed int per pid with
   * murmur3(token(p)) % P == p — Catalyst's HashPartitioning then places
@@ -72,15 +72,14 @@ import org.apache.spark.storage.StorageLevel
   *  2. partitionBy(P) on the bundle's dpid — the only shuffle, ~12 bytes
   *     per combined entry (int idx + double sum).
   *  3. zipPartitions(state, bundles): dense-add bundles into a contribs
-  *     array, apply teleport + dangling mass, emit the new state. The
-  *     L1 delta rides an accumulator in the same job; the dangling mass
-  *     fed into the NEXT iteration's rank formula is summed per partition
-  *     over the materialized new state (same single job triggers it) and
-  *     the partials are added on the driver in partition order — so it is
-  *     the same double on every run and on resume (an RDD fold would add
-  *     them in task-completion order). A re-executed or speculated task
-  *     can therefore only inflate the convergence-test delta (costing at
-  *     most an extra iteration), never perturb the rank values themselves.
+  *     array, apply teleport + dangling mass, emit the new state with its
+  *     L1 delta. The round's one job (`GridLoop`) returns each
+  *     partition's (delta, rank mass on out-degree-0 vertices), added on
+  *     the driver in partition order: the delta that gates convergence and
+  *     the dangling mass of the NEXT round are the same doubles on every
+  *     run and on resume, which starts from the commit's recorded
+  *     `dangling_mass` (an accumulator or an RDD fold would add them in
+  *     task-completion order, and count a re-run task twice).
   *
   * Durable commits are fused into that one job: when a superstep is due
   * for a commit, each task writes its partition's (id, rank, outdeg)
@@ -96,15 +95,18 @@ import org.apache.spark.storage.StorageLevel
   * zero block bytes.
   *
   * This is the engine's only PageRank: `PageRank.run`/`resume` forward
-  * here. `LabelPropagation` and `ConnectedComponents` run their rounds
-  * on the same grid (`LabelLoop`). CsrPageRankSpec and PageRankSpec
-  * check it against the plain-Scala power-iteration oracle
-  * (`Oracles.pageRank`).
+  * here, and the rounds are a `GridProgram` that `GridLoop` runs, the
+  * loop `LabelPropagation` and `ConnectedComponents` run their rounds on
+  * too, over the same prepare. CsrPageRankSpec and PageRankSpec check it
+  * against the plain-Scala power-iteration oracle (`Oracles.pageRank`).
   */
 object CsrPageRank {
 
-  /** One partition's vertex state: parallel arrays sorted by id. */
-  final case class VBlock(pid: Int, ids: Array[Long], outdeg: Array[Int], ranks: Array[Double])
+  /** One partition's vertex state: parallel arrays sorted by id, and the
+    * L1 change of `ranks` in the PageRank round that made the block.
+    */
+  final case class VBlock(pid: Int, ids: Array[Long], outdeg: Array[Int], ranks: Array[Double],
+                          delta: Double = 0.0)
 
   /** Grid cell (spid, dpid) of the adjacency: srcIdx/nbrIdx are dense
     * indexes into the source/destination partitions' VBlock arrays.
@@ -139,16 +141,6 @@ object CsrPageRank {
     toks
   }
 
-  private final class IntBuf(initial: Int = 64) {
-    private var arr = new Array[Int](initial)
-    var n = 0
-    def add(v: Int): Unit = {
-      if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-      arr(n) = v; n += 1
-    }
-    def result(): Array[Int] = java.util.Arrays.copyOf(arr, n)
-  }
-
   /** `df` repartitioned so that the rows whose `id` falls in vertex
     * partition pid = id mod P land in shuffle partition pid.
     */
@@ -161,8 +153,6 @@ object CsrPageRank {
     */
   private[graph] final case class Grid(vertices: RDD[VBlock], cells: RDD[IdxBlock], n: Long,
                                        danglingCount: Long, partSizes: Array[Int]) {
-    /** The edge count (cells' nbrIdx entries): one job. */
-    def edgeCount: Long = cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
     def unpersist(): Unit = { cells.unpersist(false); vertices.unpersist(false) }
   }
 
@@ -171,8 +161,7 @@ object CsrPageRank {
     * blocks come from `vertexTable`'s (id, outdeg, rank) rows, or from the
     * out-degree aggregation of `edf` with rank 0. With `dedupe`, a
     * repeated (src, dst) row becomes one edge. None, after one job, when
-    * there is no vertex. Every grid loop (PageRank, label propagation and
-    * connected components) starts here.
+    * there is no vertex.
     */
   private[graph] def prepareGrid(spark: SparkSession, edf: DataFrame, p: Int,
                                  vertexTable: Option[DataFrame] = None,
@@ -257,22 +246,22 @@ object CsrPageRank {
             def hasNext: Boolean = in.hasNext
             def next(): IdxBlock = {
               val dp = in.head._2
-              val sidx = new IntBuf(256)
-              val offs = new IntBuf(256)
-              val nis = new IntBuf(1024)
-              offs.add(0)
-              while (in.hasNext && in.head._2 == dp && nis.n < maxEdgesPerBlock) {
+              val sidx = new mutable.ArrayBuilder.ofInt
+              val offs = new mutable.ArrayBuilder.ofInt
+              val nis = new mutable.ArrayBuilder.ofInt
+              offs += 0
+              while (in.hasNext && in.head._2 == dp && nis.length < maxEdgesPerBlock) {
                 val s = in.head._1
                 // src's own dense index via binary search in this
                 // partition's sorted ids (once per group head)
-                sidx.add(java.util.Arrays.binarySearch(vb.ids, s))
+                sidx += java.util.Arrays.binarySearch(vb.ids, s)
                 var prev = -1 // dense indexes are >= 0
                 while (in.hasNext && in.head._2 == dp && in.head._1 == s) {
                   val d = in.next()._3
-                  if (!dedupe || d != prev) nis.add(d)
+                  if (!dedupe || d != prev) nis += d
                   prev = d
                 }
-                offs.add(nis.n)
+                offs += nis.length
               }
               IdxBlock(sp, dp, sidx.result(), offs.result(), nis.result())
             }
@@ -284,253 +273,181 @@ object CsrPageRank {
   }
 
   def run(edges: Dataset[Edge], cfg: PageRankConfig = PageRankConfig()): PageRankResult =
-    runImpl(edges, cfg, None)
+    result(GridLoop.run(edges, Program(cfg.alpha, cfg.tol), cfg.maxIter, cfg.checkpoint))
 
-  /** Resume from the last committed superstep in runDir (fresh durable
-    * run if none). The committed (id, rank, outdeg) snapshot is the
-    * complete iteration state: the grid is rebuilt from the edges, the
-    * vertex blocks from the snapshot, and the continuation is
-    * bit-identical to an uninterrupted run (see CsrPageRankSpec). A
-    * snapshot without `outdeg` — the (id, rank) format of the retired
-    * DataFrame-join engine — is rejected before any job runs.
+  /** Resume from the last committed superstep in runDir (a fresh durable
+    * run if none; `GridLoop.resume`): the grid is rebuilt from the edges,
+    * its vertex blocks from the (id, rank, outdeg) snapshot, and the run
+    * goes on bit-identical to an uninterrupted one. An (id, rank) snapshot
+    * of the retired DataFrame-join engine is rejected before any job runs.
     */
   def resume(edges: Dataset[Edge], runDir: String,
-             cfg: PageRankConfig = PageRankConfig()): PageRankResult = {
-    val spark = edges.sparkSession
-    val durableCfg = cfg.checkpoint match {
-      case _: Durable => cfg
-      case _          => cfg.copy(checkpoint = Durable(runDir, 1))
-    }
-    Supersteps.lastCommitted(spark, runDir) match {
-      case None => runImpl(edges, durableCfg, None)
-      case Some(step) =>
-        val metrics = Supersteps.readMetrics(spark, runDir, step)
-        def requireOutdeg(schema: StructType): Unit =
-          if (!schema.fieldNames.contains("outdeg"))
-            throw new IllegalStateException(
-              s"superstep $step in $runDir has no outdeg column (snapshot columns: " +
-                s"${schema.fieldNames.mkString(", ")}); it was not written by CsrPageRank " +
-                "and cannot be resumed — start a fresh run")
-        metrics.schema.foreach(requireOutdeg)
-        val snap = Supersteps.readState(spark, runDir, step)
-        requireOutdeg(snap.schema) // also covers run dirs that recorded no schema
-        if (metrics.converged)
-          PageRankResult(snap.select(col("id"), col("rank")), step, converged = true,
-            Seq(metrics.metrics("l1_delta")), -1L, metrics.rows)
-        else runImpl(edges, durableCfg, Some((snap, step)))
-    }
-  }
+             cfg: PageRankConfig = PageRankConfig()): PageRankResult =
+    result(GridLoop.resume(edges, Program(cfg.alpha, cfg.tol), runDir, cfg.maxIter, cfg.checkpoint match {
+      case d: Durable => d
+      case _          => Durable(runDir)
+    }))
 
-  private def runImpl(
-      edges: Dataset[Edge], cfg: PageRankConfig,
-      initialState: Option[(org.apache.spark.sql.DataFrame, Int)]): PageRankResult = {
-    val callerSpark = edges.sparkSession
-    val sessionParts = callerSpark.conf.get("spark.sql.shuffle.partitions").toInt
+  private def result(o: GridLoop.Outcome[Step]): PageRankResult =
+    PageRankResult(o.values, o.step, o.converged, o.last.deltas, o.last.m, o.last.n,
+      prepareSeconds = o.prepareSeconds, loopSeconds = o.loopSeconds)
 
-    val prepT0 = System.nanoTime()
-    // Grid dimension sized to the edge set (parquet-backed inputs
-    // answer count() from footer statistics; derived ones pay one
-    // extra derivation, far cheaper than tens of near-empty-task
-    // supersteps on a small graph).
-    val P = IterationConf.sizedPartitions(sessionParts, math.max(edges.toDF().count(), 1L))
-    // The whole build + loop runs on an isolated cloned session (AQE off,
-    // broadcast off, shuffle partitions = P) — the caller's session conf
-    // is never mutated, so concurrent queries can't race it.
-    IterationConf.withLoopSession(callerSpark, P) { spark =>
-      import spark.implicits._
-      val part = new HashPartitioner(P) // Int keys in [0,P): partition index == pid
-      // On resume the committed (id, rank, outdeg) snapshot replaces the
-      // out-degree aggregation — it IS the complete vertex state.
-      val snapshot = initialState.map { case (snap, _) =>
-        IterationConf.rebind(snap, spark)
-          .select(col("id"), col("outdeg").cast("int").as("outdeg"), col("rank"))
+  /** A PageRank step's aggregate: the L1 change of the ranks in each step
+    * of the run so far, the rank mass on vertices with no out-edge — the
+    * next round's dangling mass — and the grid's vertex and edge counts.
+    */
+  private[graph] final case class Step(deltas: Vector[Double], dangling: Double, n: Long, m: Long)
+
+  /** PageRank as a grid program (the round in the object doc). The
+    * snapshot is (id, rank, outdeg); its `_METRICS` keys are `l1_delta`,
+    * `n_vertices`, `n_edges`, `dangling_mass` and `converged`.
+    */
+  private final case class Program(alpha: Double, tol: Double)
+      extends GridProgram[VBlock, (Double, Double), Step] {
+    val schema: StructType = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("rank", DoubleType, nullable = false),
+      StructField("outdeg", IntegerType, nullable = false)))
+    val column = "outdeg"
+    val rowsPerEdge = 1
+    val dedupe = false
+    val emptyRound = false
+    val empty: Step = Step(Vector.empty, 0.0, 0L, 0L)
+
+    // on resume the committed (id, rank, outdeg) snapshot replaces the
+    // out-degree aggregation: it IS the complete vertex state
+    def gridInputs(edges: DataFrame, snapshot: Option[DataFrame]): (DataFrame, Option[DataFrame]) =
+      (edges, snapshot.map(_.select(col("id"), col("outdeg").cast("int").as("outdeg"), col("rank"))))
+
+    def start(grid: Grid, from: Option[(DataFrame, StepMetrics)]): (RDD[VBlock], Step) = {
+      // one job, which builds the cells: the loop times rounds only
+      val m = grid.cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
+      from match {
+        case None =>
+          // uniform ranks make the dangling mass a closed form
+          val r0 = 1.0 / grid.n
+          (grid.vertices.map(b => b.copy(ranks = Array.fill(b.ids.length)(r0))),
+            Step(Vector.empty, grid.danglingCount.toDouble / grid.n, grid.n, m))
+        case Some((_, recorded)) => // the vertex blocks hold the snapshot's ranks
+          (grid.vertices, Step(Vector.empty, recorded.metrics("dangling_mass"), grid.n, m))
       }
-      val grid = prepareGrid(spark, IterationConf.rebind(edges.toDF(), spark), P, snapshot)
-        .getOrElse {
-          val none = IterationConf.rebind(Seq.empty[(Long, Double)].toDF("id", "rank"), callerSpark)
-          return PageRankResult(none, 0, converged = true, Nil, 0L, 0L)
-        }
-      var state = grid.vertices
-      val blocks = grid.cells
-      val n = grid.n
-      val m = grid.edgeCount
+    }
 
-      if (initialState.isEmpty) {
-        val r0 = 1.0 / n
-        state = materialize(state.mapPartitions(
-          _.map(b => b.copy(ranks = Array.fill(b.ids.length)(r0))), preservesPartitioning = true))
-      }
-
-      val prepSecs = (System.nanoTime() - prepT0) / 1e9
-      val loopT0 = System.nanoTime()
-      val sc = spark.sparkContext
-      val alpha = cfg.alpha
-      // fresh start: uniform ranks make dangling mass a closed form;
-      // resume: recompute it from the snapshot's ranks (same sum order as
-      // the uninterrupted run)
-      var dangling =
-        if (initialState.isEmpty) grid.danglingCount.toDouble / n else stepJob(state, None)._1
-      var iter = initialState.map(_._2).getOrElse(0)
-      var converged = false
-      var deltas = Vector.empty[Double]
+    def round(grid: Grid, state: RDD[VBlock], last: Step): (RDD[VBlock], Seq[RDD[_]]) = {
+      val (a, d, nn) = (alpha, last.dangling, grid.n) // stable captures
       val sizes = grid.partSizes
       val maxSz = sizes.max
-
-      while (iter < cfg.maxIter && !converged) {
-        val d = dangling // stable capture
-        val nn = n
-        val msgs: RDD[(Int, MsgBlock)] = blocks
-          .zipPartitions(state, preservesPartitioning = false) { (bs, vs) =>
-            if (!vs.hasNext) Iterator.empty
-            else {
-              val vb = vs.next()
-              // one reused dense accumulator; blocks arrive sorted by
-              // dpid, so each dpid's bundle is emitted as soon as its
-              // block run ends — only one bundle in flight at a time
-              val contribs = new Array[Double](maxSz)
-              val in = bs.buffered
-              new Iterator[(Int, MsgBlock)] {
-                private var pending: (Int, MsgBlock) = _
-                private def advance(): Unit = {
-                  while (pending == null && in.hasNext) {
-                    val dp = in.head.dpid
-                    while (in.hasNext && in.head.dpid == dp) {
-                      val b = in.next()
-                      var i = 0
-                      while (i < b.srcIdx.length) {
-                        val si = b.srcIdx(i)
-                        val od = vb.outdeg(si)
-                        if (od > 0) {
-                          val w = vb.ranks(si) / od
-                          var j = b.offsets(i)
-                          while (j < b.offsets(i + 1)) { contribs(b.nbrIdx(j)) += w; j += 1 }
-                        }
-                        i += 1
-                      }
-                    }
-                    val nq = sizes(dp)
-                    var nz = 0
+      val msgs: RDD[(Int, MsgBlock)] = grid.cells
+        .zipPartitions(state, preservesPartitioning = false) { (bs, vs) =>
+          if (!vs.hasNext) Iterator.empty
+          else {
+            val vb = vs.next()
+            // one reused dense accumulator; blocks arrive sorted by
+            // dpid, so each dpid's bundle is emitted as soon as its
+            // block run ends — only one bundle in flight at a time
+            val contribs = new Array[Double](maxSz)
+            val in = bs.buffered
+            new Iterator[(Int, MsgBlock)] {
+              private var pending: (Int, MsgBlock) = _
+              private def advance(): Unit = {
+                while (pending == null && in.hasNext) {
+                  val dp = in.head.dpid
+                  while (in.hasNext && in.head.dpid == dp) {
+                    val b = in.next()
                     var i = 0
-                    while (i < nq) { if (contribs(i) != 0.0) nz += 1; i += 1 }
-                    if (nz > 0) {
-                      val idx = new Array[Int](nz)
-                      val sums = new Array[Double](nz)
-                      var w = 0; i = 0
-                      while (i < nq) {
-                        if (contribs(i) != 0.0) { idx(w) = i; sums(w) = contribs(i); w += 1 }
-                        i += 1
+                    while (i < b.srcIdx.length) {
+                      val si = b.srcIdx(i)
+                      val od = vb.outdeg(si)
+                      if (od > 0) {
+                        val w = vb.ranks(si) / od
+                        var j = b.offsets(i)
+                        while (j < b.offsets(i + 1)) { contribs(b.nbrIdx(j)) += w; j += 1 }
                       }
-                      pending = (dp, MsgBlock(dp, idx, sums))
+                      i += 1
                     }
-                    java.util.Arrays.fill(contribs, 0, nq, 0.0)
                   }
+                  val nq = sizes(dp)
+                  var nz = 0
+                  var i = 0
+                  while (i < nq) { if (contribs(i) != 0.0) nz += 1; i += 1 }
+                  if (nz > 0) {
+                    val idx = new Array[Int](nz)
+                    val sums = new Array[Double](nz)
+                    var w = 0; i = 0
+                    while (i < nq) {
+                      if (contribs(i) != 0.0) { idx(w) = i; sums(w) = contribs(i); w += 1 }
+                      i += 1
+                    }
+                    pending = (dp, MsgBlock(dp, idx, sums))
+                  }
+                  java.util.Arrays.fill(contribs, 0, nq, 0.0)
                 }
-                def hasNext: Boolean = { advance(); pending != null }
-                def next(): (Int, MsgBlock) = {
-                  advance()
-                  val r = pending; pending = null; r
-                }
+              }
+              def hasNext: Boolean = { advance(); pending != null }
+              def next(): (Int, MsgBlock) = {
+                advance()
+                val r = pending; pending = null; r
               }
             }
           }
-          .partitionBy(part) // the single per-iteration shuffle
+        }
+        .partitionBy(new HashPartitioner(sizes.length)) // the single per-iteration shuffle
 
-        val deltaAcc = sc.doubleAccumulator(s"l1_delta_iter_$iter")
-        val newState: RDD[VBlock] = state
-          .zipPartitions(msgs, preservesPartitioning = true) { (vs, ms) =>
-            vs.map { vb =>
-              // dense receive: bundle adds land in an array bounded by
-              // this partition's vertex count, no hashing
-              val contribs = new Array[Double](vb.ids.length)
-              ms.foreach { case (_, mb) =>
-                var i = 0
-                while (i < mb.idx.length) { contribs(mb.idx(i)) += mb.sums(i); i += 1 }
-              }
-              val newRanks = new Array[Double](vb.ids.length)
-              var delta = 0.0
-              var k = 0
-              while (k < vb.ids.length) {
-                val r = (1.0 - alpha) / nn + alpha * (contribs(k) + d / nn)
-                delta += math.abs(r - vb.ranks(k))
-                newRanks(k) = r
-                k += 1
-              }
-              deltaAcc.add(delta)
-              vb.copy(ranks = newRanks) // ids/outdeg shared by reference
-            }
+      val next = state.zipPartitions(msgs, preservesPartitioning = true) { (vs, ms) =>
+        vs.map { vb =>
+          // dense receive: bundle adds land in an array bounded by this
+          // partition's vertex count, no hashing
+          val contribs = new Array[Double](vb.ids.length)
+          ms.foreach { case (_, mb) =>
+            var i = 0
+            while (i < mb.idx.length) { contribs(mb.idx(i)) += mb.sums(i); i += 1 }
           }
-        // ONE job per iteration: it materializes the new state (persist +
-        // localCheckpoint), computes the next iteration's dangling mass
-        // from it — unlike an accumulator, a re-run task cannot
-        // double-count into the ranks — and, when this superstep is due
-        // for a commit, writes the snapshot from the same tasks.
-        newState.persist(StorageLevel.MEMORY_AND_DISK)
-        newState.localCheckpoint()
-        val due = Supersteps.dueDir(spark, cfg.checkpoint, iter + 1)
-        val (mass, written) = stepJob(newState, due)
-        dangling = mass
-
-        // accumulator delta gates CONVERGENCE only: a duplicated task
-        // update can only inflate it (delta terms are >= 0), i.e. cost at
-        // most an extra iteration — never perturb the rank values.
-        val delta = deltaAcc.value.doubleValue()
-        deltas :+= delta
-        state.unpersist(false)
-        state = newState
-        iter += 1
-        converged = delta < cfg.tol
-
-        Supersteps.commitStep(spark, cfg.checkpoint, iter, converged, due.map(_ => written),
-          snapshotSchema, Map("l1_delta" -> delta, "n_vertices" -> n.toDouble,
-            "n_edges" -> m.toDouble, "dangling_mass" -> dangling,
-            "converged" -> (if (converged) 1.0 else 0.0)))(dir => stepJob(state, Some(dir))._2)
+          val newRanks = new Array[Double](vb.ids.length)
+          var delta = 0.0
+          var k = 0
+          while (k < vb.ids.length) {
+            val r = (1.0 - a) / nn + a * (contribs(k) + d / nn)
+            delta += math.abs(r - vb.ranks(k))
+            newRanks(k) = r
+            k += 1
+          }
+          vb.copy(ranks = newRanks, delta = delta) // ids/outdeg shared by reference
+        }
       }
-      val result = state
-        .flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.ranks(k))))
-        .toDF("id", "rank").localCheckpoint(true)
-      blocks.unpersist(false)
-      state.unpersist(false)
-      PageRankResult(IterationConf.rebind(result, callerSpark), iter, converged, deltas, m, n,
-        prepareSeconds = prepSecs, loopSeconds = (System.nanoTime() - loopT0) / 1e9)
+      (next, Nil)
     }
-  }
 
-  /** The committed snapshot: one (id, rank, outdeg) row per vertex. */
-  private val snapshotSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("rank", DoubleType, nullable = false),
-    StructField("outdeg", IntegerType, nullable = false)))
-
-  /** ONE job over `state` (Supersteps.stepJob): the rank mass on
-    * out-degree-0 vertices — the per-partition sums are added on the
-    * driver in partition order, so the double is reproducible run to run
-    * — and, given a step's state dir, each partition's snapshot written
-    * by the task holding it. Returns the mass and each partition's
-    * snapshot (rows, checksum).
-    */
-  private def stepJob(state: RDD[VBlock], stateDir: Option[String]): (Double, Seq[(Long, Long)]) = {
-    val (mass, written) = Supersteps.stepJob(state, stateDir, snapshotSchema)({ bs =>
+    def partial(bs: Seq[VBlock]): (Double, Double) = {
       var s = 0.0
       bs.foreach { vb =>
         var k = 0
         while (k < vb.ids.length) { if (vb.outdeg(k) == 0) s += vb.ranks(k); k += 1 }
       }
-      s
-    }, { b =>
-      val row = new SpecificInternalRow(snapshotSchema)
+      (bs.map(_.delta).sum, s)
+    }
+
+    def aggregate(last: Step, parts: Array[(Double, Double)]): Step =
+      last.copy(deltas = last.deltas :+ parts.map(_._1).sum, dangling = parts.map(_._2).sum)
+
+    def metrics(step: Int, s: Step): Map[String, Double] =
+      Map("l1_delta" -> s.deltas.last, "n_vertices" -> s.n.toDouble, "n_edges" -> s.m.toDouble,
+        "dangling_mass" -> s.dangling, "converged" -> (if (s.deltas.last < tol) 1.0 else 0.0))
+
+    def recorded(m: StepMetrics): Step =
+      Step(Vector(m.metrics("l1_delta")), m.metrics("dangling_mass"), m.metrics("n_vertices").toLong,
+        m.metrics("n_edges").toLong)
+
+    def rows(b: VBlock): Iterator[InternalRow] = {
+      val row = new SpecificInternalRow(schema)
       b.ids.indices.iterator.map { k =>
         row.setLong(0, b.ids(k)); row.setDouble(1, b.ranks(k)); row.setInt(2, b.outdeg(k))
         row: InternalRow
       }
-    })
-    (mass.sum, written)
-  }
+    }
 
-  /** Persist + truncate lineage + materialize in one action. */
-  private def materialize[T](rdd: RDD[T]): RDD[T] = {
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    rdd.count()
-    rdd
+    def values(spark: SparkSession, state: RDD[VBlock]): DataFrame = {
+      import spark.implicits._
+      state.flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.ranks(k)))).toDF("id", "rank")
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.graph.CsrPageRank.{Grid, IdxBlock}
-import graft.graph.LabelLoop.LBlock
 import graft.ingest.Edge
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -25,11 +24,9 @@ import java.util.Arrays
   * maxIter caps oscillation (sync LPA can 2-cycle on bipartite
   * structures).
   *
-  * The loop is `LabelLoop`'s, shared with `ConnectedComponents`: the
-  * undirected, deduplicated grid (a vertex hears each neighbour once, and
-  * one whose only edge is a self-loop gets no row), one `long` label per
-  * vertex, and one job per round with the commit fused into it. A vote
-  * round:
+  * A `LabelProgram` (as `ConnectedComponents` is) that `GridLoop` runs,
+  * one job per round; a vertex whose only edge is a self-loop gets no
+  * row. A vote round:
   *  1. each source partition walks its cells one destination partition
   *     at a time: a counting sort buckets the (neighbour index, label)
   *     votes by neighbour, each bucket's labels are sorted, and the run
@@ -56,7 +53,7 @@ object LabelPropagation {
 
   def run(edges: Dataset[Edge], maxIter: Int = 20,
           checkpoint: CheckpointPolicy = LocalOnly()): LpaResult =
-    LpaResult.tupled(loop.run(edges, None, 0, maxIter, checkpoint)(round))
+    result(GridLoop.run(edges, program, maxIter, checkpoint))
 
   /** Resume from the last committed label state in runDir (fresh run if
     * none). Identical final labels to an uninterrupted run: a committed
@@ -64,9 +61,11 @@ object LabelPropagation {
     * vote.
     */
   def resume(edges: Dataset[Edge], runDir: String, maxIter: Int = 20): LpaResult =
-    LpaResult.tupled(loop.resume(edges, runDir, maxIter)(round))
+    result(GridLoop.resume(edges, program, runDir, maxIter, Durable(runDir)))
 
-  private val loop = new LabelLoop("label", "iter", selfLoopVertices = false)
+  private val program = new LabelProgram("label", "iter", selfLoopVertices = false)(round)
+
+  private def result(o: GridLoop.Outcome[Long]): LpaResult = LpaResult(o.values, o.step, o.converged)
 
   /** One vote round (steps 1-3 above). */
   private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {

@@ -49,10 +49,11 @@ final case class StepMetrics(step: Int, rows: Long, checksum: Long, metrics: Map
   * workers checkpoint their own partitions: `writePart` writes a hidden
   * `.part-NNNNN-<attempt>.parquet`, renames it into place and returns the
   * partition's rows and checksum, so the lineage comes from the write
-  * itself. The grid loops (`CsrPageRank`, and `LabelPropagation` and
-  * `ConnectedComponents` through `LabelLoop`) run it inside their one
-  * per-iteration job (`stepJob`), so their commits add no job; `commit`
-  * runs it as one job over any DataFrame.
+  * itself. `GridLoop`, the superstep loop of PageRank, connected
+  * components and label propagation, runs it inside its one job per
+  * round (`stepJob`), so a commit adds no job. `commit` runs it as one
+  * job over any DataFrame; only specs call it, to write run dirs of their
+  * own or of retired formats.
   * `seal` then writes `_METRICS.json` and `_COMMIT` on the driver. The
   * loop keeps its in-memory state — nothing is re-read. `readState`
   * checks the snapshot against the recorded lineage once per resume, so

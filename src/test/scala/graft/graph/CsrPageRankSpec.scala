@@ -49,6 +49,15 @@ class CsrPageRankSpec extends SparkSpec {
     val again = CsrPageRank.resume(ds, partDir,
       PageRankConfig(tol = 0.0, maxIter = 8, checkpoint = Durable(partDir, every = 4)))
     assert(toMap(again) == toMap(full))
+    assert((again.edgeCount, again.vertexCount, again.iterations) ==
+      ((full.edgeCount, full.vertexCount, full.iterations)))
+    // so does resuming a converged run, from its commit's record
+    val convDir = tmpDir("graft-csr-converged")
+    val converged = CsrPageRank.run(ds, PageRankConfig(checkpoint = Durable(convDir, every = 1000)))
+    val done = CsrPageRank.resume(ds, convDir, PageRankConfig())
+    assert(converged.converged && done.converged)
+    assert((done.edgeCount, done.vertexCount, done.iterations) ==
+      ((converged.edgeCount, converged.vertexCount, converged.iterations)))
   }
 
   test("CSR PageRank matches the power-iteration oracle incl. dangling (12 supersteps)") {
@@ -78,16 +87,21 @@ class CsrPageRankSpec extends SparkSpec {
       assert(first.edgeCount == edges.distinct.size)
       assert(first.vertexCount == edges.flatMap { case (s, d) => Seq(s, d) }.distinct.size)
       val a = toMap(first)
-      val b = toMap(CsrPageRank.run(ds, fixed(10)))
+      val second = CsrPageRank.run(ds, fixed(10))
+      val b = toMap(second)
       val partDir = tmpDir("graft-csr-p4")
       CsrPageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 5, checkpoint = Durable(partDir, 5)))
       val parts = new java.io.File(f"$partDir/step=00005/state").listFiles()
         .count(_.getName.startsWith("part-"))
       assert(parts == 4, "the snapshot should be written from 4 vertex partitions")
-      val resumed = toMap(CsrPageRank.resume(ds, partDir,
-        PageRankConfig(tol = 0.0, maxIter = 10, checkpoint = Durable(partDir, 5))))
+      val resumedRun = CsrPageRank.resume(ds, partDir,
+        PageRankConfig(tol = 0.0, maxIter = 10, checkpoint = Durable(partDir, 5)))
+      val resumed = toMap(resumedRun)
       assert(a == b, "two uninterrupted runs differ")
       assert(resumed == a, "the resumed run differs from the uninterrupted one")
+      // the deltas are summed in partition order: the same doubles every run
+      assert(second.deltas == first.deltas, "two uninterrupted runs report different deltas")
+      assert(resumedRun.deltas == first.deltas.drop(5), "the resumed run reports different deltas")
     } finally saved match {
       case Some(v) => sys.props(key) = v
       case None    => sys.props.remove(key)

@@ -5,6 +5,7 @@ import graft.ingest.Edge
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
@@ -48,6 +49,50 @@ class SuperstepsSpec extends SparkSpec {
     for ((name, loop) <- loops) {
       loop()
       assert(edges.count() == n, s"edge count after $name")
+    }
+  }
+
+  test("every loop leaves only its result persisted") {
+    val ds = Oracles.randomGraph(150, 600, seed = 23).toDF("src", "dst").as[Edge]
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the RDDs a result scans: its local checkpoint (none on a converged resume)
+    def scanned(result: DataFrame): Set[Int] =
+      result.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val Seq(pr, cc, lpa) = Seq.fill(3)(tmpDir())
+    val loops = Seq[(String, () => DataFrame)](
+      "fresh PageRank" -> (() => PageRank.run(ds).ranks),
+      "Durable PageRank" ->
+        (() => PageRank.run(ds, PageRankConfig(maxIter = 5, checkpoint = Durable(pr))).ranks),
+      "resumed PageRank" -> (() => PageRank.resume(ds, pr, PageRankConfig()).ranks),
+      "fresh CC" -> (() => ConnectedComponents.run(ds).components),
+      "Durable CC" -> (() => ConnectedComponents.run(ds, maxRounds = 2, checkpoint = Durable(cc)).components),
+      "resumed CC" -> (() => ConnectedComponents.resume(ds, cc).components),
+      "fresh LPA" -> (() => LabelPropagation.run(ds, maxIter = 5).labels),
+      "Durable LPA" -> (() => LabelPropagation.run(ds, maxIter = 2, checkpoint = Durable(lpa)).labels),
+      "resumed LPA" -> (() => LabelPropagation.resume(ds, lpa, maxIter = 5).labels))
+    for ((name, loop) <- loops) {
+      val before = persisted
+      val result = loop()
+      assert(persisted -- before == scanned(result), name)
+    }
+  }
+
+  test("each loop's resume rejects another loop's run dir before any job runs, naming its column") {
+    val ds = Oracles.randomGraph(120, 400, seed = 37).toDF("src", "dst").as[Edge]
+    val cases = Seq[(String, String => Any, String => Any, String)](
+      ("PageRank -> CC", dir => PageRank.run(ds, PageRankConfig(maxIter = 2, checkpoint = Durable(dir))),
+        dir => ConnectedComponents.resume(ds, dir), "component"),
+      ("CC -> LPA", dir => ConnectedComponents.run(ds, maxRounds = 2, checkpoint = Durable(dir)),
+        dir => LabelPropagation.resume(ds, dir), "label"),
+      ("LPA -> PageRank", dir => LabelPropagation.run(ds, maxIter = 2, checkpoint = Durable(dir)),
+        dir => PageRank.resume(ds, dir, PageRankConfig()), "outdeg"))
+    for ((name, write, resume, column) <- cases) {
+      val dir = tmpDir()
+      write(dir)
+      var err: IllegalStateException = null
+      val jobs = jobsOf { err = intercept[IllegalStateException](resume(dir)) }
+      assert(err.getMessage.contains(s"in $dir has no $column column"), s"$name: ${err.getMessage}")
+      assert(jobs == 0, s"$name: $jobs jobs ran before the format check")
     }
   }
 
