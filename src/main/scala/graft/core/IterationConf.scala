@@ -33,7 +33,10 @@ object IterationConf {
     * SparkContext); its SessionState and listener-bus registration are
     * reclaimed when the clone is GC'd (Spark holds them weakly), so a
     * loop-per-call service retains at most the clones created since the
-    * last GC — bounded, but worth knowing in a long-lived driver.
+    * last GC — bounded, but worth knowing in a long-lived driver. A grid
+    * loop's input keeps its grid (`graph.GridLoop`), and a kept grid holds
+    * the clone it was built on until the grid is released: when a loop
+    * runs on another input, or once the input is unreachable.
     */
   def withLoopSession[A](spark: SparkSession, loopParts: Int)(body: SparkSession => A): A = {
     val loop = GraftSessionBridge.cloneSession(spark)

@@ -21,8 +21,9 @@ import scala.collection.mutable
   * = min vertex id (deterministic, parallelism-invariant).
   *
   * A `LabelProgram` (as `LabelPropagation` is) that `GridLoop` runs, one
-  * job per round. A vertex whose only edge is a self-loop is its own
-  * component. A round:
+  * job per round, on the input's undirected grid, which LPA and the
+  * triangle count on the same input reuse. A vertex whose only edge is a
+  * self-loop is its own component. A round:
   *  1. hook: each source partition sends, per destination partition, one
   *     bundle of (dense index, min neighbour label) — min-combined at the
   *     source, so a hub receives at most P bundles — and every vertex
@@ -89,7 +90,7 @@ object ConnectedComponents {
               i += 1
             }
           }
-          LBlock(lb.ids, m, 0)
+          lb.copy(labels = m, changed = 0)
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK) // read by the three stages below
@@ -140,7 +141,7 @@ object ConnectedComponents {
           if (labels(k) != lb.labels(k)) changed += 1
           k += 1
         }
-        LBlock(lb.ids, labels, changed)
+        lb.copy(labels = labels, changed = changed)
       }
     }
     (next, Seq(hooked))

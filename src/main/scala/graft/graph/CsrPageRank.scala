@@ -3,7 +3,7 @@ package graft.graph
 import graft.ingest.Edge
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
@@ -30,11 +30,11 @@ import scala.collection.mutable
   *    and capped at maxEdgesPerBlock (streaming build off an external
   *    sort — bounded task memory at any scale).
   *
-  * PREPARE (`prepareGrid`, which `GridLoop` builds every program's grid
-  * with) runs entirely on Catalyst shuffles + Tungsten external sorts
-  * (whole-stage codegen, spillable, no boxed-record Java serialization —
-  * the round-2 prepare moved every edge twice as boxed RDD tuples and was
-  * 6x the loop's wall time). The trick that lets a DataFrame exchange
+  * PREPARE (`prepareGrid`, which `GridLoop` builds every grid with, once
+  * per input and shape) runs entirely on Catalyst shuffles + Tungsten
+  * external sorts (whole-stage codegen, spillable, no boxed-record Java
+  * serialization — the round-2 prepare moved every edge twice as boxed
+  * RDD tuples and was 6x the loop's wall time). The trick that lets a DataFrame exchange
   * feed partitioner-pinned zipPartitions: `repartition(P, token(pid))`
   * where `token` is a driver-computed int per pid with
   * murmur3(token(p)) % P == p — Catalyst's HashPartitioning then places
@@ -97,8 +97,10 @@ import scala.collection.mutable
   * This is the engine's only PageRank: `PageRank.run`/`resume` forward
   * here, and the rounds are a `GridProgram` that `GridLoop` runs, the
   * loop `LabelPropagation` and `ConnectedComponents` run their rounds on
-  * too, over the same prepare. CsrPageRankSpec and PageRankSpec check it
-  * against the plain-Scala power-iteration oracle (`Oracles.pageRank`).
+  * too, over the same prepare; a PageRank run, a durable run and its
+  * resume on one input share its directed grid. CsrPageRankSpec and
+  * PageRankSpec check it against the plain-Scala power-iteration oracle
+  * (`Oracles.pageRank`).
   */
 object CsrPageRank {
 
@@ -149,12 +151,34 @@ object CsrPageRank {
 
   /** One edge set on the grid: the persisted vertex blocks and cells, the
     * vertex count, how many vertices have no out-edge and each partition's
-    * vertex count. The cells are built by the first job that reads them.
+    * vertex count. The cells are built by the first job that reads them;
+    * `edges`, their edge count, by one fold the first time it is asked.
     */
   private[graph] final case class Grid(vertices: RDD[VBlock], cells: RDD[IdxBlock], n: Long,
                                        danglingCount: Long, partSizes: Array[Int]) {
+    lazy val edges: Long = cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
     def unpersist(): Unit = { cells.unpersist(false); vertices.unpersist(false) }
   }
+
+  /** Each vertex block of `grid` with `snap`'s `column` values in its
+    * vertex order, starting from `init`'s array (a snapshot row for a
+    * vertex the grid lacks is dropped): the snapshot goes to the vertex
+    * partitions and each id is found by binary search.
+    */
+  private[graph] def withSnapshot[T](grid: Grid, snap: DataFrame, column: String, enc: Encoder[T])(
+      init: VBlock => Array[T]): RDD[(VBlock, Array[T])] =
+    byPid(snap.select(col("id"), col(column)), col("id"), grid.partSizes.length)
+      .as(Encoders.tuple(Encoders.scalaLong, enc)).rdd
+      .zipPartitions(grid.vertices, preservesPartitioning = false) { (rows, vs) =>
+        vs.map { vb =>
+          val values = init(vb)
+          rows.foreach { case (id, v) =>
+            val k = java.util.Arrays.binarySearch(vb.ids, id)
+            if (k >= 0) values(k) = v
+          }
+          (vb, values)
+        }
+      }
 
   /** PREPARE (the three passes in the object doc) of the (src, dst) rows
     * `edf`, on the loop session `spark` at grid dimension `p`. The vertex
@@ -276,10 +300,14 @@ object CsrPageRank {
     result(GridLoop.run(edges, Program(cfg.alpha, cfg.tol), cfg.maxIter, cfg.checkpoint))
 
   /** Resume from the last committed superstep in runDir (a fresh durable
-    * run if none; `GridLoop.resume`): the grid is rebuilt from the edges,
-    * its vertex blocks from the (id, rank, outdeg) snapshot, and the run
-    * goes on bit-identical to an uninterrupted one. An (id, rank) snapshot
-    * of the retired DataFrame-join engine is rejected before any job runs.
+    * run if none; `GridLoop.resume`) on the edges' directed grid — the
+    * kept one when `edges` is the object an earlier run used, else built —
+    * with the snapshot's ranks zipped into its vertex blocks; the run goes
+    * on bit-identical to an uninterrupted one. Edges whose grid does not
+    * have the commit's `n_vertices` and `n_edges` are rejected with an
+    * IllegalStateException naming runDir before any round runs (and, on a
+    * kept grid, before any job). An (id, rank) snapshot of the retired
+    * DataFrame-join engine is rejected before any job runs.
     */
   def resume(edges: Dataset[Edge], runDir: String,
              cfg: PageRankConfig = PageRankConfig()): PageRankResult =
@@ -309,28 +337,30 @@ object CsrPageRank {
       StructField("rank", DoubleType, nullable = false),
       StructField("outdeg", IntegerType, nullable = false)))
     val column = "outdeg"
-    val rowsPerEdge = 1
-    val dedupe = false
+    val shape: GridShape = GridShape.Directed
     val emptyRound = false
     val empty: Step = Step(Vector.empty, 0.0, 0L, 0L)
 
-    // on resume the committed (id, rank, outdeg) snapshot replaces the
-    // out-degree aggregation: it IS the complete vertex state
-    def gridInputs(edges: DataFrame, snapshot: Option[DataFrame]): (DataFrame, Option[DataFrame]) =
-      (edges, snapshot.map(_.select(col("id"), col("outdeg").cast("int").as("outdeg"), col("rank"))))
+    // the out-degrees are the grid's: the edges must be the run's
+    override def mismatch(grid: Option[Grid], recorded: StepMetrics): Option[String] = {
+      val got = grid.fold((0L, 0L))(g => (g.n, g.edges))
+      val want = (recorded.metrics("n_vertices").toLong, recorded.metrics("n_edges").toLong)
+      if (got == want) None
+      else Some(s"superstep ${recorded.step} recorded ${want._1} vertices and ${want._2} edges, " +
+        s"the edges give ${got._1} vertices and ${got._2} edges")
+    }
 
-    def start(grid: Grid, from: Option[(DataFrame, StepMetrics)]): (RDD[VBlock], Step) = {
-      // one job, which builds the cells: the loop times rounds only
-      val m = grid.cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
-      from match {
-        case None =>
-          // uniform ranks make the dangling mass a closed form
-          val r0 = 1.0 / grid.n
-          (grid.vertices.map(b => b.copy(ranks = Array.fill(b.ids.length)(r0))),
-            Step(Vector.empty, grid.danglingCount.toDouble / grid.n, grid.n, m))
-        case Some((_, recorded)) => // the vertex blocks hold the snapshot's ranks
-          (grid.vertices, Step(Vector.empty, recorded.metrics("dangling_mass"), grid.n, m))
-      }
+    def start(grid: Grid, from: Option[(DataFrame, StepMetrics)]): (RDD[VBlock], Step) = from match {
+      case None =>
+        // uniform ranks make the dangling mass a closed form; the edge
+        // count builds the cells on a new grid (the loop times rounds only)
+        val r0 = 1.0 / grid.n
+        (grid.vertices.map(b => b.copy(ranks = Array.fill(b.ids.length)(r0))),
+          Step(Vector.empty, grid.danglingCount.toDouble / grid.n, grid.n, grid.edges))
+      case Some((snap, recorded)) =>
+        (withSnapshot(grid, snap, "rank", Encoders.scalaDouble)(vb => new Array[Double](vb.ids.length))
+          .map { case (vb, ranks) => vb.copy(ranks = ranks) },
+          Step(Vector.empty, recorded.metrics("dangling_mass"), grid.n, grid.edges))
     }
 
     def round(grid: Grid, state: RDD[VBlock], last: Step): (RDD[VBlock], Seq[RDD[_]]) = {

@@ -5,25 +5,26 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import java.util.Arrays
-
-/** One vertex partition's labels, aligned with its sorted ids, and how
+/** One vertex partition's labels, aligned with its sorted ids and the
+  * grid's out-degrees (shared by reference; 0: only self-loops), and how
   * many of them the round that made the block changed.
   */
-private[graph] final case class LBlock(ids: Array[Long], labels: Array[Long], changed: Int)
+private[graph] final case class LBlock(ids: Array[Long], outdeg: Array[Int], labels: Array[Long],
+                                       changed: Int)
 
 /** The grid program of label propagation and connected components: one
-  * `long` label per vertex of the undirected grid — the input's edges,
-  * self-loops dropped, in both directions, with `dedupe`, so a vertex
-  * hears each neighbour once. The vertices are the endpoints of the edges
-  * that are not self-loops or, with `selfLoopVertices`, of every edge.
-  * Labels start as the ids, or as a committed (id, `column`) snapshot. A
-  * round's partial is its partition's count of changed labels; the run
-  * ends after a round that changes none, and a grid with no vertex gets
-  * one such round.
+  * `long` label per vertex of the input's undirected grid
+  * (`GridShape.Undirected`, which the triangle count reads too), so a
+  * vertex hears each neighbour once. Both programs run on one grid per
+  * input, whose vertices are the endpoints of every edge; a vertex whose
+  * only edges are self-loops hears nothing and keeps its label. Without
+  * `selfLoopVertices` such vertices have no row in the snapshot or the
+  * result. Labels start as the ids, or as a committed (id, `column`)
+  * snapshot (a vertex without a row keeps its id). A round's partial is
+  * its partition's count of changed labels; the run ends after a round
+  * that changes none, and a grid with no vertex gets one such round.
   *
   * @param stepKey  the `_METRICS` key of the round number
   * @param next     the round (`GridProgram.round`), which reads no aggregate
@@ -35,38 +36,16 @@ private[graph] final class LabelProgram(val column: String, stepKey: String, sel
   val schema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField(column, LongType, nullable = false)))
-  val rowsPerEdge = 2
-  val dedupe = true
+  val shape: GridShape = GridShape.Undirected
   val emptyRound = true
   val empty = 0L
 
-  def gridInputs(all: DataFrame, snapshot: Option[DataFrame]): (DataFrame, Option[DataFrame]) = {
-    val e = all.filter(col("src") =!= col("dst"))
-    val ends = if (selfLoopVertices) all else e
-    // (out-degrees and ranks are PageRank's, unused here)
-    val vertices = ends.select(col("src").as("id")).unionAll(ends.select(col("dst").as("id")))
-      .distinct().select(col("id"), lit(0).as("outdeg"), lit(0.0).as("rank"))
-    (e.select(col("src"), col("dst")).unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-      Some(vertices))
-  }
-
   def start(grid: Grid, from: Option[(DataFrame, StepMetrics)]): (RDD[LBlock], Long) = from match {
     // labels are never written in place; every fresh label is new
-    case None => (grid.vertices.map(b => LBlock(b.ids, b.ids, 0)), grid.n)
+    case None => (grid.vertices.map(b => LBlock(b.ids, b.outdeg, b.ids, 0)), grid.n)
     case Some((snap, m)) =>
-      val labels = CsrPageRank.byPid(snap.select(col("id"), col(column)), col("id"), grid.partSizes.length)
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).rdd
-        .zipPartitions(grid.vertices, preservesPartitioning = false) { (rows, vs) =>
-          vs.map { vb =>
-            val labels = vb.ids.clone()
-            rows.foreach { case (id, l) =>
-              val k = Arrays.binarySearch(vb.ids, id)
-              if (k >= 0) labels(k) = l
-            }
-            LBlock(vb.ids, labels, 0)
-          }
-        }
-      (labels, recorded(m))
+      (CsrPageRank.withSnapshot(grid, snap, column, Encoders.scalaLong)(_.ids.clone())
+        .map { case (vb, labels) => LBlock(vb.ids, vb.outdeg, labels, 0) }, recorded(m))
   }
 
   def round(grid: Grid, state: RDD[LBlock], last: Long): (RDD[LBlock], Seq[RDD[_]]) = next(grid, state)
@@ -81,9 +60,13 @@ private[graph] final class LabelProgram(val column: String, stepKey: String, sel
 
   def recorded(m: StepMetrics): Long = m.metrics("changed").toLong
 
+  /** The indexes of a block's vertices that have rows. */
+  private def listed(b: LBlock): Iterator[Int] =
+    if (selfLoopVertices) b.ids.indices.iterator else b.ids.indices.iterator.filter(b.outdeg(_) > 0)
+
   def rows(b: LBlock): Iterator[InternalRow] = {
     val row = new SpecificInternalRow(schema)
-    b.ids.indices.iterator.map { k =>
+    listed(b).map { k =>
       row.setLong(0, b.ids(k)); row.setLong(1, b.labels(k))
       row: InternalRow
     }
@@ -91,6 +74,6 @@ private[graph] final class LabelProgram(val column: String, stepKey: String, sel
 
   def values(spark: SparkSession, state: RDD[LBlock]): DataFrame = {
     import spark.implicits._
-    state.flatMap(b => b.ids.indices.iterator.map(k => (b.ids(k), b.labels(k)))).toDF("id", column)
+    state.flatMap(b => listed(b).map(k => (b.ids(k), b.labels(k)))).toDF("id", column)
   }
 }

@@ -25,8 +25,9 @@ import java.util.Arrays
   * structures).
   *
   * A `LabelProgram` (as `ConnectedComponents` is) that `GridLoop` runs,
-  * one job per round; a vertex whose only edge is a self-loop gets no
-  * row. A vote round:
+  * one job per round, on CC's grid of the same input (reused when CC or
+  * the triangle count ran on it first); a vertex whose only edge is a
+  * self-loop hears no vote and gets no row. A vote round:
   *  1. each source partition walks its cells one destination partition
   *     at a time: a counting sort buckets the (neighbour index, label)
   *     votes by neighbour, each bucket's labels are sorted, and the run
@@ -94,7 +95,7 @@ object LabelPropagation {
             if (best != labels(k)) { labels(k) = best; changed += 1 }
           }
         }
-        LBlock(lb.ids, labels, changed)
+        lb.copy(labels = labels, changed = changed)
       }
     }
     (next, Nil)

@@ -1,10 +1,16 @@
 package graft.graph
 
+import graft.graph.CsrPageRank.{Grid, IdxBlock}
 import graft.ingest.Edge
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Triangle counting over the undirected simple graph, DataFrame-only.
+import scala.collection.mutable
+
+/** Triangle counting over the undirected simple graph: the count on the
+  * input's undirected CSR grid (`count`, `countDf`), the listing of the
+  * triples in DataFrames (`triangles`, `perVertex`).
   *
   * Reference precedent: the co-citation / bibliographic-coupling
   * common-neighbor metrics (create_field/extract_link_features.py:189-201,
@@ -16,8 +22,9 @@ import org.apache.spark.sql.functions._
   * vertices by (degree, id) and orient every edge low→high. Then every
   * wedge is enumerated at its lowest-degree vertex, so a hub of degree d
   * contributes O(d) wedges only through its low-degree endpoints — the
-  * O(d²) hub blow-up disappears. The closing-edge check is a semi-ish
-  * inner join against the oriented edge set.
+  * O(d²) hub blow-up disappears. The listing's closing-edge check is a
+  * semi-ish inner join against the oriented edge set; the count
+  * intersects sorted successor lists instead and lists no wedge.
   */
 object TriangleCount {
 
@@ -68,43 +75,160 @@ object TriangleCount {
     wedges.join(closing, Seq("x", "y"), "left_semi")
   }
 
-  /** Total triangle count as a 1-row DataFrame (`n_triangles`: bigint)
-    * via the edge-iterator ("compact-forward") algorithm: per-vertex
-    * SORTED successor arrays under the same (deg, id) orientation, one
-    * row per oriented edge (a, b), count = Σ |N⁺(a) ∩ N⁺(b)|. Each
-    * triangle {a ≺ b ≺ c} is counted exactly once, at its lowest edge
-    * (a, b) — identical count to `triangles(...).count()` by
-    * construction.
-    *
-    * Why a second formulation (guide §1.2 step 1): the wedge plan
-    * materializes Σ_a C(outdeg⁺(a), 2) wedge rows and probes each
-    * against the closing-edge hash relation (measured at sf0.1: ~35M
-    * wedge rows, 4.4 s across 32 tasks); this plan does ONE sorted-array
-    * intersection per EDGE (1.2M rows at sf0.1) against a broadcast
-    * adjacency of |V| rows. Orientation bounds |N⁺| by O(√m), so both
-    * the arrays and the intersection cost stay bounded at any scale —
-    * the same hub-killer argument, with none of the wedge blow-up.
-    * `triangles` remains the path that LISTS the triples (perVertex).
+  /** Total triangle count as a 1-row DataFrame (`n_triangles`: bigint,
+    * not null), computed now by `count`.
     */
   def countDf(edges: Dataset[Edge]): DataFrame = {
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // LAZY checkpoint: all three consumers (edge stream, both adjacency
-    // sides) sit under the single count action, whose stages are ordered
-    // by their shuffle dependencies — the first stage to touch a
-    // partition computes and caches it, the rest read blocks. One job
-    // total instead of checkpoint-then-count (r07).
-    val o = oriented(edges).repartition(parts, col("a")).localCheckpoint(false)
-    val adj = o.groupBy(col("a")).agg(sort_array(collect_list(col("b"))).as("nbrs"))
-    val na = adj.select(col("a"), col("nbrs").as("na_nbrs"))
-    val nb = adj.select(col("a").as("b"), col("nbrs").as("nb_nbrs"))
-    // an edge whose head has no successors contributes 0 — the inner
-    // join dropping it leaves the sum unchanged
-    o.join(na, "a").join(nb, "b")
-      .select(size(array_intersect(col("na_nbrs"), col("nb_nbrs"))).cast("long").as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
+    import edges.sparkSession.implicits._
+    Seq(count(edges)).toDF("n_triangles")
   }
 
-  def count(edges: Dataset[Edge]): Long = countDf(edges).first().getLong(0)
+  /** Total triangle count over the input's undirected grid
+    * (`GridShape.Undirected`, the one CC and LPA run on, reused when either
+    * ran on `edges` first), by the edge-iterator ("compact-forward")
+    * algorithm in ONE job with two shuffles:
+    *  1. each partition computes its vertices' degrees from its cells and,
+    *     for each cell (p, q), sends q the degrees of the cell's source
+    *     vertices — the grid is symmetric, so those are exactly the
+    *     neighbours q's cell (q, p) references;
+    *  2. with rank = (degree, global key `pid << 32 | idx`), a total order
+    *     that needs no remote id, each vertex's N⁺ (its higher-ranked
+    *     neighbours) is built sorted; a partition sends its own lists to
+    *     itself, and N⁺(b) to the partition of each lower-ranked
+    *     neighbour of b, once per target partition;
+    *  3. each partition sums |N⁺(a) ∩ N⁺(b)| over its vertices a and
+    *     b ∈ N⁺(a) by sorted merge; the driver adds the partitions' longs.
+    * Each triangle {a ≺ b ≺ c} is counted once, at (a, b); orientation
+    * bounds |N⁺| by O(√m), so a hub costs no O(d²) wedge listing.
+    */
+  def count(edges: Dataset[Edge]): Long =
+    GridLoop.withGrid(edges, GridShape.Undirected)((_, grid) => grid.fold(0L)(onGrid))
+
+  /** Step 1's message: the degrees of `from`'s vertices `idx` (ascending). */
+  private final case class Degrees(from: Int, idx: Array[Int], deg: Array[Int])
+
+  /** Step 2's message: the N⁺ lists of `from`'s vertices `keys`
+    * (ascending global keys), list e being `nbrs(offsets(e) until offsets(e + 1))`.
+    */
+  private final case class Lists(from: Int, keys: Array[Long], offsets: Array[Int], nbrs: Array[Long])
+
+  private def onGrid(grid: Grid): Long = {
+    val sizes = grid.partSizes
+    val p = sizes.length
+    val part = new HashPartitioner(p) // Int keys in [0,P): partition index == pid
+    def degreesOf(cells: Seq[IdxBlock], n: Int): Array[Int] = {
+      val deg = new Array[Int](n)
+      cells.foreach(b => b.srcIdx.indices.foreach(i => deg(b.srcIdx(i)) += b.offsets(i + 1) - b.offsets(i)))
+      deg
+    }
+    // a partition's cells by destination partition, each run in source order
+    def byDest(cells: Seq[IdxBlock]): Seq[(Int, Seq[IdxBlock])] = cells.groupBy(_.dpid).toSeq
+
+    // 1. degrees to the partitions whose cells reference them
+    val degrees = grid.cells.mapPartitionsWithIndex { (s, it) =>
+      val cells = it.toVector
+      val deg = degreesOf(cells, sizes(s))
+      byDest(cells).iterator.map { case (q, bs) =>
+        val idx = bs.flatMap(_.srcIdx).toArray // each source once per destination, ascending
+        (q, Degrees(s, idx, idx.map(deg)))
+      }
+    }.partitionBy(part)
+
+    // 2. sorted N⁺ lists, to this partition and to lower-ranked neighbours' partitions
+    val lists = grid.cells.zipPartitions(degrees, preservesPartitioning = false) { (it, ds) =>
+      val s = TaskContext.getPartitionId()
+      val cells = it.toVector
+      val own = degreesOf(cells, sizes(s))
+      val remote = new Array[Degrees](p)
+      ds.foreach { case (_, d) => remote(d.from) = d }
+      def key(q: Int, i: Int): Long = (q.toLong << 32) | i
+      // (degree, key) order: does a rank below b?
+      def below(da: Int, ka: Long, db: Int, kb: Long): Boolean = da < db || (da == db && ka < kb)
+      val n = sizes(s)
+      // one visit per higher-ranked neighbour (own index, its key); returns,
+      // per other partition q, the own vertices with a lower neighbour in q
+      def walk(visit: (Int, Long) => Unit): Seq[(Int, Array[Int])] = byDest(cells).flatMap { case (q, bs) =>
+        val r = remote(q)
+        val to = new mutable.ArrayBuilder.ofInt
+        bs.foreach { b =>
+          var e = 0
+          while (e < b.srcIdx.length) {
+            val i = b.srcIdx(e)
+            var lower = false
+            var j = b.offsets(e)
+            while (j < b.offsets(e + 1)) {
+              val nj = b.nbrIdx(j)
+              val kj = key(q, nj)
+              if (below(own(i), key(s, i), r.deg(java.util.Arrays.binarySearch(r.idx, nj)), kj)) visit(i, kj)
+              else lower = true
+              j += 1
+            }
+            if (lower && q != s) to += i
+            e += 1
+          }
+        }
+        Some((q, to.result())).filter(_._2.nonEmpty)
+      }
+      // N⁺ as CSR: count, then fill and sort each list
+      val starts = new Array[Int](n + 1)
+      val sends = walk((i, _) => starts(i + 1) += 1)
+      var k = 0
+      while (k < n) { starts(k + 1) += starts(k); k += 1 }
+      val nbrs = new Array[Long](starts(n))
+      val fill = java.util.Arrays.copyOf(starts, n)
+      walk { (i, kj) => nbrs(fill(i)) = kj; fill(i) += 1 }
+      k = 0
+      while (k < n) { java.util.Arrays.sort(nbrs, starts(k), starts(k + 1)); k += 1 }
+      // the lists of `vs` (ascending) with at least one member
+      def listsOf(vs: Iterator[Int]): Lists = {
+        val ks = new mutable.ArrayBuilder.ofLong
+        val offs = new mutable.ArrayBuilder.ofInt
+        val ns = new mutable.ArrayBuilder.ofLong
+        offs += 0
+        vs.filter(i => starts(i + 1) > starts(i)).foreach { i =>
+          ks += key(s, i)
+          ns ++= nbrs.slice(starts(i), starts(i + 1))
+          offs += ns.length
+        }
+        Lists(s, ks.result(), offs.result(), ns.result())
+      }
+      (Iterator.single((s, listsOf(Iterator.range(0, n)))) ++
+        sends.iterator.map { case (q, vs) => (q, listsOf(vs.iterator)) })
+        .filter(_._2.keys.nonEmpty)
+    }.partitionBy(part)
+
+    // 3. Σ |N⁺(a) ∩ N⁺(b)| by sorted merge
+    lists.mapPartitionsWithIndex { (t, it) =>
+      val from = new Array[Lists](p)
+      it.foreach { case (_, l) => from(l.from) = l }
+      var total = 0L
+      val own = from(t)
+      if (own != null) {
+        var e = 0
+        while (e < own.keys.length) {
+          var x = own.offsets(e)
+          while (x < own.offsets(e + 1)) {
+            val b = own.nbrs(x)
+            val lb = from((b >>> 32).toInt)
+            val k = if (lb == null) -1 else java.util.Arrays.binarySearch(lb.keys, b)
+            if (k >= 0) { // else N⁺(b) is empty
+              var i = own.offsets(e)
+              var j = lb.offsets(k)
+              while (i < own.offsets(e + 1) && j < lb.offsets(k + 1)) {
+                val c = java.lang.Long.compare(own.nbrs(i), lb.nbrs(j))
+                if (c == 0) total += 1
+                if (c <= 0) i += 1
+                if (c >= 0) j += 1
+              }
+            }
+            x += 1
+          }
+          e += 1
+        }
+      }
+      Iterator.single(total)
+    }.collect().sum
+  }
 
   /** Per-vertex triangle counts (vertices in no triangle get 0). */
   def perVertex(edges: Dataset[Edge]): DataFrame = {

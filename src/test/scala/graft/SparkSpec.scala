@@ -28,6 +28,26 @@ trait SparkSpec extends AnyFunSuite {
     finally sc.removeSparkListener(counter)
   }
 
+  /** Runs `body` with the graph loops' grid dimension forced to `p`:
+    * `graft.loop.target.rows` = 1 and `spark.sql.shuffle.partitions` = p
+    * (P = min(p, the grid's rows)), both restored afterwards. */
+  def withLoopPartitions[A](p: Int)(body: => A): A = {
+    val rowsKey = "graft.loop.target.rows"
+    val partsKey = "spark.sql.shuffle.partitions"
+    val savedRows = sys.props.get(rowsKey)
+    val savedParts = spark.conf.get(partsKey)
+    sys.props(rowsKey) = "1"
+    spark.conf.set(partsKey, p.toString)
+    try body
+    finally {
+      savedRows match {
+        case Some(v) => sys.props(rowsKey) = v
+        case None    => sys.props.remove(rowsKey)
+      }
+      spark.conf.set(partsKey, savedParts)
+    }
+  }
+
   /** Runs declared query `q` over `dir` on session `s` (plan build and
     * collect) and returns its rows sorted, with the number of Spark jobs
     * it started. */

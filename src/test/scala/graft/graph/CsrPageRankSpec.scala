@@ -78,10 +78,7 @@ class CsrPageRankSpec extends SparkSpec {
   test("P = 4: two uninterrupted runs and a resume give identical rank maps") {
     val edges = Oracles.randomGraph(300, 1200, seed = 41)
     val ds = edges.toDF("src", "dst").as[Edge]
-    val key = "graft.loop.target.rows"
-    val saved = sys.props.get(key)
-    sys.props(key) = "100" // ~1200 edges -> P = min(session's 4, 12) = 4
-    try {
+    withLoopPartitions(4) {
       val first = CsrPageRank.run(ds, fixed(10))
       // the 4-partition grid loses no edge and no vertex
       assert(first.edgeCount == edges.distinct.size)
@@ -97,14 +94,18 @@ class CsrPageRankSpec extends SparkSpec {
       val resumedRun = CsrPageRank.resume(ds, partDir,
         PageRankConfig(tol = 0.0, maxIter = 10, checkpoint = Durable(partDir, 5)))
       val resumed = toMap(resumedRun)
+      // resumed cold: on another Dataset of the same edges, which builds its grid
+      val coldDir = tmpDir("graft-csr-p4-cold")
+      CsrPageRank.run(ds, PageRankConfig(tol = 0.0, maxIter = 5, checkpoint = Durable(coldDir, 5)))
+      val coldRun = CsrPageRank.resume(edges.toDF("src", "dst").as[Edge], coldDir,
+        PageRankConfig(tol = 0.0, maxIter = 10, checkpoint = Durable(coldDir, 5)))
+      assert(toMap(coldRun) == a, "the cold resumed run differs from the uninterrupted one")
+      assert(coldRun.deltas == first.deltas.drop(5), "the cold resumed run reports different deltas")
       assert(a == b, "two uninterrupted runs differ")
       assert(resumed == a, "the resumed run differs from the uninterrupted one")
       // the deltas are summed in partition order: the same doubles every run
       assert(second.deltas == first.deltas, "two uninterrupted runs report different deltas")
       assert(resumedRun.deltas == first.deltas.drop(5), "the resumed run reports different deltas")
-    } finally saved match {
-      case Some(v) => sys.props(key) = v
-      case None    => sys.props.remove(key)
     }
   }
 
@@ -141,8 +142,11 @@ class CsrPageRankSpec extends SparkSpec {
     assert(noSchema.getMessage.contains(s"superstep 5 in $dir has no outdeg column"))
   }
 
+  // The job-count guards below compare cold runs: each on its own Dataset,
+  // so each builds its grid.
+
   test("a durable commit adds at most one job per committed superstep") {
-    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    def ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
     def jobs(cfg: PageRankConfig): Int = jobsOf(CsrPageRank.run(ds, cfg))
     val iters = 6
     val local = jobs(fixed(iters))
@@ -152,7 +156,7 @@ class CsrPageRankSpec extends SparkSpec {
   }
 
   test("fused commits: Durable(every = 1) runs exactly the LocalOnly jobs") {
-    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    def ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
     val iters = 6
     val dir = tmpDir("graft-csr-fused")
     val local = jobsOf(CsrPageRank.run(ds, fixed(iters)))
@@ -163,7 +167,7 @@ class CsrPageRankSpec extends SparkSpec {
   }
 
   test("fused commits: converging off the commit schedule adds at most one job") {
-    val ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
+    def ds = Oracles.randomGraph(200, 900, seed = 7).toDF("src", "dst").as[Edge]
     val cfg = PageRankConfig(tol = 1e-6)
     var iters = 0
     val local = jobsOf { iters = CsrPageRank.run(ds, cfg).iterations }

@@ -106,7 +106,8 @@ class GraphAlgorithmsSpec extends SparkSpec {
     // the star's hub and spokes swap labels every round, so no round is
     // the last one
     val star = (1001L to 1050L).map(i => (1000L, i))
-    val edges = ds(Oracles.randomGraph(200, 900, seed = 7) ++ star)
+    // both runs cold: each on its own Dataset, so each builds its grid
+    def edges = ds(Oracles.randomGraph(200, 900, seed = 7) ++ star)
     val iters = 6
     var local: LabelPropagation.LpaResult = null
     val localJobs = jobsOf { local = LabelPropagation.run(edges, maxIter = iters) }
@@ -128,7 +129,7 @@ class GraphAlgorithmsSpec extends SparkSpec {
   }
 
   test("CC: Durable(every = 1) runs exactly the LocalOnly jobs, one per round") {
-    val edges = ds((0L until 200L).map(i => (i, i + 1)))
+    def edges = ds((0L until 200L).map(i => (i, i + 1))) // both runs cold, as above
     var local: ConnectedComponents.CcResult = null
     val localJobs = jobsOf { local = ConnectedComponents.run(edges) }
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-jobs").toString
@@ -146,9 +147,8 @@ class GraphAlgorithmsSpec extends SparkSpec {
   private val prepareJobs = 4
 
   /** `check(shape, edges)` for every graph shape at loop partition counts
-    * P = 1, 3 and 8, forced through `graft.loop.target.rows` = 1 and
-    * `spark.sql.shuffle.partitions` = P (8 is more than the session's 4);
-    * `shape` names the shape and P.
+    * P = 1, 3 and 8, forced with `withLoopPartitions` (8 is more than the
+    * session's 4); `shape` names the shape and P.
     */
   private def forEveryShapeAndP(check: (String, Seq[(Long, Long)]) => Unit): Unit = {
     val c1 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
@@ -164,27 +164,20 @@ class GraphAlgorithmsSpec extends SparkSpec {
       "two 4-cliques + bridge" -> (c1 ++ c2 :+ ((3L, 10L))),
       "sparse forest" -> forest,
       "random, seed 5" -> Oracles.randomGraph(150, 500, seed = 5),
-      "random, seed 37" -> Oracles.randomGraph(120, 400, seed = 37))
-    val rowsKey = "graft.loop.target.rows"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val savedRows = sys.props.get(rowsKey)
-    val savedParts = spark.conf.get(partsKey)
-    try {
-      sys.props(rowsKey) = "1" // P = min(shuffle partitions, edge rows)
-      for (p <- Seq(1, 3, 8); (shape, edges) <- shapes) {
-        spark.conf.set(partsKey, p.toString)
-        check(s"$shape at P = $p", edges)
-      }
-    } finally {
-      savedRows match {
-        case Some(v) => sys.props(rowsKey) = v
-        case None    => sys.props.remove(rowsKey)
-      }
-      spark.conf.set(partsKey, savedParts)
-    }
+      "random, seed 37" -> Oracles.randomGraph(120, 400, seed = 37),
+      "duplicates in both directions" ->
+        Oracles.randomGraph(60, 200, seed = 9).flatMap { case (a, b) => Seq((a, b), (b, a), (a, b)) })
+    for (p <- Seq(1, 3, 8); (shape, edges) <- shapes)
+      withLoopPartitions(p)(check(s"$shape at P = $p", edges))
   }
 
   // --- Triangle counting ----------------------------------------------
+
+  test("triangles match the brute-force oracle on every shape at P = 1, 3 and 8") {
+    forEveryShapeAndP { (shape, edges) =>
+      assert(TriangleCount.count(ds(edges)) == Oracles.triangles(edges), shape)
+    }
+  }
 
   test("triangles: two 4-cliques + bridge = 8") {
     val c1 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)

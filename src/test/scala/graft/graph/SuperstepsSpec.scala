@@ -53,6 +53,7 @@ class SuperstepsSpec extends SparkSpec {
   }
 
   test("every loop leaves only its result persisted") {
+    // besides its input's grids, which later loops on the same input reuse
     val ds = Oracles.randomGraph(150, 600, seed = 23).toDF("src", "dst").as[Edge]
     def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // the RDDs a result scans: its local checkpoint (none on a converged resume)
@@ -73,8 +74,17 @@ class SuperstepsSpec extends SparkSpec {
     for ((name, loop) <- loops) {
       val before = persisted
       val result = loop()
-      assert(persisted -- before == scanned(result), name)
+      assert(persisted -- before -- GridLoop.keptRdds == scanned(result), name)
+      assert(GridLoop.keptRdds.subsetOf(persisted) && GridLoop.keptRdds.size <= 4,
+        s"$name: one directed and one undirected grid, each vertex blocks and cells")
     }
+    // a loop on another input releases them
+    val grids = GridLoop.keptRdds
+    val other = Oracles.randomGraph(50, 100, seed = 3).toDF("src", "dst").as[Edge]
+    val before = persisted
+    val result = ConnectedComponents.run(other).components
+    assert((persisted & grids).isEmpty, "the first input's grids are still persisted")
+    assert(persisted -- before -- GridLoop.keptRdds == scanned(result))
   }
 
   test("each loop's resume rejects another loop's run dir before any job runs, naming its column") {
