@@ -54,6 +54,9 @@ import scala.collection.mutable
   *     a single streaming pass zipped with state emits IdxBlocks (src
   *     index resolved once per group head by binary search).
   *
+  * One job runs the three passes and collects each partition's vertex,
+  * out-degree-0 and edge counts, so the rounds find the grid built.
+  *
   * The iteration hot loop is hash-free and allocation-light:
   *
   *  1. zipPartitions(blocks, state): for each destination partition's
@@ -150,13 +153,11 @@ object CsrPageRank {
     df.repartition(p, element_at(lit(partitionTokens(p)), pmod(id, lit(p.toLong)).cast("int") + lit(1)))
 
   /** One edge set on the grid: the persisted vertex blocks and cells, the
-    * vertex count, how many vertices have no out-edge and each partition's
-    * vertex count. The cells are built by the first job that reads them;
-    * `edges`, their edge count, by one fold the first time it is asked.
+    * vertex count, how many vertices have no out-edge, each partition's
+    * vertex count and the cells' edge count.
     */
   private[graph] final case class Grid(vertices: RDD[VBlock], cells: RDD[IdxBlock], n: Long,
-                                       danglingCount: Long, partSizes: Array[Int]) {
-    lazy val edges: Long = cells.map(_.nbrIdx.length.toLong).fold(0L)(_ + _)
+                                       danglingCount: Long, partSizes: Array[Int], edges: Long) {
     def unpersist(): Unit = { cells.unpersist(false); vertices.unpersist(false) }
   }
 
@@ -184,8 +185,8 @@ object CsrPageRank {
     * `edf`, on the loop session `spark` at grid dimension `p`. The vertex
     * blocks come from `vertexTable`'s (id, outdeg, rank) rows, or from the
     * out-degree aggregation of `edf` with rank 0. With `dedupe`, a
-    * repeated (src, dst) row becomes one edge. None, after one job, when
-    * there is no vertex.
+    * repeated (src, dst) row becomes one edge. ONE job builds the vertex
+    * blocks and the cells and counts them; None when there is no vertex.
     */
   private[graph] def prepareGrid(spark: SparkSession, edf: DataFrame, p: Int,
                                  vertexTable: Option[DataFrame] = None,
@@ -223,16 +224,8 @@ object CsrPageRank {
           java.util.Arrays.copyOf(rks, n)))
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // one job: per-partition vertex counts — tiny (P ints), captured by
-    // closures — and out-degree-0 counts
-    val partSizes = new Array[Int](p)
-    var danglingCount = 0L
-    state.map(b => (b.pid, b.ids.length, b.outdeg.count(_ == 0))).collect().foreach { case (q, s, d) =>
-      partSizes(q) = s
-      danglingCount += d
-    }
-    val n = partSizes.map(_.toLong).sum
-    if (n == 0) {
+    // a vertex table that the optimizer knows to be empty has no partition
+    if (state.getNumPartitions != p) {
       state.unpersist(false)
       return None
     }
@@ -293,7 +286,25 @@ object CsrPageRank {
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Some(Grid(state, cells, n, danglingCount, partSizes))
+
+    // the one job: per-partition vertex counts — tiny (P ints), captured
+    // by the rounds' closures — out-degree-0 counts and edge counts
+    val partSizes = new Array[Int](p)
+    var danglingCount = 0L
+    var edges = 0L
+    cells.zipPartitions(state, preservesPartitioning = false) { (cs, vs) =>
+      val m = cs.map(_.nbrIdx.length.toLong).sum // builds (and persists) every cell
+      vs.map(b => (b.pid, b.ids.length, b.outdeg.count(_ == 0), m))
+    }.collect().foreach { case (q, s, d, m) =>
+      partSizes(q) = s
+      danglingCount += d
+      edges += m
+    }
+    if (partSizes.forall(_ == 0)) {
+      cells.unpersist(false)
+      state.unpersist(false)
+      None
+    } else Some(Grid(state, cells, partSizes.map(_.toLong).sum, danglingCount, partSizes, edges))
   }
 
   def run(edges: Dataset[Edge], cfg: PageRankConfig = PageRankConfig()): PageRankResult =
@@ -328,7 +339,8 @@ object CsrPageRank {
 
   /** PageRank as a grid program (the round in the object doc). The
     * snapshot is (id, rank, outdeg); its `_METRICS` keys are `l1_delta`,
-    * `n_vertices`, `n_edges`, `dangling_mass` and `converged`.
+    * `dangling_mass` and `converged`, besides the grid's `n_vertices` and
+    * `n_edges` that `GridLoop` records.
     */
   private final case class Program(alpha: Double, tol: Double)
       extends GridProgram[VBlock, (Double, Double), Step] {
@@ -341,19 +353,9 @@ object CsrPageRank {
     val emptyRound = false
     val empty: Step = Step(Vector.empty, 0.0, 0L, 0L)
 
-    // the out-degrees are the grid's: the edges must be the run's
-    override def mismatch(grid: Option[Grid], recorded: StepMetrics): Option[String] = {
-      val got = grid.fold((0L, 0L))(g => (g.n, g.edges))
-      val want = (recorded.metrics("n_vertices").toLong, recorded.metrics("n_edges").toLong)
-      if (got == want) None
-      else Some(s"superstep ${recorded.step} recorded ${want._1} vertices and ${want._2} edges, " +
-        s"the edges give ${got._1} vertices and ${got._2} edges")
-    }
-
     def start(grid: Grid, from: Option[(DataFrame, StepMetrics)]): (RDD[VBlock], Step) = from match {
       case None =>
-        // uniform ranks make the dangling mass a closed form; the edge
-        // count builds the cells on a new grid (the loop times rounds only)
+        // uniform ranks make the dangling mass a closed form
         val r0 = 1.0 / grid.n
         (grid.vertices.map(b => b.copy(ranks = Array.fill(b.ids.length)(r0))),
           Step(Vector.empty, grid.danglingCount.toDouble / grid.n, grid.n, grid.edges))
@@ -460,8 +462,8 @@ object CsrPageRank {
       last.copy(deltas = last.deltas :+ parts.map(_._1).sum, dangling = parts.map(_._2).sum)
 
     def metrics(step: Int, s: Step): Map[String, Double] =
-      Map("l1_delta" -> s.deltas.last, "n_vertices" -> s.n.toDouble, "n_edges" -> s.m.toDouble,
-        "dangling_mass" -> s.dangling, "converged" -> (if (s.deltas.last < tol) 1.0 else 0.0))
+      Map("l1_delta" -> s.deltas.last, "dangling_mass" -> s.dangling,
+        "converged" -> (if (s.deltas.last < tol) 1.0 else 0.0))
 
     def recorded(m: StepMetrics): Step =
       Step(Vector(m.metrics("l1_delta")), m.metrics("dangling_mass"), m.metrics("n_vertices").toLong,

@@ -71,11 +71,6 @@ private[graph] trait GridProgram[B, P, A] extends Serializable {
   val emptyRound: Boolean
   val empty: A
 
-  /** On resume, how the grid (None: no vertex) differs from the one the
-    * committed step ran on, as far as its `StepMetrics` tell (None: no
-    * difference seen).
-    */
-  def mismatch(grid: Option[Grid], recorded: StepMetrics): Option[String] = None
   /** The first round's (lazy) input blocks and aggregate: fresh, or from
     * the committed snapshot and its `StepMetrics`. Never the grid's own
     * blocks: the loop releases its state, and the grid outlives the run.
@@ -232,9 +227,14 @@ private[graph] object GridLoop {
     val callerSpark = edges.sparkSession
     val prepT0 = System.nanoTime()
     withGrid(edges, program.shape) { (spark, prepared) =>
-      from.foreach { case (runDir, _, recorded) =>
-        program.mismatch(prepared, recorded).foreach { why =>
-          throw new IllegalStateException(s"the edges do not match the run in $runDir: $why")
+      // the edges must give the grid the committed step ran on (a run dir
+      // that recorded no counts is not checked)
+      for ((runDir, _, recorded) <- from if counted.forall(recorded.metrics.contains)) {
+        val got = counts(prepared)
+        if (counted.exists(k => got(k) != recorded.metrics(k))) {
+          def told(m: Map[String, Double]) = s"${m("n_vertices").toLong} vertices and ${m("n_edges").toLong} edges"
+          throw new IllegalStateException(s"the edges do not match the run in $runDir: superstep " +
+            s"${recorded.step} recorded ${told(recorded.metrics)}, the edges give ${told(got)}")
         }
       }
       val step0 = from.fold(0)(_._3.step)
@@ -244,7 +244,7 @@ private[graph] object GridLoop {
           val ran = program.emptyRound && step0 < maxIter
           val step = if (ran) step0 + 1 else step0
           if (ran) Supersteps.commitStep(spark, checkpoint, step, converged = true, None, program.schema,
-            program.metrics(step, program.empty))(_ => Nil)
+            program.metrics(step, program.empty) ++ counts(None))(_ => Nil)
           val none = spark.createDataFrame(java.util.Collections.emptyList[Row](), program.schema)
             .select(valueColumns(program): _*)
           Outcome(IterationConf.rebind(none, callerSpark), step, ran || !program.emptyRound, program.empty)
@@ -274,7 +274,7 @@ private[graph] object GridLoop {
             val metrics = program.metrics(step, agg)
             converged = metrics("converged") == 1.0
             Supersteps.commitStep(spark, checkpoint, step, converged, due.map(_ => written),
-              program.schema, metrics)(dir => stepJob(state, Some(dir))._2)
+              program.schema, metrics ++ counts(Some(grid)))(dir => stepJob(state, Some(dir))._2)
           }
           val values = program.values(spark, state).localCheckpoint(true)
           state.unpersist(false)
@@ -289,9 +289,10 @@ private[graph] object GridLoop {
     * is a step's complete state, and a converged one is the result. It
     * runs on the input's grid, the one its other runs use. A snapshot
     * without the program's `column` is rejected before any job runs when
-    * its commit recorded the schema, else once read back; edges that do
-    * not match the commit (`GridProgram.mismatch`) are rejected before
-    * any round.
+    * its commit recorded the schema, else once read back. Edges whose
+    * grid does not have the commit's `n_vertices` and `n_edges` are
+    * rejected with an IllegalStateException naming `runDir` before any
+    * round (on a kept grid, before any job).
     */
   def resume[B, P: ClassTag, A](edges: Dataset[Edge], program: GridProgram[B, P, A], runDir: String,
                                 maxIter: Int, checkpoint: Durable): Outcome[A] = {
@@ -313,6 +314,15 @@ private[graph] object GridLoop {
           Outcome(snap.select(valueColumns(program): _*), step, converged = true, program.recorded(recorded))
         else run(edges, program, maxIter, checkpoint, Some((runDir, snap, recorded)))
     }
+  }
+
+  /** The `_METRICS` keys of the grid's size, which every commit records. */
+  private val counted = Seq("n_vertices", "n_edges")
+
+  /** The grid's vertex and edge counts (0 and 0: no vertex). */
+  private def counts(grid: Option[Grid]): Map[String, Double] = {
+    val (n, m) = grid.fold((0L, 0L))(g => (g.n, g.edges))
+    Map("n_vertices" -> n.toDouble, "n_edges" -> m.toDouble)
   }
 
   /** The (id, value) columns of a program's snapshot. */

@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.graph.CsrPageRank.{Grid, IdxBlock}
 import graft.ingest.Edge
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.{HashPartitioner, Partitioner, TaskContext}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -100,6 +100,14 @@ object TriangleCount {
     *     b ∈ N⁺(a) by sorted merge; the driver adds the partitions' longs.
     * Each triangle {a ≺ b ≺ c} is counted once, at (a, b); orientation
     * bounds |N⁺| by O(√m), so a hub costs no O(d²) wedge listing.
+    *
+    * Task memory: steps 1 and 2 hold one partition's cells (persisted
+    * blocks) with one int per cell entry, as the rounds of `GridLoop` do.
+    * Step 3's shuffle sorts what a partition receives by source partition,
+    * its own lists first, in Spark's external sort (it spills under memory
+    * pressure); the merge then holds the partition's own N⁺ lists, two
+    * ints per entry of them, and one other source partition's lists at a
+    * time — never every list sent to it.
     */
   def count(edges: Dataset[Edge]): Long =
     GridLoop.withGrid(edges, GridShape.Undirected)((_, grid) => grid.fold(0L)(onGrid))
@@ -192,39 +200,57 @@ object TriangleCount {
         }
         Lists(s, ks.result(), offs.result(), ns.result())
       }
-      (Iterator.single((s, listsOf(Iterator.range(0, n)))) ++
-        sends.iterator.map { case (q, vs) => (q, listsOf(vs.iterator)) })
+      // keyed (target, source), the own lists sorting first
+      (Iterator.single(((s, -1), listsOf(Iterator.range(0, n)))) ++
+        sends.iterator.map { case (q, vs) => ((q, s), listsOf(vs.iterator)) })
         .filter(_._2.keys.nonEmpty)
-    }.partitionBy(part)
+    }
 
-    // 3. Σ |N⁺(a) ∩ N⁺(b)| by sorted merge
-    lists.mapPartitionsWithIndex { (t, it) =>
-      val from = new Array[Lists](p)
-      it.foreach { case (_, l) => from(l.from) = l }
+    // 3. Σ |N⁺(a) ∩ N⁺(b)| by sorted merge: the shuffle sorts a partition's
+    // lists by source, its own first, so a task holds its own lists and one
+    // other source partition's at a time
+    lists.repartitionAndSortWithinPartitions(new Partitioner {
+      def numPartitions: Int = p
+      def getPartition(key: Any): Int = key.asInstanceOf[(Int, Int)]._1
+    }).mapPartitionsWithIndex { (t, it) =>
+      val in = it.map(_._2).buffered
       var total = 0L
-      val own = from(t)
-      if (own != null) {
+      // a partition with no list of its own has no a, and is sent none
+      if (in.hasNext && in.head.from == t) {
+        val own = in.next()
+        val m = own.nbrs.length
+        // own's entries b by b's partition (a counting sort), with the list holding each
+        val owner = new Array[Int](m)
         var e = 0
-        while (e < own.keys.length) {
-          var x = own.offsets(e)
-          while (x < own.offsets(e + 1)) {
-            val b = own.nbrs(x)
-            val lb = from((b >>> 32).toInt)
-            val k = if (lb == null) -1 else java.util.Arrays.binarySearch(lb.keys, b)
+        while (e < own.keys.length) { java.util.Arrays.fill(owner, own.offsets(e), own.offsets(e + 1), e); e += 1 }
+        val starts = new Array[Int](p + 1)
+        own.nbrs.foreach(b => starts((b >>> 32).toInt + 1) += 1)
+        var q = 0
+        while (q < p) { starts(q + 1) += starts(q); q += 1 }
+        val order = new Array[Int](m)
+        val fill = java.util.Arrays.copyOf(starts, p)
+        var x = 0
+        while (x < m) { val bq = (own.nbrs(x) >>> 32).toInt; order(fill(bq)) = x; fill(bq) += 1; x += 1 }
+        def mergeWith(lb: Lists): Unit = {
+          var y = starts(lb.from)
+          while (y < starts(lb.from + 1)) {
+            val a = owner(order(y))
+            val k = java.util.Arrays.binarySearch(lb.keys, own.nbrs(order(y)))
             if (k >= 0) { // else N⁺(b) is empty
-              var i = own.offsets(e)
+              var i = own.offsets(a)
               var j = lb.offsets(k)
-              while (i < own.offsets(e + 1) && j < lb.offsets(k + 1)) {
+              while (i < own.offsets(a + 1) && j < lb.offsets(k + 1)) {
                 val c = java.lang.Long.compare(own.nbrs(i), lb.nbrs(j))
                 if (c == 0) total += 1
                 if (c <= 0) i += 1
                 if (c >= 0) j += 1
               }
             }
-            x += 1
+            y += 1
           }
-          e += 1
         }
+        mergeWith(own)
+        in.foreach(mergeWith)
       }
       Iterator.single(total)
     }.collect().sum

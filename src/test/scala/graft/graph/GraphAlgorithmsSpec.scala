@@ -140,9 +140,8 @@ class GraphAlgorithmsSpec extends SparkSpec {
   }
 
   /** The jobs a label loop runs besides its rounds: the input count that
-    * sizes P (two jobs under the caller's AQE), the vertex blocks with
-    * their per-partition counts, and the result's checkpoint (the first
-    * round builds the grid's cells).
+    * sizes P (two jobs under the caller's AQE), the grid's one job (vertex
+    * blocks, cells and their counts), and the result's checkpoint.
     */
   private val prepareJobs = 4
 

@@ -116,6 +116,31 @@ class GridReuseSpec extends SparkSpec {
     assert(CsrPageRank.resume(ds(edges), dir, cfg).iterations == 8)
   }
 
+  test("CC and LPA resume on changed edges fails before any round, naming the run dir") {
+    val chain = (0L until 40L).map(i => (i, i + 1))
+    val changed = Seq(
+      "a removed edge" -> chain.filterNot(_ == ((20L, 21L))),
+      "an added edge to a new vertex" -> (chain :+ ((40L, 41L))))
+    val labelRuns = Seq[(String, (Dataset[Edge], String, Int) => Map[Long, Long])](
+      "CC" -> ((d, dir, k) => pairs(ConnectedComponents.resume(d, dir, maxRounds = k).components)),
+      "LPA" -> ((d, dir, k) => pairs(LabelPropagation.resume(d, dir, maxIter = k).labels)))
+    for ((algo, resume) <- labelRuns) {
+      val dir = Files.createTempDirectory(s"graft-${algo.toLowerCase}-changed").toString
+      val stopped = if (algo == "CC") ConnectedComponents.run(ds(chain), maxRounds = 2,
+        checkpoint = Durable(dir, 1)).rounds
+      else LabelPropagation.run(ds(chain), maxIter = 2, checkpoint = Durable(dir, 1)).iterations
+      assert(stopped == 2)
+      for ((name, e) <- changed) {
+        val err = intercept[IllegalStateException](resume(ds(e), dir, 50))
+        assert(err.getMessage.contains(s"the edges do not match the run in $dir"), s"$algo, $name: ${err.getMessage}")
+        assert(Supersteps.lastCommitted(spark, dir).contains(2), s"$algo, $name: a round ran")
+      }
+      // the unchanged edges still resume
+      val want = if (algo == "CC") Oracles.connectedComponents(chain) else Oracles.labelPropagation(chain, 50)._1
+      assert(resume(ds(chain), dir, 50) == want, algo)
+    }
+  }
+
   test("a run on a second Dataset releases the first Dataset's grids") {
     val first = ds(Oracles.randomGraph(150, 600, seed = 23))
     PageRank.run(first, fixed(2))
