@@ -252,9 +252,8 @@ object SparkEntry {
     "q_triangle_count" -> ((s, d) => {
       import s.implicits._
       val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
-      // edge-iterator count: identical value to triangles(e).count() (the
-      // r07 optimization round swapped the wedge-materializing plan for
-      // the per-edge sorted-intersection one; see TriangleCount.countDf)
+      // counted on the part graph's undirected CSR grid by sorted
+      // successor-list intersection, listing no wedge (TriangleCount.count)
       TriangleCount.countDf(e)
     }),
     // --- connected components (exact SQL oracle via recursive closure) --------------------------

@@ -1,8 +1,7 @@
 package graft.graph
 
-import graft.graph.CsrPageRank.{Grid, IdxBlock}
 import graft.ingest.Edge
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
@@ -11,7 +10,7 @@ import java.util.Arrays
 import scala.collection.mutable
 
 /** Connected components by min-label hooking with one pointer jump per
-  * round, on the CSR grid that `CsrPageRank` loops on — Pregel's model
+  * round, on the CSR grid (`Grid`) — Pregel's model
   * (Malewicz et al., SIGMOD 2010) with Shiloach–Vishkin-style
   * shortcutting (FastSV, Zhang, Azad and Hu, SC 2020).
   *
@@ -25,9 +24,8 @@ import scala.collection.mutable
   * triangle count on the same input reuse. A vertex whose only edge is a
   * self-loop is its own component. A round:
   *  1. hook: each source partition sends, per destination partition, one
-  *     bundle of (dense index, min neighbour label) — min-combined at the
-  *     source, so a hub receives at most P bundles — and every vertex
-  *     takes m(v) = min(label(v), received);
+  *     bundle of (dense index, min neighbour label) (`CellWalk.mins`), and
+  *     every vertex takes m(v) = min(label(v), received);
   *  2. shortcut: label(v) = m(m(v)). A vertex whose m(v) is not its own
   *     id asks vertex m(v)'s partition (m(v) mod P) for m(m(v)); each
   *     partition asks each other partition once per id (a component root
@@ -43,11 +41,6 @@ import scala.collection.mutable
 object ConnectedComponents {
 
   final case class CcResult(components: DataFrame, rounds: Int) // (id, component)
-
-  /** Hook messages for one destination partition: (dense index, min
-    * label) pairs in index order.
-    */
-  private final case class Mins(idx: Array[Int], labels: Array[Long])
 
   /** Run to fixpoint. Returns (id, component) for every vertex that
     * appears in the edge set; `component` is the min vertex id of the
@@ -74,22 +67,27 @@ object ConnectedComponents {
   /** One hook + shortcut round (steps 1-2 above): four stages, one job. */
   private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {
     val p = grid.partSizes.length
-    val part = new HashPartitioner(p) // Int keys in [0,P): partition index == pid
     def pidOf(id: Long): Int = java.lang.Math.floorMod(id, p.toLong).toInt
 
     // 1. hook: m(v) = min(label(v), the neighbours' labels)
+    val mins = CellWalk.mins(grid, state) { (lb, b, acc) =>
+      var i = 0
+      while (i < b.srcIdx.length) {
+        val l = lb.labels(b.srcIdx(i))
+        var j = b.offsets(i)
+        while (j < b.offsets(i + 1)) {
+          val t = b.nbrIdx(j)
+          if (l < acc(t)) acc(t) = l
+          j += 1
+        }
+        i += 1
+      }
+    }
     val hooked = state
-      .zipPartitions(mins(grid.cells, state, grid.partSizes).partitionBy(part),
-        preservesPartitioning = true) { (ls, ms) =>
+      .zipPartitions(mins, preservesPartitioning = true) { (ls, ms) =>
         ls.map { lb =>
           val m = lb.labels.clone()
-          ms.foreach { case (_, b) =>
-            var i = 0
-            while (i < b.idx.length) {
-              if (b.labels(i) < m(b.idx(i))) m(b.idx(i)) = b.labels(i)
-              i += 1
-            }
-          }
+          ms.foreach(_._2.minInto(m))
           lb.copy(labels = m, changed = 0)
         }
       }
@@ -97,7 +95,7 @@ object ConnectedComponents {
 
     // 2. shortcut: every partition asks for m(u) of each distinct u = m(v)
     // that is not v itself, one sorted request per partition asked ...
-    val requests = hooked.mapPartitionsWithIndex { (q, hs) =>
+    val requests = CellWalk.exchange(hooked.mapPartitionsWithIndex { (q, hs) =>
       hs.flatMap { h =>
         val want = new Array[Long](h.ids.length)
         var n = 0
@@ -115,16 +113,16 @@ object ConnectedComponents {
         }
         asks.iterator.zipWithIndex.collect { case (a, t) if a.length > 0 => (t, (q, a.result())) }
       }
-    }.partitionBy(part)
+    }, p)
     // ... the asked partition answers with its hooked labels ...
-    val answers = hooked.zipPartitions(requests, preservesPartitioning = false) { (hs, rs) =>
+    val answers = CellWalk.exchange(hooked.zipPartitions(requests, preservesPartitioning = false) { (hs, rs) =>
       if (!hs.hasNext) Iterator.empty
       else {
         val h = hs.next()
         val t = TaskContext.getPartitionId()
         rs.map { case (_, (q, ids)) => (q, (t, ids, ids.map(u => h.labels(Arrays.binarySearch(h.ids, u))))) }
       }
-    }.partitionBy(part)
+    }, p)
     // ... and every vertex takes m(m(v))
     val next = state.zipPartitions(hooked, answers, preservesPartitioning = true) { (ls, hs, as) =>
       ls.zip(hs).map { case (lb, h) =>
@@ -145,55 +143,5 @@ object ConnectedComponents {
       }
     }
     (next, Seq(hooked))
-  }
-
-  /** Step 1's messages: every source partition's neighbour labels, one
-    * bundle per destination partition its cells reach, min-combined in a
-    * reused array sized to the largest partition (cells arrive sorted by
-    * dpid, so one bundle is in flight at a time).
-    */
-  private def mins(cells: RDD[IdxBlock], state: RDD[LBlock], sizes: Array[Int]): RDD[(Int, Mins)] = {
-    val maxSz = sizes.max
-    cells.zipPartitions(state, preservesPartitioning = false) { (bs, ls) =>
-      if (!ls.hasNext) Iterator.empty
-      else {
-        val own = ls.next().labels
-        val acc = Array.fill(maxSz)(Long.MaxValue) // MaxValue: no message (and none is smaller)
-        val in = bs.buffered
-        new Iterator[(Int, Mins)] {
-          def hasNext: Boolean = in.hasNext
-          def next(): (Int, Mins) = {
-            val dp = in.head.dpid
-            while (in.hasNext && in.head.dpid == dp) {
-              val b = in.next()
-              var i = 0
-              while (i < b.srcIdx.length) {
-                val l = own(b.srcIdx(i))
-                var j = b.offsets(i)
-                while (j < b.offsets(i + 1)) {
-                  val t = b.nbrIdx(j)
-                  if (l < acc(t)) acc(t) = l
-                  j += 1
-                }
-                i += 1
-              }
-            }
-            val nq = sizes(dp)
-            var nz = 0
-            var k = 0
-            while (k < nq) { if (acc(k) != Long.MaxValue) nz += 1; k += 1 }
-            val idx = new Array[Int](nz)
-            val labels = new Array[Long](nz)
-            var w = 0
-            k = 0
-            while (k < nq) {
-              if (acc(k) != Long.MaxValue) { idx(w) = k; labels(w) = acc(k); w += 1; acc(k) = Long.MaxValue }
-              k += 1
-            }
-            (dp, Mins(idx, labels))
-          }
-        }
-      }
-    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.core.IterationConf
-import graft.graph.CsrPageRank.Grid
 import graft.ingest.Edge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
@@ -14,20 +13,26 @@ import java.lang.ref.{Cleaner, WeakReference}
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-/** How an input's edges become a grid (`CsrPageRank.prepareGrid`): its
-  * (src, dst) rows and vertex table (None: the rows' endpoints and
-  * out-degrees), the grid rows per input edge (they size P), and whether
-  * repeated rows are one edge. Each input gets at most one grid per shape.
+/** How an input's edges become a grid (`Grid.prepare`): its (src, dst)
+  * rows and (id, outdeg) vertex table, the grid rows per input edge (they
+  * size P), and whether repeated rows are one edge. Each input gets at
+  * most one grid per shape.
   */
 private[graph] sealed abstract class GridShape(val rowsPerEdge: Int, val dedupe: Boolean) {
-  def inputs(edges: DataFrame): (DataFrame, Option[DataFrame])
+  def inputs(edges: DataFrame): (DataFrame, DataFrame)
 }
 
 private[graph] object GridShape {
 
+  /** Every endpoint of `edges`, its out-degree the sum of `fromSrc` (`fromDst`) over its rows as src (dst). */
+  private def vertices(edges: DataFrame, fromSrc: Column, fromDst: Column): DataFrame =
+    edges.select(col("src").as("id"), fromSrc.as("c"))
+      .unionAll(edges.select(col("dst").as("id"), fromDst.as("c")))
+      .groupBy(col("id")).agg(sum(col("c")).cast("int").as("outdeg"))
+
   /** PageRank's grid: the edges as they are, each vertex with its out-degree. */
   case object Directed extends GridShape(rowsPerEdge = 1, dedupe = false) {
-    def inputs(edges: DataFrame): (DataFrame, Option[DataFrame]) = (edges, None)
+    def inputs(edges: DataFrame): (DataFrame, DataFrame) = (edges, vertices(edges, lit(1), lit(0)))
   }
 
   /** The grid of connected components, label propagation and the triangle
@@ -37,16 +42,11 @@ private[graph] object GridShape {
     * self-loops.
     */
   case object Undirected extends GridShape(rowsPerEdge = 2, dedupe = true) {
-    def inputs(all: DataFrame): (DataFrame, Option[DataFrame]) = {
+    def inputs(all: DataFrame): (DataFrame, DataFrame) = {
       val e = all.filter(col("src") =!= col("dst"))
       val link = (col("src") =!= col("dst")).cast("int")
-      // (ranks are PageRank's, unused here)
-      val vertices = all.select(col("src").as("id"), link.as("c"))
-        .unionAll(all.select(col("dst").as("id"), link.as("c")))
-        .groupBy(col("id")).agg(sum(col("c")).cast("int").as("outdeg"))
-        .withColumn("rank", lit(0.0))
       (e.select(col("src"), col("dst")).unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-        Some(vertices))
+        vertices(all, link, link))
     }
   }
 }
@@ -109,12 +109,11 @@ private[graph] trait GridProgram[B, P, A] extends Serializable {
   * table and runs every analysis over it, and so does a pass over one
   * `Dataset[Edge]` here (PageRank, its durable run and resume on the
   * directed grid; CC, LPA and `TriangleCount` on the undirected one). A
-  * grid is built (`CsrPageRank.prepareGrid`) on an isolated cloned
-  * session (`IterationConf.withLoopSession`) at the dimension P sized
-  * from the input's row count, and kept for the input — the `Dataset`
-  * object itself, compared by identity — when its plan is deterministic.
-  * A later run on the same object at the same P runs no prepare job: no
-  * sizing count, no vertex blocks, no cells, no edge count. Only the most
+  * grid is built (`Grid.prepare`) on an isolated cloned session
+  * (`IterationConf.withLoopSession`) at the dimension P sized from the
+  * input's row count, and kept for the input — the `Dataset` object
+  * itself, compared by identity — when its plan is deterministic. A later
+  * run on the same object at the same P runs no prepare job. Only the most
   * recent input's grids are kept: a run on another input releases them
   * first, and so does a `Cleaner` once the input is unreachable (nothing
   * here holds it strongly). A grid that a running loop reads is released
@@ -170,7 +169,7 @@ private[graph] object GridLoop {
       val p = sized(rows)
       val k = IterationConf.withLoopSession(callerSpark, p) { spark =>
         val (gridRows, vertexTable) = shape.inputs(IterationConf.rebind(edges.toDF(), spark))
-        new Prepared(spark, p, CsrPageRank.prepareGrid(spark, gridRows, p, vertexTable, shape.dedupe))
+        new Prepared(spark, p, Grid.prepare(spark, gridRows, vertexTable, p, shape.dedupe))
       }
       synchronized {
         k.users = 1

@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.graph.CsrPageRank.Grid
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -44,7 +43,7 @@ private[graph] final class LabelProgram(val column: String, stepKey: String, sel
     // labels are never written in place; every fresh label is new
     case None => (grid.vertices.map(b => LBlock(b.ids, b.outdeg, b.ids, 0)), grid.n)
     case Some((snap, m)) =>
-      (CsrPageRank.withSnapshot(grid, snap, column, Encoders.scalaLong)(_.ids.clone())
+      (Grid.withSnapshot(grid, snap, column, Encoders.scalaLong)(_.ids.clone())
         .map { case (vb, labels) => LBlock(vb.ids, vb.outdeg, labels, 0) }, recorded(m))
   }
 

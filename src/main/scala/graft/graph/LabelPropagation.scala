@@ -1,15 +1,13 @@
 package graft.graph
 
-import graft.graph.CsrPageRank.{Grid, IdxBlock}
 import graft.ingest.Edge
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import java.util.Arrays
 
 /** Synchronous label propagation for community assignment, on the CSR
-  * grid that `CsrPageRank` loops on.
+  * grid (`Grid`).
   *
   * Reference precedent: per-paper topic assignment with fallback
   * propagation (topic/bertopic_title_abstract.py:94-106) and KMeans root
@@ -28,14 +26,12 @@ import java.util.Arrays
   * one job per round, on CC's grid of the same input (reused when CC or
   * the triangle count ran on it first); a vertex whose only edge is a
   * self-loop hears no vote and gets no row. A vote round:
-  *  1. each source partition walks its cells one destination partition
-  *     at a time: a counting sort buckets the (neighbour index, label)
-  *     votes by neighbour, each bucket's labels are sorted, and the run
-  *     lengths leave as one bundle of (idx, label, count) runs sorted by
-  *     (idx, label) — pre-combined, so a hub receives at most P bundles
-  *     (two-phase aggregation, SURVEY.md §7.5);
-  *  2. partitionBy(P) on the bundle's destination partition — the only
-  *     shuffle;
+  *  1. each destination run of a source partition's cells
+  *     (`CellWalk.runs`): a counting sort buckets the (neighbour index,
+  *     label) votes by neighbour, each bucket's labels are sorted, and the
+  *     run lengths leave as one bundle of (idx, label, count) runs sorted
+  *     by (idx, label);
+  *  2. the bundles go to their destination partitions — the only shuffle;
   *  3. each vertex partition merges its bundles (pairwise merges of
   *     sorted runs, adding the counts of equal (idx, label)) and every
   *     vertex takes its most frequent label, ties to the smallest; a
@@ -70,8 +66,51 @@ object LabelPropagation {
 
   /** One vote round (steps 1-3 above). */
   private def round(grid: Grid, state: RDD[LBlock]): (RDD[LBlock], Seq[RDD[_]]) = {
-    val part = new HashPartitioner(grid.partSizes.length) // Int keys in [0,P): partition index == pid
-    val msgs = votes(grid.cells, state, grid.partSizes).partitionBy(part) // the only shuffle
+    val sizes = grid.partSizes
+    // 1. a destination run's votes, bucketed with the reused bounds (start, fill)
+    val msgs = CellWalk.runs(grid, state, n => (new Array[Int](n + 1), new Array[Int](n))) {
+      case (lb, (start, fill), dp, run) =>
+        val blocks = run.toVector
+        val nq = sizes(dp)
+        Arrays.fill(start, 0, nq + 1, 0)
+        blocks.foreach(_.nbrIdx.foreach(j => start(j + 1) += 1))
+        var k = 0
+        while (k < nq) { start(k + 1) += start(k); k += 1 }
+        System.arraycopy(start, 0, fill, 0, nq)
+        val lab = new Array[Long](start(nq))
+        blocks.foreach { b =>
+          var i = 0
+          while (i < b.srcIdx.length) {
+            val l = lb.labels(b.srcIdx(i))
+            var j = b.offsets(i)
+            while (j < b.offsets(i + 1)) {
+              val t = b.nbrIdx(j)
+              lab(fill(t)) = l; fill(t) += 1
+              j += 1
+            }
+            i += 1
+          }
+        }
+        val idx = new Array[Int](lab.length)
+        val labels = new Array[Long](lab.length)
+        val counts = new Array[Int](lab.length)
+        var w = 0
+        k = 0
+        while (k < nq) {
+          Arrays.sort(lab, start(k), start(k + 1))
+          var e = start(k)
+          while (e < start(k + 1)) {
+            if (e == start(k) || lab(e) != lab(e - 1)) {
+              idx(w) = k; labels(w) = lab(e); w += 1
+            }
+            counts(w - 1) += 1
+            e += 1
+          }
+          k += 1
+        }
+        Some(Votes(Arrays.copyOf(idx, w), Arrays.copyOf(labels, w), Arrays.copyOf(counts, w)))
+    }
+    // 2-3. merge the bundles and take each vertex's most frequent label
     val next = state.zipPartitions(msgs, preservesPartitioning = true) { (ls, ms) =>
       ls.map { lb =>
         var runs = ms.map(_._2).toVector
@@ -99,71 +138,6 @@ object LabelPropagation {
       }
     }
     (next, Nil)
-  }
-
-  /** Step 1: every source partition's votes, one bundle per destination
-    * partition its cells reach. Cells arrive sorted by dpid, so one dpid's
-    * votes are in flight at a time; the bucket bounds are reused arrays
-    * sized to the largest partition.
-    */
-  private def votes(cells: RDD[IdxBlock], state: RDD[LBlock], sizes: Array[Int]): RDD[(Int, Votes)] = {
-    val maxSz = sizes.max
-    cells.zipPartitions(state, preservesPartitioning = false) { (bs, ls) =>
-      if (!ls.hasNext) Iterator.empty
-      else {
-        val own = ls.next().labels
-        val start = new Array[Int](maxSz + 1)
-        val fill = new Array[Int](maxSz)
-        val in = bs.buffered
-        new Iterator[(Int, Votes)] {
-          def hasNext: Boolean = in.hasNext
-          def next(): (Int, Votes) = {
-            val dp = in.head.dpid
-            val run = Vector.newBuilder[IdxBlock]
-            while (in.hasNext && in.head.dpid == dp) run += in.next()
-            val blocks = run.result()
-            val nq = sizes(dp)
-            Arrays.fill(start, 0, nq + 1, 0)
-            blocks.foreach(_.nbrIdx.foreach(j => start(j + 1) += 1))
-            var k = 0
-            while (k < nq) { start(k + 1) += start(k); k += 1 }
-            System.arraycopy(start, 0, fill, 0, nq)
-            val lab = new Array[Long](start(nq))
-            blocks.foreach { b =>
-              var i = 0
-              while (i < b.srcIdx.length) {
-                val l = own(b.srcIdx(i))
-                var j = b.offsets(i)
-                while (j < b.offsets(i + 1)) {
-                  val t = b.nbrIdx(j)
-                  lab(fill(t)) = l; fill(t) += 1
-                  j += 1
-                }
-                i += 1
-              }
-            }
-            val idx = new Array[Int](lab.length)
-            val labels = new Array[Long](lab.length)
-            val counts = new Array[Int](lab.length)
-            var w = 0
-            k = 0
-            while (k < nq) {
-              Arrays.sort(lab, start(k), start(k + 1))
-              var e = start(k)
-              while (e < start(k + 1)) {
-                if (e == start(k) || lab(e) != lab(e - 1)) {
-                  idx(w) = k; labels(w) = lab(e); w += 1
-                }
-                counts(w - 1) += 1
-                e += 1
-              }
-              k += 1
-            }
-            (dp, Votes(Arrays.copyOf(idx, w), Arrays.copyOf(labels, w), Arrays.copyOf(counts, w)))
-          }
-        }
-      }
-    }
   }
 
   /** Two sorted vote runs as one, the counts of an (idx, label) in both

@@ -1,16 +1,13 @@
 package graft.graph
 
-import graft.graph.CsrPageRank.{Grid, IdxBlock}
 import graft.ingest.Edge
-import org.apache.spark.{HashPartitioner, Partitioner, TaskContext}
+import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
-/** Triangle counting over the undirected simple graph: the count on the
-  * input's undirected CSR grid (`count`, `countDf`), the listing of the
-  * triples in DataFrames (`triangles`, `perVertex`).
+/** Triangle counting over the undirected simple graph, on the input's
+  * undirected CSR grid (`count`, `countDf`).
   *
   * Reference precedent: the co-citation / bibliographic-coupling
   * common-neighbor metrics (create_field/extract_link_features.py:189-201,
@@ -20,60 +17,11 @@ import scala.collection.mutable
   *
   * Skew plan (SURVEY.md §7.5, standard degree-orientation trick): rank
   * vertices by (degree, id) and orient every edge low→high. Then every
-  * wedge is enumerated at its lowest-degree vertex, so a hub of degree d
-  * contributes O(d) wedges only through its low-degree endpoints — the
-  * O(d²) hub blow-up disappears. The listing's closing-edge check is a
-  * semi-ish inner join against the oriented edge set; the count
-  * intersects sorted successor lists instead and lists no wedge.
+  * triangle is found once, at its lowest-ranked vertex, by intersecting
+  * sorted successor lists, and no wedge is listed: a hub of degree d costs
+  * no O(d²) wedge blow-up.
   */
 object TriangleCount {
-
-  /** Canonical oriented edge set: (a ≺ b) under (deg, id) order. */
-  private def oriented(edges: Dataset[Edge]): DataFrame = {
-    val und = edges.toDF()
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val deg = und
-      .select(col("u").as("id")).union(und.select(col("v").as("id")))
-      .groupBy("id").agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    und
-      .join(deg.withColumnRenamed("id", "u").withColumnRenamed("deg", "du"), "u")
-      .join(deg.withColumnRenamed("id", "v").withColumnRenamed("deg", "dv"), "v")
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("a"),
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("b")
-      )
-  }
-
-  /** All triangles as (x, y, z) vertex triples (each exactly once). */
-  def triangles(edges: Dataset[Edge]): DataFrame = {
-    // eager localCheckpoint instead of persist: materialized once, blocks
-    // released by GC when the result is dropped (no cache-entry leak).
-    //
-    // Repartition BEFORE checkpointing (guide §2.5 input skew / §2.6):
-    // the oriented edge set is small after AQE coalescing (measured: 3
-    // partitions at sf0.1), but the wedge enumeration downstream explodes
-    // each partition by O(outdeg) — a 5.2 s 3-task stage on a 32-core
-    // box. Hash-partitioning by the wedge pivot `a` restores full
-    // parallelism and co-partitions the self-join on `a`.
-    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val o = oriented(edges).repartition(parts, col("a")).localCheckpoint(true)
-    val e1 = o.select(col("a"), col("b").as("x"))
-    val e2 = o.select(col("a"), col("b").as("y"))
-    // wedges at the low vertex; x ≺ y not known in (deg,id) order here, so
-    // dedupe by requiring x < y on raw id after canonicalizing the pair.
-    val wedges = e1
-      .join(e2, "a")
-      .filter(col("x") < col("y"))
-      .select(col("a"), col("x"), col("y"))
-    // closing edge (x,y) exists in oriented set in either orientation
-    val closing = o.select(col("a").as("x"), col("b").as("y"))
-      .union(o.select(col("b").as("x"), col("a").as("y")))
-    wedges.join(closing, Seq("x", "y"), "left_semi")
-  }
 
   /** Total triangle count as a 1-row DataFrame (`n_triangles`: bigint,
     * not null), computed now by `count`.
@@ -87,10 +35,10 @@ object TriangleCount {
     * (`GridShape.Undirected`, the one CC and LPA run on, reused when either
     * ran on `edges` first), by the edge-iterator ("compact-forward")
     * algorithm in ONE job with two shuffles:
-    *  1. each partition computes its vertices' degrees from its cells and,
-    *     for each cell (p, q), sends q the degrees of the cell's source
-    *     vertices — the grid is symmetric, so those are exactly the
-    *     neighbours q's cell (q, p) references;
+    *  1. each partition computes its vertices' degrees from its cells and
+    *     sends each destination run's (`CellWalk.runs`) partition q the
+    *     degrees of the run's source vertices — the grid is symmetric, so
+    *     those are exactly the neighbours q's cells reference;
     *  2. with rank = (degree, global key `pid << 32 | idx`), a total order
     *     that needs no remote id, each vertex's N⁺ (its higher-ranked
     *     neighbours) is built sorted; a partition sends its own lists to
@@ -101,13 +49,11 @@ object TriangleCount {
     * Each triangle {a ≺ b ≺ c} is counted once, at (a, b); orientation
     * bounds |N⁺| by O(√m), so a hub costs no O(d²) wedge listing.
     *
-    * Task memory: steps 1 and 2 hold one partition's cells (persisted
-    * blocks) with one int per cell entry, as the rounds of `GridLoop` do.
-    * Step 3's shuffle sorts what a partition receives by source partition,
-    * its own lists first, in Spark's external sort (it spills under memory
-    * pressure); the merge then holds the partition's own N⁺ lists, two
-    * ints per entry of them, and one other source partition's lists at a
-    * time — never every list sent to it.
+    * Task memory: steps 1 and 2 hold one partition's cells, with one int
+    * per cell entry. Step 3's shuffle sorts what a partition receives by
+    * source partition, its own lists first, in Spark's external sort; the
+    * merge then holds the partition's own N⁺ lists, two ints per entry,
+    * and one other source partition's lists at a time.
     */
   def count(edges: Dataset[Edge]): Long =
     GridLoop.withGrid(edges, GridShape.Undirected)((_, grid) => grid.fold(0L)(onGrid))
@@ -123,30 +69,24 @@ object TriangleCount {
   private def onGrid(grid: Grid): Long = {
     val sizes = grid.partSizes
     val p = sizes.length
-    val part = new HashPartitioner(p) // Int keys in [0,P): partition index == pid
-    def degreesOf(cells: Seq[IdxBlock], n: Int): Array[Int] = {
+    def degreesOf(cells: Iterator[IdxBlock], n: Int): Array[Int] = {
       val deg = new Array[Int](n)
       cells.foreach(b => b.srcIdx.indices.foreach(i => deg(b.srcIdx(i)) += b.offsets(i + 1) - b.offsets(i)))
       deg
     }
-    // a partition's cells by destination partition, each run in source order
-    def byDest(cells: Seq[IdxBlock]): Seq[(Int, Seq[IdxBlock])] = cells.groupBy(_.dpid).toSeq
 
     // 1. degrees to the partitions whose cells reference them
-    val degrees = grid.cells.mapPartitionsWithIndex { (s, it) =>
-      val cells = it.toVector
-      val deg = degreesOf(cells, sizes(s))
-      byDest(cells).iterator.map { case (q, bs) =>
-        val idx = bs.flatMap(_.srcIdx).toArray // each source once per destination, ascending
-        (q, Degrees(s, idx, idx.map(deg)))
-      }
-    }.partitionBy(part)
+    val degs = grid.cells.mapPartitionsWithIndex((s, cs) => Iterator.single((s, degreesOf(cs, sizes(s)))))
+    val degrees = CellWalk.runs(grid, degs, _ => ()) { case ((s, deg), _, _, run) =>
+      val idx = run.flatMap(_.srcIdx).toArray // each source once per destination, ascending
+      Some(Degrees(s, idx, idx.map(deg)))
+    }
 
     // 2. sorted N⁺ lists, to this partition and to lower-ranked neighbours' partitions
     val lists = grid.cells.zipPartitions(degrees, preservesPartitioning = false) { (it, ds) =>
       val s = TaskContext.getPartitionId()
       val cells = it.toVector
-      val own = degreesOf(cells, sizes(s))
+      val own = degreesOf(cells.iterator, sizes(s))
       val remote = new Array[Degrees](p)
       ds.foreach { case (_, d) => remote(d.from) = d }
       def key(q: Int, i: Int): Long = (q.toLong << 32) | i
@@ -155,10 +95,10 @@ object TriangleCount {
       val n = sizes(s)
       // one visit per higher-ranked neighbour (own index, its key); returns,
       // per other partition q, the own vertices with a lower neighbour in q
-      def walk(visit: (Int, Long) => Unit): Seq[(Int, Array[Int])] = byDest(cells).flatMap { case (q, bs) =>
+      def walk(visit: (Int, Long) => Unit): Vector[(Int, Array[Int])] = CellWalk.byRun(cells.iterator) { (q, run) =>
         val r = remote(q)
         val to = new mutable.ArrayBuilder.ofInt
-        bs.foreach { b =>
+        run.foreach { b =>
           var e = 0
           while (e < b.srcIdx.length) {
             val i = b.srcIdx(e)
@@ -175,8 +115,8 @@ object TriangleCount {
             e += 1
           }
         }
-        Some((q, to.result())).filter(_._2.nonEmpty)
-      }
+        Some(to.result()).filter(_.nonEmpty)
+      }.toVector
       // N⁺ as CSR: count, then fill and sort each list
       val starts = new Array[Int](n + 1)
       val sends = walk((i, _) => starts(i + 1) += 1)
@@ -254,16 +194,5 @@ object TriangleCount {
       }
       Iterator.single(total)
     }.collect().sum
-  }
-
-  /** Per-vertex triangle counts (vertices in no triangle get 0). */
-  def perVertex(edges: Dataset[Edge]): DataFrame = {
-    val verts = edges.toDF().select(col("src").as("id"))
-      .union(edges.toDF().select(col("dst").as("id"))).distinct()
-    val t = triangles(edges)
-    val exploded = t.select(explode(array(col("a"), col("x"), col("y"))).as("id"))
-      .groupBy("id").agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
-    verts.join(exploded, Seq("id"), "left")
-      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
   }
 }

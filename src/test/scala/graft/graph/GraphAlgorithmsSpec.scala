@@ -12,6 +12,21 @@ class GraphAlgorithmsSpec extends SparkSpec {
     ConnectedComponents.run(ds(edges)).components.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  // --- PageRank ---------------------------------------------------------
+
+  test("PageRank matches the power-iteration oracle on every shape at P = 1, 3 and 8") {
+    val iters = 10
+    forEveryShapeAndP { (shape, edges) =>
+      // edges come deduplicated (EdgeExtraction), as the oracle takes them
+      val simple = edges.distinct
+      val got = PageRank.run(ds(simple), PageRankConfig(tol = 0.0, maxIter = iters)).ranks.collect()
+        .map(x => x.getLong(0) -> x.getDouble(1)).toMap
+      val want = Oracles.pageRank(simple, tol = 0.0, maxIter = iters)
+      assert(got.keySet == want.keySet, shape)
+      got.foreach { case (v, r) => assert(math.abs(r - want(v)) < 1e-12, s"$shape, vertex $v: $r vs ${want(v)}") }
+    }
+  }
+
   // --- Connected components -------------------------------------------
 
   test("CC: two 4-cliques + bridge = one component") {
@@ -193,13 +208,5 @@ class GraphAlgorithmsSpec extends SparkSpec {
   test("triangles: seeded random graph matches brute-force oracle") {
     val edges = Oracles.randomGraph(120, 900, seed = 13)
     assert(TriangleCount.count(ds(edges)) == Oracles.triangles(edges))
-  }
-
-  test("triangles: per-vertex counts sum to 3x total") {
-    val edges = Oracles.randomGraph(80, 400, seed = 17)
-    val total = Oracles.triangles(edges)
-    val pv = TriangleCount.perVertex(ds(edges)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pv.values.sum == 3 * total)
   }
 }
