@@ -24,14 +24,13 @@ object LinkProb {
     "citing_paper_citationcount", "cited_paper_citationcount",
     "self_cite", "similarity", "jaccard_cocitation", "jaccard_bibcoupling")
 
-  /** Coefficients TRAINED by LogisticTrainer (deterministic IRLS) on the
-    * deterministic synthetic labeled set (LogisticTrainer
-    * .syntheticLabeled(n = 20000)), 10-fold CV acceptance macro-F1 0.774
-    * / ROC-AUC 0.877 — the engine analog of the reference's fitted +
-    * pickled edge model (new_data_model.py:138-275). Reproduced bit-for-
-    * bit by `runMain graft.tools.TrainLinkModel` and asserted golden in
-    * LogisticTrainerSpec; retraining on real labels replaces this one
-    * literal map.
+  /** Coefficients TRAINED by deterministic IRLS on a deterministic
+    * synthetic labeled set of 20,000 rows, 10-fold CV acceptance macro-F1
+    * 0.774 / ROC-AUC 0.877 — the engine analog of the reference's fitted
+    * + pickled edge model (new_data_model.py:138-275). The trainer and its
+    * golden spec live in the test tree (graft.training);
+    * `sbt "Test/runMain graft.training.TrainLinkModel"` regenerates this
+    * map bit for bit. Retraining on real labels replaces this one map.
     */
   val DefaultWeights: Map[String, Double] = Map(
     "cross_correlation" -> 0.7147594190,
@@ -69,12 +68,10 @@ object LinkProb {
   }
 
   /** Nonlinear backend — same scoring contract, proba from a trained
-    * extra-trees ensemble (TreeEnsemble.train): the engine analog of the
+    * extra-trees ensemble (a TreeEnsemble.Model): the engine analog of the
     * reference's ExtraTrees edge model (new_data_model.py:159-161).
     * Like `score`, a single codegen'd projection (the model ships as
-    * plan literals).
-    */
-  /** Nonlinear-backend scorer: routes through the TreeEnsembleScore
+    * plan literals). It routes through the TreeEnsembleScore
     * Catalyst expression (one generated Java method per tree), so the
     * projection stays whole-stage-codegen'd at ANY ensemble size — the
     * round-5 nested-CASE scorer fell out of codegen past ~16x3. Numerics

@@ -1,5 +1,6 @@
 package graft.textops
 
+import graft.functions.VectorOps.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -79,8 +80,6 @@ object Embedding {
     * should use Similarity.cosine (0.0 guard).
     */
   def cosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column) =
-      aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
     val normProd = sqrt(dot(a, a) * dot(b, b))
     when(normProd === 0.0, lit(Double.NaN)).otherwise(dot(a, b) / normProd)
   }

@@ -1,16 +1,18 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.training.LogisticTrainer
 import org.apache.spark.sql.functions._
 
 /** The edge-model training stage (predict_edge/new_data_model.py:138-275
   * analog): deterministic IRLS fit, 10-fold CV acceptance metrics, and
   * the guarantee that LinkProb.DefaultWeights ARE the trained
-  * coefficients (golden values from graft.tools.TrainLinkModel).
+  * coefficients (golden values from graft.training.TrainLinkModel).
   */
 class LogisticTrainerSpec extends SparkSpec {
 
   private lazy val labeled = LogisticTrainer.syntheticLabeled(spark, 20000L)
+  private val regenerate = "; regenerate with sbt \"Test/runMain graft.training.TrainLinkModel\""
 
   test("IRLS recovers the ground-truth coefficients and converges") {
     val t = LogisticTrainer.train(labeled, LinkProb.ModelFeatures, "label")
@@ -32,9 +34,9 @@ class LogisticTrainerSpec extends SparkSpec {
     val t = LogisticTrainer.train(labeled, LinkProb.ModelFeatures, "label")
     LinkProb.ModelFeatures.foreach { f =>
       assert(math.abs(t.weights(f) - LinkProb.DefaultWeights(f)) < 1e-9,
-        s"$f: ${t.weights(f)} != DefaultWeights ${LinkProb.DefaultWeights(f)}")
+        s"$f: ${t.weights(f)} != DefaultWeights ${LinkProb.DefaultWeights(f)}$regenerate")
     }
-    assert(math.abs(t.bias - LinkProb.DefaultBias) < 1e-9)
+    assert(math.abs(t.bias - LinkProb.DefaultBias) < 1e-9, s"bias ${t.bias} != DefaultBias ${LinkProb.DefaultBias}$regenerate")
   }
 
   test("10-fold CV acceptance metrics (golden macro-F1 / ROC-AUC)") {

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.training.{LogisticTrainer, TreeTrainer}
 import org.apache.spark.sql.functions._
 
 /** The nonlinear edge-model backend (predict_edge/new_data_model.py:
@@ -13,13 +14,14 @@ import org.apache.spark.sql.functions._
 class TreeEnsembleSpec extends SparkSpec {
 
   private val F = LinkProb.ModelFeatures
+  private def regenerate(t: Int, d: Int) = s"; regenerate with sbt \"Test/runMain graft.training.TrainTreeModel 20000 $t $d\""
 
   test("training is bit-deterministic across partitionings") {
-    val a = TreeEnsemble.train(
-      TreeEnsemble.syntheticLabeledNonlinear(spark, 4000L, parts = 8), F, "label",
+    val a = TreeTrainer.train(
+      TreeTrainer.syntheticLabeledNonlinear(spark, 4000L, parts = 8), F, "label",
       numTrees = 16, maxDepth = 3)
-    val b = TreeEnsemble.train(
-      TreeEnsemble.syntheticLabeledNonlinear(spark, 4000L, parts = 3), F, "label",
+    val b = TreeTrainer.train(
+      TreeTrainer.syntheticLabeledNonlinear(spark, 4000L, parts = 3), F, "label",
       numTrees = 16, maxDepth = 3)
     assert(a.trees.length == b.trees.length)
     a.trees.zip(b.trees).zipWithIndex.foreach { case ((ta, tb), t) =>
@@ -30,18 +32,18 @@ class TreeEnsembleSpec extends SparkSpec {
   }
 
   test("DefaultModel is exactly the trained literal (golden, TrainTreeModel)") {
-    val t = TreeEnsemble.train(
-      TreeEnsemble.syntheticLabeledNonlinear(spark, 20000L), F, "label",
+    val t = TreeTrainer.train(
+      TreeTrainer.syntheticLabeledNonlinear(spark, 20000L), F, "label",
       numTrees = 16, maxDepth = 3)
-    val m = TreeEnsemble.DefaultModel
+    val m = TreeTrainer.DefaultModel
     assert(t.trees.length == m.trees.length)
     t.trees.zip(m.trees).zipWithIndex.foreach { case ((ta, tb), i) =>
-      assert(ta.sameElements(tb), s"tree $i differs from the shipped literal")
+      assert(ta.sameElements(tb), s"tree $i differs from the shipped literal${regenerate(16, 3)}")
     }
   }
 
   test("compact wire codec round-trips a model bit-exactly") {
-    val m = TreeEnsemble.DefaultModel
+    val m = TreeTrainer.DefaultModel
     val rt = TreeEnsemble.decodeModel(m.features, TreeEnsemble.encodeModel(m))
     assert(rt.features == m.features)
     assert(rt.trees.length == m.trees.length)
@@ -51,8 +53,8 @@ class TreeEnsembleSpec extends SparkSpec {
   }
 
   test("trees express the XOR interaction a linear model cannot (CV)") {
-    val data = TreeEnsemble.syntheticLabeledNonlinear(spark, 8000L)
-    val tree = TreeEnsemble.crossValidate(data, F, "label", "id", folds = 5, numTrees = 32)
+    val data = TreeTrainer.syntheticLabeledNonlinear(spark, 8000L)
+    val tree = TreeTrainer.crossValidate(data, F, "label", "id", folds = 5, numTrees = 32)
     val logit = LogisticTrainer.crossValidate(data, F, "label", "id", folds = 5)
     info(f"tree  AUC ${tree.rocAuc}%.4f macroF1 ${tree.macroF1}%.4f")
     info(f"logit AUC ${logit.rocAuc}%.4f macroF1 ${logit.macroF1}%.4f")
@@ -65,7 +67,7 @@ class TreeEnsembleSpec extends SparkSpec {
 
   test("on the LINEAR ground truth the trees stay competitive (sanity)") {
     val data = LogisticTrainer.syntheticLabeled(spark, 8000L)
-    val m = TreeEnsemble.train(data, F, "label", numTrees = 32)
+    val m = TreeTrainer.train(data, F, "label", numTrees = 32)
     val (f1, auc) = LogisticTrainer.scoreMetrics(
       data.withColumn("__p", TreeEnsemble.predictCol(m)), "__p", "label")
     info(f"tree in-sample AUC $auc%.4f macroF1 $f1%.4f on the linear task")
@@ -73,20 +75,20 @@ class TreeEnsembleSpec extends SparkSpec {
   }
 
   test("TreeModel64 is exactly the trained 64x5 literal (golden, TrainTreeModel)") {
-    val t = TreeEnsemble.train(
-      TreeEnsemble.syntheticLabeledNonlinear(spark, 20000L), F, "label",
+    val t = TreeTrainer.train(
+      TreeTrainer.syntheticLabeledNonlinear(spark, 20000L), F, "label",
       numTrees = 64, maxDepth = 5)
     val m = TreeModel64.Model
     assert(t.trees.length == m.trees.length)
     t.trees.zip(m.trees).zipWithIndex.foreach { case ((ta, tb), i) =>
-      assert(ta.sameElements(tb), s"tree $i differs from the shipped literal")
+      assert(ta.sameElements(tb), s"tree $i differs from the shipped literal${regenerate(64, 5)}")
     }
   }
 
   test("TreeEnsembleScore expression matches predictCol bit-exactly (16x3)") {
     import graft.functions.TreeEnsembleScore
-    val m = TreeEnsemble.DefaultModel
-    val df = TreeEnsemble.syntheticLabeledNonlinear(spark, 2000L)
+    val m = TreeTrainer.DefaultModel
+    val df = TreeTrainer.syntheticLabeledNonlinear(spark, 2000L)
     val rows = df.select(
       TreeEnsemble.predictCol(m).as("a"),
       TreeEnsembleScore.score(m, F.map(f => LinkProb.imputed(col(f)))).as("b")
@@ -98,7 +100,7 @@ class TreeEnsembleSpec extends SparkSpec {
   test("TreeEnsembleScore 64x5 matches an independent Scala routing (bit-exact)") {
     import graft.functions.TreeEnsembleScore
     val m = TreeModel64.Model
-    val df = TreeEnsemble.syntheticLabeledNonlinear(spark, 1000L)
+    val df = TreeTrainer.syntheticLabeledNonlinear(spark, 1000L)
     val got = df.select(
       (col("id")) +: F.map(f => col(f)) :+
         TreeEnsembleScore.score(m, F.map(f => LinkProb.imputed(col(f)))).as("p"): _*
@@ -122,7 +124,7 @@ class TreeEnsembleSpec extends SparkSpec {
     // failure into a thrown error instead of a silent interpreted
     // fallback — the round-5 ceiling (16x3) is asserted LIFTED here.
     val dir = java.nio.file.Files.createTempDirectory("tree64_score").toString
-    TreeEnsemble.syntheticLabeledNonlinear(spark, 500L).write.mode("overwrite").parquet(dir)
+    TreeTrainer.syntheticLabeledNonlinear(spark, 500L).write.mode("overwrite").parquet(dir)
     val data = spark.read.parquet(dir)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
@@ -137,8 +139,8 @@ class TreeEnsembleSpec extends SparkSpec {
   }
 
   test("scoring is a single codegen'd projection (no shuffle, no UDF)") {
-    val gen = TreeEnsemble.syntheticLabeledNonlinear(spark, 1000L)
-    val m = TreeEnsemble.train(gen, F, "label", numTrees = 8, maxDepth = 2)
+    val gen = TreeTrainer.syntheticLabeledNonlinear(spark, 1000L)
+    val m = TreeTrainer.train(gen, F, "label", numTrees = 8, maxDepth = 2)
     // score over a plain parquet scan so the plan under test is the
     // scoring projection itself, not the generator's repartition
     val dir = java.nio.file.Files.createTempDirectory("tree_score").toString

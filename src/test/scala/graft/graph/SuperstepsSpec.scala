@@ -212,6 +212,31 @@ class SuperstepsSpec extends SparkSpec {
     }
   }
 
+  test("resume on a run dir with no commit, missing or empty, is a fresh durable run") {
+    val ds = Oracles.randomGraph(120, 400, seed = 37).toDF("src", "dst").as[Edge]
+    def values(df: DataFrame, v: Row => Long) = df.collect().map(r => r.getLong(0) -> v(r)).toMap
+    def pr(dir: String) = PageRankConfig(maxIter = 12, checkpoint = Durable(dir, every = 5))
+    // (id -> value, steps); ranks as their bits
+    def ranks(r: PageRankResult) = (values(r.ranks, r => java.lang.Double.doubleToRawLongBits(r.getDouble(1))), r.iterations)
+    def cc(r: ConnectedComponents.CcResult) = (values(r.components, _.getLong(1)), r.rounds)
+    def lpa(r: LabelPropagation.LpaResult) = (values(r.labels, _.getLong(1)), r.iterations)
+    val programs = Seq[(String, String => Any, String => Any)]( // (name, durable run into dir, resume on dir)
+      ("PageRank", dir => ranks(PageRank.run(ds, pr(dir))), dir => ranks(PageRank.resume(ds, dir, pr(dir)))),
+      ("CC", dir => cc(ConnectedComponents.run(ds, checkpoint = Durable(dir))), dir => cc(ConnectedComponents.resume(ds, dir))),
+      ("LPA", dir => lpa(LabelPropagation.run(ds, checkpoint = Durable(dir))), dir => lpa(LabelPropagation.resume(ds, dir))))
+    def committed(dir: String): Seq[StepMetrics] = new File(dir).listFiles().toSeq.filter(new File(_, "_COMMIT").exists)
+      .map(_.getName.stripPrefix("step=").toInt).sorted.map(Supersteps.readMetrics(spark, dir, _))
+    for ((name, run, resume) <- programs) {
+      val runDir = tmpDir()
+      val want = run(runDir)
+      assert(committed(runDir).nonEmpty, s"$name: the durable run committed nothing")
+      for ((kind, dir) <- Seq("missing" -> s"${tmpDir()}/run", "empty" -> tmpDir())) {
+        assert(resume(dir) == want, s"$name: resume on a $kind run dir differs from the run")
+        assert(committed(dir) == committed(runDir), s"$name: a $kind run dir's commits differ from the run's")
+      }
+    }
+  }
+
   private def stateDir(runDir: String, step: Int) = f"$runDir/step=$step%05d/state"
 
   test("LPA resume fails on a snapshot that does not match its commit") {

@@ -1,5 +1,6 @@
-package graft.analytics
+package graft.training
 
+import graft.analytics.LinkProb
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions._
   * the model that compute_link_prob.py later scores). The engine's
   * LinkProb.DefaultWeights are coefficients produced by THIS trainer on
   * the deterministic synthetic labeled set below (see
-  * LogisticTrainerSpec), not invented constants.
+  * LogisticTrainerSpec), not invented constants; the engine only scores
+  * them. `sbt "Test/runMain graft.training.TrainLinkModel"` prints them.
   *
   * Distribution + determinism: each Newton step needs only the k x k
   * Gram matrix X'WX and gradient X'(y - p) — per-partition primitive
@@ -171,14 +173,20 @@ object LogisticTrainer {
   def crossValidate(
       df: DataFrame, features: Seq[String], labelCol: String, idCol: String,
       folds: Int = 10, maxIter: Int = 25
-  ): CvMetrics = {
+  ): CvMetrics =
+    kFold(df, labelCol, idCol, folds) { (rest, fold) =>
+      fold.withColumn("__p", predictCol(train(rest, features, labelCol, maxIter = maxIter), features))
+    }
+
+  /** The CV loop of both trainers: `fitScore(rest, fold)` returns `fold` scored in `__p`. */
+  private[training] def kFold(df: DataFrame, labelCol: String, idCol: String, folds: Int)(
+      fitScore: (DataFrame, DataFrame) => DataFrame): CvMetrics = {
     val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cached.count()
     val metrics = (0 until folds).map { j =>
-      val train_ = cached.filter(pmod(col(idCol), lit(folds)) =!= j)
-      val test = cached.filter(pmod(col(idCol), lit(folds)) === j)
-      val t = train(train_, features, labelCol, maxIter = maxIter)
-      scoreMetrics(test.withColumn("__p", predictCol(t, features)), "__p", labelCol)
+      val rest = cached.filter(pmod(col(idCol), lit(folds)) =!= j)
+      val fold = cached.filter(pmod(col(idCol), lit(folds)) === j)
+      scoreMetrics(fitScore(rest, fold), "__p", labelCol)
     }
     cached.unpersist(false)
     CvMetrics(metrics.map(_._1).sum / folds, metrics.map(_._2).sum / folds, folds)
@@ -192,22 +200,9 @@ object LogisticTrainer {
     * exercise the -2 imputation path end-to-end.
     */
   def syntheticLabeled(spark: org.apache.spark.sql.SparkSession, n: Long, parts: Int = 8): DataFrame = {
-    import graft.textops.Dedup.md5Hash60
-    val idc = col("id")
-    def u(seed: Int): Column = // uniform [0,1)
-      md5Hash60(idc.cast("string"), seed).cast("double") / lit(1.152921504606847e18)
     def maybeNull(c: Column, seed: Int): Column =
-      when(u(seed) < 0.1, lit(null).cast("double")).otherwise(c)
-    val feats = Map(
-      "cross_correlation" -> (u(11) * 2.0 - 1.0),
-      "window_cross_correlation" -> (u(12) * 2.0 - 1.0),
-      "year_diff" -> floor(u(13) * 30).cast("double"),
-      "citing_paper_citationcount" -> floor(u(14) * 200).cast("double"),
-      "cited_paper_citationcount" -> floor(u(15) * 500).cast("double"),
-      "self_cite" -> (u(16) < 0.15).cast("double"),
-      "similarity" -> (u(17) * 2.0 - 1.0),
-      "jaccard_cocitation" -> (u(18) * 0.5),
-      "jaccard_bibcoupling" -> (u(19) * 0.5))
+      when(uniform(seed) < 0.1, lit(null).cast("double")).otherwise(c)
+    val feats = syntheticFeatures(selfCiteRate = 0.15).map { case (f, c) => f -> maybeNull(c, f.hashCode & 0xffff) }
     // ground truth: plausible signs/magnitudes for citation-link features
     val truth = Map(
       "cross_correlation" -> 0.7, "window_cross_correlation" -> 0.5,
@@ -216,11 +211,32 @@ object LogisticTrainer {
       "similarity" -> 1.4, "jaccard_cocitation" -> 2.2,
       "jaccard_bibcoupling" -> 1.8)
     val truthBias = -0.9
-    val base = spark.range(n).repartition(parts, col("id")).sortWithinPartitions("id")
-      .select(Seq(idc) ++ feats.toSeq.sortBy(_._1).map { case (f, c) => maybeNull(c, f.hashCode & 0xffff).as(f) }: _*)
     val z = truth.toSeq.sortBy(_._1)
       .map { case (f, wt) => LinkProb.imputed(col(f)) * lit(wt) }
       .foldLeft(lit(truthBias): Column)(_ + _)
-    base.withColumn("label", (lit(1.0) / (lit(1.0) + exp(-z)) > u(99)).cast("int"))
+    labeled(spark, n, parts, feats, z)
   }
+
+  /** A uniform [0,1) per row `id` and `seed`, md5-derived. */
+  private def uniform(seed: Int): Column =
+    graft.textops.Dedup.md5Hash60(col("id").cast("string"), seed).cast("double") / lit(1.152921504606847e18)
+
+  /** The 9 model features; self_cite is 1 with probability `selfCiteRate`. */
+  private[training] def syntheticFeatures(selfCiteRate: Double): Map[String, Column] = Map(
+    "cross_correlation" -> (uniform(11) * 2.0 - 1.0),
+    "window_cross_correlation" -> (uniform(12) * 2.0 - 1.0),
+    "year_diff" -> floor(uniform(13) * 30).cast("double"),
+    "citing_paper_citationcount" -> floor(uniform(14) * 200).cast("double"),
+    "cited_paper_citationcount" -> floor(uniform(15) * 500).cast("double"),
+    "self_cite" -> (uniform(16) < selfCiteRate).cast("double"),
+    "similarity" -> (uniform(17) * 2.0 - 1.0),
+    "jaccard_cocitation" -> (uniform(18) * 0.5),
+    "jaccard_bibcoupling" -> (uniform(19) * 0.5))
+
+  /** Ids 0 until n in `parts` sorted partitions, `features` by name, label sigmoid(z) > uniform. */
+  private[training] def labeled(spark: org.apache.spark.sql.SparkSession, n: Long, parts: Int,
+                                 features: Map[String, Column], z: Column): DataFrame =
+    spark.range(n).repartition(parts, col("id")).sortWithinPartitions("id")
+      .select(col("id") +: features.toSeq.sortBy(_._1).map { case (f, c) => c.as(f) }: _*)
+      .withColumn("label", (lit(1.0) / (lit(1.0) + exp(-z)) > uniform(99)).cast("int"))
 }

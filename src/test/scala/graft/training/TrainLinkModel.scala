@@ -1,14 +1,14 @@
-package graft.tools
+package graft.training
 
-import graft.analytics.{LinkProb, LogisticTrainer}
+import graft.analytics.LinkProb
 import graft.core.Sessions
 
-/** Dev-only: fit the edge-probability model on the deterministic
-  * synthetic labeled set and print the coefficients + 10-fold CV
-  * acceptance metrics (the values hard-coded into LinkProb.DefaultWeights
-  * and asserted by LogisticTrainerSpec).
+/** Fit the edge-probability model on the deterministic synthetic labeled
+  * set and print the coefficients + 10-fold CV acceptance metrics (the
+  * values hard-coded into LinkProb.DefaultWeights and asserted by
+  * LogisticTrainerSpec).
   *
-  * Usage: runMain graft.tools.TrainLinkModel [nRows]
+  * Usage: sbt "Test/runMain graft.training.TrainLinkModel [nRows]"
   */
 object TrainLinkModel {
   def main(args: Array[String]): Unit = {
