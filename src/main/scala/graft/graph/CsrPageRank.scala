@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.ingest.Edge
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -35,15 +36,26 @@ object CsrPageRank {
 
   /** Resume from the last committed superstep in runDir (a fresh durable
     * run if none; `GridLoop.resume`, which checks the edges first); the run
-    * goes on bit-identical to an uninterrupted one. An (id, rank) snapshot
+    * goes on bit-identical to an uninterrupted one. It commits to `runDir`,
+    * every `cfg`'s `Durable.every` steps (every step when `cfg` is not
+    * Durable); a `Durable` naming another directory is rejected with an
+    * IllegalArgumentException before any job runs. An (id, rank) snapshot
     * of the retired DataFrame-join engine is rejected before any job runs.
     */
   def resume(edges: Dataset[Edge], runDir: String,
-             cfg: PageRankConfig = PageRankConfig()): PageRankResult =
-    result(GridLoop.resume(edges, Program(cfg.alpha, cfg.tol), runDir, cfg.maxIter, cfg.checkpoint match {
-      case d: Durable => d
-      case _          => Durable(runDir)
-    }))
+             cfg: PageRankConfig = PageRankConfig()): PageRankResult = {
+    val every = cfg.checkpoint match {
+      case Durable(dir, every) =>
+        val conf = edges.sparkSession.sparkContext.hadoopConfiguration
+        def qualified(d: String) = { val p = new Path(d); p.getFileSystem(conf).makeQualified(p) }
+        if (qualified(dir) != qualified(runDir))
+          throw new IllegalArgumentException(s"a resume commits to its run dir $runDir, but the " +
+            s"config's Durable names another directory, $dir")
+        every
+      case _ => 1
+    }
+    result(GridLoop.resume(edges, Program(cfg.alpha, cfg.tol), runDir, cfg.maxIter, Durable(runDir, every)))
+  }
 
   private def result(o: GridLoop.Outcome[Step]): PageRankResult =
     PageRankResult(o.values, o.step, o.converged, o.last.deltas, o.last.m, o.last.n,

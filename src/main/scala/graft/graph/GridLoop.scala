@@ -99,11 +99,17 @@ private[graph] trait GridProgram[B, P, A] extends Serializable {
   * checkpointed locally and materialized by `Supersteps.stepJob`, which
   * returns each partition's partial (a re-run task cannot add twice,
   * unlike an accumulator) and, for a round due for a commit, writes the
-  * snapshot from the same tasks. A Durable run therefore runs the
-  * LocalOnly jobs; only a run converging off the commit schedule adds one
-  * write job. The run ends at the step whose metrics say "converged", or
-  * after `maxIter` steps; every round's blocks are released, so the run
-  * leaves its result and its input's grid persisted.
+  * snapshot from the same tasks, with the Hadoop conf the run broadcast
+  * the first time a step was due (a LocalOnly run broadcasts none). A
+  * Durable run therefore runs the LocalOnly jobs; only a run converging
+  * off the commit schedule adds one write job. Step k's `_METRICS.json`
+  * and `_COMMIT` are sealed on the run's ordered committer
+  * (`Supersteps.committing`) while round k+1 runs; the run returns once
+  * every seal is on disk, a failed seal fails it with its exception, and
+  * a round that throws first waits for the seals already queued. The
+  * run ends at the step whose metrics say "converged", or after
+  * `maxIter` steps; every round's blocks are released, so the run leaves
+  * its result and its input's grid persisted.
   *
   * One grid per input and shape: the reference derives one citation edge
   * table and runs every analysis over it, and so does a pass over one
@@ -237,48 +243,50 @@ private[graph] object GridLoop {
         }
       }
       val step0 = from.fold(0)(_._3.step)
-      prepared match {
-        case None =>
-          // no vertex: converged, after the program's empty round if it has one and one is left
-          val ran = program.emptyRound && step0 < maxIter
-          val step = if (ran) step0 + 1 else step0
-          if (ran) Supersteps.commitStep(spark, checkpoint, step, converged = true, None, program.schema,
-            program.metrics(step, program.empty) ++ counts(None))(_ => Nil)
-          val none = spark.createDataFrame(java.util.Collections.emptyList[Row](), program.schema)
-            .select(valueColumns(program): _*)
-          Outcome(IterationConf.rebind(none, callerSpark), step, ran || !program.emptyRound, program.empty)
-        case Some(grid) =>
-          // ONE job over a round's blocks: each partition's partial and, given
-          // a step's state dir, its snapshot (rows, checksum)
-          def stepJob(blocks: RDD[B], dir: Option[String]) =
-            Supersteps.stepJob(blocks, dir, program.schema)(program.partial, program.rows)
-          var (state, agg) = program.start(grid,
-            from.map { case (_, snap, m) => (IterationConf.rebind(snap, spark), m) })
-          val prepareSeconds = (System.nanoTime() - prepT0) / 1e9
-          val loopT0 = System.nanoTime()
-          var step = step0
-          var converged = false
+      Supersteps.committing(spark.sparkContext) { commits =>
+        prepared match {
+          case None =>
+            // no vertex: converged, after the program's empty round if it has one and one is left
+            val ran = program.emptyRound && step0 < maxIter
+            val step = if (ran) step0 + 1 else step0
+            if (ran) Supersteps.commitStep(spark, checkpoint, step, converged = true, None, program.schema,
+              program.metrics(step, program.empty) ++ counts(None), commits)(_ => Nil)
+            val none = spark.createDataFrame(java.util.Collections.emptyList[Row](), program.schema)
+              .select(valueColumns(program): _*)
+            Outcome(IterationConf.rebind(none, callerSpark), step, ran || !program.emptyRound, program.empty)
+          case Some(grid) =>
+            // ONE job over a round's blocks: each partition's partial and, given
+            // a step's state dir, its snapshot (rows, checksum)
+            def stepJob(blocks: RDD[B], dir: Option[String]) =
+              Supersteps.stepJob(blocks, dir, program.schema, commits)(program.partial, program.rows)
+            var (state, agg) = program.start(grid,
+              from.map { case (_, snap, m) => (IterationConf.rebind(snap, spark), m) })
+            val prepareSeconds = (System.nanoTime() - prepT0) / 1e9
+            val loopT0 = System.nanoTime()
+            var step = step0
+            var converged = false
 
-          while (step < maxIter && !converged) {
-            val (next, scratch) = program.round(grid, state, agg)
-            next.persist(StorageLevel.MEMORY_AND_DISK)
-            next.localCheckpoint()
-            val due = Supersteps.dueDir(spark, checkpoint, step + 1)
-            val (parts, written) = stepJob(next, due)
-            scratch.foreach(_.unpersist(false))
+            while (step < maxIter && !converged) {
+              val (next, scratch) = program.round(grid, state, agg)
+              next.persist(StorageLevel.MEMORY_AND_DISK)
+              next.localCheckpoint()
+              val due = Supersteps.dueDir(spark, checkpoint, step + 1)
+              val (parts, written) = stepJob(next, due)
+              scratch.foreach(_.unpersist(false))
+              state.unpersist(false)
+              state = next
+              step += 1
+              agg = program.aggregate(agg, parts)
+              val metrics = program.metrics(step, agg)
+              converged = metrics("converged") == 1.0
+              Supersteps.commitStep(spark, checkpoint, step, converged, due.map(_ => written),
+                program.schema, metrics ++ counts(Some(grid)), commits)(dir => stepJob(state, Some(dir))._2)
+            }
+            val values = program.values(spark, state).localCheckpoint(true)
             state.unpersist(false)
-            state = next
-            step += 1
-            agg = program.aggregate(agg, parts)
-            val metrics = program.metrics(step, agg)
-            converged = metrics("converged") == 1.0
-            Supersteps.commitStep(spark, checkpoint, step, converged, due.map(_ => written),
-              program.schema, metrics ++ counts(Some(grid)))(dir => stepJob(state, Some(dir))._2)
-          }
-          val values = program.values(spark, state).localCheckpoint(true)
-          state.unpersist(false)
-          Outcome(IterationConf.rebind(values, callerSpark), step, converged, agg, prepareSeconds,
-            (System.nanoTime() - loopT0) / 1e9)
+            Outcome(IterationConf.rebind(values, callerSpark), step, converged, agg, prepareSeconds,
+              (System.nanoTime() - loopT0) / 1e9)
+        }
       }
     }
   }

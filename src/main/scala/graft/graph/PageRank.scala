@@ -11,9 +11,13 @@ sealed trait CheckpointPolicy
 final case class LocalOnly() extends CheckpointPolicy
 /** Durable resumable checkpoints: every `every` iterations a committed
   * superstep (parquet + metrics + snapshot rows and checksum + atomic
-  * marker) lands in `runDir` — the production mode. A commit is one
-  * write by the tasks holding the state; the loop keeps its in-memory
-  * state.
+  * marker) lands in `runDir` — the production mode. A commit costs one
+  * snapshot file per partition, written by the tasks holding the state
+  * inside the round's job, and two driver files (`_METRICS.json`, then
+  * `_COMMIT`) sealed while the next round runs; the Hadoop conf the
+  * tasks write with is broadcast once per run. The loop keeps its
+  * in-memory state. Without native Hadoop, each new local file or
+  * directory also forks a `chmod`: the remaining floor.
   */
 final case class Durable(runDir: String, every: Int = 1) extends CheckpointPolicy
 

@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -19,6 +20,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
 import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
@@ -60,10 +65,22 @@ final case class StepMetrics(step: Int, rows: Long, checksum: Long, metrics: Map
   * a snapshot replaced or corrupted behind an intact `_COMMIT` fails
   * loudly instead of resuming from the wrong state.
   *
+  * What a commit costs a run (`Committer`): one snapshot file per
+  * partition, written inside the round's own job; two driver files,
+  * `_METRICS.json` and `_COMMIT`, sealed in step order on the run's
+  * committer while the next round runs (the run returns once every seal
+  * is on disk); and the Hadoop conf, broadcast once per run rather than
+  * carried in every due step's closure, where each task deserialized its
+  * thousand-odd entries. What remains is a floor of the local file
+  * system: without native Hadoop, `RawLocalFileSystem` sets permissions
+  * by forking `chmod`, once per new file (and its `.crc`) and directory,
+  * about eight forks per commit.
+  *
   * A step without `_COMMIT` is invisible — `lastCommitted` skips it — so
-  * a job killed mid-write resumes from the previous step and produces
-  * results identical to an uninterrupted run (property-tested). Hidden
-  * temp files left by a killed task are ignored by the parquet reader.
+  * a job killed mid-write, or a kill that drops a queued seal, resumes
+  * from the previous step and produces results identical to an
+  * uninterrupted run (property-tested). Hidden temp files left by a
+  * killed task are ignored by the parquet reader.
   *
   * Uses the Hadoop FileSystem API throughout so the same code runs on
   * HDFS/S3A on a real cluster; Iceberg snapshot commits are a drop-in
@@ -196,38 +213,99 @@ object Supersteps {
 
   /** ONE job over a grid loop's block state: each task reduces its blocks
     * (at most one) with `partial` and, given `stateDir`, writes their
-    * `rows` as its partition of the snapshot. Returns the partials in
-    * partition order — a driver-side sum over them is the same number on
-    * every run, where an accumulator counts a re-run task twice — and each
-    * partition's (rows, checksum).
+    * `rows` as its partition of the snapshot with the run's broadcast conf.
+    * Returns the partials in partition order — a driver-side sum over them
+    * is the same number on every run, where an accumulator counts a re-run
+    * task twice — and each partition's (rows, checksum).
     */
-  private[graph] def stepJob[B, R: ClassTag](state: RDD[B], stateDir: Option[String], schema: StructType)(
+  private[graph] def stepJob[B, R: ClassTag](state: RDD[B], stateDir: Option[String], schema: StructType,
+                                             commits: Committer)(
       partial: Seq[B] => R, rows: B => Iterator[InternalRow]): (Array[R], Seq[(Long, Long)]) = {
-    val sc = state.sparkContext
-    val conf = stateDir.map(_ => new SerializableConfiguration(sc.hadoopConfiguration))
-    val parts = sc.runJob(state, (ctx: TaskContext, it: Iterator[B]) => {
+    val conf = stateDir.map(_ => commits.conf)
+    val parts = state.sparkContext.runJob(state, (ctx: TaskContext, it: Iterator[B]) => {
       val bs = it.toVector
-      (partial(bs), stateDir.fold((0L, 0L))(writePart(_, schema, conf.get, ctx, bs.iterator.flatMap(rows))))
+      (partial(bs), stateDir.fold((0L, 0L))(writePart(_, schema, conf.get.value, ctx, bs.iterator.flatMap(rows))))
     })
     (parts.map(_._1), parts.toSeq.map(_._2))
   }
 
   /** Commits step `step` of a grid loop when `policy` has it on the
-    * schedule or the run has converged: seals the snapshot the step's job
-    * wrote (`written`, present when `dueDir` gave a dir) or, for a run
-    * converging off the schedule, writes it now with `write` (one job).
+    * schedule or the run has converged: queues the seal of the snapshot
+    * the step's job wrote (`written`, present when `dueDir` gave a dir)
+    * or, for a run converging off the schedule, writes it now with
+    * `write` (one job).
     */
   private[graph] def commitStep(spark: SparkSession, policy: CheckpointPolicy, step: Int,
                                 converged: Boolean, written: Option[Seq[(Long, Long)]],
-                                schema: StructType, metrics: => Map[String, Double])(
+                                schema: StructType, metrics: => Map[String, Double], commits: Committer)(
       write: String => Seq[(Long, Long)]): Unit = policy match {
     case Durable(runDir, every) if step % every == 0 || converged =>
-      seal(spark, runDir, step, written.getOrElse(write(prepare(spark, runDir, step))), schema, metrics)
+      commits.seal(spark, runDir, step, written.getOrElse(write(prepare(spark, runDir, step))), schema, metrics)
     case _ => ()
   }
 
+  /** A run's commit path, set up the first time one of its steps is due (a
+    * LocalOnly run sets up nothing): the Hadoop conf, broadcast once for
+    * every snapshot task of the run instead of travelling in each task's
+    * closure, and one ordered committer that seals step k while the run
+    * goes on to round k+1. Seals run in step order; after one fails, no
+    * later step is sealed, and the next `seal` or `await` throws its
+    * exception.
+    */
+  private[graph] final class Committer(sc: SparkContext) {
+    private var shipped: Option[Broadcast[SerializableConfiguration]] = None
+    private var queued: Future[Unit] = Future.unit
+
+    def conf: Broadcast[SerializableConfiguration] = shipped.getOrElse {
+      val b = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+      shipped = Some(b)
+      b
+    }
+
+    /** Queues `step`'s seal (`Supersteps.seal`) after every earlier one. */
+    def seal(spark: SparkSession, runDir: String, step: Int, parts: Seq[(Long, Long)],
+             schema: StructType, metrics: Map[String, Double]): Unit = {
+      queued.value.foreach(_.get) // a failed seal ends the run here
+      queued = queued.map { _ =>
+        // a Future never completes on a fatal error: fail it instead, so the run cannot hang
+        try Supersteps.seal(spark, runDir, step, parts, schema, metrics)
+        catch { case e: Throwable if !NonFatal(e) => throw new ExecutionException(s"sealing step $step failed", e) }
+      }(sealers)
+    }
+
+    /** Waits for every queued seal; `await` throws a failed one's exception. */
+    private[Supersteps] def await(): Unit = Await.result(queued, Duration.Inf)
+    private[Supersteps] def settle(): Unit = Await.ready(queued, Duration.Inf)
+
+    private[Supersteps] def close(): Unit = shipped.foreach(_.destroy())
+  }
+
+  /** The committers' threads: each run chains its seals, so they stay in
+    * step order whichever thread runs them.
+    */
+  private lazy val sealers = ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-superstep-seal")
+    t.setDaemon(true)
+    t
+  })
+
+  /** `body` with a run's `Committer`; returns once every seal it queued is
+    * on disk, failing with a failed seal's exception. When `body` throws,
+    * the seals it queued finish first, then its exception is rethrown. The
+    * broadcast conf is destroyed either way.
+    */
+  private[graph] def committing[T](sc: SparkContext)(body: Committer => T): T = {
+    val commits = new Committer(sc)
+    try {
+      val out = try body(commits) catch { case e: Throwable => commits.settle(); throw e }
+      commits.await()
+      out
+    } finally commits.close()
+  }
+
   /** Write one superstep atomically: one job in which every task writes
-    * its partition of `state`, then the metrics, then the commit marker.
+    * its partition of `state` with a broadcast conf, as a loop's round
+    * does, then the metrics, then the commit marker.
     */
   def commit(
       spark: SparkSession,
@@ -239,10 +317,11 @@ object Supersteps {
     val schema = state.schema
     parquetSchema(schema) // unsupported column types fail here, before the job
     val dir = prepare(spark, runDir, step)
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val parts = spark.sparkContext.runJob(state.queryExecution.toRdd,
-      (ctx: TaskContext, rows: Iterator[InternalRow]) => writePart(dir, schema, conf, ctx, rows))
-    seal(spark, runDir, step, parts.toSeq, schema, metrics)
+    committing(spark.sparkContext) { commits =>
+      val (_, parts) = stepJob(state.queryExecution.toRdd.map(_.copy()), Some(dir), schema, commits)(
+        _ => (), Iterator.single)
+      commits.seal(spark, runDir, step, parts, schema, metrics)
+    }
   }
 
   /** Highest committed step in runDir, if any. */

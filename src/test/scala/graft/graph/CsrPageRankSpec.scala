@@ -3,6 +3,7 @@ package graft.graph
 import graft.SparkSpec
 import graft.ingest.Edge
 
+import java.io.File
 import java.nio.file.Files
 
 class CsrPageRankSpec extends SparkSpec {
@@ -124,6 +125,25 @@ class CsrPageRankSpec extends SparkSpec {
     assert(Supersteps.lastCommitted(spark, partDir).contains(4))
     val err = intercept[IllegalStateException](CsrPageRank.resume(ds, partDir, fixed(8)))
     assert(err.getMessage.contains(s"superstep 4 in $partDir"))
+  }
+
+  test("resume commits to its run dir: another Durable dir is rejected, and a second resume goes on") {
+    val ds = Oracles.randomGraph(150, 700, seed = 19).toDF("src", "dst").as[Edge]
+    val (a, b) = (tmpDir("graft-csr-resume-a"), tmpDir("graft-csr-resume-b"))
+    def cfg(dir: String, iters: Int) = PageRankConfig(tol = 0.0, maxIter = iters, checkpoint = Durable(dir, every = 2))
+    var err: IllegalArgumentException = null
+    val jobs = jobsOf { err = intercept[IllegalArgumentException](CsrPageRank.resume(ds, a, cfg(b, 6))) }
+    assert(err.getMessage.contains(a) && err.getMessage.contains(b), err.getMessage)
+    assert(jobs == 0, s"$jobs jobs ran before the directory check")
+    assert(new File(b).list().isEmpty)
+    // the same directory, qualified, with its own commit schedule
+    CsrPageRank.resume(ds, a, cfg(s"file:$a/", 6))
+    assert(Supersteps.lastCommitted(spark, a).contains(6))
+    assert(new File(a).list().sorted.toSeq == Seq(2, 4, 6).map(k => f"step=$k%05d"))
+    val resumed = CsrPageRank.resume(ds, a, cfg(a, 8))
+    assert(resumed.deltas.size == 2, "the second resume did not go on from step 6")
+    assert(Supersteps.lastCommitted(spark, a).contains(8))
+    assert(toMap(resumed) == toMap(CsrPageRank.run(ds, fixed(8))))
   }
 
   test("resume rejects an (id, rank) snapshot before any job runs, naming the missing column") {
