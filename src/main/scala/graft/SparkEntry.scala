@@ -7,6 +7,7 @@ import graft.textops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops), with DuckDB-equivalent oracle
@@ -19,8 +20,35 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = scala.collection.mutable.Map.empty[String, ((String, Map[String, String]), StructType)]
+
+  /** Input table `name` of the sf dir, read with the schema inferred for
+    * the same file state and session settings (inference runs a job to
+    * read a footer, tens of ms warm). Key: `fileSig` (names, sizes, mtimes:
+    * a rewritten file is inferred again) and every session setting
+    * (`spark.sql.parquet.binaryAsString` and others change the inferred
+    * schema); one entry per path keeps the cache bounded. */
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = fileSig(path).map(sig => (sig, spark.conf.getAll))
+    schemas.synchronized(key.flatMap(k => schemas.get(path).filter(_._1 == k))) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemas.synchronized(schemas(path) = (k, df.schema)))
+        df
+    }
+  }
+
+  /** Canonical path plus the name, size and mtime of every file under it;
+    * None when nothing is at `path`. */
+  private def fileSig(path: String): Option[String] = {
+    def entries(f: java.io.File, name: String): Seq[String] =
+      if (!f.isDirectory) Seq(s"|$name:${f.length}:${f.lastModified}")
+      else Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(c => entries(c, s"$name/${c.getName}"))
+    val root = new java.io.File(path)
+    Option.when(root.exists())(root.getCanonicalPath + entries(root, ".").mkString)
+  }
 
   /** Co-order part graph: undirected edge (a < b) when two parts appear
     * in the same order — the testdata stand-in for the citation edge
@@ -49,13 +77,7 @@ object SparkEntry {
     // and an OS file lock serializes concurrent builders (e.g. bench and
     // verify JVMs racing on a cold cache) — a reader can never observe a
     // half-written directory.
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    if (!src.exists()) return derive
-    val files =
-      if (src.isDirectory) Option(src.listFiles()).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
-      else Array(src)
-    val sig = src.getCanonicalPath +
-      files.map(f => s"|${f.getName}:${f.length}:${f.lastModified}").mkString
+    val sig = fileSig(s"$dir/lineitem.parquet") match { case Some(sig) => sig; case None => return derive }
     val md = java.security.MessageDigest.getInstance("MD5").digest(sig.getBytes("UTF-8"))
     val key = "part_edges_" + md.take(8).map("%02x".format(_)).mkString
     val cacheRoot = new java.io.File(
@@ -907,10 +929,10 @@ object SparkEntry {
   // Whichever leaf of a group runs first on a session pays for the build
   // (for key papers about two dozen jobs; for the universe the lineitem
   // self-join + distinct with `edges` and `papers` materialized eagerly,
-  // and the first feature leaf also pays for `features`, about two dozen
-  // shuffle stages); the others only select from, aggregate, round or
-  // score the materialized tables. Results do not depend on the order
-  // the leaves run in.
+  // and the first feature leaf also pays for `features`, about 15 jobs:
+  // five shuffles, the rest broadcasts); the others only select from,
+  // aggregate, round or score the materialized tables. Results do not
+  // depend on the order the leaves run in.
   //
   // The memo is IN-SESSION: its tables are eager localCheckpoint blocks
   // on the session's SparkContext. No cache()/persist(): the

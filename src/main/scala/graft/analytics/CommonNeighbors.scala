@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Common-neighbor metrics for vertex pairs: co-citation (shared
@@ -25,39 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object CommonNeighbors {
 
-  /** For each (a, b) in `pairs`, metrics over shared IN-neighbors of a and
-    * b in `edges(src, dst)` (co-citation when edges = citations).
-    *
-    * When `multisetEdges` is given (edge rows WITH author-fanout
-    * duplicates), cosine denominators use the duplicate-bearing neighbor
-    * LIST lengths — exactly the reference, whose `edges_by_cited` /
-    * `edges_by_citing` lists (extract_link_features.py:30-31) keep one
-    * entry per (pair, author) row while raw/jaccard dedup through sets
-    * (compute_metrics, :189-201).
-    */
-  def coCitation(edges: DataFrame, pairs: DataFrame, multisetEdges: DataFrame = null): DataFrame =
-    metrics(
-      edges.select(col("dst").as("node"), col("src").as("nbr")), pairs,
-      if (multisetEdges == null) null
-      else multisetEdges.select(col("dst").as("node"), col("src").as("nbr")))
-
-  /** Shared OUT-neighbor metrics (bibliographic coupling). */
-  def bibCoupling(edges: DataFrame, pairs: DataFrame, multisetEdges: DataFrame = null): DataFrame =
-    metrics(
-      edges.select(col("src").as("node"), col("dst").as("nbr")), pairs,
-      if (multisetEdges == null) null
-      else multisetEdges.select(col("src").as("node"), col("dst").as("nbr")))
-
   /** adjacency(node, nbr) + pairs(a, b) -> (a, b, raw, cosine, jaccard).
-    * `multisetAdjacency`, when non-null, supplies the duplicate-bearing
-    * rows whose per-node COUNT is the cosine denominator (reference list
-    * lengths); raw and jaccard always use the deduped set semantics.
+    * Co-citation is the (dst, src) adjacency of a citation table,
+    * bibliographic coupling the (src, dst) one.
     */
-  def metrics(adjacency: DataFrame, pairs: DataFrame, multisetAdjacency: DataFrame = null): DataFrame = {
+  def metrics(adjacency: DataFrame, pairs: DataFrame): DataFrame = {
     val adj = adjacency.distinct()
-    val degSource = if (multisetAdjacency == null) adj else multisetAdjacency
-    val deg = degSource.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val setDeg = adj.groupBy(col("node")).agg(count(lit(1)).as("sdeg"))
+    val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
     // raw = |N(a) ∩ N(b)|: join adjacency to itself through the pair list.
     val aSide = adj.select(col("node").as("a"), col("nbr"))
@@ -68,33 +42,28 @@ object CommonNeighbors {
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("raw"))
 
-    val base = pairs
+    pairs
       .join(raw, Seq("a", "b"), "left")
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), Seq("a"), "left")
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), Seq("b"), "left")
-    // set-cardinality degrees for the jaccard union; identical to deg when
-    // no multiset adjacency was supplied (skip the two extra joins then)
-    val withSet =
-      if (multisetAdjacency == null)
-        base.withColumn("sdeg_a", col("deg_a")).withColumn("sdeg_b", col("deg_b"))
-      else base
-        .join(setDeg.withColumnRenamed("node", "a").withColumnRenamed("sdeg", "sdeg_a"), Seq("a"), "left")
-        .join(setDeg.withColumnRenamed("node", "b").withColumnRenamed("sdeg", "sdeg_b"), Seq("b"), "left")
-    withSet
-      .select(
-        col("a"),
-        col("b"),
-        coalesce(col("raw"), lit(0L)).as("raw"),
-        when(coalesce(col("deg_a"), lit(0L)) <= 0 || coalesce(col("deg_b"), lit(0L)) <= 0, lit(0.0))
-          .otherwise(coalesce(col("raw"), lit(0L)) / sqrt(col("deg_a") * col("deg_b")))
-          .as("cosine"),
-        when(
-          coalesce(col("sdeg_a"), lit(0L)) + coalesce(col("sdeg_b"), lit(0L)) - coalesce(col("raw"), lit(0L)) <= 0,
-          lit(0.0)
-        ).otherwise(
-          coalesce(col("raw"), lit(0L)) /
-            (coalesce(col("sdeg_a"), lit(0L)) + coalesce(col("sdeg_b"), lit(0L)) - coalesce(col("raw"), lit(0L)))
-        ).as("jaccard")
-      )
+      .select(Seq(col("a"), col("b")) ++
+        scores(col("raw"), col("deg_a"), col("deg_b"), col("deg_a"), col("deg_b"), ""): _*)
+  }
+
+  /** raw, cosine and jaccard (each name followed by `suffix`) from a
+    * pair's shared-neighbor count and its endpoints' degrees, any of them
+    * null when absent. The cosine takes list lengths `degA`/`degB`, the
+    * jaccard union the set sizes `setDegA`/`setDegB`: they differ where
+    * the lists keep duplicates (LinkFeatures' author fan-out).
+    */
+  def scores(raw: Column, degA: Column, degB: Column, setDegA: Column, setDegB: Column,
+             suffix: String): Seq[Column] = {
+    val r = coalesce(raw, lit(0L))
+    val union = coalesce(setDegA, lit(0L)) + coalesce(setDegB, lit(0L)) - r
+    Seq(
+      r.as(s"raw$suffix"),
+      when(coalesce(degA, lit(0L)) <= 0 || coalesce(degB, lit(0L)) <= 0, lit(0.0))
+        .otherwise(r / sqrt(degA * degB)).as(s"cosine$suffix"),
+      when(union <= 0, lit(0.0)).otherwise(r / union).as(s"jaccard$suffix"))
   }
 }

@@ -19,14 +19,18 @@ import org.apache.spark.sql.functions._
   * Missing values stay NULL here (the reference carries np.nan); the
   * scorer (LinkProb) applies the -2 imputation.
   *
-  * Scale: everything is joins + aggregations on the edge key — feature
-  * blocks compute per DISTINCT (citing, cited) pair and join back to the
-  * (possibly author-multiplied) edge rows at the end, so an author fanout
-  * never re-computes set intersections. The neighbor-set metrics reuse the
-  * CommonNeighbors join plan (never collected adjacency), self-cite is an
-  * inverted-index style equi join on (paperID, authorID), and the series
-  * features ride the gap-filled series table (one groupBy over citation
-  * events).
+  * Plan (LMFAO-style shared aggregates, *A Layered Aggregate Engine for
+  * Analytics Workloads*, SIGMOD 2019): every feature is computed once per
+  * DISTINCT (citing, cited) pair, and the (possibly author-multiplied)
+  * edge rows join back at the end. One union-aggregate over the edge rows,
+  * the pairs and the author rows gives every per-paper count; one join of
+  * the pairs with a kind-tagged neighbor table and one groupBy(a, b) give
+  * both shared-neighbor counts; self-cite keeps its own author join
+  * (`authorID` need not have the paper ids' type, and a union would cast
+  * it). Join order: the (a, b)-keyed blocks, then every a-side per-paper
+  * join, then every b-side one, then the edge rows. Joins on one key keep
+  * its partitioning, so the wide pair rows shuffle once per key;
+  * alternating a- and b-side joins would shuffle them at every switch.
   */
 object LinkFeatures {
 
@@ -61,84 +65,84 @@ object LinkFeatures {
       embeddings: DataFrame,
       citationEvents: DataFrame
   ): DataFrame = {
+    val keys = Seq("a", "b")
     val pairs = edges.select(col("citingpaperID").as("a"), col("citedpaperID").as("b")).distinct()
 
-    // --- neighbor-set metrics (in = cocitation, out = bibcoupling). The
-    // reference's neighbor lists keep author-fanout duplicates
-    // (extract_link_features.py:30-31 group the raw edges.csv rows), so
-    // cosine denominators use the duplicate-bearing list lengths while
-    // raw/jaccard dedup through sets — pass both edge forms down. --------
-    val eMulti = edges.select(col("citingpaperID").as("src"), col("citedpaperID").as("dst"))
-    val e = eMulti.distinct()
-    val coc = CommonNeighbors.coCitation(e, pairs, eMulti)
-      .withColumnsRenamed(Map(
-        "raw" -> "raw_cocitation", "cosine" -> "cosine_cocitation", "jaccard" -> "jaccard_cocitation"))
-    val bib = CommonNeighbors.bibCoupling(e, pairs, eMulti)
-      .withColumnsRenamed(Map(
-        "raw" -> "raw_bibcoupling", "cosine" -> "cosine_bibcoupling", "jaccard" -> "jaccard_bibcoupling"))
+    // --- per-paper counts, null where a paper has none. The reference's
+    // neighbor lists keep author-fanout duplicates (extract_link_features.py
+    // :30-31), so cosine denominators count edge rows while raw and jaccard
+    // use sets (:189-201); self-cite reads only whether `auth` is null. -----
+    val perPaper = edges.select(col("citedpaperID").as("paperID"), lit(0).as("kind"))
+      .unionAll(edges.select(col("citingpaperID").as("paperID"), lit(1).as("kind")))
+      .unionAll(pairs.select(col("b").as("paperID"), lit(2).as("kind")))
+      .unionAll(pairs.select(col("a").as("paperID"), lit(3).as("kind")))
+      .unionAll(paperAuthors.select(col("paperID"), lit(4).as("kind")))
+      .groupBy(col("paperID"))
+      .agg(
+        sum(when(col("kind") === 0, 1L)).as("deg_in"),
+        sum(when(col("kind") === 1, 1L)).as("deg_out"),
+        sum(when(col("kind") === 2, 1L)).as("sdeg_in"),
+        sum(when(col("kind") === 3, 1L)).as("sdeg_out"),
+        sum(when(col("kind") === 4, 1L)).as("auth"))
 
-    // --- self-cite: |authors(citing) ∩ authors(cited)|, null if either
-    // side has no author rows (reference `if citing_authors and
-    // cited_authors else None`) ------------------------------------------
-    val pa = paperAuthors.select(col("paperID"), col("authorID")).distinct()
-    val nAuth = pa.groupBy("paperID").agg(count(lit(1)).as("n_auth"))
-    val interAuth = pairs
-      .join(pa.select(col("paperID").as("a"), col("authorID")), "a")
-      .join(pa.select(col("paperID").as("b"), col("authorID")), Seq("b", "authorID"))
+    // --- shared in-neighbors (kind 0: co-citation) and out-neighbors
+    // (kind 1: bibliographic coupling) of each pair -------------------------
+    val member = pairs.select(col("b").as("node"), col("a").as("nbr"), lit(0).as("kind"))
+      .unionAll(pairs.select(col("a").as("node"), col("b").as("nbr"), lit(1).as("kind")))
+    val shared = pairs
+      .join(member.withColumnRenamed("node", "a"), "a")
+      .join(member.withColumnRenamed("node", "b"), Seq("b", "nbr", "kind"))
+      .groupBy(col("a"), col("b"))
+      .agg(count(when(col("kind") === 0, true)).as("raw_in"),
+        count(when(col("kind") === 1, true)).as("raw_out"))
+
+    // --- self-cite: |authors(citing) ∩ authors(cited)| --------------------
+    val authorSet = paperAuthors.select(col("paperID"), col("authorID")).distinct()
+    val common = pairs
+      .join(authorSet.select(col("paperID").as("a"), col("authorID")), "a")
+      .join(authorSet.select(col("paperID").as("b"), col("authorID")), Seq("b", "authorID"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_common"))
-    val selfCite = pairs
-      .join(nAuth.select(col("paperID").as("a"), col("n_auth").as("na")), Seq("a"), "left")
-      .join(nAuth.select(col("paperID").as("b"), col("n_auth").as("nb")), Seq("b"), "left")
-      .join(interAuth, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        when(col("na").isNull || col("nb").isNull, lit(null).cast("long"))
-          .otherwise(coalesce(col("n_common"), lit(0L))).as("self_cite"))
 
-    // --- per-paper scalars ----------------------------------------------
+    // --- the (a, b)-keyed blocks, then the 6 correlation features off the
+    // gap-filled series (all null without citation events) ----------------
+    val events = !citationEvents.isEmpty
+    val narrow = pairs.join(shared, keys, "left").join(common, keys, "left")
+    val withCorr =
+      if (!events) narrow
+      else narrow.join(
+        TimeSeries.edgeFeatures(pairs.select(col("a").as("citing"), col("b").as("cited")),
+          TimeSeries.gapFilledSeries(citationEvents))
+          .withColumnsRenamed(Map("citing" -> "a", "cited" -> "b")),
+        keys, "left")
+    val noSeries = TimeSeries.featuresUdf(lit(0), lit(-1), lit(0), array().cast("array<int>"),
+      lit(0), lit(-1), lit(0), array().cast("array<int>"))
+    val corr = FeatureNames.take(6).map(c => if (events) col(c) else noSeries.getField(c).as(c))
+
+    // --- per-paper joins, all a-side ones, then all b-side ones -----------
     val pSide = papers.select(col("paperID"), col("year"), col("citationCount"))
-    val scalars = pairs
-      .join(pSide.select(col("paperID").as("a"), col("year").as("y_a"),
-        col("citationCount").as("citing_paper_citationcount")), Seq("a"), "left")
-      .join(pSide.select(col("paperID").as("b"), col("year").as("y_b"),
-        col("citationCount").as("cited_paper_citationcount")), Seq("b"), "left")
-      .select(col("a"), col("b"),
+    val emb = embeddings.select(col("paperID"), col("embedding"))
+    def side(df: DataFrame, k: String): DataFrame = df
+      .join(pSide.select(col("paperID").as(k), col("year").as(s"y_$k"),
+        col("citationCount").as(s"cc_$k")), Seq(k), "left")
+      .join(emb.select(col("paperID").as(k), col("embedding").as(s"e_$k")), Seq(k), "left")
+      .join(perPaper.select(perPaper.columns.toSeq.map(c =>
+        col(c).as(if (c == "paperID") k else s"${c}_$k")): _*), Seq(k), "left")
+    val perPair = side(side(withCorr, "a"), "b")
+      .select(Seq(col("a"), col("b")) ++ corr ++ Seq(
         when(col("y_a").isNotNull && col("y_b").isNotNull && col("y_a") >= col("y_b"),
           col("y_a") - col("y_b")).otherwise(lit(null).cast("long")).as("year_diff"),
-        col("citing_paper_citationcount"), col("cited_paper_citationcount"))
-
-    // --- similarity: cosine of the two doc embeddings --------------------
-    val emb = embeddings.select(col("paperID"), col("embedding"))
-    val sim = pairs
-      .join(emb.select(col("paperID").as("a"), col("embedding").as("e_a")), Seq("a"), "left")
-      .join(emb.select(col("paperID").as("b"), col("embedding").as("e_b")), Seq("b"), "left")
-      .select(col("a"), col("b"),
+        col("cc_a").as("citing_paper_citationcount"), col("cc_b").as("cited_paper_citationcount"),
+        // null if either side has no author rows (reference `if
+        // citing_authors and cited_authors else None`)
+        when(col("auth_a").isNull || col("auth_b").isNull, lit(null).cast("long"))
+          .otherwise(coalesce(col("n_common"), lit(0L))).as("self_cite"),
         when(col("e_a").isNull || col("e_b").isNull, lit(null).cast("double"))
-          .otherwise(Embedding.cosine(col("e_a"), col("e_b"))).as("similarity"))
-
-    // --- 6 correlation features off the gap-filled series ----------------
-    val corr: DataFrame =
-      if (citationEvents.isEmpty) {
-        pairs.select(col("a"), col("b"),
-          TimeSeries.featuresUdf(lit(0), lit(-1), lit(0), array().cast("array<int>"),
-            lit(0), lit(-1), lit(0), array().cast("array<int>")).as("f"))
-          .select(col("a"), col("b"), col("f.*"))
-      } else {
-        val series = TimeSeries.gapFilledSeries(citationEvents)
-        TimeSeries.edgeFeatures(
-          pairs.select(col("a").as("citing"), col("b").as("cited")), series)
-          .withColumnRenamed("citing", "a").withColumnRenamed("cited", "b")
-      }
-
-    // --- final assembly: join blocks on the pair key, then re-attach the
-    // author-multiplied edge rows ------------------------------------------
-    val perPair = pairs
-      .join(corr, Seq("a", "b"), "left")
-      .join(scalars, Seq("a", "b"), "left")
-      .join(selfCite, Seq("a", "b"), "left")
-      .join(sim, Seq("a", "b"), "left")
-      .join(coc, Seq("a", "b"), "left")
-      .join(bib, Seq("a", "b"), "left")
+          .otherwise(Embedding.cosine(col("e_a"), col("e_b"))).as("similarity")) ++
+        CommonNeighbors.scores(col("raw_in"), col("deg_in_a"), col("deg_in_b"),
+          col("sdeg_in_a"), col("sdeg_in_b"), "_cocitation") ++
+        CommonNeighbors.scores(col("raw_out"), col("deg_out_a"), col("deg_out_b"),
+          col("sdeg_out_a"), col("sdeg_out_b"), "_bibcoupling"): _*)
 
     edges
       .join(perPair,

@@ -28,6 +28,10 @@ final case class PageRankConfig(
     checkpoint: CheckpointPolicy = LocalOnly()
 )
 
+/** A PageRank run's outcome. `iterations` is the absolute superstep the
+  * ranks are at, counted from step 0 across any interruption; `deltas`
+  * holds the L1 deltas of the rounds this call ran: after a resume from
+  * step k, `deltas.size == iterations - k` and `deltas(i)` is step k+i+1's. */
 final case class PageRankResult(
     ranks: DataFrame, // (id: long, rank: double), sum(rank) == 1
     iterations: Int,

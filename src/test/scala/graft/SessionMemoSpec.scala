@@ -12,6 +12,9 @@ abstract class SessionMemoSpec(group: String, builder: String, readers: Seq[Stri
   private val dir = "/root/testdata/sf0.001"
   private val leaves = builder +: readers
 
+  /** Declared query `q` over the spec's sf dir on session `s`. */
+  protected def run(s: SparkSession, q: String): (Seq[Row], Int) = runQuery(s, dir, q)
+
   private def runAll(s: SparkSession, order: Seq[String]): Map[String, Seq[Row]] =
     order.map(q => q -> runQuery(s, dir, q)._1).toMap
 
@@ -45,7 +48,16 @@ abstract class SessionMemoSpec(group: String, builder: String, readers: Seq[Stri
 
 /** `all_features` behind q_link_features, q_link_prob and q_link_prob_tree. */
 class LinkUniverseSpec extends SessionMemoSpec("link", "q_link_features",
-  Seq("q_link_prob", "q_link_prob_tree"), "score", "universe")
+  Seq("q_link_prob", "q_link_prob_tree"), "score", "universe") {
+
+  test("all_features over a built universe runs at most 20 jobs") {
+    val s = spark.newSession()
+    run(s, "q_export_graph") // builds the universe's edges and papers
+    val (rows, jobs) = run(s, "q_link_features")
+    assert(rows.nonEmpty)
+    assert(jobs <= 20, s"q_link_features ran $jobs jobs to build and read all_features")
+  }
+}
 
 /** The isKeyPaper product behind q_key_papers and q_key_papers_dist. */
 class KeyPapersMemoSpec extends SessionMemoSpec("key-paper", "q_key_papers",

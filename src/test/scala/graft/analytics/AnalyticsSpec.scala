@@ -50,7 +50,7 @@ class AnalyticsSpec extends SparkSpec {
     // in-neighbors: N(1)={3,4,5}, N(2)={4,5,6,7}
     val edges = Seq((3L, 1L), (4L, 1L), (5L, 1L), (4L, 2L), (5L, 2L), (6L, 2L), (7L, 2L)).toDF("src", "dst")
     val pairs = Seq((1L, 2L)).toDF("a", "b")
-    val r = CommonNeighbors.coCitation(edges, pairs).collect().head
+    val r = CommonNeighbors.metrics(edges.select($"dst".as("node"), $"src".as("nbr")), pairs).collect().head
     assert(r.getAs[Long]("raw") == 2L)
     assert(math.abs(r.getAs[Double]("cosine") - 2.0 / math.sqrt(12)) < 1e-12)
     assert(math.abs(r.getAs[Double]("jaccard") - 2.0 / 5.0) < 1e-12)
@@ -59,7 +59,7 @@ class AnalyticsSpec extends SparkSpec {
   test("common neighbors: empty side -> zeros") {
     val edges = Seq((3L, 1L)).toDF("src", "dst")
     val pairs = Seq((1L, 99L)).toDF("a", "b")
-    val r = CommonNeighbors.coCitation(edges, pairs).collect().head
+    val r = CommonNeighbors.metrics(edges.select($"dst".as("node"), $"src".as("nbr")), pairs).collect().head
     assert(r.getAs[Long]("raw") == 0L)
     assert(r.getAs[Double]("cosine") == 0.0)
     assert(r.getAs[Double]("jaccard") == 0.0)

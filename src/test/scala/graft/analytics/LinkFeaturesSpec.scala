@@ -161,20 +161,6 @@ class EmbeddingSpec extends SparkSpec {
     assert(math.abs(out(2L)(1) - 2 * out(1L)(1)) < 1e-12)
   }
 
-  test("multiset degrees: cosine uses duplicate-bearing list lengths, jaccard stays set-based") {
-    // adj (dedup): 1 -> {10, 11}; 2 -> {10, 12}; multiset repeats 10 for node 1
-    val adj = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L)).toDF("node", "nbr")
-    val multi = Seq((1L, 10L), (1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L)).toDF("node", "nbr")
-    val pairs = Seq((1L, 2L)).toDF("a", "b")
-    val m = CommonNeighbors.metrics(adj, pairs, multi).collect().head
-    assert(m.getAs[Long]("raw") == 1L)
-    assert(math.abs(m.getAs[Double]("cosine") - 1.0 / math.sqrt(3.0 * 2.0)) < 1e-12)
-    assert(math.abs(m.getAs[Double]("jaccard") - 1.0 / 3.0) < 1e-12)
-    // without a multiset side the old set semantics hold
-    val s = CommonNeighbors.metrics(adj, pairs).collect().head
-    assert(math.abs(s.getAs[Double]("cosine") - 0.5) < 1e-12)
-  }
-
   test("author fanout feeds cosine denominators end-to-end (extract_link_features.py:30-31)") {
     // pair (3,1) written by two authors -> cited 1's neighbor LIST is
     // [2,3,3]; reference cosine for edge (2,1) divides by sqrt(1*3)
@@ -184,11 +170,17 @@ class EmbeddingSpec extends SparkSpec {
       .toDF("paperID", "year", "citationCount")
     val pa = edges.select(col("citingpaperID").as("paperID"), col("authorID"))
     val emb = papers.select(col("paperID"), array(lit(1.0), lit(0.0)).as("embedding"))
-    val out = LinkFeatures.allFeatures(edges, papers, pa, emb, spark.emptyDataFrame.select())
-      .filter(col("citingpaperID") === 2 && col("citedpaperID") === 1)
-      .collect().head
+    val rows = LinkFeatures.allFeatures(edges, papers, pa, emb, spark.emptyDataFrame.select())
+      .collect().map(r => (r.getAs[Long]("citingpaperID"), r.getAs[Long]("citedpaperID")) -> r).toMap
+    val out = rows((2L, 1L))
     assert(math.abs(out.getAs[Double]("cosine_cocitation") - 1.0 / math.sqrt(1.0 * 3.0)) < 1e-12)
     assert(math.abs(out.getAs[Double]("jaccard_cocitation") - 0.5) < 1e-12) // sets: {3} vs {2,3}
+    // the out-lists too: citing 3's list is [1,1,2], a set of two; edge
+    // (3,2) shares out-neighbor 1 with cited 2's list [1]
+    val bib = rows((3L, 2L))
+    assert(bib.getAs[Long]("raw_bibcoupling") == 1L)
+    assert(math.abs(bib.getAs[Double]("cosine_bibcoupling") - 1.0 / math.sqrt(3.0 * 1.0)) < 1e-12)
+    assert(math.abs(bib.getAs[Double]("jaccard_bibcoupling") - 0.5) < 1e-12) // sets: {1,2} vs {1}
   }
 
   test("cosine: NaN on zero vectors (reference cos_sim), 1 on parallel, opposite sign") {

@@ -107,6 +107,9 @@ class CsrPageRankSpec extends SparkSpec {
       // the deltas are summed in partition order: the same doubles every run
       assert(second.deltas == first.deltas, "two uninterrupted runs report different deltas")
       assert(resumedRun.deltas == first.deltas.drop(5), "the resumed run reports different deltas")
+      // deltas hold the rounds the resume ran; iterations is the absolute step
+      assert(resumedRun.iterations == 10 && resumedRun.deltas.size == 10 - 5)
+      assert(coldRun.iterations == 10 && coldRun.deltas.size == 10 - 5)
     }
   }
 
