@@ -4,10 +4,12 @@ import graft.analytics._
 import graft.graph._
 import graft.ingest.Edge
 import graft.textops._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import scala.collection.mutable
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops), with DuckDB-equivalent oracle
@@ -20,24 +22,33 @@ import org.apache.spark.sql.types.StructType
   */
 object SparkEntry {
 
-  private val schemas = scala.collection.mutable.Map.empty[String, ((String, Map[String, String]), StructType)]
+  /** `make`'s value for `key`, kept with the input state `sig` it was made
+    * at: a later call at the same state gets the kept value, a call at
+    * another state makes it again and replaces it, so `m` holds one entry
+    * per key. A None state (an input off the local file system) keeps
+    * nothing. */
+  private def kept[K, V](m: mutable.Map[K, (Any, V)], key: K, sig: Option[Any])(make: => V): V =
+    m.synchronized {
+      m.get(key).collect { case (at, v) if sig.contains(at) => v }.getOrElse {
+        val v = make
+        sig.foreach(at => m(key) = (at, v))
+        v
+      }
+    }
+
+  private val schemas = mutable.Map.empty[String, (Any, StructType)]
 
   /** Input table `name` of the sf dir, read with the schema inferred for
     * the same file state and session settings (inference runs a job to
-    * read a footer, tens of ms warm). Key: `fileSig` (names, sizes, mtimes:
-    * a rewritten file is inferred again) and every session setting
-    * (`spark.sql.parquet.binaryAsString` and others change the inferred
-    * schema); one entry per path keeps the cache bounded. */
+    * read a footer, tens of ms warm). Key: the path, at its `fileSig`
+    * (names, sizes, mtimes: a rewritten file is inferred again) and every
+    * session setting (`spark.sql.parquet.binaryAsString` and others change
+    * the inferred schema). JVM-wide: a new session over the same files
+    * reuses the schema. */
   private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = fileSig(path).map(sig => (sig, spark.conf.getAll))
-    schemas.synchronized(key.flatMap(k => schemas.get(path).filter(_._1 == k))) match {
-      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach(k => schemas.synchronized(schemas(path) = (k, df.schema)))
-        df
-    }
+    val schema = kept(schemas, path, fileSig(path).map((_, spark.conf.getAll)))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Canonical path plus the name, size and mtime of every file under it;
@@ -52,69 +63,19 @@ object SparkEntry {
 
   /** Co-order part graph: undirected edge (a < b) when two parts appear
     * in the same order — the testdata stand-in for the citation edge
-    * derivation (reference J1, create_field/graph.py:28-33).
+    * derivation (reference J1, create_field/graph.py:28-33). One
+    * materialized Dataset per session and lineitem state (`memo`), so the
+    * graph leaves share it and its grids (`GridLoop.withGrid`).
     */
-  private def partEdges(spark: SparkSession, dir: String): DataFrame = {
-    def derive = {
-      val li = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")).distinct()
-      li.select(col("l_orderkey"), col("l_partkey").as("a"))
-        .join(li.select(col("l_orderkey"), col("l_partkey").as("b")), "l_orderkey")
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-      }
-    // Materialize once per input-table state (VERDICT r4 #2): the 5
-    // iterative graph queries all consume this same derivation, and the
-    // lineitem self-join + distinct dominated the bench sweep when run
-    // 5×. The cache key hashes the lineitem file set (names + sizes +
-    // mtimes), so regenerated testdata invalidates naturally; the
-    // derivation itself is deterministic, so the parquet round-trip is
-    // value-identical and every downstream oracle is unchanged.
-    //
-    // Cross-process safety (ADVICE r5): the cache lives in a PER-USER
-    // directory (no world-shared path to squat on), writers build into a
-    // unique temp dir and publish with an atomic same-filesystem rename,
-    // and an OS file lock serializes concurrent builders (e.g. bench and
-    // verify JVMs racing on a cold cache) — a reader can never observe a
-    // half-written directory.
-    val sig = fileSig(s"$dir/lineitem.parquet") match { case Some(sig) => sig; case None => return derive }
-    val md = java.security.MessageDigest.getInstance("MD5").digest(sig.getBytes("UTF-8"))
-    val key = "part_edges_" + md.take(8).map("%02x".format(_)).mkString
-    val cacheRoot = new java.io.File(
-      new java.io.File(System.getProperty("java.io.tmpdir", "/tmp")),
-      s"graft-${System.getProperty("user.name", "anon")}")
-    cacheRoot.mkdirs()
-    val dest = new java.io.File(cacheRoot, key)
-    def published = new java.io.File(dest, "_SUCCESS").exists()
-    if (!published) this.synchronized { // same-JVM callers serialize here
-      // (two threads taking the OS lock below would instead throw
-      // OverlappingFileLockException)
-      val lockPath = new java.io.File(cacheRoot, key + ".lock").toPath
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-      val lock = ch.lock() // blocks peer JVMs
-      try {
-        if (!published) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          // a dest WITHOUT _SUCCESS is a half-written leftover (e.g. a
-          // writer killed mid-publish): clear it under the lock, or the
-          // rename below fails on every future cold call — a permanently
-          // poisoned cache entry
-          if (dest.exists()) rm(dest)
-          val tmp = new java.io.File(cacheRoot, s"$key.tmp-${java.util.UUID.randomUUID()}")
-          derive.write.mode("overwrite").parquet(tmp.getPath)
-          if (!tmp.renameTo(dest)) {
-            // lost a race despite the lock: keep the winner, drop our
-            // build; fail loudly if neither exists
-            rm(tmp)
-            require(published, s"part-edges cache publish failed for $dest")
-          }
-        }
-      } finally { lock.release(); ch.close() }
-    }
-    spark.read.parquet(dest.getPath)
+  private def partEdges(s: SparkSession, d: String): Dataset[Edge] = memo(s, "part_edges", d, Seq("lineitem")) {
+    import s.implicits._
+    val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey")).distinct()
+    li.select(col("l_orderkey"), col("l_partkey").as("a"))
+      .join(li.select(col("l_orderkey"), col("l_partkey").as("b")), "l_orderkey")
+      .filter(col("a") < col("b"))
+      .select(col("a").as("src"), col("b").as("dst"))
+      .distinct()
+      .as[Edge].localCheckpoint(true)
   }
 
   /** Flagship: PageRank over the derived co-order part graph (sf0.001),
@@ -122,10 +83,7 @@ object SparkEntry {
     * derivation + the iterative engine end-to-end.
     */
   def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val edges = partEdges(spark, "/root/testdata/sf0.001")
-      .select(col("a").as("src"), col("b").as("dst")).as[Edge]
-    val r = PageRank.run(edges, PageRankConfig(tol = 1e-6, maxIter = 60))
+    val r = PageRank.run(partEdges(spark, "/root/testdata/sf0.001"), PageRankConfig(tol = 1e-6, maxIter = 60))
     r.ranks.orderBy(desc("rank"), col("id")).limit(10)
   }
 
@@ -271,40 +229,24 @@ object SparkEntry {
           round(col("cosine"), 6).as("cosine"), round(col("jaccard"), 6).as("jaccard"))
     }),
     // --- triangle count ------------------------------------------------------------------------
-    "q_triangle_count" -> ((s, d) => {
-      import s.implicits._
-      val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
+    "q_triangle_count" -> ((s, d) =>
       // counted on the part graph's undirected CSR grid by sorted
       // successor-list intersection, listing no wedge (TriangleCount.count)
-      TriangleCount.countDf(e)
-    }),
+      TriangleCount.countDf(partEdges(s, d))),
     // --- connected components (exact SQL oracle via recursive closure) --------------------------
-    "q_cc_parts" -> ((s, d) => {
-      import s.implicits._
-      val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
-      ConnectedComponents.run(e).components
-        .select(col("id").cast("long").as("id"), col("component").cast("long").as("component"))
-    }),
+    "q_cc_parts" -> ((s, d) =>
+      ConnectedComponents.run(partEdges(s, d)).components
+        .select(col("id").cast("long").as("id"), col("component").cast("long").as("component"))),
     // --- PageRank (oracle: 20 unrolled Jacobi iterations in SQL) ----------------------------------
-    "q_pagerank_parts" -> ((s, d) => {
-      import s.implicits._
-      val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
-      PageRank.run(e, PageRankConfig(tol = 0.0, maxIter = 20)).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank"))
-    }),
+    "q_pagerank_parts" -> ((s, d) =>
+      PageRank.run(partEdges(s, d), PageRankConfig(tol = 0.0, maxIter = 20)).ranks
+        .select(col("id"), round(col("rank"), 6).as("rank"))),
     // --- CSR-block PageRank (scale path; same oracle semantics) -----------------------------------
-    "q_pagerank_csr" -> ((s, d) => {
-      import s.implicits._
-      val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
-      CsrPageRank.run(e, PageRankConfig(tol = 0.0, maxIter = 20)).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank"))
-    }),
+    "q_pagerank_csr" -> ((s, d) =>
+      CsrPageRank.run(partEdges(s, d), PageRankConfig(tol = 0.0, maxIter = 20)).ranks
+        .select(col("id"), round(col("rank"), 6).as("rank"))),
     // --- label propagation (oracle: 10 unrolled sync votes in SQL) --------------------------------
-    "q_lpa_parts" -> ((s, d) => {
-      import s.implicits._
-      val e = partEdges(s, d).select(col("a").as("src"), col("b").as("dst")).as[Edge]
-      LabelPropagation.run(e, maxIter = 10).labels
-    }),
+    "q_lpa_parts" -> ((s, d) => LabelPropagation.run(partEdges(s, d), maxIter = 10).labels),
     // --- exact dedup ---------------------------------------------------------------------------------
     "q_dedup_exact" -> ((s, d) => Dedup.exact(t(s, d, "documents"))),
     // --- n-gram jaccard near-dup ------------------------------------------------------------------------
@@ -889,7 +831,7 @@ object SparkEntry {
     * to exercise the 1/authorOrder fallback. Built once per session and
     * materialized (`memo` below).
     */
-  private def keyPapersResult(s: SparkSession, d: String): DataFrame = memo(s, "key_papers", d) {
+  private def keyPapersResult(s: SparkSession, d: String): DataFrame = memo(s, "key_papers", d, Seq("orders", "lineitem", "supplier")) {
     val papers = t(s, d, "orders").select(
       col("o_orderkey").as("paperID"), col("o_orderpriority").as("title"),
       year(col("o_orderdate")).cast("int").as("year"))
@@ -918,46 +860,52 @@ object SparkEntry {
         .localCheckpoint(true)
   }
 
-  // Shared sub-results, one per (session, name, canonical dir):
-  //  - "key_papers": the isKeyPaper product, read by q_key_papers (a
-  //    projection) and q_key_papers_dist (an aggregate), as the
-  //    reference's distribution step reads the table compute_key_papers
-  //    wrote;
-  //  - "link_universe": the LinkUniverse read by q_export_graph
-  //    (`edges`) and by q_link_features, q_link_prob and q_link_prob_tree
-  //    (`features`).
+  // Shared sub-results, one entry per (session, name, canonical dir),
+  // kept with the `fileSig` of every input table it reads (`kept`): a
+  // rewritten table makes the next call rebuild the entry and replace it.
+  //  - "part_edges" (lineitem): the part graph's Dataset[Edge], read by
+  //    the five graph leaves and `entry`. One object, so `GridLoop`
+  //    keeps its grids for all of them: CC, LPA and the triangle count
+  //    share the undirected grid, both PageRanks the directed one;
+  //  - "key_papers" (orders, lineitem, supplier): the isKeyPaper product,
+  //    read by q_key_papers (a projection) and q_key_papers_dist (an
+  //    aggregate), as the reference's distribution step reads the table
+  //    compute_key_papers wrote;
+  //  - "link_universe" (orders, lineitem): the LinkUniverse read by
+  //    q_export_graph (`edges`) and by q_link_features, q_link_prob and
+  //    q_link_prob_tree (`features`).
   // Whichever leaf of a group runs first on a session pays for the build
-  // (for key papers about two dozen jobs; for the universe the lineitem
-  // self-join + distinct with `edges` and `papers` materialized eagerly,
-  // and the first feature leaf also pays for `features`, about 15 jobs:
-  // five shuffles, the rest broadcasts); the others only select from,
-  // aggregate, round or score the materialized tables. Results do not
-  // depend on the order the leaves run in.
+  // (for the part graph the lineitem self-join + distinct; for key papers
+  // about two dozen jobs; for the universe the lineitem self-join +
+  // distinct with `edges` and `papers` materialized eagerly, and the
+  // first feature leaf also pays for `features`, about 15 jobs: five
+  // shuffles, the rest broadcasts); the others only read the
+  // materialized tables. Results do not depend on the order the leaves
+  // run in.
   //
   // The memo is IN-SESSION: its tables are eager localCheckpoint blocks
   // on the session's SparkContext. No cache()/persist(): the
   // CacheManager is shared by every session of a SparkContext, so a
   // cached plan would leak into sibling sessions. Every new session
   // computes them from the parquet inputs again, inside the first timed
-  // query that needs them. An entry is never released while the
-  // SparkContext lives: every value holds DataFrames that reference
-  // their session strongly, so the WeakHashMap's key never becomes
-  // weakly reachable and the entry (with its checkpoint blocks) stays
-  // until the JVM exits, even after the caller drops the session.
-  private val sessionMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[(String, String), AnyRef]]()
+  // query that needs them. There is no cross-JVM copy: the part graph is
+  // one self-join away from lineitem, and a file cache would need its own
+  // key, lock, publish protocol and eviction for a derivation a session
+  // runs once. An entry is never released while the SparkContext lives:
+  // every value holds DataFrames that reference their session strongly,
+  // so the WeakHashMap's key never becomes weakly reachable and the entry
+  // (with its checkpoint blocks) stays until the JVM exits, even after
+  // the caller drops the session.
+  private val sessionMemo = new java.util.WeakHashMap[SparkSession, mutable.Map[(String, String), (Any, AnyRef)]]()
 
-  private def memo[A <: AnyRef](s: SparkSession, name: String, d: String)(build: => A): A =
-    sessionMemo.synchronized {
-      var perSession = sessionMemo.get(s)
-      if (perSession == null) {
-        perSession = scala.collection.mutable.Map.empty
-        sessionMemo.put(s, perSession)
-      }
-      perSession.getOrElseUpdate((name, new java.io.File(d).getCanonicalPath), build).asInstanceOf[A]
-    }
+  private def memo[A <: AnyRef](s: SparkSession, name: String, d: String, tables: Seq[String])(build: => A): A = {
+    val entries = sessionMemo.synchronized(sessionMemo.computeIfAbsent(s, _ => mutable.Map.empty))
+    val sigs = tables.flatMap(n => fileSig(s"$d/$n.parquet"))
+    kept(entries, (name, new java.io.File(d).getCanonicalPath), Option.when(sigs.size == tables.size)(sigs))(build)
+      .asInstanceOf[A]
+  }
 
-  private def linkUniverse(s: SparkSession, d: String): LinkUniverse = memo(s, "link_universe", d) {
+  private def linkUniverse(s: SparkSession, d: String): LinkUniverse = memo(s, "link_universe", d, Seq("orders", "lineitem")) {
     val orders = t(s, d, "orders")
     val li = t(s, d, "lineitem").filter(col("l_partkey") <= 30)
       .select(col("l_orderkey"), col("l_partkey")).distinct()

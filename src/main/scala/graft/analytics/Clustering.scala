@@ -27,7 +27,7 @@ object Clustering {
   }
 
   /** Per-cluster roll-up: member count and summed weight
-    * (group_to_root.py:15-21).
+    * (group_to_root.py:15-21; SURVEY §3.3 and A2).
     */
   def rollUp(clustered: DataFrame, weightCol: String): DataFrame =
     clustered.groupBy(col("cluster"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Distribution validation stats over a probability-like column — the
   * reference's last pipeline stage (create_field/analyse_distribution.py:
   * 22-42): bucket ratios at {=0, (0,1), =1, >=0.5} plus mean/variance/
-  * median. Used as the engine's convergence/output sanity metrics.
+  * median (SURVEY §3.2 and A9). Used as the engine's convergence/output
+  * sanity metrics.
   */
 object Distribution {
 

@@ -96,7 +96,8 @@ object LinkProb {
     score(features, weights, bias)
       .select(col("citingpaperID"), col("citedpaperID"), col("authorID"), col("proba"))
 
-  /** Citation-context enrichment — the reference's update_links.py:68-78:
+  /** Citation-context enrichment — the reference's update_links.py:68-78
+    * (SURVEY §3.2, the stage after compute_link_prob):
     * per scored edge, attach the tab-joined citation contexts and rename
     * to the consumer schema (childrenID, parentID, extendsProb,
     * citationContext). `contexts` has one row per (citingpaperID,

@@ -244,6 +244,11 @@ object NameMatch {
       .select("id1", "id2", "name1", "name2", "lev_dis")
   }
 
+  /** The reference's author-match stage (match_author.py:235-294, SURVEY
+    * §3.1 with X2 and X3): length-blocked candidate pairs within
+    * normalized Levenshtein `maxLev`, kept when compare_name's similarity
+    * exceeds `minSim` (the rows of match.csv).
+    */
   def matchPairs(
       authors: DataFrame, // columns: id, name
       maxLev: Double = 0.1,

@@ -40,6 +40,9 @@ object ScholarNames {
     if (parts.length == 2) name else parts.head + " " + parts.last
   }
 
+  /** First `k` letters of the first name, then the last name: the
+    * reference's short lookup forms (extract_scholar.py:84-96, SURVEY X7).
+    * `shortNameCol` is its column form. */
   def shortName(name: String, k: Int): String = {
     val parts = name.trim.split("\\s+")
     parts.head.take(k) + " " + parts.last

@@ -68,10 +68,6 @@ object Sketches {
       .groupBy(col("bucket")).agg(max(col("rank")).as("r"))
   }
 
-  /** Merge shard register tables (sketch algebra: element-wise max). */
-  def hllMerge(shards: Seq[DataFrame]): DataFrame =
-    shards.reduce(_ unionAll _).groupBy(col("bucket")).agg(max(col("r")).as("r"))
-
   /** One-row summary from a register table:
     * (occupied, s_scaled = Σ 2^(53−M_j) over occupied registers as
     * BIGINT, estimate). Empty registers contribute 2^53 each to the

@@ -104,10 +104,6 @@ object TableUpsert {
     }
   }
 
-  /** Currently committed table version, if any (e.g. Some("v3")). */
-  def currentVersion(spark: SparkSession, tableDir: String): Option[String] =
-    readState(spark, tableDir).map(s => s"v${s.version}")
-
   /** The committed table contents — ONE parquet scan over every bucket's
     * committed version directory (None if nothing is committed yet).
     */

@@ -198,31 +198,4 @@ object Dedup {
     )
   }
 
-  /** SimHash near-dup pairs with Hamming distance <= maxHamming, found by
-    * chunk-banding the signature (pigeonhole: any pair within distance d
-    * shares at least one of d+1 chunks) then exact-verifying with
-    * bit_count(xor).
-    */
-  def simhashPairs(
-      docs: DataFrame, bits: Int = 32, maxHamming: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"
-  ): DataFrame = {
-    val chunks = maxHamming + 1
-    val chunkBits = math.max(1, bits / chunks)
-    val sig = simhash(docs, bits, idCol, textCol).localCheckpoint(true)
-    val banded = sig.select(
-      col("id"), col("simhash"),
-      posexplode(array((0 until chunks).map(cI =>
-        shiftright(col("simhash"), cI * chunkBits)
-          .bitwiseAND((1L << chunkBits) - 1)): _*)).as(Seq("chunk", "key"))
-    )
-    banded.select(col("id").as("a"), col("simhash").as("sh_a"), col("chunk"), col("key"))
-      .join(banded.select(col("id").as("b"), col("simhash").as("sh_b"), col("chunk"), col("key")),
-        Seq("chunk", "key"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
 }

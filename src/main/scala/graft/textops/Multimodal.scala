@@ -496,16 +496,4 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling plan for videos: every `everyMs` ms up to `maxFrames`
-    * timestamps — pure column math (the decode of each frame is the same
-    * stub seam).
-    */
-  def frameSamplePlan(features: DataFrame, everyMs: Long = 1000L, maxFrames: Int = 16): DataFrame =
-    features
-      .filter(col("kind") === "video")
-      .select(
-        col("media_id"),
-        explode(sequence(lit(0L),
-          least(col("duration_ms"), lit(everyMs * (maxFrames - 1))), lit(everyMs))).as("frame_ts_ms")
-      )
 }

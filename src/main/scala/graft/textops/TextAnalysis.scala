@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data pipelines: token counting, language
@@ -88,14 +88,4 @@ object TextAnalysis {
     aggregate(codes, lit(0L), (acc, c) => pmod(pmod(acc * 31, M) + c, M))
   }
 
-  /** Assemble the standard text-analysis columns onto a documents table. */
-  def analyze(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs
-      .withColumn("n_tokens_ws", wsTokenCount(t))
-      .withColumn("n_tokens_bpe", bpeTokenCount(t))
-      .withColumn("lang_id", languageId(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("fingerprint", fingerprint(t))
-  }
 }

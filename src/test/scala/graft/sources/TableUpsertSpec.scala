@@ -26,7 +26,7 @@ class TableUpsertSpec extends SparkSpec {
     val dir = freshDir()
     TableUpsert.upsert(spark, dir, Seq((1L, 1)).toDF("k", "n"), Seq("k"))
     TableUpsert.upsert(spark, dir, Seq((1L, 2)).toDF("k", "n"), Seq("k"))
-    assert(TableUpsert.currentVersion(spark, dir).contains("v2"))
+    assert(TableUpsert.readState(spark, dir).map(_.version).contains(2L))
     assert(TableUpsert.read(spark, dir).get.select("n").as[Int].collect().toSeq == Seq(2))
   }
 
@@ -36,11 +36,11 @@ class TableUpsertSpec extends SparkSpec {
     // simulate a torn v2 commit: staged data + claimed lock, pointer never moved
     Seq((1L, "torn")).toDF("k", "v").write.parquet(s"$dir/_staging_v2/__bucket=0")
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_lock_v2"))
-    assert(TableUpsert.currentVersion(spark, dir).contains("v1"))
+    assert(TableUpsert.readState(spark, dir).map(_.version).contains(1L))
     assert(TableUpsert.read(spark, dir).get.select("v").as[String].collect().toSeq == Seq("ok"))
     // the next successful upsert SKIPS the claimed number (lock v2 held)
     TableUpsert.upsert(spark, dir, Seq((2L, "x")).toDF("k", "v"), Seq("k"))
-    assert(TableUpsert.currentVersion(spark, dir).contains("v3"))
+    assert(TableUpsert.readState(spark, dir).map(_.version).contains(3L))
     val got = TableUpsert.read(spark, dir).get.as[(Long, String)].collect().sortBy(_._1)
     assert(got.toSeq == Seq((1L, "ok"), (2L, "x")))
   }
@@ -49,7 +49,7 @@ class TableUpsertSpec extends SparkSpec {
     val dir = freshDir()
     assert(TableUpsert.read(spark, dir).isEmpty)
     TableUpsert.upsert(spark, dir, Seq((9L, 9)).toDF("k", "n"), Seq("k"))
-    assert(TableUpsert.currentVersion(spark, dir).contains("v1"))
+    assert(TableUpsert.readState(spark, dir).map(_.version).contains(1L))
   }
 
   test("partition-scoped merge: untouched buckets' files are byte-identical across a commit") {

@@ -131,10 +131,9 @@ object LogisticTrainer {
   }
 
   /** Macro-F1 (threshold 0.5, mean of per-class F1) + ROC-AUC for scored
-    * rows. AUC is the rank statistic computed DISTRIBUTED: group by
-    * score, cumulative negative count below each group (one window over
-    * the score-sorted group table), ties get the 1/2 credit —
-    * no per-row collect.
+    * rows. AUC is the rank statistic over the score groups: one row per
+    * distinct score, collected in score order, each positive counting the
+    * negatives below its score and half the ties — no per-row collect.
     */
   def scoreMetrics(scored: DataFrame, probCol: String, labelCol: String): (Double, Double) = {
     val cls = scored.select(
@@ -150,19 +149,18 @@ object LogisticTrainer {
     }
     val macroF1 = (f1(1) + f1(0)) / 2.0
 
-    import org.apache.spark.sql.expressions.Window
     val grp = scored.groupBy(col(probCol).as("s")).agg(
       sum(col(labelCol).cast("long")).as("np"),
       sum(lit(1L) - col(labelCol).cast("long")).as("nn"))
-    val w = Window.orderBy(col("s")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = grp.select(col("np"), col("nn"),
-      (sum(col("nn")).over(w) - col("nn")).as("negBelow"))
-    val agg = ranked.agg(
-      sum(col("np") * (col("negBelow") + col("nn") / lit(2.0))).as("u"),
-      sum(col("np")).as("pos"), sum(col("nn")).as("neg")).first()
-    val auc =
-      if (agg.getLong(1) == 0L || agg.getLong(2) == 0L) 0.5
-      else agg.getDouble(0) / (agg.getLong(1).toDouble * agg.getLong(2).toDouble)
+      .orderBy(col("s")).select("np", "nn").collect()
+    var (u, pos, neg) = (0.0, 0L, 0L)
+    for (r <- grp) {
+      val (np, nn) = (r.getLong(0), r.getLong(1))
+      u += np * (neg + nn / 2.0)
+      pos += np
+      neg += nn
+    }
+    val auc = if (pos == 0L || neg == 0L) 0.5 else u / (pos.toDouble * neg.toDouble)
     (macroF1, auc)
   }
 
