@@ -876,7 +876,7 @@ object SparkEntry {
   //    q_link_prob_tree (`features`).
   // Whichever leaf of a group runs first on a session pays for the build
   // (for the part graph the lineitem self-join + distinct; for key papers
-  // about two dozen jobs; for the universe the lineitem self-join +
+  // about 20 jobs; for the universe the lineitem self-join +
   // distinct with `edges` and `papers` materialized eagerly, and the
   // first feature leaf also pays for `features`, about 15 jobs: five
   // shuffles, the rest broadcasts); the others only read the

@@ -1,21 +1,12 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.Encoders
 
 /** h-index with the reference's exact cutoff semantics: sort citations
   * descending, h = #{ i (0-based) : citations_i > i }
   * (create_field/extract_abstract.py:54-60; recomputed the same way at
   * update_papers.py:163-167 and merge_author.py:55-58).
-  *
-  * Two formulations:
-  *  - `perGroup`: window row_number + conditional count — fully
-  *    distributed, partitioned by the group key (the scale path);
-  *  - `HIndexAggregator`: a typed `Aggregator[Int, Array, Int]` for use in
-  *    `groupByKey.agg` where a single-pass typed aggregation is preferred.
   */
 object HIndex {
 
@@ -28,9 +19,8 @@ object HIndex {
     * (row_number) + re-aggregate form paid a full Tungsten sort of every
     * partition for a per-group ordering (guide §2.4: the window's
     * partitioning already matched the groupBy, but its SORT was the
-    * cost). The per-group array is bounded by group cardinality (papers
-    * per author); for groups of unbounded cardinality use
-    * `perGroupWindowed`, which spills.
+    * cost). Each group's array is held in memory whole: its size is the
+    * group's cardinality (papers per author).
     */
   def perGroup(df: DataFrame, groupCol: String, citationCol: String): DataFrame =
     df.select(col(groupCol), col(citationCol).cast("long").as("__c"))
@@ -48,34 +38,7 @@ object HIndex {
       b => b)).cast("long")
   }
 
-  /** Window-based formulation (pre-r07 `perGroup`): same result, one
-    * partition-wide sort instead of per-group arrays — the safe shape
-    * when single groups may not fit in an aggregation buffer.
-    */
-  def perGroupWindowed(df: DataFrame, groupCol: String, citationCol: String): DataFrame = {
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("__c").desc)
-    df.select(col(groupCol), col(citationCol).cast("long").as("__c"))
-      .withColumn("__rn", row_number().over(w))
-      .groupBy(col(groupCol))
-      .agg(sum(when(col("__c") >= col("__rn"), 1L).otherwise(0L)).as("h_index"))
-  }
-
-  /** Typed single-pass aggregator. Buffer keeps all citation counts; the
-    * merge is associative/commutative; finish sorts once. Exact — not a
-    * sketch. Suitable when per-group cardinality is bounded (papers per
-    * author); for unbounded groups prefer `perGroup`.
-    */
-  class HIndexAggregator extends Aggregator[Long, Seq[Long], Int] {
-    def zero: Seq[Long] = Vector.empty
-    def reduce(b: Seq[Long], a: Long): Seq[Long] = b :+ a
-    def merge(b1: Seq[Long], b2: Seq[Long]): Seq[Long] = b1 ++ b2
-    def finish(b: Seq[Long]): Int = compute(b)
-    def bufferEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-    def outputEncoder: Encoder[Int] = Encoders.scalaInt
-  }
-
-  /** Plain-Scala core, shared by the aggregator and tests. */
+  /** Plain-Scala core of the cutoff, used by the specs. */
   def compute(citations: Seq[Long]): Int =
     citations.sortBy(-_).zipWithIndex.count { case (c, i) => c > i }
 }

@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
   * compute_key_papers.py:107-206).
   *
   * The reference computes the four lookup maps in pandas dicts
-  * (create_mappings.py); here they are MapType columns built with
-  * map_from_entries over grouped counts, joined to the (author, paper)
-  * pairs — fully distributed. The per-row rate is a pure Scala function
-  * over those maps (arrays ≤ ~60 academic years).
+  * (create_mappings.py); here two `yearMaps` aggregates build them as
+  * MapType columns, fully distributed. The per-author one is read as the
+  * first author (student years, weighted counts) and as the top author
+  * (supervisor counts), the per-pair one gives both co-author maps: four
+  * left joins after the (author, paper) pairs. The per-row rate is a pure
+  * Scala function over those maps (arrays ≤ ~60 academic years).
   *
   * Note: the reference reloads its maps from JSON, which stringifies the
   * integer year keys; taken literally that makes `year in
@@ -165,63 +167,48 @@ object KeyPapers {
       .agg(count(lit(1)).as("count"))
   }
 
-  /** Per-author year→count and year→weighted-count maps
-    * (create_mappings.py:37-56). weighted adds count/authorOrder only for
-    * authorOrder ≤ 3.
+  /** The year maps of create_mappings.py:37-110 over (keys…, authorOrder,
+    * year) rows, one row per key group: `counts` (year → rows), `weighted`
+    * (year → Σ 1/authorOrder over the rows with authorOrder ≤ 3; a year
+    * without such a row is absent) and `years` (sorted).
     */
-  def paperCountMaps(paperAuthor: DataFrame, papers: DataFrame): (DataFrame, DataFrame) = {
-    val joined = paperAuthor
-      .join(papers.select(col("paperID"), col("year")), "paperID")
-      .groupBy(col("authorID"), col("authorOrder"), col("year"))
+  def yearMaps(rows: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    rows
+      .groupBy(k :+ col("authorOrder") :+ col("year"): _*)
       .agg(count(lit(1)).cast("double").as("cnt"))
-    val plain = joined
-      .groupBy(col("authorID"), col("year"))
-      .agg(sum("cnt").as("c"))
-      .groupBy(col("authorID"))
-      .agg(map_from_entries(collect_list(struct(col("year"), col("c")))).as("paperCountMap"))
-    // Weighted counts are summed in SIXTHS (cnt*6/authorOrder is an exact
-    // integer for authorOrder <= 3) and divided once: a float sum of
-    // 1/3s is shuffle-order-dependent in its last ulp, and supervisorRate
-    // TRUNCATES running sums of these values — a near-integer sum would
-    // otherwise flip a decay modifier with the partition count.
-    val weighted = joined
-      .filter(col("authorOrder") <= MinStudentAuthorOrder)
-      .groupBy(col("authorID"), col("year"))
-      .agg((sum(col("cnt") * lit(6.0) / col("authorOrder")) / lit(6.0)).as("c"))
-      .groupBy(col("authorID"))
-      .agg(map_from_entries(collect_list(struct(col("year"), col("c")))).as("weightedPaperCountMap"))
-    (plain, weighted)
+      .groupBy(k :+ col("year"): _*)
+      // Weighted counts are summed in SIXTHS (cnt*6/authorOrder is an exact
+      // integer for authorOrder <= 3) and divided once: a float sum of
+      // 1/3s is shuffle-order-dependent in its last ulp, and supervisorRate
+      // TRUNCATES running sums of these values — a near-integer sum would
+      // otherwise flip a decay modifier with the partition count.
+      .agg(sum("cnt").as("c"), (sum(when(col("authorOrder") <= MinStudentAuthorOrder,
+        col("cnt") * lit(6.0) / col("authorOrder"))) / lit(6.0)).as("w"))
+      .groupBy(k: _*)
+      .agg(
+        map_from_entries(collect_list(struct(col("year"), col("c")))).as("counts"),
+        map_from_entries(collect_list(when(col("w").isNotNull, struct(col("year"), col("w"))))).as("weighted"),
+        sort_array(collect_list(col("year"))).as("years"))
   }
 
-  /** Pair-level co-authorship maps (create_mappings.py:59-110): papers
-    * where the first author (order ≤ 3) and the co-author both appear,
-    * with first's order < co's order; grouped per (first, co, year).
+  /** (first author, co-author, paper, first's order, year) rows of the
+    * pair maps (create_mappings.py:59-110): papers where the first author
+    * (order ≤ 3) and the co-author both appear, with first's order <
+    * co's order.
     */
-  def coAuthorMaps(paperAuthor: DataFrame, papers: DataFrame, pairs: DataFrame): (DataFrame, DataFrame) = {
+  def coAuthored(paperAuthor: DataFrame, papers: DataFrame, pairs: DataFrame): DataFrame = {
     val pa1 = paperAuthor
       .filter(col("authorOrder") <= MinStudentAuthorOrder)
       .select(col("paperID"), col("authorID").as("authorID_first"), col("authorOrder").as("order1"))
     val pa2 = paperAuthor.select(col("paperID"), col("authorID"), col("authorOrder").as("order2"))
-    val joined = pairs.select(col("authorID"), col("authorID_first"))
+    pairs.select(col("authorID"), col("authorID_first"))
       .join(pa1, "authorID_first")
       .join(pa2, Seq("authorID", "paperID"))
       .filter(col("order1") < col("order2"))
       .join(papers.select(col("paperID"), col("year")), "paperID")
       .select(col("authorID_first"), col("authorID"), col("paperID"), col("order1").as("authorOrder"), col("year"))
       .distinct()
-      .groupBy(col("authorID_first"), col("authorID"), col("authorOrder"), col("year"))
-      .agg(count(lit(1)).cast("double").as("cnt"))
-    val weighted = joined // exact-sixths sum: see paperCountMaps
-      .groupBy(col("authorID_first"), col("authorID"), col("year"))
-      .agg((sum(col("cnt") * lit(6.0) / col("authorOrder")) / lit(6.0)).as("c"))
-      .groupBy(col("authorID_first"), col("authorID"))
-      .agg(map_from_entries(collect_list(struct(col("year"), col("c")))).as("coWeightedPaperCountMap"))
-    val plain = joined
-      .groupBy(col("authorID_first"), col("authorID"), col("year"))
-      .agg(sum("cnt").as("c"))
-      .groupBy(col("authorID_first"), col("authorID"))
-      .agg(map_from_entries(collect_list(struct(col("year"), col("c")))).as("coPaperCountMap"))
-    (weighted, plain)
   }
 
   private val rateUdf = udf {
@@ -255,34 +242,23 @@ object KeyPapers {
     val faPairs = firstAuthorPairs(
       paperAuthor.join(topAuthors.select(col("authorID")), Seq("authorID"), "left_semi"),
       paperAuthor)
-    val (paperCountMap, weightedMap) = paperCountMaps(paperAuthor, papers)
-    val (coWeighted, coPlain) = coAuthorMaps(paperAuthor, papers, faPairs)
-
-    val studentYears = paperAuthor
-      .join(papers.select(col("paperID"), col("year")), "paperID")
-      .groupBy(col("authorID"))
-      .agg(sort_array(collect_set(col("year"))).as("studentYears"))
+    val perAuthor = yearMaps(paperAuthor.join(papers.select(col("paperID"), col("year")), "paperID"), "authorID")
+    val perPair = yearMaps(coAuthored(paperAuthor, papers, faPairs), "authorID_first", "authorID")
 
     pairsAll
       .join(firstAuthor, Seq("paperID"), "left")
-      .join(studentYears.withColumnRenamed("authorID", "firstAuthorID"), Seq("firstAuthorID"), "left")
-      .join(weightedMap.withColumnRenamed("authorID", "firstAuthorID"), Seq("firstAuthorID"), "left")
-      .join(paperCountMap.withColumnRenamed("authorID", "supervisorID")
-        .withColumnRenamed("paperCountMap", "supCounts"),
-        col("authorID") === col("supervisorID"), "left")
-      .join(coWeighted.withColumnRenamed("authorID_first", "faW")
-        .withColumnRenamed("authorID", "coW"),
-        col("faW") === col("firstAuthorID") && col("coW") === col("authorID"), "left")
-      .join(coPlain.withColumnRenamed("authorID_first", "fa2")
-        .withColumnRenamed("authorID", "co2"),
-        col("fa2") === col("firstAuthorID") && col("co2") === col("authorID"), "left")
+      .join(perAuthor.select(col("authorID").as("firstAuthorID"), col("years").as("studentYears"),
+        col("weighted").as("faWeighted")), Seq("firstAuthorID"), "left")
+      .join(perAuthor.select(col("authorID"), col("counts").as("supCounts")), Seq("authorID"), "left")
+      .join(perPair.select(col("authorID_first").as("firstAuthorID"), col("authorID"),
+        col("weighted").as("coWeighted"), col("counts").as("coCounts")), Seq("firstAuthorID", "authorID"), "left")
       .select(
         col("authorID"), col("paperID"), col("title"), col("year"), col("authorOrder"),
         when(col("firstAuthorID").isNull, lit(1.0) / col("authorOrder"))
           .when(col("firstAuthorID") === col("authorID"), lit(1.0))
           .otherwise(rateUdf(
-            col("studentYears"), col("weightedPaperCountMap"), col("coWeightedPaperCountMap"),
-            col("supCounts"), col("coPaperCountMap"), col("year")))
+            col("studentYears"), col("faWeighted"), col("coWeighted"),
+            col("supCounts"), col("coCounts"), col("year")))
           .as("isKeyPaper")
       )
   }

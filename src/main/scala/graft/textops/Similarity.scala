@@ -110,6 +110,19 @@ object Similarity {
     df.withColumn("bucket", sigBits.reduce(_ + _))
   }
 
+  /** (id, band, key): one row per row of `df` and LSH band, the key being
+    * that band's numPlanes/bands bits of the row's `signatures` bucket. */
+  private def bandKeys(df: DataFrame, id: Column, dim: Int, numPlanes: Int, bands: Int, seed: Int): DataFrame = {
+    require(numPlanes % bands == 0)
+    val rows = numPlanes / bands
+    signatures(df, dim, numPlanes, seed).select(
+      id,
+      posexplode(array((0 until bands).map(b =>
+        shiftright(col("bucket"), b * rows).bitwiseAND((1L << rows) - 1)): _*))
+        .as(Seq("band", "key"))
+    )
+  }
+
   /** Approximate top-k: candidates share an LSH bucket band with the
     * query (multi-probe via `bands` sub-signatures), exact cosine
     * re-rank. Recall < 1 by construction; bands trade recall vs cost.
@@ -119,20 +132,12 @@ object Similarity {
       dim: Int, numPlanes: Int = 16, bands: Int = 4, seed: Int = 42
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(numPlanes % bands == 0)
-    val rows = numPlanes / bands
-    def banded(df: DataFrame, idAs: String): DataFrame =
-      signatures(df, dim, numPlanes, seed).select(
-        col(df.columns.head).as(idAs),
-        posexplode(array((0 until bands).map(b =>
-          shiftright(col("bucket"), b * rows).bitwiseAND((1L << rows) - 1)): _*))
-          .as(Seq("band", "key"))
-      )
     // Dedup candidate PAIRS on ids only (VERDICT r5 wart: a pair that
     // collides in several bands used to drag both embedding vectors
     // through the distinct's shuffle numPlanes/bands times); the vectors
     // re-join once, for the re-rank only.
-    val cand = banded(corpus, "vec_id").join(banded(queries, "query_id"), Seq("band", "key"))
+    val cand = bandKeys(corpus, col(corpus.columns.head).as("vec_id"), dim, numPlanes, bands, seed)
+      .join(bandKeys(queries, col(queries.columns.head).as("query_id"), dim, numPlanes, bands, seed), Seq("band", "key"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
@@ -269,16 +274,9 @@ object Similarity {
       corpus: DataFrame, threshold: Double, dim: Int,
       numPlanes: Int = 16, bands: Int = 4, seed: Int = 42
   ): DataFrame = {
-    require(numPlanes % bands == 0)
-    val rows = numPlanes / bands
     // ids-only through the band join + distinct (same wart fix as
     // lshTopK); vectors re-join once for the exact verify
-    val s = signatures(corpus, dim, numPlanes, seed).select(
-      col("vec_id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("bucket"), b * rows).bitwiseAND((1L << rows) - 1)): _*))
-        .as(Seq("band", "key"))
-    )
+    val s = bandKeys(corpus, col("vec_id"), dim, numPlanes, bands, seed)
     val pairs = s.select(col("vec_id").as("a"), col("band"), col("key"))
       .join(s.select(col("vec_id").as("b"), col("band"), col("key")), Seq("band", "key"))
       .filter(col("a") < col("b"))

@@ -49,16 +49,12 @@ object TextAnalysis {
     when(folded.getField("h") === 0, lit("und")).otherwise(folded.getField("l"))
   }
 
-  /** Quality score in [0,1]: blend of length band, alpha ratio, stopword
-    * density, and mean word length band — the usual cheap heuristics for
-    * web-scrape filtering.
-    */
-  def qualityScore(text: Column): Column = round(qualityScoreRaw(text), 6)
-
-  /** The unrounded quality blend — exposed so exactness-sensitive
-    * consumers (the q_quality_fp driver check) can apply their own
-    * bit-stable quantization (`floor(raw*1e6 + 0.5)`) instead of
-    * decimal `round`, whose half-tie handling is engine-specific.
+  /** Quality score in [0,1], unrounded: blend of length band, alpha
+    * ratio, stopword density, and mean word length band — the usual cheap
+    * heuristics for web-scrape filtering. Exactness-sensitive consumers
+    * (the q_quality_fp driver check) apply their own bit-stable
+    * quantization (`floor(raw*1e6 + 0.5)`) instead of decimal `round`,
+    * whose half-tie handling is engine-specific.
     */
   def qualityScoreRaw(text: Column): Column = {
     val nChars = length(text)

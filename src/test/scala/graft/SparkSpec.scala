@@ -48,6 +48,34 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` with 1 shuffle partition, then with 8 and broadcast
+    * joins off (the shuffled plan), passing it the partition count; both
+    * settings are restored afterwards. */
+  def onOneAndEightPartitions(body: Int => Unit): Unit = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(spark.conf.get)
+    for ((parts, broadcast) <- Seq((1, saved(1)), (8, "-1"))) {
+      spark.conf.set(keys(0), parts.toString)
+      spark.conf.set(keys(1), broadcast)
+      try body(parts)
+      finally keys.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
+
+  /** Asserts that `got` and `want` hold the same rows as multisets,
+    * doubles compared by their bits (NaN equal to NaN). */
+  def assertSameRows(got: Seq[Seq[Any]], want: Seq[Seq[Any]], context: String): Unit = {
+    def counted(rows: Seq[Seq[Any]]): Map[Seq[Any], Int] =
+      rows.map(_.map {
+        case x: Double => "d" + java.lang.Double.doubleToLongBits(x)
+        case x => x
+      }).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val (g, w) = (counted(got), counted(want))
+    val diff = (g.keySet ++ w.keySet).filter(r => g.get(r) != w.get(r)).take(3)
+    assert(diff.isEmpty, s"$context: rows differ, e.g. " +
+      diff.map(r => s"$r engine ${g.getOrElse(r, 0)}× oracle ${w.getOrElse(r, 0)}×").mkString("; "))
+  }
+
   /** Runs declared query `q` over `dir` on session `s` (plan build and
     * collect) and returns its rows sorted, with the number of Spark jobs
     * it started. */

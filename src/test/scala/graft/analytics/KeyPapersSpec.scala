@@ -1,7 +1,8 @@
 package graft.analytics
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.analytics.KeyPapers._
+import org.apache.spark.sql.functions.{col, year}
 
 class KeyPapersSpec extends SparkSpec {
   import spark.implicits._
@@ -94,5 +95,21 @@ class KeyPapersSpec extends SparkSpec {
     val want103 = supervisorRate(studentYears, faW, caW, supC, coC, 2002)
     assert(want103 > 0.0, s"fixture should exercise a nonzero rate, got $want103")
     assert(math.abs(got(103L) - want103) < 1e-12, s"got ${got(103L)} want $want103")
+  }
+
+  test("isKeyPaper over sf0.001 runs at most 19 jobs on a new session") {
+    // SparkEntry's key-paper inputs; `t` reads with a known schema, so
+    // only the build and collect run jobs
+    val (s, d) = (spark.newSession(), "/root/testdata/sf0.001")
+    val papers = SparkEntry.t(s, d, "orders").select(col("o_orderkey").as("paperID"),
+      col("o_orderpriority").as("title"), year(col("o_orderdate")).cast("int").as("year"))
+    val pa = SparkEntry.t(s, d, "lineitem")
+      .filter(!(col("l_linenumber") === 1 && col("l_orderkey") % 7 === 0))
+      .select(col("l_orderkey").as("paperID"), col("l_suppkey").as("authorID"), col("l_linenumber").as("authorOrder"))
+    val top = SparkEntry.t(s, d, "supplier").filter(col("s_suppkey") <= 25).select(col("s_suppkey").as("authorID"))
+    var n = 0
+    val jobs = jobsOf { n = isKeyPaper(papers, pa, top).collect().length }
+    assert(n == 5740)
+    assert(jobs <= 19, s"isKeyPaper ran $jobs jobs")
   }
 }

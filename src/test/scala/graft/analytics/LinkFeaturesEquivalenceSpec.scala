@@ -103,34 +103,17 @@ class LinkFeaturesEquivalenceSpec extends SparkSpec {
     }
   }
 
-  /** Rows as a multiset, doubles by their bits. */
-  private def counted(rows: Seq[Seq[Any]]): Map[Seq[Any], Int] =
-    rows.map(_.map {
-      case x: Double => "d" + java.lang.Double.doubleToLongBits(x)
-      case x => x
-    }).groupBy(identity).map { case (r, rs) => r -> rs.size }
-
   private def check(seed: Int, stringAuthors: Boolean, withEvents: Boolean): Unit = {
     val u = universe(seed, stringAuthors, withEvents)
-    val want = counted(oracle(u))
-    val conf = spark.conf
-    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold").map(k => k -> conf.get(k))
-    // 8 partitions with broadcast joins off runs the shuffled plan too
-    for ((parts, broadcast) <- Seq((1, saved(1)._2), (8, "-1"))) {
-      conf.set("spark.sql.shuffle.partitions", parts.toString)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
-      try {
-        val df = features(u, if (stringAuthors) StringType else LongType)
-        assert(df.columns.toSeq == Seq("citingpaperID", "citedpaperID", "authorID") ++ LinkFeatures.FeatureNames)
-        val got = counted(df.collect().toSeq.map(_.toSeq))
-        assert(got.values.sum == u.edges.size, s"seed $seed, $parts partitions: row count")
-        val diff = (got.keySet ++ want.keySet).filter(r => got.get(r) != want.get(r)).take(3)
-        assert(diff.isEmpty, s"seed $seed, $parts partitions: rows differ, e.g. " +
-          diff.map(r => s"$r engine ${got.getOrElse(r, 0)}× oracle ${want.getOrElse(r, 0)}×").mkString("; "))
-      } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    val o = oracle(u)
+    onOneAndEightPartitions { parts =>
+      val df = features(u, if (stringAuthors) StringType else LongType)
+      assert(df.columns.toSeq == Seq("citingpaperID", "citedpaperID", "authorID") ++ LinkFeatures.FeatureNames)
+      val got = df.collect().toSeq.map(_.toSeq)
+      assert(got.size == u.edges.size, s"seed $seed, $parts partitions: row count")
+      assertSameRows(got, o, s"seed $seed, $parts partitions")
     }
     // the universe reaches the cases it is there for
-    val o = oracle(u)
     assert(u.edges.distinct.size < u.edges.size, "no duplicate edge rows")
     assert(u.edges.exists { case (c, d, _) => u.edges.exists(e => e._1 == d && e._2 == c) }, "no pair cited both ways")
     assert(o.exists(_(11) == null) && o.exists(_(12) == null), "no paper missing from papers or paperAuthors")
